@@ -65,20 +65,29 @@ def main() -> int:
         if not ok:
             failures.append(name)
 
-    # 1. raster scan pushdown (JVM-scan path; the default manifest-scan
-    # path bypasses the JVM scan entirely by shipping (file, row-group)
-    # rows the kernel reads with pyarrow directly)
-    os.environ["YG_MANIFEST_SCAN"] = "0"
-    try:
-        r = harness.lineitem_rasters(SF_DIR)
-        df = X.tiles_dataframe(X._as_root(r["qty"] * 2), spark)  # noqa: SLF001
+    # 1. raster scan pushdown on the general plan.  A table stored at half
+    # the computation tile size is unaligned by construction, so it is
+    # read by a JVM scan (aligned tables take the manifest plan, which
+    # prunes row groups on the driver and bypasses the JVM scan).
+    import tempfile
+
+    import numpy as np
+
+    from yirgacheffe_spark import constants
+
+    with tempfile.TemporaryDirectory(prefix="plan_audit_") as tmp:
+        proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
+        layer = yg.write_array_as_raster_table(
+            os.path.join(tmp, "half_tiles"), np.ones((64, 96), dtype=np.int16),
+            yg.Area(0.0, 0.0, 0.96, -0.64, proj),
+            tile_size=max(constants.TILE_YSIZE // 2, 1),
+        )
+        df = X.tiles_dataframe(X._as_root(layer * 2), spark)  # noqa: SLF001
         plan = plan_of(df)
         pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
         ok = any("tile_y" in l and "tile_x" in l for l in pushed)
         check("raster scan pushes tile-range filters to parquet", ok,
               pushed[0] if pushed else "(no PushedFilters line)")
-    finally:
-        del os.environ["YG_MANIFEST_SCAN"]
 
     # 2. PIP broadcast / inlined cover
     pts = harness.customer_points(spark, SF_DIR).withColumn(

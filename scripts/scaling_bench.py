@@ -64,8 +64,9 @@ def run_best(cpus: int, repeats: int = 3) -> dict:
 
 
 # Which hw_ceiling.py kernel bounds each query's 8->32 scaling on this VM.
-# The match follows the per-stage instrumentation (BENCH/BASELINE.md,
-# scripts/diag_aoh.py): aoh/mosaic/unique are parquet-decode-bound (decode
+# The match follows the per-stage instrumentation (BENCH/BASELINE.md;
+# `perfbench/run.py --trace 1` reports python_run_s and kernel_ms per
+# query): aoh/mosaic/unique are parquet-decode-bound (decode
 # measured at 75% of aoh engine CPU); conv2d/save/text_quality are
 # compute-bound (numpy stencil / zstd / JVM regex — the near-ideal kernel
 # ceiling); enrich/minhash are dominated by vectorised hashing in Python

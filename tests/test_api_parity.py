@@ -79,7 +79,7 @@ def test_sparse_save_roundtrip(spark, tmp_path):
     back = yg.read_raster(path)
     np.testing.assert_array_equal(back.read_array(0, 0, 12, 12), data)
     # Expressions where f(0) != 0 must still cover the holes (the missing
-    # tiles are resurrected by the key anti-join complement).
+    # tiles get zero-filled manifest rows).
     got = (back + 5).to_numpy(spark=spark)
     np.testing.assert_array_equal(got, data + 5)
     assert (back + 5).sum(spark=spark) == data.sum() + 5 * 144
@@ -126,6 +126,39 @@ def test_interleaved_multiband_single_scan(spark, tmp_path):
     plan = expr.to_dataframe(spark=spark)._jdf.queryExecution().executedPlan().toString()
     payload_side = plan.split("Union")[0]  # the piece-rows branch
     assert "Exchange hashpartitioning" not in payload_side
+    # A stencil over one band of the interleaved table: its halo strips are
+    # cut from row groups that also hold the other bands' tiles.
+    conv = layers[2].conv2d(np.ones((3, 3), dtype=np.float32))
+    local = evaluate_window(conv)
+    np.testing.assert_array_equal(conv.to_numpy(spark=spark), local)
+    assert conv.sum(spark=spark) == float(local.sum(dtype=np.float64))
+
+
+@pytest.mark.parametrize("stencil", [False, True])
+def test_sparse_single_band_takes_manifest_plan(spark, tmp_path, stencil):
+    """A sparse table read alone takes the manifest plan: tile presence comes
+    from the pruned row groups' key columns and every absent tile of the
+    box gets a zero-filled manifest row — so f(0) != 0 still covers the
+    holes, and a stencil still sees its neighbours' pixels at their edge."""
+    from yirgacheffe_spark.plans import executor
+
+    data = np.zeros((16, 12))
+    data[0:3, 0:3] = 7.0
+    data[9, 5] = 2.0
+    data[13, 11] = 4.0
+    path = str(tmp_path / "sparse")
+    yg.from_array(data, (0.0, 0.0), PROJ).save(path, sparse=True, spark=spark)
+    back = yg.read_raster(path)
+    assert not back.dense
+    expr = back + 5
+    if stencil:
+        expr = expr.conv2d(np.ones((3, 3), dtype=np.float32))
+
+    _spark, _root, payload, _bc, _df = executor._build(expr, spark)
+    assert "manifest" in payload
+    local = evaluate_window(expr)
+    np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
+    assert expr.sum(spark=spark) == float(local.sum(dtype=np.float64))
 
 
 def test_show_writes_valid_png(spark, tmp_path):

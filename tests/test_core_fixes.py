@@ -43,7 +43,9 @@ class TestMultiRingHalo:
     def test_conv2d_pad_exceeding_tile_repartition_fallback(self, spark, tmp_path,
                                                             monkeypatch):
         """Same case through the non-broadcast (repartition) halo path."""
-        monkeypatch.setenv("YG_HALO_BROADCAST_MAX", "1")
+        from yirgacheffe_spark.plans import executor
+
+        monkeypatch.setattr(executor, "_HALO_BROADCAST_MAX", 1)
         rng = np.random.default_rng(18)
         data = rng.normal(size=(16, 16)).astype(np.float32)
         path = str(tmp_path / "big_pad_rep")
@@ -52,6 +54,8 @@ class TestMultiRingHalo:
                                        tile_size=4)
         layer = yg.read_raster(path)
         expr = layer.conv2d(np.ones((11, 11), dtype=np.float32))
+        plan = expr.to_dataframe(spark=spark)._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange hashpartitioning" in plan  # the general plan
         got = expr.to_numpy(spark=spark)
         want = kernel.evaluate_window(expr)
         np.testing.assert_allclose(got, want, rtol=1e-6, equal_nan=True)

@@ -177,13 +177,18 @@ def test_unique_guard_rejects_unbounded_collect(spark):
     assert len(values) == 17 * 13 and counts.sum() == 17 * 13
 
 
+def _executed_plan(expr, spark) -> str:
+    return expr.to_dataframe(spark=spark)._jdf.queryExecution().executedPlan().toString()
+
+
 def test_conv2d_halo_fallback_matches_broadcast(spark, tmp_path, monkeypatch):
-    """Above the halo broadcast budget the stencil plan switches to strip
-    rows co-located by one payload repartition — bit-identical results to
-    the broadcast halo exchange (the 100-TB-safe path)."""
+    """Above the halo broadcast budget the stencil takes the general plan —
+    strip rows co-located by one payload repartition — with bit-identical
+    results to the broadcast halo exchange (the 100-TB-safe path)."""
     import numpy as np
 
     import yirgacheffe_spark as yg
+    from yirgacheffe_spark.plans import executor
 
     rng = np.random.default_rng(23)
     data = rng.integers(0, 50, (20, 24)).astype(np.float32)
@@ -198,7 +203,10 @@ def test_conv2d_halo_fallback_matches_broadcast(spark, tmp_path, monkeypatch):
     broadcast_out = expr.to_numpy(spark=spark)
     broadcast_sum = expr.sum(spark=spark)
 
-    monkeypatch.setenv("YG_HALO_BROADCAST_MAX", "0")  # force the fallback
+    assert "Exchange hashpartitioning" not in _executed_plan(expr, spark)
+
+    monkeypatch.setattr(executor, "_HALO_BROADCAST_MAX", 0)  # force the fallback
+    assert "Exchange hashpartitioning" in _executed_plan(expr, spark)
     fallback_out = expr.to_numpy(spark=spark)
     fallback_sum = expr.sum(spark=spark)
     np.testing.assert_array_equal(fallback_out, broadcast_out)
@@ -214,7 +222,7 @@ def test_conv2d_over_widened_window_sees_neighbour_data(spark, tmp_path, monkeyp
     import numpy as np
 
     import yirgacheffe_spark as yg
-    from yirgacheffe_spark.plans import kernel
+    from yirgacheffe_spark.plans import executor, kernel
 
     rng = np.random.default_rng(5)
     data = rng.integers(1, 9, (8, 8)).astype(np.float32)
@@ -229,7 +237,8 @@ def test_conv2d_over_widened_window_sees_neighbour_data(spark, tmp_path, monkeyp
     assert local[8].sum() > 0  # the border outside coverage is nonzero
 
     np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
-    monkeypatch.setenv("YG_HALO_BROADCAST_MAX", "0")
+    monkeypatch.setattr(executor, "_HALO_BROADCAST_MAX", 0)
+    assert "Exchange hashpartitioning" in _executed_plan(expr, spark)
     np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
 
 
@@ -237,9 +246,8 @@ def test_conv2d_manifest_halo_path_matches_jvm(spark, tmp_path, monkeypatch):
     """When storage tiles coincide with computation tiles, a stencil query
     takes the manifest body (pyarrow-direct decode) with halo strips
     collected once and shipped inside the payload broadcast.  Results must
-    be bit-identical to the JVM body scan + halo join path and to the
-    local oracle — including tiles outside stored coverage, which must
-    still receive their neighbours' strips."""
+    be bit-identical to the local oracle — including tiles outside stored
+    coverage, which must still receive their neighbours' strips."""
     import numpy as np
 
     import yirgacheffe_spark as yg
@@ -259,17 +267,11 @@ def test_conv2d_manifest_halo_path_matches_jvm(spark, tmp_path, monkeypatch):
     # The padded-manifest plan must actually be eligible here.
     payload = executor._plan_payload(executor._as_root(expr))
     box = (0, payload["tiles_y"] - 1, 0, payload["tiles_x"] - 1)
-    assert executor._manifest_rows(spark, payload, box, allow_pad=True) is not None
+    assert executor._manifest_rows(spark, payload, box) is not None
 
     local = kernel.evaluate_window(expr)
-    man_out = expr.to_numpy(spark=spark)
-    man_sum = expr.sum(spark=spark)
-    np.testing.assert_array_equal(man_out, local)
-
-    monkeypatch.setenv("YG_MANIFEST_SCAN", "0")
-    np.testing.assert_array_equal(expr.to_numpy(spark=spark), man_out)
-    assert expr.sum(spark=spark) == man_sum
-    monkeypatch.delenv("YG_MANIFEST_SCAN")
+    np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
+    assert expr.sum(spark=spark) == float(local.sum(dtype=np.float64))
 
     # Widened window: the border one tile outside stored coverage reads
     # real neighbour pixels through the broadcast halo map too.
@@ -283,7 +285,7 @@ def test_conv2d_manifest_halo_path_matches_jvm(spark, tmp_path, monkeypatch):
 def test_multi_table_planar_manifest_matches(spark, tmp_path, monkeypatch):
     """Per-band tables on one grid take the co-partitioned multi-table
     manifest scan (zero shuffles, slot completeness verified) and match
-    both the local oracle and the JVM fallback plans bit-for-bit."""
+    the local oracle bit-for-bit."""
     import numpy as np
 
     import yirgacheffe_spark as yg
@@ -306,14 +308,19 @@ def test_multi_table_planar_manifest_matches(spark, tmp_path, monkeypatch):
     assert executor._manifest_rows(spark, payload, box) is not None
 
     local = kernel.evaluate_window(expr)
-    got = expr.to_numpy(spark=spark)
-    got_sum = expr.sum(spark=spark)
-    np.testing.assert_array_equal(got, local)
+    np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
+    assert expr.sum(spark=spark) == float(local.sum(dtype=np.float64))
 
-    monkeypatch.setenv("YG_MANIFEST_SCAN", "0")
-    np.testing.assert_array_equal(expr.to_numpy(spark=spark), got)
-    assert expr.sum(spark=spark) == got_sum
-    monkeypatch.delenv("YG_MANIFEST_SCAN")
+    # A stencil on one band table next to a plain one: halo strips for the
+    # padded slot only, including tiles of a window widened past the data.
+    wide = yg.Area(0.0, 0.0, 0.28, -0.24, proj)
+    sexpr = (la.as_area(wide).conv2d(np.ones((3, 3), np.float32))
+             + lb.as_area(wide))
+    spayload = executor._plan_payload(executor._as_root(sexpr))
+    sbox = (0, spayload["tiles_y"] - 1, 0, spayload["tiles_x"] - 1)
+    assert executor._manifest_rows(spark, spayload, sbox) is not None
+    np.testing.assert_array_equal(
+        sexpr.to_numpy(spark=spark), kernel.evaluate_window(sexpr))
 
     # Tables whose stored grids differ (different heights) must NOT be
     # stitched by the multi-table manifest — the general plans take over.

@@ -4,11 +4,24 @@ Physical shape of every computation:
 
 1. **Plan (driver)** — resolve the operation area/window with the reference's
    extent algebra, split the window into a grid of tiles, and classify
-   leaves: parquet-backed rasters become DataFrame scans + a *re-tiling*
-   equi-join keyed on tile coordinates (Catalyst prunes them by the window's
-   tile range, pushed down to parquet row-group stats); everything else
+   leaves: parquet-backed rasters are *slots* fed by a scan; everything else
    (in-memory arrays, constants, generated layers) ships inside the kernel
-   closure via a broadcast.
+   closure via a broadcast.  ``_build`` feeds the slots with one of two
+   scan plans:
+
+   * the **manifest plan**, whenever every leaf lies on the computation grid
+     (one table, one interleaved multiband table, or per-band tables whose
+     row-group sequences match): the driver lists the (file, row group)
+     pairs that survive footer-statistics pruning and workers decode them
+     with pyarrow — no JVM payload decode, no shuffle.  Stencil halos ride
+     along as edge strips inside the payload broadcast.
+   * the **general plan** for everything else: a JVM scan per leaf emits one
+     row per (computation tile, piece) — a *re-tiling* of the stored grid
+     whose tile-range predicates push down to parquet row-group stats —
+     and the leaves are unioned and repartitioned on tile coordinates.
+
+   A tree with no parquet leaf scans nothing: the kernel runs over a
+   generated tile grid.
 2. **Execute (cluster)** — one ``mapInArrow`` kernel per stage evaluates the
    *whole* numpy expression tree per tile (operator fusion, per-tile CSE),
    emitting either result tiles (save / read_array) or per-tile aggregate
@@ -26,16 +39,17 @@ Implementation notes for throughput:
   per path, so repeated terminal actions cost milliseconds of planning.
 
 Scale notes: tiles are the unit of parallelism and shuffle keys are tile
-coordinates, so plans scale by adding executors; the only shuffle per parquet
-leaf is its re-tiling join (none when the source grid aligns 1:1 — the common
-case of rasters written by this engine being read back at the same grid);
-aggregations move eight bytes per tile.
+coordinates, so plans scale by adding executors; the only payload shuffle is
+the general plan's repartition (the manifest plan — rasters written by this
+engine read back at the same grid — has none); aggregations move eight
+bytes per tile.
 """
 
 from __future__ import annotations
 
 import math
 import os
+from functools import reduce
 from typing import Any, Iterator
 
 import numpy as np
@@ -145,17 +159,41 @@ _PIECE_PA_TYPE = pa.struct(
     [("slot", pa.int32()), ("py0", pa.int64()), ("px0", pa.int64()),
      ("sh", pa.int32()), ("sw", pa.int32()), ("p", pa.binary())]
 )
+MANIFEST_SCHEMA = "file string, rg int, mty int, mtx int"
+
+# Halo strips travel inside the payload broadcast, which every executor
+# holds whole: above this many strip bytes a stencil takes the general plan
+# (strip rows co-located with the body by ONE payload repartition — linear
+# and cluster-safe).  At 100 TB the strips alone are ~1.6% of the raster —
+# terabytes — so the broadcast must be size-guarded, not assumed.
+_HALO_BROADCAST_MAX = 256 * 1024 * 1024
+
+
+def _stored_range(payload: dict, meta: dict, tile_box: tuple[int, int, int, int],
+                  pad: int) -> tuple[int, int, int, int]:
+    """Stored-tile range (sy_lo, sy_hi, sx_lo, sx_hi) of a leaf that the
+    tile box, grown by ``pad`` pixels, can touch."""
+    s = meta["S"]
+    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
+    ty_lo, ty_hi, tx_lo, tx_hi = tile_box
+    stored_y, stored_x = meta["stored_tiles"]
+    window = payload["window"]
+    y_px_lo = ty_lo * ty_size - pad + meta["ayoff"]
+    y_px_hi = min((ty_hi + 1) * ty_size, window.ysize) + pad + meta["ayoff"]
+    x_px_lo = tx_lo * tx_size - pad + meta["axoff"]
+    x_px_hi = min((tx_hi + 1) * tx_size, window.xsize) + pad + meta["axoff"]
+    return (max(y_px_lo // s, 0), min((y_px_hi - 1) // s, stored_y - 1),
+            max(x_px_lo // s, 0), min((x_px_hi - 1) // s, stored_x - 1))
 
 
 def _slot_rows(spark: SparkSession, payload: dict, slot: int,
-               tile_box: tuple[int, int, int, int],
-               body_only: bool = False):
+               tile_box: tuple[int, int, int, int]):
     """Scan one parquet leaf and emit one row per (computation tile, piece):
     ``(ty, tx, piece struct<slot, py0, px0, sh, sw, p>)``.
 
-    Returns (rows, is_aligned, coverage_rect).  All arithmetic is Spark SQL
-    (JVM-side, emitted as single selectExpr strings); the scan carries
-    tile-range predicates that push down to parquet row-group statistics.
+    Returns (rows, coverage_rect).  All arithmetic is Spark SQL (JVM-side,
+    emitted as single selectExpr strings); the scan carries tile-range
+    predicates that push down to parquet row-group statistics.
     """
     meta = payload["slot_meta"][slot]
     s = meta["S"]
@@ -163,7 +201,6 @@ def _slot_rows(spark: SparkSession, payload: dict, slot: int,
     ayoff, axoff = meta["ayoff"], meta["axoff"]
     ty_size, tx_size = payload["ty_size"], payload["tx_size"]
     ty_lo, ty_hi, tx_lo, tx_hi = tile_box
-    stored_y, stored_x = meta["stored_tiles"]
 
     # Computation tiles this leaf can contribute to (its coverage rectangle).
     leaf_h, leaf_w = meta["leaf_h"], meta["leaf_w"]
@@ -174,29 +211,16 @@ def _slot_rows(spark: SparkSession, payload: dict, slot: int,
         min(tx_hi, (-axoff + leaf_w + p - 1) // tx_size),
     )
 
-    # Leaf pixel range the requested tile box can touch (with halo).
-    y_px_lo = ty_lo * ty_size - p + ayoff
-    y_px_hi = min((ty_hi + 1) * ty_size, payload["window"].ysize) + p + ayoff
-    x_px_lo = tx_lo * tx_size - p + axoff
-    x_px_hi = min((tx_hi + 1) * tx_size, payload["window"].xsize) + p + axoff
-    sy_lo = max(y_px_lo // s, 0)
-    sy_hi = min((y_px_hi - 1) // s, stored_y - 1)
-    sx_lo = max(x_px_lo // s, 0)
-    sx_hi = min((x_px_hi - 1) // s, stored_x - 1)
-
+    sy_lo, sy_hi, sx_lo, sx_hi = _stored_range(payload, meta, tile_box, p)
     src = _read_raster_table(spark, meta["path"]).where(
         f"band = {meta['band']} AND tile_y BETWEEN {int(sy_lo)} AND {int(sy_hi)} "
         f"AND tile_x BETWEEN {int(sx_lo)} AND {int(sx_hi)}"
     )
 
-    # Aligned geometry: stored grid coincides with the computation grid
-    # (equal tile size, whole-tile origin offset) — each stored tile's body
-    # feeds exactly one computation tile, no explode, no duplication.  With
-    # no halo that is the whole story; with a stencil halo the caller pairs
-    # these body rows with broadcast halo strips (body_only=True).
-    aligned_geom = s == ty_size == tx_size and ayoff % s == 0 and axoff % s == 0
-    aligned = aligned_geom and p == 0
-    if aligned or (body_only and aligned_geom):
+    # Aligned geometry with no halo: stored grid coincides with the
+    # computation grid (equal tile size, whole-tile origin offset) — each
+    # stored tile feeds exactly one computation tile, no explode.
+    if p == 0 and s == ty_size == tx_size and ayoff % s == 0 and axoff % s == 0:
         rows = src.selectExpr(
             f"CAST((CAST(tile_y AS BIGINT) * {s} - {ayoff}) / {ty_size} AS INT) AS ty",
             f"CAST((CAST(tile_x AS BIGINT) * {s} - {axoff}) / {tx_size} AS INT) AS tx",
@@ -204,7 +228,7 @@ def _slot_rows(spark: SparkSession, payload: dict, slot: int,
             f"CAST(tile_x AS BIGINT) * {s} AS px0, ysize AS sh, xsize AS sw, "
             f"payload AS p) AS piece",
         ).where(f"ty BETWEEN {ty_lo} AND {ty_hi} AND tx BETWEEN {tx_lo} AND {tx_hi}")
-        return rows, True, cov, src
+        return rows, cov
 
     # General: window-space start of each stored tile decides which
     # computation tiles (with halo) it intersects; explode those ranges and
@@ -244,9 +268,7 @@ def _slot_rows(spark: SparkSession, payload: dict, slot: int,
             f"CAST(tile_x AS BIGINT) * {s} AS px0, sh, xsize AS sw, pslice AS p) AS piece",
         )
     )
-    return rows, False, cov, src
-
-
+    return rows, cov
 
 
 def _strip_rows_for_tile(out_ty, out_tx, out_struct, slot, payload, tile_box,
@@ -304,115 +326,30 @@ def _strip_rows_for_tile(out_ty, out_tx, out_struct, slot, payload, tile_box,
             )
 
 
-def _halo_strips(spark: SparkSession, payload: dict, slot: int,
-                 tile_box: tuple[int, int, int, int], src: DataFrame) -> DataFrame:
-    """Halo exchange for an aligned leaf with a stencil padding: a Python
-    pass over the scan emits only the edge strips each neighbouring tile
-    needs (a few KB per tile), which are grouped and *broadcast* back onto
-    the unshuffled body scan — the payload itself never moves.
-    """
-    meta = payload["slot_meta"][slot]
-    ty_lo, ty_hi, tx_lo, tx_hi = tile_box
-
-    def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        out_ty, out_tx, out_struct = [], [], []
-        for batch in batches:
-            sy_c = batch.column(batch.schema.get_field_index("tile_y")).to_numpy()
-            sx_c = batch.column(batch.schema.get_field_index("tile_x")).to_numpy()
-            sh_c = batch.column(batch.schema.get_field_index("ysize")).to_numpy()
-            sw_c = batch.column(batch.schema.get_field_index("xsize")).to_numpy()
-            pay = batch.column(batch.schema.get_field_index("payload"))
-            for i in range(batch.num_rows):
-                _strip_rows_for_tile(
-                    out_ty, out_tx, out_struct, slot, payload,
-                    (ty_lo, ty_hi, tx_lo, tx_hi), meta,
-                    int(sy_c[i]), int(sx_c[i]), int(sh_c[i]), int(sw_c[i]),
-                    lambda i=i: memoryview(pay[i].as_buffer()),
-                )
-        if out_ty:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ty, pa.int32()),
-                    pa.array(out_tx, pa.int32()),
-                    pa.array(out_struct, type=_PIECE_PA_TYPE),
-                ],
-                names=["ty", "tx", "piece"],
-            )
-
-    return src.mapInArrow(extract, schema=f"ty int, tx int, piece {PIECE_STRUCT_SQL}")
-
-
 def _halo_strips_direct(spark: SparkSession, payload: dict, slot: int,
-                        tile_box: tuple[int, int, int, int]) -> DataFrame | None:
-    """Pyarrow-direct twin of ``_halo_strips``: workers read their (file,
-    row-group) assignments with the C++ parquet reader and emit the same
-    strip rows — skipping the JVM payload decode AND the JVM->Arrow
-    transfer of every full tile just to slice a few KB of edges (measured
-    1.15s of the 3.7s conv2d query at sf1; the direct form is ~3x
-    cheaper).  Returns None when the table cannot be footer-listed locally
-    (non-local path) or manifest scanning is disabled — callers fall back
-    to the JVM-scan form, which works everywhere."""
-    if os.environ.get("YG_MANIFEST_SCAN", "1") != "1":
-        return None
+                        tile_box: tuple[int, int, int, int]) -> DataFrame:
+    """Halo exchange for an aligned stencil leaf: workers read their (file,
+    row-group) assignments with the C++ parquet reader and emit only the
+    edge strips each neighbouring tile needs (a few KB per tile) — the body
+    payload never moves, and no full tile crosses the JVM just to have its
+    edges sliced (measured ~3x cheaper than a JVM scan feeding the same
+    extraction)."""
     meta = payload["slot_meta"][slot]
-    if meta.get("interleaved"):
-        # Interleaved multiband row groups cannot skip the other bands'
-        # payload rows in a C++ read, while the JVM scan at least filters
-        # them before the Arrow transfer — measured slower here.
-        return None
-    s = meta["S"]
-    p = meta["pad"]
-    ayoff, axoff = meta["ayoff"], meta["axoff"]
-    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    ty_lo, ty_hi, tx_lo, tx_hi = tile_box
-    stored_y, stored_x = meta["stored_tiles"]
-    # Stored-tile range that can owe a strip to any tile in the box (the
-    # same halo-inflated pixel range _slot_rows scans).
-    y_px_lo = ty_lo * ty_size - p + ayoff
-    y_px_hi = min((ty_hi + 1) * ty_size, payload["window"].ysize) + p + ayoff
-    x_px_lo = tx_lo * tx_size - p + axoff
-    x_px_hi = min((tx_hi + 1) * tx_size, payload["window"].xsize) + p + axoff
-    sy_lo = max(y_px_lo // s, 0)
-    sy_hi = min((y_px_hi - 1) // s, stored_y - 1)
-    sx_lo = max(x_px_lo // s, 0)
-    sx_hi = min((x_px_hi - 1) // s, stored_x - 1)
     band = meta["band"]
-    try:
-        part_files = sorted(
-            os.path.join(meta["path"], f)
-            for f in os.listdir(meta["path"])
-            if f.endswith(".parquet")
-        )
-        rows = []
-        for f in part_files:
-            for rg, ymm, xmm, bmm in _footer_stats(f):
-                if bmm is not None and (bmm[1] < band or bmm[0] > band):
-                    continue
-                if ymm is not None and (ymm[1] < sy_lo or ymm[0] > sy_hi):
-                    continue
-                if xmm is not None and (xmm[1] < sx_lo or xmm[0] > sx_hi):
-                    continue
-                rows.append((f, rg, -1, -1))
-    except OSError:
-        return None
-    box = (int(ty_lo), int(ty_hi), int(tx_lo), int(tx_hi))
-    use_rows = rows or [(None, -1, -1, -1)]
-    try:
-        # parallelize slices directly: a createDataFrame + repartition of
-        # this dim-sized list costs an extra exchange stage per call.
-        parallelism = max(spark.sparkContext.defaultParallelism * 2, 1)
-        mdf = spark.createDataFrame(
-            spark.sparkContext.parallelize(
-                use_rows, min(len(use_rows), parallelism)),
-            MANIFEST_SCHEMA,
-        )
-    except Exception:  # pylint: disable=W0703
-        # Spark Connect: no sparkContext — the JVM halo path handles it.
-        return None
+    rng = _stored_range(payload, meta, tile_box, meta["pad"])
+    sy_lo, sy_hi, sx_lo, sx_hi = rng
+    rows = [(f, rg, -1, -1)
+            for f, rg, _ymm, _xmm in _pruned_row_groups(meta["path"], band, band, rng)]
+    rows = rows or [(None, -1, -1, -1)]
+    # parallelize slices directly: a createDataFrame + repartition of
+    # this dim-sized list costs an extra exchange stage per call.
+    parallelism = max(spark.sparkContext.defaultParallelism * 2, 1)
+    mdf = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, min(len(rows), parallelism)),
+        MANIFEST_SCHEMA,
+    )
 
     def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq  # pylint: disable=C0415
-
         out_ty, out_tx, out_struct = [], [], []
         for batch in batches:
             files = batch.column(0).to_pylist()
@@ -420,17 +357,7 @@ def _halo_strips_direct(spark: SparkSession, payload: dict, slot: int,
             for f, rg in zip(files, rgs):
                 if f is None:
                     continue
-                st = os.stat(f)
-                fkey = (f, st.st_mtime_ns, st.st_size)
-                pf = _PQ_FILE_CACHE.get(fkey)
-                if pf is None:
-                    if len(_PQ_FILE_CACHE) > 64:
-                        _PQ_FILE_CACHE.clear()
-                    pf = _PQ_FILE_CACHE[fkey] = pq.ParquetFile(f)
-                tbl = pf.read_row_group(
-                    rg, columns=["band", "tile_y", "tile_x",
-                                 "ysize", "xsize", "payload"]
-                )
+                tbl = _read_row_group(f, rg)
                 b_arr = tbl.column("band").to_numpy()
                 sy_c = tbl.column("tile_y").to_numpy()
                 sx_c = tbl.column("tile_x").to_numpy()
@@ -441,13 +368,14 @@ def _halo_strips_direct(spark: SparkSession, payload: dict, slot: int,
                     pay = pay.combine_chunks()
                 chunk = pay.chunk(0) if hasattr(pay, "chunk") else pay
                 for i in range(len(b_arr)):
+                    # Interleaved row groups hold every band of a tile.
                     if int(b_arr[i]) != band:
                         continue
                     sy, sx = int(sy_c[i]), int(sx_c[i])
                     if not (sy_lo <= sy <= sy_hi and sx_lo <= sx <= sx_hi):
                         continue
                     _strip_rows_for_tile(
-                        out_ty, out_tx, out_struct, slot, payload, box, meta,
+                        out_ty, out_tx, out_struct, slot, payload, tile_box, meta,
                         sy, sx, int(sh_c[i]), int(sw_c[i]),
                         lambda i=i: memoryview(chunk[i].as_buffer()),
                     )
@@ -464,6 +392,21 @@ def _halo_strips_direct(spark: SparkSession, payload: dict, slot: int,
     return mdf.mapInArrow(extract, schema=f"ty int, tx int, piece {PIECE_STRUCT_SQL}")
 
 
+def _halo_pieces(spark: SparkSession, payload: dict, slots: list[int],
+                 tile_box: tuple[int, int, int, int]) -> dict:
+    """Collect the halo strips of the stencil ``slots`` to the driver as
+    ``{(ty, tx): [(slot, py0, px0, sh, sw, bytes), ...]}`` for the payload
+    broadcast.  One Arrow collect: the strips are thousands of small
+    binaries, where the py4j row path measured 0.68 s against tens of ms."""
+    strips = reduce(DataFrame.unionByName,
+                    [_halo_strips_direct(spark, payload, slot, tile_box) for slot in slots])
+    table = strips.select("ty", "tx", "piece.*").toArrow()
+    halo: dict = {}
+    for ty, tx, *piece in zip(*(col.to_pylist() for col in table.columns)):
+        halo.setdefault((ty, tx), []).append(tuple(piece))
+    return halo
+
+
 def _halo_strip_bytes(payload: dict, slot: int,
                       tile_box: tuple[int, int, int, int]) -> int:
     """Upper-bound estimate of the halo-strip volume for ``slot`` over the
@@ -476,101 +419,6 @@ def _halo_strip_bytes(payload: dict, slot: int,
     frame_px = 2 * p * (ty_size + tx_size) + 4 * p * p
     return n_tiles * frame_px * np.dtype(meta["np_dtype"]).itemsize
 
-
-def _halo_broadcast_max() -> int:
-    """Broadcasting the halo side is only sane while it fits comfortably in
-    every executor: above this budget the plan falls back to strip rows
-    co-located with the body by ONE payload repartition (linear,
-    cluster-safe).  At 100 TB the strips alone are ~1.6% of the raster —
-    terabytes — so the broadcast path must be size-guarded, not assumed.
-    Read per call so tests can force either path."""
-    return int(os.environ.get("YG_HALO_BROADCAST_MAX", str(256 * 1024 * 1024)))
-
-
-
-
-def _interleaved_single_scan(spark: SparkSession, payload: dict,
-                             tile_box: tuple[int, int, int, int]) -> DataFrame | None:
-    """Zero-shuffle plan for multi-channel expressions over ONE interleaved
-    multiband raster table: the table is written sorted (tile_y, tile_x,
-    band) with row groups holding whole tiles, so every band of a tile is
-    guaranteed to land in the same scan task — the kernel's per-partition
-    grouping assembles them with no exchange at all.
-    """
-    metas = payload["slot_meta"]
-    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    if len(metas) < 2:
-        return None
-    first = metas[0]
-    for m in metas:
-        aligned = (
-            m["pad"] == 0
-            and m["S"] == ty_size == tx_size
-            and m["ayoff"] % m["S"] == 0
-            and m["axoff"] % m["S"] == 0
-        )
-        if not (m["interleaved"] and aligned and m["path"] == first["path"]
-                and m["ayoff"] == first["ayoff"] and m["axoff"] == first["axoff"]):
-            return None
-    bands = [m["band"] for m in metas]
-    if len(set(bands)) != len(bands):
-        return None
-
-    s = first["S"]
-    ayoff, axoff = first["ayoff"], first["axoff"]
-    ty_lo, ty_hi, tx_lo, tx_hi = tile_box
-    stored_y, stored_x = first["stored_tiles"]
-    sy_lo = max((ty_lo * ty_size + ayoff) // s, 0)
-    sy_hi = min(((ty_hi + 1) * ty_size - 1 + ayoff) // s, stored_y - 1)
-    sx_lo = max((tx_lo * tx_size + axoff) // s, 0)
-    sx_hi = min(((tx_hi + 1) * tx_size - 1 + axoff) // s, stored_x - 1)
-
-    slot_case = "CASE band " + " ".join(
-        f"WHEN {band} THEN {slot}" for slot, band in enumerate(bands)
-    ) + " END"
-    band_list = ", ".join(str(b) for b in bands)
-    rows = (
-        _read_raster_table(spark, first["path"])
-        .where(
-            f"band IN ({band_list}) AND tile_y BETWEEN {int(sy_lo)} AND {int(sy_hi)} "
-            f"AND tile_x BETWEEN {int(sx_lo)} AND {int(sx_hi)}"
-        )
-        .selectExpr(
-            f"CAST((CAST(tile_y AS BIGINT) * {s} - {ayoff}) / {ty_size} AS INT) AS ty",
-            f"CAST((CAST(tile_x AS BIGINT) * {s} - {axoff}) / {tx_size} AS INT) AS tx",
-            f"struct(CAST({slot_case} AS INT) AS slot, "
-            f"CAST(tile_y AS BIGINT) * {s} AS py0, "
-            f"CAST(tile_x AS BIGINT) * {s} AS px0, ysize AS sh, xsize AS sw, "
-            f"payload AS p) AS piece",
-        )
-        .where(f"ty BETWEEN {ty_lo} AND {ty_hi} AND tx BETWEEN {tx_lo} AND {tx_hi}")
-    )
-    if all(m["dense"] for m in metas):
-        # Dense table: the stored grid's coverage is a closed-form rectangle,
-        # so out-of-extent tiles come from a predicate on the generated grid
-        # — no key scan, no anti-join.
-        off_y, off_x = ayoff // s, axoff // s
-        c_ty_lo, c_ty_hi = -off_y, stored_y - 1 - off_y
-        c_tx_lo, c_tx_hi = -off_x, stored_x - 1 - off_x
-        if c_ty_lo <= ty_lo and ty_hi <= c_ty_hi and c_tx_lo <= tx_lo and tx_hi <= c_tx_hi:
-            return rows
-        missing = _base_grid(spark, payload, tile_box).where(
-            f"NOT (ty BETWEEN {c_ty_lo} AND {c_ty_hi} "
-            f"AND tx BETWEEN {c_tx_lo} AND {c_tx_hi})"
-        )
-    else:
-        # Sparse table (zero tiles dropped at write): only a key scan knows
-        # which tiles exist; anti-join the pruned key columns.
-        present = rows.select("ty", "tx").distinct()
-        missing = _base_grid(spark, payload, tile_box).join(
-            present, ["ty", "tx"], "left_anti"
-        )
-    return rows.unionByName(
-        missing.selectExpr("ty", "tx", f"CAST(NULL AS {PIECE_STRUCT_SQL}) AS piece")
-    )
-
-
-MANIFEST_SCHEMA = "file string, rg int, mty int, mtx int"
 
 # Footer statistics cache: repeated terminal actions over the same raster
 # (every bench/production loop) must not re-read every parquet footer on the
@@ -610,30 +458,53 @@ def _footer_stats(path: str) -> list:
     return got
 
 
+def _pruned_row_groups(path: str, band_lo: int, band_hi: int,
+                       stored_range: tuple[int, int, int, int]) -> list:
+    """(file, rg, ty_minmax, tx_minmax) of every row group of the table at
+    ``path`` whose footer statistics may hold a tile of bands
+    [band_lo, band_hi] inside the stored-tile range."""
+    sy_lo, sy_hi, sx_lo, sx_hi = stored_range
+    out = []
+    for name in sorted(os.listdir(path)):
+        if not name.endswith(".parquet"):
+            continue
+        f = os.path.join(path, name)
+        for rg, ymm, xmm, bmm in _footer_stats(f):
+            # Band pruning: non-interleaved multiband tables are band-pure
+            # per file, so a single-band query drops the other bands' row
+            # groups entirely instead of decoding their payloads only to
+            # discard every row kernel-side.
+            if bmm is not None and (bmm[1] < band_lo or bmm[0] > band_hi):
+                continue
+            if ymm is not None and (ymm[1] < sy_lo or ymm[0] > sy_hi):
+                continue
+            if xmm is not None and (xmm[1] < sx_lo or xmm[0] > sx_hi):
+                continue
+            out.append((f, rg, ymm, xmm))
+    return out
+
+
 def _manifest_rows(spark: SparkSession, payload: dict,
-                   tile_box: tuple[int, int, int, int],
-                   allow_pad: bool = False):
+                   tile_box: tuple[int, int, int, int]):
     """Pyarrow-direct scan plan: (file, row-group) manifest rows the kernel
     reads itself (C++ parquet decode inside the Python worker), skipping the
     JVM's payload decode AND the JVM->Arrow re-conversion — the two largest
     CPU+GC costs of payload-heavy scans (measured ~2x the kernel itself).
 
-    Eligible when every leaf is the SAME parquet table on an aligned grid
-    with no stencil padding and dense coverage; multi-band requires the
-    interleaved layout (whole tiles per row group by construction).  Returns
-    (manifest_meta, DataFrame) or None.
+    Eligible when every leaf lies on the computation grid (equal tile size,
+    whole-tile offset) of one shared stored grid, and any stencil's halo
+    strips fit ``_HALO_BROADCAST_MAX``.  Several leaves must be distinct
+    bands of one interleaved table (whole tiles per row group by
+    construction) or dense band-pure tables with identical row-group
+    sequences.  A sparse table (zero tiles dropped at write) is eligible
+    alone.  Returns (manifest_meta, DataFrame) or None.
     """
-    if os.environ.get("YG_MANIFEST_SCAN", "1") != "1":
-        return None
     metas = payload["slot_meta"]
     ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    if not metas:
-        return None
     first = metas[0]
     for m in metas:
         aligned = (
-            (m["pad"] == 0 or allow_pad)
-            and m["dense"]
+            (m["dense"] or len(metas) == 1)
             and m["S"] == ty_size == tx_size
             and m["ayoff"] % m["S"] == 0
             and m["axoff"] % m["S"] == 0
@@ -642,6 +513,10 @@ def _manifest_rows(spark: SparkSession, payload: dict,
                 and m["ayoff"] == first["ayoff"] and m["axoff"] == first["axoff"]
                 and m["stored_tiles"] == first["stored_tiles"]):
             return None
+    halo_bytes = sum(_halo_strip_bytes(payload, slot, tile_box)
+                     for slot, m in enumerate(metas) if m["pad"])
+    if halo_bytes > _HALO_BROADCAST_MAX:
+        return None
     same_path = all(m["path"] == first["path"] for m in metas)
     bands = [m["band"] for m in metas]
     if same_path:
@@ -662,36 +537,10 @@ def _manifest_rows(spark: SparkSession, payload: dict,
     s = first["S"]
     ayoff, axoff = first["ayoff"], first["axoff"]
     ty_lo, ty_hi, tx_lo, tx_hi = tile_box
-    stored_y, stored_x = first["stored_tiles"]
-    sy_lo = max((ty_lo * ty_size + ayoff) // s, 0)
-    sy_hi = min(((ty_hi + 1) * ty_size - 1 + ayoff) // s, stored_y - 1)
-    sx_lo = max(((tx_lo) * tx_size + axoff) // s, 0)
-    sx_hi = min(((tx_hi + 1) * tx_size - 1 + axoff) // s, stored_x - 1)
-
-    def pruned_stats(path: str, band_lo: int, band_hi: int):
-        part_files = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-        out = []
-        for f in part_files:
-            for rg, ymm, xmm, bmm in _footer_stats(f):
-                # Band pruning: non-interleaved multiband tables are
-                # band-pure per file, so a single-band query drops the
-                # other bands' row groups entirely instead of decoding
-                # their payloads only to discard every row kernel-side.
-                if bmm is not None and (bmm[1] < band_lo or bmm[0] > band_hi):
-                    continue
-                if ymm is not None and (ymm[1] < sy_lo or ymm[0] > sy_hi):
-                    continue
-                if xmm is not None and (xmm[1] < sx_lo or xmm[0] > sx_hi):
-                    continue
-                out.append((f, rg, ymm, xmm))
-        return out
+    rng = _stored_range(payload, first, tile_box, 0)
 
     if same_path:
-        stats = pruned_stats(first["path"], min(bands), max(bands))
+        stats = _pruned_row_groups(first["path"], min(bands), max(bands), rng)
         rows = [(f, rg, -1, -1) for f, rg, _ymm, _xmm in stats]
         file_slots = {"*": [(int(b), i) for i, b in enumerate(bands)]}
         group_partitioned = False
@@ -701,11 +550,9 @@ def _manifest_rows(spark: SparkSession, payload: dict,
         # deterministic, so per-channel tables of one grid do) — then
         # row group i of every table holds the same tile run and tagging
         # rows with the sequence index as a partitioning key co-locates
-        # them.  Any divergence falls back to the JVM plans.
-        per_slot = []
-        for m in metas:
-            st = pruned_stats(m["path"], m["band"], m["band"])
-            per_slot.append(st)
+        # them.  Any divergence falls back to the general plan.
+        per_slot = [_pruned_row_groups(m["path"], m["band"], m["band"], rng)
+                    for m in metas]
         shape0 = [(rg, ymm, xmm) for _f, rg, ymm, xmm in per_slot[0]]
         for st in per_slot[1:]:
             if [(rg, ymm, xmm) for _f, rg, ymm, xmm in st] != shape0:
@@ -721,22 +568,36 @@ def _manifest_rows(spark: SparkSession, payload: dict,
                 file_slots.setdefault(f, []).append((band, slot))
         group_partitioned = True
 
-    # Tiles outside stored coverage still exist as zeros (closed form).
+    # Box tiles with no stored row exist as zeros: one (None, -1, ty, tx)
+    # row each.  A dense table's coverage is a closed-form rectangle; a
+    # sparse one's is the key columns of the pruned row groups (no payload
+    # decode).
     off_y, off_x = ayoff // s, axoff // s
-    c_ty_lo, c_ty_hi = -off_y, stored_y - 1 - off_y
-    c_tx_lo, c_tx_hi = -off_x, stored_x - 1 - off_x
-    missing = []
-    for ty in range(ty_lo, ty_hi + 1):
-        for tx in range(tx_lo, tx_hi + 1):
-            if not (c_ty_lo <= ty <= c_ty_hi and c_tx_lo <= tx <= c_tx_hi):
-                missing.append((None, -1, ty, tx))
+    if first["dense"]:
+        stored_y, stored_x = first["stored_tiles"]
+
+        def stored(ty: int, tx: int) -> bool:
+            return -off_y <= ty < stored_y - off_y and -off_x <= tx < stored_x - off_x
+    else:
+        present = set()
+        for f, rg, _ymm, _xmm in stats:
+            keys = _read_row_group(f, rg, ("band", "tile_y", "tile_x"))
+            for b, sy, sx in zip(*(col.to_pylist() for col in keys.columns)):
+                if b == first["band"]:
+                    present.add((sy - off_y, sx - off_x))
+
+        def stored(ty: int, tx: int) -> bool:
+            return (ty, tx) in present
+    missing = [(None, -1, ty, tx)
+               for ty in range(ty_lo, ty_hi + 1)
+               for tx in range(tx_lo, tx_hi + 1)
+               if not stored(ty, tx)]
 
     meta = {
         "file_slots": file_slots,
         "s": int(s), "ayoff": int(ayoff), "axoff": int(axoff),
         "box": tuple(int(v) for v in tile_box),
     }
-    parallelism = max(spark.sparkContext.defaultParallelism * 2, 1)
     if group_partitioned:
         # All slots of a tile run must share a task (the kernel assembles
         # a tile from consecutive rows of one partition), so the rows are
@@ -744,34 +605,18 @@ def _manifest_rows(spark: SparkSession, payload: dict,
         # index, spread round-robin over even slices.  A hash repartition
         # on the index measured ~37% empty partitions (balls-in-bins) and
         # 2-3-group stragglers — visible as a save_tiles/aoh regression.
-        n_groups = len(shape0) if shape0 else 1
         by_group: dict[int, list] = {}
         for row in rows:
             by_group.setdefault(row[2], []).append(row)
-        elements = list(by_group.values()) + [[m] for m in missing]
-        try:
-            rdd = spark.sparkContext.parallelize(
-                elements, min(len(elements), parallelism)
-            ).flatMap(lambda g: g)
-            mdf = spark.createDataFrame(rdd, MANIFEST_SCHEMA)
-        except Exception:  # pylint: disable=W0703
-            # Spark Connect: no sparkContext — hash partitioning keeps
-            # correctness (groups still co-locate), only balance suffers.
-            mdf = spark.createDataFrame(rows + missing, MANIFEST_SCHEMA)
-            mdf = mdf.repartition(min(max(n_groups, 1), parallelism), "mty")
-        return meta, mdf
-    rows = rows + missing
-    try:
-        mdf = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, min(len(rows), parallelism)),
-            MANIFEST_SCHEMA,
-        )
-    except Exception:  # pylint: disable=W0703
-        # Spark Connect: no sparkContext.
-        mdf = spark.createDataFrame(rows, MANIFEST_SCHEMA)
-        if len(rows) > 1:
-            mdf = mdf.repartition(min(len(rows), parallelism))
-    return meta, mdf
+        elements = list(by_group.values())
+    else:
+        elements = [[row] for row in rows]
+    elements += [[m] for m in missing]
+    parallelism = max(spark.sparkContext.defaultParallelism * 2, 1)
+    rdd = spark.sparkContext.parallelize(
+        elements, min(len(elements), parallelism)
+    ).flatMap(lambda g: g)
+    return meta, spark.createDataFrame(rdd, MANIFEST_SCHEMA)
 
 
 def _missing_grid(spark: SparkSession, payload: dict,
@@ -812,22 +657,32 @@ def _base_grid(spark: SparkSession, payload: dict,
 
 
 def _build(tree, spark: SparkSession | None, sub_window: Window | None = None):
-    """Assemble the tile DataFrame: one row per (tile, piece), unioned across
-    slots, co-located per tile by a repartition on tile coords and made
-    adjacent by a partition-local sort; the kernel groups consecutive rows.
+    """Choose the scan plan that feeds the kernel and broadcast its payload.
 
-    Design notes (measured, not guessed):
+    * **Manifest plan** (``_manifest_rows``) whenever every leaf lies on
+      the computation grid: one table (dense or sparse), distinct bands of
+      one interleaved table, or dense per-band tables with identical
+      row-group sequences.  Rows name (file, row group) pairs the kernel
+      decodes with pyarrow; no JVM payload bytes, no shuffle.  Stencil
+      leaves add halo strips (``_halo_pieces``), collected once and shipped
+      inside the payload broadcast while they fit ``_HALO_BROADCAST_MAX``;
+      the kernel merges them at assembly.
+    * **General plan** for everything else — unaligned grids, halos over
+      the budget, planar tables whose row groups differ, a sparse table
+      next to other leaves: one row per (tile, piece) per leaf
+      (``_slot_rows``), unioned with the tiles no leaf covers
+      (``_missing_grid``) and co-located per tile by one repartition.
+
+    Design notes for the general plan (measured, not guessed):
     * No joins: an outer join of the tile grid against big piece rows tempts
       Catalyst into broadcasting the piece side (outer joins can only build
       the non-preserved side), and pairwise leaf joins shuffle every leaf
       per join.
     * No collect_list: ObjectHashAggregate over multi-megabyte binaries is an
       order of magnitude slower than shuffle+sort of the same rows.
-    * Tiles no leaf covers are appended driver-side from the coverage
-      complement (rectangular extents make it a closed-form predicate), with
-      a NULL piece.
-    * A single aligned dense leaf skips the shuffle entirely: its scan is
-      already one row per tile.
+    * Repartition only — co-location is enough.  A partition-local sort of
+      multi-megabyte rows thrashes Tungsten's record sorter (measured 35 s
+      vs 3 s for the bare shuffle); the kernel groups rows hash-side.
     """
     spark = get_spark(spark)
     root = _as_root(tree)
@@ -844,188 +699,28 @@ def _build(tree, spark: SparkSession | None, sub_window: Window | None = None):
             min((sub_window.xmax - 1) // tx_size, payload["tiles_x"] - 1),
         )
 
-    n_slots = len(payload["slot_meta"])
-    if n_slots == 0:
+    metas = payload["slot_meta"]
+    manifest = _manifest_rows(spark, payload, tile_box) if metas else None
+    if not metas:
         df = _base_grid(spark, payload, tile_box).selectExpr(
             "ty", "tx", f"CAST(NULL AS {PIECE_STRUCT_SQL}) AS piece"
         )
+    elif manifest is not None:
+        payload["manifest"], df = manifest
+        padded = [slot for slot, m in enumerate(metas) if m["pad"]]
+        if padded:
+            payload["halo_pieces"] = _halo_pieces(spark, payload, padded, tile_box)
     else:
-        from functools import reduce
-
-        manifest = _manifest_rows(spark, payload, tile_box)
-        if manifest is not None:
-            payload["manifest"] = manifest[0]
-            if n_slots > 1:
-                payload["expect_all_slots"] = True
-            bc = spark.sparkContext.broadcast(payload)
-            return spark, root, payload, bc, manifest[1]
-
-        single_scan = _interleaved_single_scan(spark, payload, tile_box)
-        if single_scan is not None:
-            # Correctness guard: this plan relies on every band of a stored
-            # tile landing in one scan task (whole-row-group splits over the
-            # interleaved sort).  The kernel verifies slot completeness.
-            payload["expect_all_slots"] = True
-            bc = spark.sparkContext.broadcast(payload)
-            return spark, root, payload, bc, single_scan
-
-        if n_slots == 1:
-            rows, aligned, cov, src = _slot_rows(spark, payload, 0, tile_box, body_only=True)
-            pad = payload["slot_meta"][0]["pad"]
-            aligned_geom = (
-                payload["slot_meta"][0]["S"] == payload["ty_size"] == payload["tx_size"]
-                and payload["slot_meta"][0]["ayoff"] % payload["slot_meta"][0]["S"] == 0
-                and payload["slot_meta"][0]["axoff"] % payload["slot_meta"][0]["S"] == 0
-            )
-            if pad > 0 and aligned_geom and \
-                    _halo_strip_bytes(payload, 0, tile_box) <= _halo_broadcast_max():
-                # Stencil queries on an aligned dense leaf: the BODY can
-                # still use the pyarrow-direct manifest scan (C++ decode,
-                # no JVM payload transfer) when the halo strips fit the
-                # broadcast budget — the strips job collects its few KB
-                # per tile to the driver (the same bytes the broadcast
-                # hash join built there before) and rides to workers
-                # inside the payload broadcast; the kernel merges them at
-                # assembly.  Falls through to the JVM body scan + halo
-                # join below when the table cannot be footer-listed.
-                man_pad = _manifest_rows(spark, payload, tile_box,
-                                         allow_pad=True)
-                if man_pad is not None:
-                    strips_df = _halo_strips_direct(spark, payload, 0, tile_box)
-                    if strips_df is None:
-                        strips_df = _halo_strips(spark, payload, 0, tile_box, src)
-                    flat = strips_df.select(
-                        "ty", "tx", "piece.slot", "piece.py0", "piece.px0",
-                        "piece.sh", "piece.sw", "piece.p")
-                    halo_map: dict = {}
-                    try:
-                        # Arrow transfer: the strip rows are thousands of
-                        # small binary pieces, and the py4j row path
-                        # measured 0.68s where Arrow moves the same ~MBs
-                        # in tens of ms.
-                        prev = spark.conf.get(
-                            "spark.sql.execution.arrow.pyspark.enabled", None)
-                        spark.conf.set(
-                            "spark.sql.execution.arrow.pyspark.enabled", "true")
-                        try:
-                            pdf = flat.toPandas()
-                        finally:
-                            if prev is None:
-                                spark.conf.unset(
-                                    "spark.sql.execution.arrow.pyspark.enabled")
-                            else:
-                                spark.conf.set(
-                                    "spark.sql.execution.arrow.pyspark.enabled",
-                                    prev)
-                        rows_it = zip(
-                            pdf["ty"].to_numpy(), pdf["tx"].to_numpy(),
-                            pdf["slot"].to_numpy(), pdf["py0"].to_numpy(),
-                            pdf["px0"].to_numpy(), pdf["sh"].to_numpy(),
-                            pdf["sw"].to_numpy(), pdf["p"],
-                        )
-                        for ty_v, tx_v, sl, py0, px0, sh, sw, p in rows_it:
-                            halo_map.setdefault((int(ty_v), int(tx_v)), []).append(
-                                (int(sl), int(py0), int(px0), int(sh), int(sw),
-                                 bytes(p)))
-                    except Exception:  # pylint: disable=W0703
-                        halo_map = {}
-                        for r in strips_df.collect():
-                            piece = r["piece"]
-                            halo_map.setdefault((r["ty"], r["tx"]), []).append(
-                                (piece["slot"], piece["py0"], piece["px0"],
-                                 piece["sh"], piece["sw"], bytes(piece["p"]))
-                            )
-                    payload["manifest"] = man_pad[0]
-                    payload["halo_pieces"] = halo_map
-                    bc = spark.sparkContext.broadcast(payload)
-                    return spark, root, payload, bc, man_pad[1]
-            if aligned:
-                # Body rows are already one per tile — zero shuffles.  A
-                # stencil halo rides in as broadcast strips (halo exchange)
-                # while the strip volume fits the broadcast budget; above it
-                # (planet-scale stencils) the strips become ordinary piece
-                # rows co-located with the body by one payload repartition —
-                # linear and cluster-safe, never a giant broadcast.
-                # Tiles with no stored row still exist as zeros.  Dense
-                # tables (the default) have closed-form rectangular coverage
-                # -> predicate on the generated grid, no extra scan; sparse
-                # tables need the key-only anti-join.  The missing rows
-                # union in BEFORE the halo attaches: a tile outside stored
-                # coverage still receives its neighbours' strips (its core
-                # is zeros, but a stencil overlapping the coverage edge
-                # reads real neighbour pixels — dropping them produced
-                # zeroed borders one tile outside the data).
-                df = rows.select("ty", "tx", "piece")
-                # The coverage rect from _slot_rows is PAD-INFLATED (tiles
-                # the leaf can reach via halo); the missing grid must use
-                # the UNPADDED body coverage, or tiles just outside stored
-                # data get no row at all and their neighbour strips vanish
-                # (zeroed stencil borders one tile outside the data — the
-                # bug the local-oracle differential caught).
-                meta0 = payload["slot_meta"][0]
-                tys, txs = payload["ty_size"], payload["tx_size"]
-                cov_body = (
-                    max(tile_box[0], (-meta0["ayoff"] - tys) // tys + 1),
-                    min(tile_box[1],
-                        (-meta0["ayoff"] + meta0["leaf_h"] - 1) // tys),
-                    max(tile_box[2], (-meta0["axoff"] - txs) // txs + 1),
-                    min(tile_box[3],
-                        (-meta0["axoff"] + meta0["leaf_w"] - 1) // txs),
-                )
-                missing = _missing_grid(spark, payload, tile_box, [cov_body],
-                                        rows if not payload["slot_meta"][0]["dense"] else None)
-                if missing is not None:
-                    df = df.unionByName(missing.selectExpr(
-                        "ty", "tx", f"CAST(NULL AS {PIECE_STRUCT_SQL}) AS piece"
-                    ))
-                if pad > 0:
-                    strips = _halo_strips_direct(spark, payload, 0, tile_box)
-                    if strips is None:
-                        strips = _halo_strips(spark, payload, 0, tile_box, src)
-                    if _halo_strip_bytes(payload, 0, tile_box) <= _halo_broadcast_max():
-                        halo = strips.groupBy("ty", "tx").agg(
-                            F.collect_list("piece").alias("halo")
-                        )
-                        df = df.join(F.broadcast(halo), ["ty", "tx"], "left")
-                    else:
-                        df = df.unionByName(strips).repartition(
-                            F.col("ty"), F.col("tx")
-                        )
-                else:
-                    df = df.selectExpr(
-                        "ty", "tx", "piece",
-                        f"CAST(NULL AS array<{PIECE_STRUCT_SQL}>) AS halo",
-                    )
-                bc = spark.sparkContext.broadcast(payload)
-                return spark, root, payload, bc, df
-
-        if n_slots == 1:
-            # Unaligned single leaf: the body_only plan above IS the general
-            # plan (body_only only matters on aligned geometry) — reuse it
-            # instead of rebuilding the scan + selectExpr chain.
-            slot_rows = [rows]
-            covs = [cov]
-        else:
-            slot_rows = []
-            covs = []
-            for slot in range(n_slots):
-                rows, aligned, cov, _src = _slot_rows(spark, payload, slot, tile_box)
-                slot_rows.append(rows)
-                covs.append(cov)
-
-        df = reduce(lambda a, b: a.unionByName(b), slot_rows)
-        # Tiles no leaf stores a row for still exist as zeros (see above).
-        all_dense = all(m["dense"] for m in payload["slot_meta"])
+        slot_rows, covs = zip(*(_slot_rows(spark, payload, slot, tile_box)
+                                for slot in range(len(metas))))
+        df = reduce(DataFrame.unionByName, slot_rows)
+        all_dense = all(m["dense"] for m in metas)
         missing = _missing_grid(spark, payload, tile_box, covs,
                                 None if all_dense else df)
         if missing is not None:
             df = df.unionByName(
                 missing.selectExpr("ty", "tx", f"CAST(NULL AS {PIECE_STRUCT_SQL}) AS piece")
             )
-        # Repartition only — co-location is enough.  (A partition-local
-        # sort of multi-megabyte rows thrashes Tungsten's record sorter:
-        # measured 35 s vs 3 s for the bare shuffle; the kernel groups
-        # rows hash-side instead.)
         df = df.repartition(F.col("ty"), F.col("tx"))
 
     bc = spark.sparkContext.broadcast(payload)
@@ -1067,29 +762,27 @@ def _assemble_slot(meta: dict, pieces, y0: int, x0: int, h: int, w: int):
 # next to the footer parse the cache avoids).
 _PQ_FILE_CACHE: dict[tuple, Any] = {}
 
-# Per-stage worker timing for scaling diagnosis (scripts/diag_aoh.py): when
-# YG_STAGE_TIMING names a path prefix, each Python worker appends its
-# accumulated decode/kernel seconds there per partition.  Zero overhead when
-# unset (one dict lookup per partition).
-_STAGE_TIMING_PREFIX = os.environ.get("YG_STAGE_TIMING", "")
+_TILE_COLUMNS = ("band", "tile_y", "tile_x", "ysize", "xsize", "payload")
 
 
-def _stage_timing_dump(acc: dict) -> None:
-    if not _STAGE_TIMING_PREFIX:
-        return
-    try:
-        with open(f"{_STAGE_TIMING_PREFIX}.{os.getpid()}", "a", encoding="utf-8") as fp:
-            fp.write(f"{acc['decode']:.6f} {acc['kernel']:.6f}\n")
-    except OSError:
-        pass
+def _read_row_group(f: str, rg: int, columns=_TILE_COLUMNS) -> pa.Table:
+    """One row group of a tile table, through the process's open-file cache."""
+    import pyarrow.parquet as pq  # pylint: disable=C0415
+
+    st = os.stat(f)
+    fkey = (f, st.st_mtime_ns, st.st_size)
+    pf = _PQ_FILE_CACHE.get(fkey)
+    if pf is None:
+        if len(_PQ_FILE_CACHE) > 64:
+            _PQ_FILE_CACHE.clear()
+        pf = _PQ_FILE_CACHE[fkey] = pq.ParquetFile(f)
+    return pf.read_row_group(rg, columns=list(columns))
 
 
 def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
                      groups: dict, retained: list) -> None:
     """Manifest-mode piece collection: the worker reads its (file, row-group)
     assignments directly with pyarrow (C++ decode, zero JVM bytes)."""
-    import pyarrow.parquet as pq  # pylint: disable=C0415
-
     n_slots = len(payload["slot_meta"])
     file_slots = man["file_slots"]
     shared_slots = file_slots.get("*")  # same-table form: one band->slot map
@@ -1101,21 +794,12 @@ def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
     mtys = batch.column(2).to_pylist()
     mtxs = batch.column(3).to_pylist()
     for f, rg, mty, mtx in zip(files, rgs, mtys, mtxs):
-        if f is None:  # out-of-coverage tile: exists as zeros
+        if f is None:  # tile with no stored row: exists as zeros
             groups.setdefault((int(mty), int(mtx)), [[] for _ in range(n_slots)])
             continue
         band_slot = dict(shared_slots if shared_slots is not None
                          else file_slots[f])
-        st = os.stat(f)
-        fkey = (f, st.st_mtime_ns, st.st_size)
-        pf = _PQ_FILE_CACHE.get(fkey)
-        if pf is None:
-            if len(_PQ_FILE_CACHE) > 64:
-                _PQ_FILE_CACHE.clear()
-            pf = _PQ_FILE_CACHE[fkey] = pq.ParquetFile(f)
-        tbl = pf.read_row_group(
-            rg, columns=["band", "tile_y", "tile_x", "ysize", "xsize", "payload"]
-        )
+        tbl = _read_row_group(f, rg)
         retained.append(tbl)
         b_arr = tbl.column("band").to_numpy()
         sy = tbl.column("tile_y").to_numpy()
@@ -1147,27 +831,20 @@ def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
 def _tile_results(bc, batch_iter: Iterator[pa.RecordBatch]):
     """Generator core of every kernel: yields (ty, tx, h, w, result) per tile.
 
-    Rows arrive one piece per row, co-located per tile (the plan
-    repartitions on tile coords when a tile can have multiple pieces, with
-    no partition-local sort — big rows sort terribly); the kernel groups
-    rows into tiles with a per-partition dict.  Arrow-native: piece payloads
-    are sliced zero-copy from the Arrow buffers, which stay alive via the
-    retained batch references until the partition is evaluated.
+    Rows arrive co-located per tile (one partition holds all of a tile's
+    rows, with no partition-local sort — big rows sort terribly); the kernel
+    groups them into tiles with a per-partition dict.  Arrow-native: piece
+    payloads are sliced zero-copy from the Arrow buffers, which stay alive
+    via the retained batch references until the partition is evaluated.
     """
     from ..sources import parquet as pq_raster  # pylint: disable=C0415
 
-    payload = bc.value
-    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    window = payload["window"]
-    slot_meta = payload["slot_meta"]
-    n_slots = len(slot_meta)
-    tree = payload["tree"]
     # Task-scoped ranged-read cache: kernel-side mosaic fetches of this
     # task's contiguous tile run reuse decoded row groups (nothing survives
     # the task — see parquet.push_read_scope).
     pq_raster.push_read_scope()
     try:
-        yield from _tile_results_scoped(payload, batch_iter)
+        yield from _tile_results_scoped(bc.value, batch_iter)
     finally:
         pq_raster.pop_read_scope()
 
@@ -1178,23 +855,22 @@ def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
     slot_meta = payload["slot_meta"]
     n_slots = len(slot_meta)
     tree = payload["tree"]
-
-    halo_map = payload.get("halo_pieces")
+    man = payload.get("manifest")
+    halo_map = payload.get("halo_pieces", {})
 
     def evaluate(ty: int, tx: int, pieces_by_slot):
-        if halo_map:
-            extra = halo_map.get((ty, tx))
-            if extra:
-                for h_slot, py0, px0, sh, sw, buf in extra:
-                    pieces_by_slot[h_slot].append((py0, px0, sh, sw, buf))
-        if payload.get("expect_all_slots") and pieces_by_slot:
+        if man is not None:
+            # The manifest plan reads every slot of a stored tile in one
+            # task; a partial tile means that property broke.
             filled = [bool(p) for p in pieces_by_slot]
             if any(filled) and not all(filled):
                 raise RuntimeError(
-                    f"interleaved single-scan tile ({ty},{tx}) received only "
+                    f"manifest tile ({ty},{tx}) received only "
                     f"{sum(filled)}/{len(filled)} band slots — stored tile "
                     "split across scan tasks (row-group/tile alignment broken)"
                 )
+        for h_slot, py0, px0, sh, sw, buf in halo_map.get((ty, tx), ()):
+            pieces_by_slot[h_slot].append((py0, px0, sh, sw, buf))
         y0, x0 = ty * ty_size, tx * tx_size
         h = min(ty_size, window.ysize - y0)
         w = min(tx_size, window.xsize - x0)
@@ -1205,7 +881,7 @@ def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
         )
         for slot in range(n_slots):
             assembled, origin = _assemble_slot(
-                slot_meta[slot], pieces_by_slot[slot] if pieces_by_slot else [], y0, x0, h, w
+                slot_meta[slot], pieces_by_slot[slot], y0, x0, h, w
             )
             ctx.slots[slot] = assembled
             ctx.slot_origins[slot] = origin
@@ -1217,23 +893,13 @@ def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
 
     groups: dict[tuple, list[list]] = {}
     retained = []  # keeps Arrow buffers alive until evaluation
-    man = payload.get("manifest")
-    timing = {"decode": 0.0, "kernel": 0.0} if _STAGE_TIMING_PREFIX else None
-    if timing is not None:
-        import time as _time  # pylint: disable=C0415
     for batch in batch_iter:
         retained.append(batch)
         if man is not None:
-            if timing is not None:
-                t0 = _time.time()
-                _manifest_pieces(batch, man, payload, groups, retained)
-                timing["decode"] += _time.time() - t0
-                continue
             _manifest_pieces(batch, man, payload, groups, retained)
             continue
         ty_col = batch.column(batch.schema.get_field_index("ty")).to_numpy()
         tx_col = batch.column(batch.schema.get_field_index("tx")).to_numpy()
-        has_halo = batch.schema.get_field_index("halo") != -1
         if n_slots:
             col = batch.column(batch.schema.get_field_index("piece"))
             nulls = col.is_null().to_numpy(zero_copy_only=False)
@@ -1243,17 +909,6 @@ def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
             sh_a = col.field("sh").to_numpy(zero_copy_only=False)
             sw_a = col.field("sw").to_numpy(zero_copy_only=False)
             p_arr = col.field("p")
-            if has_halo:
-                hcol = batch.column(batch.schema.get_field_index("halo"))
-                h_nulls = hcol.is_null().to_numpy(zero_copy_only=False)
-                h_offsets = hcol.offsets.to_numpy(zero_copy_only=False)
-                h_values = hcol.flatten()
-                h_slot = h_values.field("slot").to_numpy(zero_copy_only=False)
-                h_py0 = h_values.field("py0").to_numpy(zero_copy_only=False)
-                h_px0 = h_values.field("px0").to_numpy(zero_copy_only=False)
-                h_sh = h_values.field("sh").to_numpy(zero_copy_only=False)
-                h_sw = h_values.field("sw").to_numpy(zero_copy_only=False)
-                h_p = h_values.field("p")
         for i in range(batch.num_rows):
             key = (int(ty_col[i]), int(tx_col[i]))
             slots_acc = groups.get(key)
@@ -1268,25 +923,9 @@ def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
                         memoryview(p_arr[i].as_buffer()),
                     )
                 )
-            if n_slots and has_halo and not h_nulls[i]:
-                for j in range(int(h_offsets[i]), int(h_offsets[i + 1])):
-                    slots_acc[int(h_slot[j])].append(
-                        (
-                            int(h_py0[j]), int(h_px0[j]),
-                            int(h_sh[j]), int(h_sw[j]),
-                            memoryview(h_p[j].as_buffer()),
-                        )
-                    )
-    if timing is None:
-        for (ty, tx), slots_acc in groups.items():
-            yield evaluate(ty, tx, slots_acc)
-    else:
-        for (ty, tx), slots_acc in groups.items():
-            t0 = _time.time()
-            out = evaluate(ty, tx, slots_acc)
-            timing["kernel"] += _time.time() - t0
-            yield out
-        _stage_timing_dump(timing)
+    for (ty, tx), slots_acc in groups.items():
+        yield evaluate(ty, tx, slots_acc)
+
 
 
 def tiles_dataframe(tree, spark: SparkSession | None = None,
@@ -1712,14 +1351,11 @@ def read_array(tree, x: int, y: int, width: int, height: int,
     return out
 
 
-def _save_zstd_level() -> str:
-    """zstd level for raster-table sinks.  Level 1 measured BOTH faster
-    (2.04s vs 2.28s for a 2.3 GB write at sf1.0) and smaller (447 MB vs
-    540 MB) than parquet-java's default level 3 on integer tile payloads —
-    the byte-planar repetition of raster data rewards the fast match
-    finder.  ``YG_SAVE_ZSTD_LEVEL`` overrides for corpora where a deeper
-    search wins."""
-    return os.environ.get("YG_SAVE_ZSTD_LEVEL", "1")
+# zstd level for raster-table sinks.  Level 1 measured BOTH faster (2.04s vs
+# 2.28s for a 2.3 GB write at sf1.0) and smaller (447 MB vs 540 MB) than
+# parquet-java's default level 3 on integer tile payloads — the byte-planar
+# repetition of raster data rewards the fast match finder.
+_SAVE_ZSTD_LEVEL = 1
 
 
 def save_multiband(trees: list, path: str, spark: SparkSession | None = None) -> None:
@@ -1727,8 +1363,6 @@ def save_multiband(trees: list, path: str, spark: SparkSession | None = None) ->
     analog of multiband GeoTIFF output, reference ``_core.py:314-414``).
     All bands must share projection, extent and dtype; each band's tile plan
     is an independent Spark job unioned into one atomic write."""
-    import os  # pylint: disable=C0415
-
     from ..sources import parquet as pq_raster  # pylint: disable=C0415
 
     spark = get_spark(spark)
@@ -1757,7 +1391,7 @@ def save_multiband(trees: list, path: str, spark: SparkSession | None = None) ->
             tiles_dataframe(r, spark).withColumn("band", F.lit(i + 1))
             .write.mode("overwrite" if i == 0 else "append")
             .option("compression", "zstd")
-            .option("parquet.compression.codec.zstd.level", _save_zstd_level())
+            .option("parquet.compression.codec.zstd.level", _SAVE_ZSTD_LEVEL)
             .option("parquet.block.size", 8 * 1024 * 1024)
             .parquet(path)
         )
@@ -1780,8 +1414,6 @@ def save(tree, path: str, and_sum: bool = False, sparse: bool = False,
 
     ``sparse=True`` drops all-zero tiles (the GeoTIFF SPARSE_OK analog);
     readers treat missing tiles as zeros."""
-    import os  # pylint: disable=C0415
-
     from ..sources import parquet as pq_raster  # pylint: disable=C0415
 
     spark = get_spark(spark)
@@ -1798,7 +1430,7 @@ def save(tree, path: str, and_sum: bool = False, sparse: bool = False,
     (
         result.write.mode("overwrite")
         .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", _save_zstd_level())
+        .option("parquet.compression.codec.zstd.level", _SAVE_ZSTD_LEVEL)
         # bounded row groups so readers can split files finer than the
         # writer's task count
         .option("parquet.block.size", 8 * 1024 * 1024)

@@ -119,8 +119,9 @@ def write_meta(
         "bands": bands,
         "interleaved": interleaved,
         # dense=False (sparse save): all-zero tiles were dropped at write,
-        # so readers must treat ABSENT tiles as zeros via a key anti-join;
-        # dense tables get closed-form coverage instead (no extra scan).
+        # so readers must find ABSENT tiles from the stored tile keys and
+        # treat them as zeros; dense tables get closed-form coverage
+        # instead (no key read).
         "dense": dense,
     }
     with open(os.path.join(path, META_FILENAME), "w", encoding="utf-8") as fp:
@@ -437,7 +438,7 @@ def write_multiband_interleaved(
     """Write several bands as ONE tile table sorted (tile_y, tile_x, band)
     with row groups aligned to whole tiles, so every band of a tile lands in
     the same scan task — multi-channel expressions then need no shuffle at
-    all (see the single-scan path in ``plans/executor.py``).
+    all (see the manifest plan in ``plans/executor.py``).
     """
     import pyarrow as pa  # pylint: disable=C0415
     import pyarrow.parquet as pq  # pylint: disable=C0415

@@ -94,16 +94,7 @@ def _pip_broadcast(
         return pages.where(F.lit(False)).withColumn(
             "poly_id", F.lit(None).cast(poly_id_type)
         )
-    try:
-        rings_bc = spark.sparkContext.broadcast(rings_by_id)
-    except Exception:  # pylint: disable=W0703
-        # Spark Connect has no sparkContext; ship the dict in the UDF
-        # closure instead (same data, serialized per task batch instead of
-        # once per worker — dim-sized by contract, so this is acceptable).
-        class _PlainValue:  # noqa: D401 - minimal .value shim
-            value = rings_by_id
-
-        rings_bc = _PlainValue()
+    rings_bc = spark.sparkContext.broadcast(rings_by_id)
 
     if len(cell_to_pids) <= 256:  # keep the CASE chain inside codegen limits
         chain = None
@@ -493,15 +484,9 @@ def knn_join_df(
     # coalesced to 64 tasks -> 0.8s, 4.6x).  Narrow coalesce keeps every
     # core busy (2 waves) without a repartition shuffle.
     pages = pages.select("cell", "lat", "lng", id_col)
-    try:
-        # sparkContext/.rdd are absent on Spark Connect; the coalesce is a
-        # shuffle-overhead optimisation, not a correctness step — skip it
-        # there rather than crash before the query runs.
-        target_parts = 2 * spark.sparkContext.defaultParallelism
-        if pages.rdd.getNumPartitions() > 2 * target_parts:
-            pages = pages.coalesce(target_parts)
-    except Exception:  # pylint: disable=W0703
-        pass
+    target_parts = 2 * spark.sparkContext.defaultParallelism
+    if pages.rdd.getNumPartitions() > 2 * target_parts:
+        pages = pages.coalesce(target_parts)
 
     q = queries.select(
         "query_id",
