@@ -17,6 +17,10 @@ Checks (each FAILS the script if violated):
 6-10. Curation plans: scan-side sampling filter, JVM LM scoring,
    broadcast decontamination probe, Python-free URL canonical dedup,
    single-Arrow-batch Gopher signals.
+11-12. Broadcast DSIR ratio join; single-Arrow-batch Bloom probe.
+13. A manifest raster plan scans a JVM Range of group ids: no parallelized
+   Python RDD (``Scan ExistingRDD``) under its kernel, so each task runs
+   one Python worker.
 
 Run: python scripts/plan_audit.py [sf_dir]
 """
@@ -217,6 +221,27 @@ def main() -> int:
     ok = (n_arrow == 1 and "Join" not in probe_plan
           and "BatchEvalPython" not in probe_plan)
     check(f"bloom probe: one Arrow batch, no join (ArrowEvalPython x{n_arrow})", ok)
+
+    # 13. manifest raster plan: the kernel reads (file, row group) groups
+    # named by a JVM Range — a Python RDD feeding it would cost every task
+    # a second Python worker.  Two planar tables on the computation grid.
+    with tempfile.TemporaryDirectory(prefix="plan_audit_") as tmp:
+        proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
+        area = yg.Area(0.0, 0.0, 0.96, -0.64, proj)
+        a, b = (
+            yg.write_array_as_raster_table(
+                os.path.join(tmp, name), np.ones((64, 96), dtype=np.int16), area,
+                tile_size=constants.TILE_YSIZE)
+            for name in ("a", "b")
+        )
+        root = X._as_root(a * 2 + b)  # noqa: SLF001
+        payload = X._build(root, spark)[2]  # noqa: SLF001
+        plan = plan_of(X.tiles_dataframe(root, spark))
+        ok = ("manifest" in payload and "Range" in plan
+              and "ExistingRDD" not in plan)
+        check("manifest raster plan scans a JVM Range (no Scan ExistingRDD)", ok,
+              next((l for l in plan.splitlines() if "Range" in l or "ExistingRDD" in l),
+                   "(no Range line)"))
 
     print("\nPLAN AUDIT:", "all checks passed" if not failures else f"FAILURES: {failures}")
     return 1 if failures else 0

@@ -1,7 +1,7 @@
 """Regressions for the round-5 core-engine review findings: multi-ring halo
 exchange, GeoTIFF/parquet nodata parity, reader-cache invalidation, the
 save_multiband square-tile guard, write_geotiff abort, the no-EPSG guard,
-and process-stable leaf CSE hashes."""
+process-stable leaf CSE hashes, and the kernels' zip-finder eviction."""
 
 from __future__ import annotations
 
@@ -110,6 +110,41 @@ class TestReaderCacheInvalidation:
                 path, np.full((8, 8), v, dtype=np.float64), area, tile_size=4)
             got = yg.read_raster(path).sum(spark=spark)
             assert got == v * 64, (i, v, got)
+
+    def test_overwrite_within_float_mtime_resolution_replans(self, spark, tmp_path):
+        """An overwrite stamped 1 ns after the old table, a difference a
+        float st_mtime cannot show, must replan from the new footers.
+        Keyed on float st_mtime, the footer-stats and tile-manifest caches
+        served the old table's row-group ranges, which prune away the new
+        table's second row group."""
+        from yirgacheffe_spark.plans import executor as ex
+        from yirgacheffe_spark.sources import parquet as pqr
+
+        path = str(tmp_path / "ow")
+        part = os.path.join(path, "part-00000.parquet")
+        stamp = 1_700_000_000 * 10**9
+
+        def write(data, ns):
+            h, w = data.shape
+            area = Area(10.0, 50.0, 10.0 + w * 0.02, 50.0 - h * 0.02, _proj())
+            yg.write_array_as_raster_table(path, data, area, tile_size=4)
+            for name in os.listdir(path):
+                os.utime(os.path.join(path, name), ns=(ns, ns))
+
+        # 8 x 40 px: tile rows 0-1, row groups of 16 and 4 tiles (the
+        # second holds tile_x 6-9 only).
+        wide = np.ones((8, 40))
+        write(wide, stamp)
+        assert yg.read_raster(path).sum(spark=spark) == wide.sum()
+        old_mtime = os.stat(part).st_mtime
+        # 40 x 8 px: tile columns 0-1, the second row group holds tile rows
+        # 8-9 — pruned by the old ranges' tile_x 6-9.
+        tall = np.arange(320.0).reshape(40, 8)
+        write(tall, stamp + 1)
+        assert os.stat(part).st_mtime == old_mtime  # the old key collides
+
+        assert ex._footer_stats(part) == pqr.row_group_tile_stats(part)
+        assert yg.read_raster(path).sum(spark=spark) == tall.sum()
 
 
 def test_save_multiband_requires_square_tiles(spark, monkeypatch):
@@ -256,3 +291,61 @@ def test_dag_walkers_linear_on_shared_subtrees(spark):
     for _ in range(40):
         e = e + e
     assert e.sum(spark=spark) == 16 * 2.0 ** 40
+
+
+def test_forget_zip_finders_skips_rereads_and_never_serves_stale(tmp_path, monkeypatch):
+    """The kernels' task-start helper leaves no zipimporter for PySpark's
+    per-task ``importlib.invalidate_caches()`` to re-read, while imports
+    from the archive keep working and a rewritten archive is read afresh."""
+    import importlib
+    import zipfile
+    import zipimport
+
+    from yirgacheffe_spark.plans import executor as ex
+
+    archive = tmp_path / "zprobe.zip"
+    names = ("zprobe_pkg", "zprobe_pkg.first", "zprobe_pkg.second", "zprobe_pkg.third")
+
+    def write(modules: dict) -> None:
+        with zipfile.ZipFile(archive, "w") as zf:
+            zf.writestr("zprobe_pkg/__init__.py", "")
+            for name, value in modules.items():
+                zf.writestr(f"zprobe_pkg/{name}.py", f"VALUE = {value!r}\n")
+
+    def zip_finders():
+        return [f for f in sys.path_importer_cache.values()
+                if isinstance(f, zipimport.zipimporter)]
+
+    write({"first": 1, "second": 2})
+    monkeypatch.syspath_prepend(str(archive))
+    try:
+        first = importlib.import_module("zprobe_pkg.first")
+        assert first.VALUE == 1
+        assert zip_finders()
+
+        ex._forget_zip_finders()
+        assert not zip_finders()
+        reads = []
+        real_read = zipimport._read_directory
+
+        def counting_read(path):
+            reads.append(path)
+            return real_read(path)
+
+        monkeypatch.setattr(zipimport, "_read_directory", counting_read)
+        importlib.invalidate_caches()
+        assert reads == []
+        assert importlib.import_module("zprobe_pkg.second").VALUE == 2
+
+        # Rewrite the archive at the same path with other offsets and a
+        # new module: a cached directory would serve the old one.
+        ex._forget_zip_finders()
+        write({"first": "rewritten", "third": 3})
+        for name in names:
+            sys.modules.pop(name, None)
+        assert importlib.import_module("zprobe_pkg.first").VALUE == "rewritten"
+        assert importlib.import_module("zprobe_pkg.third").VALUE == 3
+    finally:
+        for name in names:
+            sys.modules.pop(name, None)
+        ex._forget_zip_finders()

@@ -333,3 +333,70 @@ def test_multi_table_planar_manifest_matches(spark, tmp_path, monkeypatch):
     assert executor._manifest_rows(spark, payload2, box2) is None
     np.testing.assert_array_equal(
         expr2.to_numpy(spark=spark), kernel.evaluate_window(expr2))
+
+
+def test_manifest_plan_scans_a_jvm_range(spark, tmp_path):
+    """The manifest plan feeds its kernel from a JVM ``Range`` over group
+    ids, not a parallelized Python RDD (``Scan ExistingRDD``), so each task
+    runs one Python worker: a single table, the planar three-table aoh
+    shape, and a sparse table."""
+    import yirgacheffe_spark as yg
+    from yirgacheffe_spark.plans import executor, kernel
+
+    rng = np.random.default_rng(41)
+    proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
+    area = yg.Area(0.0, 0.0, 0.20, -0.16, proj)
+    hab, elev, qty = (
+        yg.write_array_as_raster_table(
+            str(tmp_path / name), rng.integers(0, hi, (16, 20)).astype(np.int16),
+            area, tile_size=4)
+        for name, hi in (("hab", 12), ("elev", 1000), ("qty", 50))
+    )
+    aoh = hab.isin([1.0, 5.0, 7.0, 11.0]) * ((elev >= 100) & (elev <= 800)) * qty
+    holes = np.zeros((16, 20))
+    holes[5, 7] = 3.0
+    yg.from_array(holes, (0.0, 0.0), proj).save(str(tmp_path / "sparse"),
+                                                 sparse=True, spark=spark)
+    sparse = yg.read_raster(str(tmp_path / "sparse"))
+    assert not sparse.dense
+
+    for expr in (qty * 2, aoh, sparse + 1):
+        _s, _root, payload, _bc, _df = executor._build(expr, spark)
+        assert "manifest" in payload
+        plan = _executed_plan(expr, spark)
+        assert "Range" in plan and "ExistingRDD" not in plan, plan
+        np.testing.assert_array_equal(expr.to_numpy(spark=spark),
+                                      kernel.evaluate_window(expr))
+
+
+def test_planar_manifest_more_groups_than_partitions(spark, tmp_path):
+    """Planar tables with more row-group groups than range partitions, in a
+    window widened past the data: each range id carries one whole group, so
+    every band of a tile meets in one task (the kernel's slot check would
+    raise otherwise), and the tiles outside the data are zero-filled."""
+    import yirgacheffe_spark as yg
+    from yirgacheffe_spark.plans import executor, kernel
+
+    rng = np.random.default_rng(42)
+    proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
+    area = yg.Area(0.0, 0.0, 0.40, -0.64, proj)
+    # 64 x 40 px at tile 4: 160 tiles, 10 row groups of up to 16 per table.
+    la, lb = (
+        yg.write_array_as_raster_table(
+            str(tmp_path / name), rng.integers(0, 100, (64, 40)).astype(np.int16),
+            area, tile_size=4)
+        for name in ("a", "b")
+    )
+    wide = yg.Area(0.0, 0.0, 0.48, -0.72, proj)
+    expr = la.as_area(wide) * 3 + lb.as_area(wide) + 1  # f(0) != 0
+
+    payload = executor._plan_payload(executor._as_root(expr))
+    box = (0, payload["tiles_y"] - 1, 0, payload["tiles_x"] - 1)
+    man, df = executor._manifest_rows(spark, payload, box)
+    assert len(man["groups"]) > df.rdd.getNumPartitions()
+    assert all(len(group) == 2 for group in man["groups"])
+    assert man["missing"]
+
+    local = kernel.evaluate_window(expr)
+    np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
+    assert expr.sum(spark=spark) == float(local.sum(dtype=np.float64))

@@ -12,9 +12,10 @@ Physical shape of every computation:
    * the **manifest plan**, whenever every leaf lies on the computation grid
      (one table, one interleaved multiband table, or per-band tables whose
      row-group sequences match): the driver lists the (file, row group)
-     pairs that survive footer-statistics pruning and workers decode them
-     with pyarrow — no JVM payload decode, no shuffle.  Stencil halos ride
-     along as edge strips inside the payload broadcast.
+     pairs that survive footer-statistics pruning, a JVM range of group ids
+     hands them to tasks, and workers decode them with pyarrow — no JVM
+     payload decode, no shuffle.  Stencil halos ride along as edge strips
+     inside the payload broadcast.
    * the **general plan** for everything else: a JVM scan per leaf emits one
      row per (computation tile, piece) — a *re-tiling* of the stored grid
      whose tile-range predicates push down to parquet row-group stats —
@@ -34,6 +35,15 @@ Implementation notes for throughput:
   multi-megabyte binaries inside list<struct> columns, and Arrow buffers are
   sliced zero-copy into numpy, where pandas conversion would materialise
   Python dicts/bytes per piece.
+* One Python worker per task.  A kernel's input rows come from the JVM (a
+  parquet scan, or a ``spark.range`` of manifest group ids), never from a
+  parallelized Python RDD, which would start a second worker per task just
+  to emit rows.  Each Python task also pays a fixed start cost: PySpark's
+  worker calls ``importlib.invalidate_caches()`` before every task, and on
+  Python < 3.12 every cached zip finder re-reads its whole archive then
+  (175-209 ms of CPU per task for ``pyspark.zip`` on a 4-core host).  The
+  kernels evict those finders at task start (``_forget_zip_finders``), so
+  the next task on the same worker skips the re-read.
 * Driver-side plan construction keeps py4j chatter low: tile arithmetic is
   emitted as single ``selectExpr`` strings and parquet readers are cached
   per path, so repeated terminal actions cost milliseconds of planning.
@@ -49,8 +59,10 @@ from __future__ import annotations
 
 import math
 import os
+import sys
+import zipimport
 from functools import reduce
-from typing import Any, Iterator
+from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -79,7 +91,7 @@ _PA_UNIQUE = pa.schema(
     [("value", pa.float64()), ("is_nan", pa.bool_()), ("count", pa.int64())]
 )
 
-_reader_cache: dict[tuple[int, str, float], DataFrame] = {}
+_reader_cache: dict[tuple[int, str, int], DataFrame] = {}
 
 
 def _as_root(tree) -> LayerOperation:
@@ -159,7 +171,6 @@ _PIECE_PA_TYPE = pa.struct(
     [("slot", pa.int32()), ("py0", pa.int64()), ("px0", pa.int64()),
      ("sh", pa.int32()), ("sw", pa.int32()), ("p", pa.binary())]
 )
-MANIFEST_SCHEMA = "file string, rg int, mty int, mtx int"
 
 # Halo strips travel inside the payload broadcast, which every executor
 # holds whole: above this many strip bytes a stencil takes the general plan
@@ -338,25 +349,15 @@ def _halo_strips_direct(spark: SparkSession, payload: dict, slot: int,
     band = meta["band"]
     rng = _stored_range(payload, meta, tile_box, meta["pad"])
     sy_lo, sy_hi, sx_lo, sx_hi = rng
-    rows = [(f, rg, -1, -1)
-            for f, rg, _ymm, _xmm in _pruned_row_groups(meta["path"], band, band, rng)]
-    rows = rows or [(None, -1, -1, -1)]
-    # parallelize slices directly: a createDataFrame + repartition of
-    # this dim-sized list costs an extra exchange stage per call.
-    parallelism = max(spark.sparkContext.defaultParallelism * 2, 1)
-    mdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, min(len(rows), parallelism)),
-        MANIFEST_SCHEMA,
-    )
+    rows = [(f, rg) for f, rg, _ymm, _xmm
+            in _pruned_row_groups(meta["path"], band, band, rng)]
 
     def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        _forget_zip_finders()
         out_ty, out_tx, out_struct = [], [], []
         for batch in batches:
-            files = batch.column(0).to_pylist()
-            rgs = batch.column(1).to_pylist()
-            for f, rg in zip(files, rgs):
-                if f is None:
-                    continue
+            for rid in batch.column(0).to_pylist():
+                f, rg = rows[rid]
                 tbl = _read_row_group(f, rg)
                 b_arr = tbl.column("band").to_numpy()
                 sy_c = tbl.column("tile_y").to_numpy()
@@ -389,7 +390,8 @@ def _halo_strips_direct(spark: SparkSession, payload: dict, slot: int,
                 names=["ty", "tx", "piece"],
             )
 
-    return mdf.mapInArrow(extract, schema=f"ty int, tx int, piece {PIECE_STRUCT_SQL}")
+    return _range_of(spark, len(rows)).mapInArrow(
+        extract, schema=f"ty int, tx int, piece {PIECE_STRUCT_SQL}")
 
 
 def _halo_pieces(spark: SparkSession, payload: dict, slots: list[int],
@@ -422,12 +424,12 @@ def _halo_strip_bytes(payload: dict, slot: int,
 
 # Footer statistics cache: repeated terminal actions over the same raster
 # (every bench/production loop) must not re-read every parquet footer on the
-# driver.  Keyed by (file, mtime); entries are (row_group, (ty_min, ty_max),
+# driver.  Keyed by (file, mtime_ns); entries are (row_group, (ty_min, ty_max),
 # (tx_min, tx_max)) with None when the writer recorded no statistics.
-_FOOTER_CACHE: dict[tuple[str, float], list] = {}
+_FOOTER_CACHE: dict[tuple[str, int], list] = {}
 
 
-def _footer_cache_put(key: tuple[str, float], value: list) -> None:
+def _footer_cache_put(key: tuple[str, int], value: list) -> None:
     # FIFO size bound — must run on EVERY insertion point (the manifest-hit
     # branch previously skipped it, so long-lived sessions touching many
     # distinct files/mtimes grew the driver cache unboundedly).
@@ -437,7 +439,7 @@ def _footer_cache_put(key: tuple[str, float], value: list) -> None:
 
 
 def _footer_stats(path: str) -> list:
-    key = (path, os.stat(path).st_mtime)
+    key = (path, os.stat(path).st_mtime_ns)
     got = _FOOTER_CACHE.get(key)
     if got is None:
         # Prefer the save-time manifest: one JSON fetch for the whole table
@@ -486,7 +488,7 @@ def _pruned_row_groups(path: str, band_lo: int, band_hi: int,
 
 def _manifest_rows(spark: SparkSession, payload: dict,
                    tile_box: tuple[int, int, int, int]):
-    """Pyarrow-direct scan plan: (file, row-group) manifest rows the kernel
+    """Pyarrow-direct scan plan: (file, row-group) groups the kernel
     reads itself (C++ parquet decode inside the Python worker), skipping the
     JVM's payload decode AND the JVM->Arrow re-conversion — the two largest
     CPU+GC costs of payload-heavy scans (measured ~2x the kernel itself).
@@ -541,16 +543,15 @@ def _manifest_rows(spark: SparkSession, payload: dict,
 
     if same_path:
         stats = _pruned_row_groups(first["path"], min(bands), max(bands), rng)
-        rows = [(f, rg, -1, -1) for f, rg, _ymm, _xmm in stats]
+        groups = [[(f, rg)] for f, rg, _ymm, _xmm in stats]
         file_slots = {"*": [(int(b), i) for i, b in enumerate(bands)]}
-        group_partitioned = False
     else:
         # One stats pass per distinct table; all leaves must expose
         # IDENTICAL ordered (rg, tile-range) sequences (our writer is
         # deterministic, so per-channel tables of one grid do) — then
-        # row group i of every table holds the same tile run and tagging
-        # rows with the sequence index as a partitioning key co-locates
-        # them.  Any divergence falls back to the general plan.
+        # row group i of every table holds the same tile run, and group i
+        # lists all of them.  Any divergence falls back to the general
+        # plan.
         per_slot = [_pruned_row_groups(m["path"], m["band"], m["band"], rng)
                     for m in metas]
         shape0 = [(rg, ymm, xmm) for _f, rg, ymm, xmm in per_slot[0]]
@@ -559,17 +560,15 @@ def _manifest_rows(spark: SparkSession, payload: dict,
                 return None
         if any(ymm is None or xmm is None for _rg, ymm, xmm in shape0):
             return None
-        rows = []
+        groups = [[(f, rg) for f, rg, _ymm, _xmm in seq] for seq in zip(*per_slot)]
         file_slots = {}
         for slot, st in enumerate(per_slot):
             band = int(metas[slot]["band"])
-            for gi, (f, rg, _ymm, _xmm) in enumerate(st):
-                rows.append((f, rg, gi, -1))
+            for f, _rg, _ymm, _xmm in st:
                 file_slots.setdefault(f, []).append((band, slot))
-        group_partitioned = True
 
-    # Box tiles with no stored row exist as zeros: one (None, -1, ty, tx)
-    # row each.  A dense table's coverage is a closed-form rectangle; a
+    # Box tiles with no stored row exist as zeros: one (ty, tx) entry
+    # each.  A dense table's coverage is a closed-form rectangle; a
     # sparse one's is the key columns of the pruned row groups (no payload
     # decode).
     off_y, off_x = ayoff // s, axoff // s
@@ -588,35 +587,33 @@ def _manifest_rows(spark: SparkSession, payload: dict,
 
         def stored(ty: int, tx: int) -> bool:
             return (ty, tx) in present
-    missing = [(None, -1, ty, tx)
+    missing = [(ty, tx)
                for ty in range(ty_lo, ty_hi + 1)
                for tx in range(tx_lo, tx_hi + 1)
                if not stored(ty, tx)]
 
+    # The scan is a JVM range over group ids: a group (one row group per
+    # leaf table) or a missing tile per id, looked up in this broadcast
+    # meta by the kernel.  An id is the unit a task reads, so every slot
+    # of a stored tile reaches one task by construction, and each task
+    # runs one Python worker (a parallelized Python RDD would add a
+    # second one per task just to emit the ids).
     meta = {
         "file_slots": file_slots,
+        "groups": groups,
+        "missing": missing,
         "s": int(s), "ayoff": int(ayoff), "axoff": int(axoff),
         "box": tuple(int(v) for v in tile_box),
     }
-    if group_partitioned:
-        # All slots of a tile run must share a task (the kernel assembles
-        # a tile from consecutive rows of one partition), so the rows are
-        # parallelized GROUP-ATOMICALLY: one list element per sequence
-        # index, spread round-robin over even slices.  A hash repartition
-        # on the index measured ~37% empty partitions (balls-in-bins) and
-        # 2-3-group stragglers — visible as a save_tiles/aoh regression.
-        by_group: dict[int, list] = {}
-        for row in rows:
-            by_group.setdefault(row[2], []).append(row)
-        elements = list(by_group.values())
-    else:
-        elements = [[row] for row in rows]
-    elements += [[m] for m in missing]
+    return meta, _range_of(spark, len(groups) + len(missing))
+
+
+def _range_of(spark: SparkSession, n: int) -> DataFrame:
+    """Ids ``0..n-1`` as a JVM range, in contiguous runs over up to twice
+    the default parallelism: a task's ids are neighbouring tiles or row
+    groups, which its ranged-read cache rewards."""
     parallelism = max(spark.sparkContext.defaultParallelism * 2, 1)
-    rdd = spark.sparkContext.parallelize(
-        elements, min(len(elements), parallelism)
-    ).flatMap(lambda g: g)
-    return meta, spark.createDataFrame(rdd, MANIFEST_SCHEMA)
+    return spark.range(0, n, numPartitions=max(min(n, parallelism), 1))
 
 
 def _missing_grid(spark: SparkSession, payload: dict,
@@ -648,9 +645,7 @@ def _base_grid(spark: SparkSession, payload: dict,
                tile_box: tuple[int, int, int, int]) -> DataFrame:
     ty_lo, ty_hi, tx_lo, tx_hi = tile_box
     n_y, n_x = ty_hi - ty_lo + 1, tx_hi - tx_lo + 1
-    n = n_y * n_x
-    parallelism = max(min(n, spark.sparkContext.defaultParallelism * 2), 1)
-    return spark.range(0, n, numPartitions=parallelism).selectExpr(
+    return _range_of(spark, n_y * n_x).selectExpr(
         f"CAST({ty_lo} + id DIV {n_x} AS INT) AS ty",
         f"CAST({tx_lo} + id % {n_x} AS INT) AS tx",
     )
@@ -662,8 +657,9 @@ def _build(tree, spark: SparkSession | None, sub_window: Window | None = None):
     * **Manifest plan** (``_manifest_rows``) whenever every leaf lies on
       the computation grid: one table (dense or sparse), distinct bands of
       one interleaved table, or dense per-band tables with identical
-      row-group sequences.  Rows name (file, row group) pairs the kernel
-      decodes with pyarrow; no JVM payload bytes, no shuffle.  Stencil
+      row-group sequences.  A JVM range of ids names groups of (file, row
+      group) pairs, listed in the broadcast, that the kernel decodes with
+      pyarrow; no JVM payload bytes, no shuffle.  Stencil
       leaves add halo strips (``_halo_pieces``), collected once and shipped
       inside the payload broadcast while they fit ``_HALO_BROADCAST_MAX``;
       the kernel merges them at assembly.
@@ -755,28 +751,14 @@ def _assemble_slot(meta: dict, pieces, y0: int, x0: int, h: int, w: int):
     return out, (oy, ox)
 
 
-# Keyed by (path, mtime_ns, size), NOT path alone: an overwrite that reuses
-# the file name would otherwise keep serving the DELETED inode through the
-# cached open handle — stale reads that depend on which worker gets the task
-# (caught as a flaky overwrite-loop test; one os.stat per row group is noise
-# next to the footer parse the cache avoids).
-_PQ_FILE_CACHE: dict[tuple, Any] = {}
-
 _TILE_COLUMNS = ("band", "tile_y", "tile_x", "ysize", "xsize", "payload")
 
 
 def _read_row_group(f: str, rg: int, columns=_TILE_COLUMNS) -> pa.Table:
     """One row group of a tile table, through the process's open-file cache."""
-    import pyarrow.parquet as pq  # pylint: disable=C0415
+    from ..sources.parquet import _pq_handle  # pylint: disable=C0415
 
-    st = os.stat(f)
-    fkey = (f, st.st_mtime_ns, st.st_size)
-    pf = _PQ_FILE_CACHE.get(fkey)
-    if pf is None:
-        if len(_PQ_FILE_CACHE) > 64:
-            _PQ_FILE_CACHE.clear()
-        pf = _PQ_FILE_CACHE[fkey] = pq.ParquetFile(f)
-    return pf.read_row_group(rg, columns=list(columns))
+    return _pq_handle(f).read_row_group(rg, columns=list(columns))
 
 
 def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
@@ -789,14 +771,15 @@ def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
     s, ayoff, axoff = man["s"], man["ayoff"], man["axoff"]
     ty_size, tx_size = payload["ty_size"], payload["tx_size"]
     ty_lo, ty_hi, tx_lo, tx_hi = man["box"]
-    files = batch.column(0).to_pylist()
-    rgs = batch.column(1).to_pylist()
-    mtys = batch.column(2).to_pylist()
-    mtxs = batch.column(3).to_pylist()
-    for f, rg, mty, mtx in zip(files, rgs, mtys, mtxs):
-        if f is None:  # tile with no stored row: exists as zeros
-            groups.setdefault((int(mty), int(mtx)), [[] for _ in range(n_slots)])
-            continue
+    man_groups, missing = man["groups"], man["missing"]
+    reads = []
+    for gid in batch.column(0).to_pylist():
+        if gid < len(man_groups):
+            reads += man_groups[gid]
+        else:  # tile with no stored row: exists as zeros
+            groups.setdefault(missing[gid - len(man_groups)],
+                              [[] for _ in range(n_slots)])
+    for f, rg in reads:
         band_slot = dict(shared_slots if shared_slots is not None
                          else file_slots[f])
         tbl = _read_row_group(f, rg)
@@ -828,6 +811,23 @@ def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
             )
 
 
+def _forget_zip_finders() -> None:
+    """Evict cached zip-archive import finders, so the next task's start
+    costs no archive re-read.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` before every
+    task, and before Python 3.12 each cached ``zipimporter`` re-reads its
+    whole archive directory then: 175-209 ms of CPU per task for the
+    ``pyspark.zip`` finders a warm worker holds.  Their directory-cache
+    entries go too, so a finder the import system rebuilds on demand
+    re-reads its archive at most once, on its next import, and never
+    serves a stale directory.  Kernels call this at task start."""
+    for key, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[key]
+            zipimport._zip_directory_cache.pop(finder.archive, None)  # noqa: SLF001
+
+
 def _tile_results(bc, batch_iter: Iterator[pa.RecordBatch]):
     """Generator core of every kernel: yields (ty, tx, h, w, result) per tile.
 
@@ -839,6 +839,7 @@ def _tile_results(bc, batch_iter: Iterator[pa.RecordBatch]):
     """
     from ..sources import parquet as pq_raster  # pylint: disable=C0415
 
+    _forget_zip_finders()
     # Task-scoped ranged-read cache: kernel-side mosaic fetches of this
     # task's contiguous tile run reuse decoded row groups (nothing survives
     # the task — see parquet.push_read_scope).
@@ -1338,13 +1339,17 @@ def read_array(tree, x: int, y: int, width: int, height: int,
     out = np.zeros((height, width), dtype=out_dtype)
     if overlap is None:
         return out
-    rows = tiles_dataframe(root, spark, sub_window=overlap).collect()
+    # One Arrow transfer: a row collect() pickles every tile payload.
+    table = tiles_dataframe(root, spark, sub_window=overlap).select(
+        "tile_y", "tile_x", "ysize", "xsize", "payload").toArrow()
     ty_size, tx_size = constants.TILE_YSIZE, constants.TILE_XSIZE
-    for r in rows:
-        tile = np.frombuffer(r["payload"], dtype=out_dtype).reshape(r["ysize"], r["xsize"])
-        ty0, tx0 = r["tile_y"] * ty_size, r["tile_x"] * tx_size
-        iy0, iy1 = max(ty0, overlap.yoff), min(ty0 + r["ysize"], overlap.ymax)
-        ix0, ix1 = max(tx0, overlap.xoff), min(tx0 + r["xsize"], overlap.xmax)
+    payloads = table.column("payload")
+    keys = zip(*(table.column(c).to_pylist() for c in ("tile_y", "tile_x", "ysize", "xsize")))
+    for i, (tile_y, tile_x, ysize, xsize) in enumerate(keys):
+        tile = np.frombuffer(payloads[i].as_buffer(), dtype=out_dtype).reshape(ysize, xsize)
+        ty0, tx0 = tile_y * ty_size, tile_x * tx_size
+        iy0, iy1 = max(ty0, overlap.yoff), min(ty0 + ysize, overlap.ymax)
+        ix0, ix1 = max(tx0, overlap.xoff), min(tx0 + xsize, overlap.xmax)
         if iy0 >= iy1 or ix0 >= ix1:
             continue
         out[iy0 - y : iy1 - y, ix0 - x : ix1 - x] = tile[iy0 - ty0 : iy1 - ty0, ix0 - tx0 : ix1 - tx0]
@@ -1459,6 +1464,7 @@ def save(tree, path: str, and_sum: bool = False, sparse: bool = False,
         dt = root.datatype.to_numpy()
 
         def _partials(batches):
+            _forget_zip_finders()
             for batch in batches:
                 tys = batch.column("tile_y").to_numpy()
                 txs = batch.column("tile_x").to_numpy()

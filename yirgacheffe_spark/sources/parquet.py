@@ -40,13 +40,13 @@ META_FILENAME = "_raster_meta.json"
 # tile, and rebuilding a pyarrow dataset (a directory listing against object
 # storage) per tile read is a scale-killer.  Keyed by path + directory mtime
 # so a rewritten raster is picked up.
-_DATASET_CACHE: dict[tuple[str, float], Any] = {}
+_DATASET_CACHE: dict[tuple[str, int], Any] = {}
 
 
 def _dataset_for(path: str):
     import pyarrow.dataset as ds  # pylint: disable=C0415
 
-    key = (path, os.stat(path).st_mtime)
+    key = (path, os.stat(path).st_mtime_ns)
     found = _DATASET_CACHE.get(key)
     if found is None:
         # Default ignore_prefixes ('.', '_') skips _raster_meta.json.
@@ -79,6 +79,11 @@ def pop_read_scope() -> None:
 
 
 def _pq_handle(fpath: str):
+    """The process's open ``ParquetFile`` for ``fpath``, shared by the
+    executor's manifest reads and the ranged reads here.  Keyed by (path,
+    mtime_ns, size), NOT path alone: an overwrite that reuses the file name
+    would otherwise keep serving the DELETED inode through the cached open
+    handle — stale reads that depend on which worker gets the task."""
     import pyarrow.parquet as pq  # pylint: disable=C0415
 
     st = os.stat(fpath)
@@ -185,17 +190,17 @@ def row_group_tile_stats(file_path: str) -> list:
     return out
 
 
-_TILE_MANIFEST_CACHE: dict[tuple[str, float], dict] = {}
+_TILE_MANIFEST_CACHE: dict[tuple[str, int], dict] = {}
 
 
 def read_tile_manifest(path: str) -> dict | None:
     """The saved manifest as {file -> [(rg, (ty_min, ty_max), (tx_min,
     tx_max)), ...]}, or None when the table predates manifests.  Cached per
-    (dir, manifest mtime)."""
+    (dir, manifest mtime_ns)."""
     mf = os.path.join(path, MANIFEST_JSON)
     if not os.path.exists(mf):
         return None
-    key = (path, os.stat(mf).st_mtime)
+    key = (path, os.stat(mf).st_mtime_ns)
     got = _TILE_MANIFEST_CACHE.get(key)
     if got is None:
         with open(mf, encoding="utf-8") as fp:
