@@ -789,12 +789,15 @@ def test_asof_string_tiebreak_keeps_own_type(spark):
         assert out[0]["r_px"] == 3.0  # max string seq wins on every layout
 
 
-def test_knn_exact_even_with_tiny_max_ring(spark):
+@pytest.mark.parametrize("res", [6, 10, 12])
+def test_knn_exact_even_with_tiny_max_ring(spark, res):
     """max_ring bounds only the cheap cell-disk search, never correctness:
     when the disk cannot certify the k nearest (sparse corner data, tiny
     max_ring), the unverifiable queries fall through to an exact pass.  The
     old force-settle at max_ring returned disk-corner pages as 'nearest'
-    and silently DROPPED queries whose disk was empty."""
+    and silently DROPPED queries whose disk was empty.  Above res 8 the
+    same fallback planner runs on parent cells: its plan is the
+    mapInPandas planner, never a cells x queries cross join."""
     import pandas as pd
 
     from yirgacheffe_spark.spatial import joins
@@ -808,12 +811,17 @@ def test_knn_exact_even_with_tiny_max_ring(spark):
     from yirgacheffe_spark.spatial import cells as ci
     import numpy as np
 
-    pages = pages.withColumn("cell", joins.cell_expr("lat", "lng", 6))
+    pages = pages.withColumn("cell", joins.cell_expr("lat", "lng", res))
     queries = [
         {"query_id": 1, "lat": 0.0, "lng": 0.0},     # empty disk at ring 1
         {"query_id": 2, "lat": -30.0, "lng": 140.0}, # nearer to the -35 cluster
     ]
-    out = joins.knn_join(spark, pages, queries, k=2, res=6, max_ring=1).collect()
+    knn = joins.knn_join(spark, pages, queries, k=2, res=res, max_ring=1)
+    out = knn.collect()
+    plan = knn._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
     by_q = {}
     for r in out:
         by_q.setdefault(r.query_id, []).append(r)
@@ -828,10 +836,12 @@ def test_knn_exact_even_with_tiny_max_ring(spark):
         assert got == want, (q, got, want)
 
 
-def test_knn_k_larger_than_table(spark):
+@pytest.mark.parametrize("res", [6, 10, 12])
+def test_knn_k_larger_than_table(spark, res):
     """k exceeding the table's row count returns every row, exactly — the
     histogram-pruned final pass must not drop any nonempty cell when the
-    whole table is smaller than k."""
+    whole table is smaller than k, and a query whose disk found some rows
+    gets the fallback's rows instead of them, not as well."""
     import pandas as pd
 
     from yirgacheffe_spark.spatial import joins
@@ -840,11 +850,19 @@ def test_knn_k_larger_than_table(spark):
         "url": ["a", "b", "c"],
         "lat": [40.0, -35.0, 10.0],
         "lng": [10.0, 150.0, -60.0],
-    })).withColumn("cell", joins.cell_expr("lat", "lng", 6))
+    })).withColumn("cell", joins.cell_expr("lat", "lng", res))
+    queries = [{"query_id": 1, "lat": 0.0, "lng": 0.0},
+               {"query_id": 2, "lat": 40.0, "lng": 10.0}]  # "a" in its disk
     out = joins.knn_join(
-        spark, pages, [{"query_id": 1, "lat": 0.0, "lng": 0.0}],
-        k=10, res=6, max_ring=1).collect()
-    assert {r.url for r in out} == {"a", "b", "c"}
+        spark, pages, queries, k=10, res=res, max_ring=1).collect()
+    p = pages.toPandas()
+    for q in queries:
+        d = joins.haversine_m(p["lat"].to_numpy(), p["lng"].to_numpy(),
+                              np.full(3, q["lat"]), np.full(3, q["lng"]))
+        want = list(enumerate(p["url"].to_numpy()[np.argsort(d)], 1))
+        got = sorted((r["rank"], r.url) for r in out
+                     if r.query_id == q["query_id"])
+        assert got == want, (q, got, want)
 
 
 def test_knn_empty_query_list(spark):
@@ -860,7 +878,8 @@ def test_knn_empty_query_list(spark):
     assert set(out.columns) == {"query_id", "url", "dist_m", "rank"}
 
 
-def test_knn_polar_exact(spark):
+@pytest.mark.parametrize("res", [6, 10, 12])
+def test_knn_polar_exact(spark, res):
     """Polar regression for the histogram pass's per-cell distance UPPER
     bound: the parallel leg must use the cos that MAXIMIZES it over the
     cell's latitude range (1.0 across the equator), not cos(far_lat) —
@@ -872,7 +891,7 @@ def test_knn_polar_exact(spark):
 
     from yirgacheffe_spark.spatial import joins
 
-    # Pages ONLY in the pole-adjacent rows (row 0 and row 63 at res 6),
+    # Pages ONLY at +-89.3 deg (the pole-adjacent rows 0 and 63 at res 6),
     # spread over longitudes including across the antimeridian; every
     # query's ring-1 disk is empty -> all take the histogram fallback.
     lngs = np.arange(-175.0, 180.0, 10.0)
@@ -885,7 +904,7 @@ def test_knn_polar_exact(spark):
         "lng": np.concatenate([lngs, lngs]),
     })
     pages = spark.createDataFrame(pdf).withColumn(
-        "cell", joins.cell_expr("lat", "lng", 6))
+        "cell", joins.cell_expr("lat", "lng", res))
     queries = [
         {"query_id": 1, "lat": 40.0, "lng": 179.0},
         {"query_id": 2, "lat": 40.0, "lng": -179.0},
@@ -893,7 +912,7 @@ def test_knn_polar_exact(spark):
         {"query_id": 4, "lat": 0.0, "lng": -91.0},
         {"query_id": 5, "lat": 75.0, "lng": 13.0},
     ]
-    out = joins.knn_join(spark, pages, queries, k=3, res=6,
+    out = joins.knn_join(spark, pages, queries, k=3, res=res,
                          max_ring=1).collect()
     by_q = {}
     for r in out:
@@ -908,6 +927,8 @@ def test_knn_polar_exact(spark):
         got = [r.url for r in sorted(by_q[q["query_id"]],
                                      key=lambda r: r.rank)]
         assert got == want, (q, got, want)
+    if res != 6:
+        return
 
     # Pinned minimal failure of the old cos(far_lat) formula (verified
     # numerically): for a query at (40, 179), the row-0 cell across the

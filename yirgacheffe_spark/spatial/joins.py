@@ -15,7 +15,6 @@ aggregate-free joins.
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -239,13 +238,13 @@ def point_in_polygon_join(
 # cache is driver-side, tiny (<= 64k float64 per entry), and bounded.
 _BAND_DENSITY_CACHE: dict = {}
 _BAND_DENSITY_CACHE_MAX = 32
-# (plan identity,) -> checkpointed per-cell count DataFrame (the exact-kNN
-# final pass's pruning histogram; same invalidation story as the band cache)
-_CELL_COUNT_CACHE: dict = {}
-# (plan identity,) -> (sorted cell ids, counts) numpy arrays — the
-# driver-side twin used when res is low enough that the nonempty-cell
-# histogram is driver-sized (<= 2*4^res rows)
+# (plan identity, planning res p) -> (sorted cell ids, counts) numpy arrays:
+# the exact-kNN fallback's nonempty-cell histogram at p = min(res,
+# _KNN_PLAN_RES), grouped by parent cell above that, so it is always
+# driver-sized (<= 2*4^8 = 131k rows).  Same invalidation story as the band
+# cache.
 _CELL_HIST_CACHE: dict = {}
+_KNN_PLAN_RES = 8
 
 
 def _plan_identity(df: DataFrame):
@@ -271,7 +270,6 @@ def invalidate_density_cache() -> None:
     results exact), but every query would pay the escalation scan until
     the process restarts."""
     _BAND_DENSITY_CACHE.clear()
-    _CELL_COUNT_CACHE.clear()
     _CELL_HIST_CACHE.clear()
 
 
@@ -279,9 +277,7 @@ def band_density_profile(pages: DataFrame, res: int) -> "np.ndarray":
     """Per-latitude-band row counts of a cell-indexed pages table (bands are
     cell rows, coarsened so at most 65536 land on the driver).  Cached by the
     table's analyzed-plan identity: repeated kNN joins against the same table
-    skip the aggregation job entirely.  Pass the result to
-    ``knn_join_df(density_profile=...)`` to share it across differently-built
-    DataFrames over the same physical table; call
+    skip the aggregation job entirely.  Call
     ``invalidate_density_cache()`` after rewriting a table in place (the
     plan-keyed cache cannot detect changed files — stale entries are
     performance-only, never correctness)."""
@@ -310,18 +306,22 @@ def band_density_profile(pages: DataFrame, res: int) -> "np.ndarray":
     return counts
 
 
-def _knn_histogram_plan(pdf: "pd.DataFrame", hist, geom, k: int) -> "pd.DataFrame":
+def _knn_histogram_plan(pdf: "pd.DataFrame", hist, p: int, k: int) -> "pd.DataFrame":
     """Exact-kNN fallback planner for one batch of unsettled queries:
     per (query, cell) SOUND distance bounds over the nonempty-cell
-    histogram select the few cells that can hold the true top-k.
+    histogram at planning resolution ``p`` select the few cells that can
+    hold the true top-k.  It is the only planner, at every resolution:
+    ``p = min(res, 8)``, and above res 8 ``hist`` counts rows per PARENT
+    cell (``cells.cell_parent``).  A parent's lower bound never exceeds any
+    child's and its upper bound never falls below any child's, so the cap
+    stays sound and every kept parent may still hold a top-k row.
 
-    Bounds use the EXACT query point (not the cell-granular drow/dcol-1
-    forms of the distributed twin, which concede up to a full cell of
-    slack per axis).  UPPER bound: meridian leg to the cell's far
-    latitude edge + parallel leg (exact far longitude separation) with
-    the cos MAXIMISED over the cell's latitude range (1.0 across the
-    equator — the cos(far_lat) form understated ub for pole-adjacent
-    cells and pruned true nearest neighbors, test_knn_polar_exact).
+    Bounds use the EXACT query point.  UPPER bound: meridian leg to the
+    cell's far latitude edge + parallel leg (exact far longitude
+    separation) with the cos MAXIMISED over the cell's latitude range (1.0
+    across the equator — the cos(far_lat) form understated ub for
+    pole-adjacent cells and pruned true nearest neighbors,
+    test_knn_polar_exact).
     Sorting cells by ub, the cheapest prefix holding k rows caps the
     true k-th distance.  LOWER bound: max(meridian term of the exact
     latitude gap, haversine longitude term with cos minimised over the
@@ -330,16 +330,17 @@ def _knn_histogram_plan(pdf: "pd.DataFrame", hist, geom, k: int) -> "pd.DataFram
     meridian term survives the cap (the dense trig pass was the
     planner's measured cost).
 
-    Returns (query_id, cell, qlat, qlng, cap) keep rows; ``cap`` lets the
-    candidate fetch drop dist > cap rows exactly (>= k rows exist at
-    <= cap by construction)."""
+    Returns (query_id, pcell, qlat, qlng, cap) keep rows, ``pcell`` a cell
+    at ``p``; ``cap`` lets the candidate fetch drop dist > cap rows exactly
+    (>= k rows exist at <= cap by construction)."""
     h_cells, h_counts = hist
-    cell_h_deg, cell_w_deg, cols_n = geom
+    cell_h_deg = 180.0 / (1 << p)
+    cell_w_deg = 360.0 / (1 << (p + 1))
     m_np = 111_194.9
     qid_a = pdf["query_id"].to_numpy()
     if len(qid_a) == 0 or len(h_cells) == 0:
         return pd.DataFrame({
-            "query_id": qid_a[:0], "cell": np.array([], dtype=np.int64),
+            "query_id": qid_a[:0], "pcell": np.array([], dtype=np.int64),
             "qlat": np.array([]), "qlng": np.array([]), "cap": np.array([]),
         })
     qlat_a = pdf["qlat"].to_numpy(dtype=np.float64)
@@ -355,7 +356,7 @@ def _knn_histogram_plan(pdf: "pd.DataFrame", hist, geom, k: int) -> "pd.DataFram
     cos_par_v = np.where((c_north_v >= 0) & (c_south_v <= 0), 1.0,
                          np.maximum(cos_n, cos_s))
     cell_lng0 = ccol.astype(np.float64) * cell_w_deg - 180.0
-    keep = {"query_id": [], "cell": [], "qlat": [], "qlng": [], "cap": []}
+    keep = {"query_id": [], "pcell": [], "qlat": [], "qlng": [], "cap": []}
     for c0 in range(0, len(qid_a), 1024):
         sl = slice(c0, c0 + 1024)
         ql, qg, qi = qlat_a[sl], qlng_a[sl], qid_a[sl]
@@ -374,8 +375,8 @@ def _knn_histogram_plan(pdf: "pd.DataFrame", hist, geom, k: int) -> "pd.DataFram
             c_north_v[None, :], c_south_v[None, :])
         ub_m = (np.abs(ql[:, None] - far_m) * m_np
                 + far_lng * m_np * cos_par_v[None, :])
-        # Stable argsort over the cell-ascending axis reproduces the
-        # ORDER BY (_ub, cell) tie-break of the distributed twin.
+        # Stable argsort over the cell-ascending axis breaks ub ties by
+        # cell id, so the cap is deterministic.
         order = np.argsort(ub_m, axis=1, kind="stable")
         cnt_sorted = np.take(h_counts, order)
         cum_excl = np.cumsum(cnt_sorted, axis=1) - cnt_sorted
@@ -400,7 +401,7 @@ def _knn_histogram_plan(pdf: "pd.DataFrame", hist, geom, k: int) -> "pd.DataFram
         sel = lb_s <= cap_a[mq]
         sq, sc = mq[sel], mc[sel]
         keep["query_id"].append(qi[sq])
-        keep["cell"].append(h_cells[sc])
+        keep["pcell"].append(h_cells[sc])
         keep["qlat"].append(ql[sq])
         keep["qlng"].append(qg[sq])
         keep["cap"].append(cap_a[sq])
@@ -427,16 +428,14 @@ def knn_join_df(
     res: int = 7,
     max_ring: int = 6,
     id_col: str = "url",
-    broadcast_queries: bool = True,
     initial_ring: int | None = None,
-    density_profile: "np.ndarray | None" = None,
 ) -> DataFrame:
     """Table-vs-table kNN: for every row of ``queries`` (query_id, lat, lng),
     its k nearest pages by great-circle distance — EXACT for every query,
     including ones in empty regions whose true neighbors are thousands of
     km away (``max_ring`` is a performance knob for the cheap disk search,
-    never a correctness bound: what it cannot certify falls through to a
-    cell-histogram-pruned global pass).
+    never a correctness bound: what it cannot certify falls through to one
+    cell-histogram-pruned exact pass).
 
     ONE-SHOT adaptive-disk design: every query is assigned its own ring —
     the smallest power of two whose disk (a) is expected to hold >= 4k
@@ -450,10 +449,12 @@ def knn_join_df(
     and k-th distance within the sound outside-point bound (min over
     integer row offsets d of max(d*cell_h meridian term, longitude chord
     at the point's own latitude)).  Queries the bound cannot certify take
-    one cell-histogram-pruned exact pass: per-(query, cell) sound distance
-    bounds over the (cached) nonempty-cell counts shrink candidates to the
-    few cells around the nearest data, then one candidate-fetch scan and a
-    window rank.  The driver never sees a result row.
+    one exact fallback pass, with one planner at every resolution:
+    ``_knn_histogram_plan`` prices each (query, cell) pair of the (cached)
+    nonempty-cell histogram at ``min(res, 8)`` with sound distance bounds
+    and keeps the few cells around the nearest data; one candidate-fetch
+    scan joins pages on their cell's parent at that resolution, and a
+    window rank finishes.  The driver never sees a result row.
 
     Why one-shot: the earliest multi-round shell expansion cost one full
     page scan PLUS an eager ``localCheckpoint`` barrier per round, and the
@@ -468,9 +469,6 @@ def knn_join_df(
     """
     from pyspark.sql import Window as W
 
-    if os.environ.get("YG_KNN_DEBUG"):
-        import time as _time_entry
-        _t_entry = _time_entry.time()
     rows_n, cols_n = 1 << res, 1 << (res + 1)
     cell_h_deg = 180.0 / rows_n
     cell_w_deg = 360.0 / cols_n
@@ -533,16 +531,7 @@ def knn_join_df(
         shift = max(res - 16, 0)  # cap the collected bands at 65536
         n_bands = rows_n >> shift
         band_h_deg = 180.0 / n_bands
-        counts = (
-            density_profile
-            if density_profile is not None
-            else band_density_profile(pages, res)
-        )
-        if len(counts) != n_bands:
-            raise ValueError(
-                f"density profile has {len(counts)} bands, expected {n_bands} "
-                f"for res={res}"
-            )
+        counts = band_density_profile(pages, res)
         lat_edges = 90.0 - np.arange(n_bands + 1) * band_h_deg
         band_area_m2 = (
             2.0
@@ -689,28 +678,16 @@ def knn_join_df(
             disk = disk.dropDuplicates(["query_id", "cell"])
         return disk
 
-    def topk(disk: DataFrame) -> DataFrame:
-        cand = pages.join(
-            F.broadcast(disk) if broadcast_queries else disk, "cell", "inner"
-        )
-        hits = cand.select(
+    def scored(cand: DataFrame, *extra: str) -> DataFrame:
+        # The one scoring select of the disk search and the fallback fetch,
+        # so both rank bit-identical distances.
+        return cand.select(
             "query_id",
             F.col(id_col).alias("neighbor_id"),
             haversine_col(
                 F.col("lat"), F.col("lng"), F.col("qlat"), F.col("qlng")
             ).alias("dist_m"),
-        )
-        return (
-            hits.withColumn(
-                "rank",
-                F.row_number().over(
-                    W.partitionBy("query_id").orderBy(
-                        F.col("dist_m").asc(), F.col("neighbor_id").asc()
-                    )
-                ),
-            )
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "dist_m")
+            *extra,
         )
 
     # One heavy job: all disks scored in a single scan.  localCheckpoint
@@ -719,14 +696,14 @@ def knn_join_df(
     # pending collect below is then the scan's first action, so the disk
     # scan, the settle stats and the checkpoint materialise in ONE job
     # instead of paying a separate eager barrier first.
-    _dbg = os.environ.get("YG_KNN_DEBUG")
-    if _dbg:
-        import time as _t
-        _t_scan = _t.time()
-        print(f"KNN_DEBUG ring assignment+plan: {_t_scan-_t_entry:.2f}s")
-    best = topk(make_disk(qr)).localCheckpoint(eager=False)
-    if _dbg:
-        print(f"KNN_DEBUG main scan (lazy): {_t.time()-_t_scan:.2f}s")
+    by_dist = W.partitionBy("query_id").orderBy(
+        F.col("dist_m").asc(), F.col("neighbor_id").asc())
+    best = (
+        scored(pages.join(F.broadcast(make_disk(qr)), "cell", "inner"))
+        .withColumn("rank", F.row_number().over(by_dist))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "dist_m")
+    ).localCheckpoint(eager=False)
 
     # Exact settle verification (the density prediction above affects only
     # performance, never correctness).
@@ -763,22 +740,12 @@ def knn_join_df(
     # it, and a query whose disk is empty would vanish from the output.
     is_settled = (F.col("_c") >= k) & (F.col("_kth") <= safe_v)
     pending = judged.where(~F.coalesce(is_settled, F.lit(False)))
-    # Queries are dim-sized by contract, so collecting the UNSETTLED ones
-    # costs the same single job the old isEmpty() probe did, and powers the
-    # driver-side fallback planner below (which replaces ~6 sequential
-    # Spark jobs of crossJoin + window + joins with one numpy pass).
-    if _dbg:
-        _t0 = _t.time()
-    pending_rows = pending.select(
-        "query_id", "qlat", "qlng", "qrow", "qcol").collect()
-    if _dbg:
-        print("KNN_DEBUG pending:", len(pending_rows),
-              f"[{_t.time()-_t0:.2f}s]")
-        _t0 = _t.time()
+    # Queries are dim-sized by contract, so the UNSETTLED ones are collected
+    # (one job, which also materialises `best`) to feed the fallback planner.
+    pending_rows = pending.select("query_id", "qlat", "qlng").collect()
 
-    if not pending_rows:
-        out = best
-    elif res <= int(os.environ.get("YG_KNN_DRIVER_HIST_RES", "8")):
+    out = best.withColumn("_fb", F.lit(0))
+    if pending_rows:
         # Cell-histogram-pruned exact pass (SINGLE pass, no escalation
         # loop) for what the disk bound could not certify (empty-region
         # queries, k-th neighbor thousands of km out; plus the remote
@@ -789,48 +756,35 @@ def knn_join_df(
         # that cap cannot contribute — candidates collapse to the few cells
         # around the nearest data cluster instead of query x table.
         #
-        # At res <= 8 the nonempty-cell histogram is bounded (<= 2*4^res <=
-        # 131k rows — collected ONCE per table and cached like the band
-        # profile), so the cap/keep planning is a vectorised numpy pass on
-        # the driver: the distributed formulation of the same math spent
-        # ~3s per call on six job barriers (crossJoin + window + two joins
-        # + two broadcast rebuilds of the pending plan) to prune what is
-        # arithmetically a sub-millisecond 279 x 6k bound matrix.  Beyond
-        # res 8 the histogram is no longer driver-sized and the distributed
-        # path below runs instead (same bounds, same exactness).
-        if len(pending_rows) <= 16384:
-            out = best.where(
-                ~F.col("query_id").isin([r["query_id"] for r in pending_rows])
+        # Planning runs at p = min(res, 8) on cells' parents (the
+        # cells.cell_parent arithmetic), so the nonempty-cell histogram is
+        # at most 2*4^8 = 131k rows at any res — collected ONCE per table
+        # and cached like the band profile.  Coarser cells only loosen the
+        # bounds, never break them.
+        p = min(res, _KNN_PLAN_RES)
+        shift = res - p
+        parent = F.col("cell")
+        if shift:
+            mask28 = (1 << 28) - 1
+            parent = (
+                F.lit(p << 56)
+                + F.shiftleft(F.shiftright(
+                    F.shiftright("cell", 28).bitwiseAND(mask28), shift), 28)
+                + F.shiftright(F.col("cell").bitwiseAND(mask28), shift)
             )
-        else:
-            out = best.join(
-                F.broadcast(pending.select("query_id")),
-                "query_id", "left_anti",
-            )
-        if _dbg:
-            print(f"KNN_DEBUG settled filter build: {_t.time()-_t0:.2f}s")
-            _t0 = _t.time()
         ident = _plan_identity(pages)
-        hist = _CELL_HIST_CACHE.get(ident) if ident is not None else None
+        hist = _CELL_HIST_CACHE.get((ident, p)) if ident is not None else None
         if hist is None:
-            rows = pages.groupBy("cell").agg(F.count("*").alias("_n")).collect()
-            h_cells = np.array([r["cell"] for r in rows], dtype=np.int64)
+            rows = pages.groupBy(parent.alias("pcell")).agg(
+                F.count("*").alias("_n")).collect()
+            h_cells = np.array([r["pcell"] for r in rows], dtype=np.int64)
             h_counts = np.array([r["_n"] for r in rows], dtype=np.int64)
             order = np.argsort(h_cells)
             hist = (h_cells[order], h_counts[order])
             if ident is not None:
                 while len(_CELL_HIST_CACHE) >= _BAND_DENSITY_CACHE_MAX:
                     _CELL_HIST_CACHE.pop(next(iter(_CELL_HIST_CACHE)))
-                _CELL_HIST_CACHE[ident] = hist
-        h_cells, h_counts = hist
-        if _dbg:
-            print(f"KNN_DEBUG ident+hist: {_t.time()-_t0:.2f}s")
-            _t0 = _t.time()
-        if h_cells.size == 0:
-            # Empty pages table: no candidates exist anywhere; the settled
-            # side (also empty) is the whole answer.
-            return out.withColumn("rank", F.lit(1)).where(F.lit(False)).select(
-                "query_id", F.col("neighbor_id").alias(id_col), "dist_m", "rank")
+                _CELL_HIST_CACHE[(ident, p)] = hist
         qid_type = dict(q.dtypes)["query_id"]
         # The cap/keep planning itself runs DISTRIBUTED: one mapInPandas
         # over the (dim-sized) pending queries, executed inside the
@@ -838,8 +792,8 @@ def knn_join_df(
         # the bound matrices are spread over the cluster instead of
         # serialising on the driver (the driver-side numpy formulation
         # measured 0.5-1.3s for 279 x 6k pairs on this memory-bound VM).
-        # The histogram arrays ride in the closure (~16 bytes/nonempty
-        # cell, bounded by the res <= 8 gate above).
+        # The histogram arrays ride in the closure (~16 bytes per nonempty
+        # cell at p).
         pend_df = spark.createDataFrame(
             pd.DataFrame({
                 "query_id": [r["query_id"] for r in pending_rows],
@@ -851,160 +805,46 @@ def knn_join_df(
         n_plan_parts = max(1, min(len(pending_rows) // 8 + 1, 64))
         if n_plan_parts > 1:
             pend_df = pend_df.repartition(n_plan_parts)
-        geom = (cell_h_deg, cell_w_deg, cols_n)
 
-        def plan_gen(batches, _hist=hist, _geom=geom, _k=k):
+        def plan_gen(batches, _hist=hist, _p=p, _k=k):
             for pdf in batches:
-                yield _knn_histogram_plan(pdf, _hist, _geom, _k)
+                yield _knn_histogram_plan(pdf, _hist, _p, _k)
 
         kp = pend_df.mapInPandas(
             plan_gen,
-            schema=(f"query_id {qid_type}, cell long, qlat double, "
+            schema=(f"query_id {qid_type}, pcell long, qlat double, "
                     "qlng double, cap double"),
         )
         # dist > cap rows cannot be top-k (the cap's prefix cells already
         # hold >= k rows at <= cap), so they are dropped BEFORE the union
         # feeds the final rank's exchange.
-        final = pages.join(F.broadcast(kp), "cell", "inner").select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            haversine_col(
-                F.col("lat"), F.col("lng"), F.col("qlat"), F.col("qlng")
-            ).alias("dist_m"),
-            "cap",
+        final = scored(
+            pages.join(F.broadcast(kp), parent == F.col("pcell")), "cap"
         ).where(F.col("dist_m") <= F.col("cap")).drop("cap")
-        out = out.unionByName(final)
-        if _dbg:
-            print(f"KNN_DEBUG kp+final build: {_t.time()-_t0:.2f}s")
-    else:
-        # Distributed twin of the driver-side planner above, for res > 8
-        # where the nonempty-cell histogram may exceed driver bounds.
-        out = best.join(
-            F.broadcast(judged.where(F.coalesce(is_settled, F.lit(False)))
-                        .select("query_id")),
-            "query_id", "left_semi",
-        )
-        final_q = pending.select("query_id", "qlat", "qlng", "qrow", "qcol")
-        # Checkpointed: ~one row per nonempty cell, consumed by caps
-        # AND keep AND the candidate join — without it each action
-        # re-runs the full pages scan behind the groupBy.  Cached per
-        # table plan (like the band-density profile): repeated kNN
-        # calls against the same table skip the scan entirely.
-        ident = _plan_identity(pages)
-        cnts = _CELL_COUNT_CACHE.get(ident) if ident is not None else None
-        if cnts is None:
-            cnts = pages.groupBy("cell").agg(
-                F.count("*").alias("_n")).localCheckpoint(eager=False)
-            if ident is not None:
-                while len(_CELL_COUNT_CACHE) >= _BAND_DENSITY_CACHE_MAX:
-                    _CELL_COUNT_CACHE.pop(next(iter(_CELL_COUNT_CACHE)))
-                _CELL_COUNT_CACHE[ident] = cnts
-        cell_row = (F.col("cell") / F.lit(1 << 28)).cast("long") % F.lit(1 << 28)
-        cell_col = F.col("cell") % F.lit(1 << 28)
-        dcol = F.abs(cell_col - F.col("qcol"))
-        dcol = F.least(dcol, F.lit(cols_n) - dcol)  # longitude wrap
-        drow = F.abs(cell_row - F.col("qrow"))
-        m_deg = F.lit(111_194.9)
-        # Sound LOWER bound on the distance to any point of the cell:
-        # the meridian term (distance >= R * delta_lat, always) and the
-        # haversine longitude term (sin^2(d/2) >= cos(p1) cos(p2)
-        # sin^2(dlng/2), minimized over the cell's latitude range via
-        # its most poleward edge).  The earlier disk-chord bound
-        # collapsed to ~0 at high latitudes and kept every cell.
-        gap_lat = F.greatest(drow.cast("double") - 1, F.lit(0.0)) \
-            * F.lit(cell_h_deg)
-        gap_lng = F.greatest(dcol.cast("double") - 1, F.lit(0.0)) \
-            * F.lit(cell_w_deg)
-        c_north = F.lit(90.0) - cell_row.cast("double") * F.lit(cell_h_deg)
-        c_south = c_north - F.lit(cell_h_deg)
-        cos_cell = F.least(F.cos(F.radians(c_north)),
-                           F.cos(F.radians(c_south)))
-        lb_lng = F.lit(2.0 * EARTH_RADIUS_M) * F.asin(
-            F.sqrt(F.greatest(
-                F.cos(F.radians(F.col("qlat"))) * cos_cell, F.lit(0.0)))
-            * F.sin(F.radians(gap_lng) / 2)
-        )
-        lb = F.greatest(gap_lat * m_deg, lb_lng)
-        # Sound UPPER bound: meridian leg to the cell's far latitude
-        # edge, then the parallel leg AT THE TARGET POINT'S latitude.
-        # The point may sit anywhere in the cell's latitude range, so the
-        # parallel leg must use the cos that MAXIMIZES it over
-        # [c_south, c_north]: 1.0 when the cell straddles the equator,
-        # else the larger of the two edge cosines.  (The previous
-        # cos(far_lat) understated ub by up to ~cell_h*R for pole-adjacent
-        # cells — far_lat at +-90 collapses the leg to 0 — which let the
-        # cap prune cells holding the true nearest neighbor for polar
-        # queries; see test_knn_polar_exact.)
-        far_lat = F.when(
-            F.abs(F.col("qlat") - c_north) > F.abs(F.col("qlat") - c_south),
-            c_north,
-        ).otherwise(c_south)
-        cos_par = F.when(
-            (c_north >= 0) & (c_south <= 0), F.lit(1.0)
-        ).otherwise(
-            F.greatest(F.cos(F.radians(c_north)), F.cos(F.radians(c_south)))
-        )
-        ub = (
-            F.abs(F.col("qlat") - far_lat) * m_deg
-            + (dcol.cast("double") + 1) * F.lit(cell_w_deg) * m_deg
-            * cos_par
-        )
-        pairs = cnts.crossJoin(
-            F.broadcast(final_q.select("query_id", "qlat", "qrow", "qcol"))
-        ).select(
-            "query_id", "cell", "_n",
-            lb.alias("_lb"), ub.alias("_ub"),
-        )
-        w_ub = (
-            W.partitionBy("query_id").orderBy(F.col("_ub").asc(),
-                                              F.col("cell").asc())
-            .rowsBetween(W.unboundedPreceding, -1)
-        )
-        caps = (
-            pairs.withColumn("_cum", F.coalesce(F.sum("_n").over(w_ub),
-                                                F.lit(0)))
-            .where(F.col("_cum") < k)  # rows up to and incl. the k-th
-            .groupBy("query_id").agg(F.max("_ub").alias("_cap"))
-        )
-        keep = (
-            pairs.join(F.broadcast(caps), "query_id", "inner")
-            .where(F.col("_lb") <= F.col("_cap"))
-            .select("query_id", "cell")
-        ).localCheckpoint(eager=False)
-        final_cand = pages.join(
-            F.broadcast(keep), "cell", "inner"
-        ).join(
-            F.broadcast(final_q.select("query_id", "qlat", "qlng")),
-            "query_id", "inner",
-        )
-        final = (
-            final_cand.select(
-                "query_id",
-                F.col(id_col).alias("neighbor_id"),
-                haversine_col(
-                    F.col("lat"), F.col("lng"), F.col("qlat"), F.col("qlng")
-                ).alias("dist_m"),
-            )
-        )
-        out = out.unionByName(final)
+        out = out.unionByName(final.withColumn("_fb", F.lit(1)))
 
-    out = (
-        out.withColumn(
-            "rank",
-            F.row_number().over(
-                W.partitionBy("query_id").orderBy(
-                    F.col("dist_m").asc(), F.col("neighbor_id").asc()
-                )
-            ),
-        )
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("neighbor_id").alias(id_col), "dist_m", "rank")
-    )
     # `best` is localCheckpoint-backed (executor-resident, <= k rows per
     # query); Spark's ContextCleaner reclaims it when the result goes out of
     # scope.  The driver never holds result rows — only the dim-sized
-    # unsettled-query list and (at low res) the bounded cell histogram.
-    return out
+    # unsettled-query list and the bounded cell histogram.
+    #
+    # The final rank is also the settled filter.  Fallback rows (_fb = 1)
+    # rank ahead of disk rows, and only the rows of a query's top source
+    # survive, so a pending query's disk rows give way to its fallback rows
+    # (it has at least min(k, table rows) of them: the cap's prefix cells
+    # are always kept).  No id list enters the plan, pending is not re-run,
+    # and no job is added (a broadcast anti-join against the pending ids
+    # would be one more job, even over a local relation); the rank's
+    # map-side group limit still trims rows before the exchange.
+    first = W.partitionBy("query_id").orderBy(
+        F.col("_fb").desc(), F.col("dist_m").asc(), F.col("neighbor_id").asc())
+    return (
+        out.withColumn("rank", F.row_number().over(first))
+        .where(F.col("rank") <= k)
+        .withColumn("_top", F.max("_fb").over(W.partitionBy("query_id")))
+        .where(F.col("_fb") == F.col("_top"))
+        .select("query_id", F.col("neighbor_id").alias(id_col), "dist_m", "rank")
+    )
 
 
 def knn_join(
