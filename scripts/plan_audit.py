@@ -7,8 +7,11 @@ Checks (each FAILS the script if violated):
    columns (ReadSchema excludes payload-less metadata the kernel ignores).
 2. The PIP candidate plan broadcast-joins (or inlines) the polygon side —
    no SortMergeJoin on the page table for a dim-sized polygon list.
-3. The LSH near-dup production plan contains NO CartesianProduct /
-   BroadcastNestedLoopJoin (all-pairs is the classic scale failure).
+3. Every banded near-dup plan (MinHash candidates on persisted
+   signatures, SimHash near-dups, cosine LSH near-dups) broadcast-joins its
+   hot bucket set and its executed plan holds NO CartesianProduct /
+   BroadcastNestedLoopJoin (all-pairs is the classic scale failure) and no
+   SortMergeJoin.
 4. The kNN output plan is shuffle-light — the heavy one-shot disk join
    ran eagerly (broadcast side asserted by the test suite); what remains
    must hold no joins or parquet scans.
@@ -106,12 +109,30 @@ def main() -> int:
     ok = "SortMergeJoin" not in plan and "CartesianProduct" not in plan
     check("PIP plan has no sort-merge/cartesian join on the page side", ok)
 
-    # 3. LSH near-dup: no all-pairs operator
+    # 3. banded near-dup: every dedup._bucket_pairs caller broadcasts the
+    # hot bucket set back and pairs members without an all-pairs operator,
+    # in the executed plan.
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
-    lsh = ann.cosine_near_dup_pairs_lsh(emb, threshold=0.42, bits=4, tables=8)
-    plan = plan_of(lsh)
-    ok = "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-    check("LSH near-dup plan is crossJoin-free", ok)
+    sigs = dedup.minhash_signatures(docs, bands=16).persist()
+    sigs.count()
+    banded_plans = {
+        "minhash": dedup.minhash_lsh_candidates(sigs, bands=16),
+        "simhash": dedup.simhash_near_dups(
+            dedup.simhash_column(docs), max_hamming=7, chunks=8),
+        "cosine": ann.cosine_near_dup_pairs_lsh(
+            emb, threshold=0.42, bits=4, tables=8),
+    }
+    for name, df in banded_plans.items():
+        # the final adaptive plan, after AQE has seen the runtime sizes
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+        ok = ("BroadcastHashJoin" in plan
+              and not any(op in plan for op in (
+                  "CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin")))
+        check(f"{name} near-dup plan: broadcast hot buckets, no cartesian/"
+              "nested-loop/sort-merge join", ok)
+    sigs.unpersist()
 
     # 4. kNN disk join broadcasts the query side
     qdf = spark.range(4).selectExpr(
@@ -132,7 +153,6 @@ def main() -> int:
 
     # 5. whole-stage codegen on the JVM text pipeline
     from yirgacheffe_spark.text import quality
-    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     q = docs.select(
         quality.token_count(F.col("text")).alias("t"),
         quality.quality_score(F.col("text")).alias("q"),

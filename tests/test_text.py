@@ -212,6 +212,31 @@ class TestCosineNearDupLSH:
         assert "BroadcastNestedLoopJoin" not in plan
 
 
+def _minhash_pairs_of_identical(spark, n, max_bucket):
+    docs = spark.createDataFrame(pd.DataFrame({
+        "doc_id": range(n), "text": ["one two three four five six seven"] * n}))
+    sigs = dedup.minhash_signatures(docs, num_perm=16, bands=4)
+    return dedup.minhash_lsh_candidates(sigs, max_bucket=max_bucket)
+
+
+def _cosine_pairs_of_identical(spark, n, max_bucket):
+    emb = spark.createDataFrame(pd.DataFrame({
+        "vec_id": range(n), "embedding": [[1.0, 2.0, 3.0]] * n}))
+    return ann.cosine_near_dup_pairs_lsh(
+        emb, threshold=0.9, bits=4, tables=4, max_bucket=max_bucket)
+
+
+@pytest.mark.parametrize(
+    "pairs_of", [_minhash_pairs_of_identical, _cosine_pairs_of_identical],
+    ids=["minhash_lsh_candidates", "cosine_near_dup_pairs_lsh"])
+def test_max_bucket_caps_the_expander(spark, pairs_of):
+    """Identical rows share every bucket: at the cap they expand to all
+    C(n, 2) pairs, one member over it the buckets are dropped."""
+    at_cap = {(r["id_a"], r["id_b"]) for r in pairs_of(spark, 5, 5).collect()}
+    assert at_cap == {(a, b) for a in range(5) for b in range(a + 1, 5)}
+    assert pairs_of(spark, 6, 5).count() == 0
+
+
 def test_language_id_matches_python_reference(documents, spark):
     import pandas as pd
     from pyspark.sql import functions as F
@@ -239,24 +264,6 @@ def test_language_id_edge_cases(spark):
         .orderBy("i").collect()
     )
     assert [r["g"] for r in got] == ["en", "en", "de", "zh", "en"]
-
-
-def test_fused_candidates_equal_count_filter_path(documents, spark):
-    # Force tiny Arrow batches so key runs span batch boundaries in the
-    # fused streamer.
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        sigs = dedup.minhash_signatures(
-            documents.limit(200), num_perm=64, shingle_n=3, bands=16
-        ).persist()
-        old = {(r["id_a"], r["id_b"])
-               for r in dedup.minhash_lsh_candidates(sigs, bands=16).collect()}
-        new = {(r["id_a"], r["id_b"])
-               for r in dedup.minhash_lsh_candidates_fused(sigs, bands=16).collect()}
-        sigs.unpersist()
-        assert old == new
-    finally:
-        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
 
 
 def test_brute_force_fast_equals_fold(embeddings, spark):
@@ -497,7 +504,7 @@ class TestSampling:
 
         from yirgacheffe_spark.text import sampling
 
-        monkeypatch.setenv("YG_PACK_ROWS_PER_PARTITION", "10")
+        monkeypatch.setattr(sampling, "_PACK_ROWS_PER_PARTITION", 10)
         docs = self._docs(spark, 500)
         packed = sampling.pack_sequences(docs, token_budget=1000)
         rows = packed.collect()
@@ -805,13 +812,13 @@ class TestBoilerplateRemoval:
         the plan takes the shuffle path, with results unchanged."""
         from yirgacheffe_spark.text import dedup
 
-        monkeypatch.setenv("YG_BOILERPLATE_BROADCAST_MAX", "0")
+        monkeypatch.setattr(dedup, "_BROADCAST_MAX_ROWS", 0)
         docs = self._corpus(spark)
         cleaned = dedup.remove_boilerplate_lines(docs, min_docs=3)
         plan = cleaned._jdf.queryExecution().executedPlan().toString()
         anti = [l for l in plan.splitlines() if "LeftAnti" in l]
         assert anti and all("Broadcast" not in l for l in anti), anti
-        monkeypatch.delenv("YG_BOILERPLATE_BROADCAST_MAX")
+        monkeypatch.undo()
         want = {r["doc_id"]: r["text"] for r in
                 dedup.remove_boilerplate_lines(docs, min_docs=3).collect()}
         got = {r["doc_id"]: r["text"] for r in cleaned.collect()}
@@ -1135,6 +1142,8 @@ class TestSignatureIndexVersioning:
         legacy = sigs.drop("sig_format")
         with _pt.raises(ValueError, match="sig_format"):
             dedup.minhash_lsh_candidates_incremental(sigs, legacy)
+        with _pt.raises(ValueError, match="buckets"):
+            dedup.minhash_lsh_candidates(sigs.drop("buckets"))
 
     def test_mismatched_format_refused(self, spark):
         import pytest as _pt
@@ -1234,7 +1243,7 @@ class TestDecontamination:
         plan = dedup.contaminated_ids(t, e, n=5)._jdf.queryExecution(
         ).executedPlan().toString()
         assert "BroadcastHashJoin" in plan
-        monkeypatch.setenv("YG_DECONTAM_BROADCAST_MAX", "0")
+        monkeypatch.setattr(dedup, "_BROADCAST_MAX_ROWS", 0)
         cold = dedup.contaminated_ids(t, e, n=5)
         plan2 = cold._jdf.queryExecution().executedPlan().toString()
         inner = [l for l in plan2.splitlines()

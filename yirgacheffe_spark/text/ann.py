@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window as W
 
+from .dedup import _bucket_pairs
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -200,10 +202,10 @@ def cosine_near_dup_pairs_lsh(
     seed: int = 42,
     max_bucket: int = 4096,
 ) -> DataFrame:
-    """The production near-dup path: random-hyperplane LSH buckets, the
-    count-filter/broadcast-hot/map-side-expansion candidate pattern from
-    ``dedup.minhash_lsh_candidates`` (never a self-join, never a crossJoin),
-    then exact rounded cosine on candidates only.
+    """The production near-dup path: random-hyperplane LSH buckets, each
+    (table, bucket) of 2..``max_bucket`` members expanded to candidate
+    pairs by ``dedup._bucket_pairs`` (never a self-join, never a
+    crossJoin), then exact rounded cosine on candidates only.
 
     Precision is exact (candidates are verified with the same fold-order
     cosine as ``cosine_near_dup_pairs``); recall is tunable — at the default
@@ -215,28 +217,8 @@ def cosine_near_dup_pairs_lsh(
     banded = emb.select(
         F.col(id_col), F.posexplode(bucketer(vec64)).alias("table", "bucket")
     )
-    hot = (
-        banded.groupBy("table", "bucket")
-        .agg(F.count("*").alias("c"))
-        .where((F.col("c") > 1) & (F.col("c") <= max_bucket))
-        .select("table", "bucket")
-    )
-    cands = (
-        banded.join(F.broadcast(hot), ["table", "bucket"])
-        .groupBy("table", "bucket")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (a, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "b -> struct(a AS id_a, b AS id_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    cands = _bucket_pairs(banded, ["table", "bucket"], F.col(id_col),
+                          "struct(a AS id_a, b AS id_b)", max_bucket)
     a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
     sim = F.round(cosine_sim(F.col("_va"), F.col("_vb")), 6)
@@ -255,17 +237,14 @@ def lsh_topk(
     k: int = 10,
     bits: int = 8,
     tables: int = 4,
-    dim: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: random-hyperplane bucketing, bucket-equality join,
-    exact cosine on candidates only.  ``dim`` is unused (kept for API compat):
-    the bucketer derives hyperplanes from the vectors themselves, so no
-    driver round trip fetches the dimension."""
-    del dim
+    exact cosine on candidates only.  The bucketer derives hyperplanes from
+    the vectors themselves, so no driver round trip fetches the dimension."""
     bucketer = lsh_bucket_udf(bits, tables, seed)
 
     c = corpus.withColumn("_b", bucketer(F.transform(F.col(vec_col), lambda x: x.cast("double"))))

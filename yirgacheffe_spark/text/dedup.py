@@ -3,11 +3,16 @@
 Design for scale:
 
 * exact dedup is one hash-groupBy (map-side combine, one shuffle);
-* MinHash signatures are computed in one Arrow-vectorised pass, candidates
-  come from a *band-bucket self-join* (shuffle keyed on (band, bucket) — hot
-  buckets are bounded by banding), and only candidates are verified;
-* SimHash near-dup uses the same banding trick over bit-chunks;
-* n-gram Jaccard is the exact verifier, shingle-set based, vectorised.
+* MinHash signatures and their band buckets are computed in one
+  Arrow-vectorised pass; the band index is salted into each bucket id, so
+  candidates key on ONE long column;
+* every banded near-dup operator (MinHash, SimHash bit-chunks, and
+  ``ann.cosine_near_dup_pairs_lsh``) expands candidates through one helper,
+  ``_bucket_pairs``: count buckets, broadcast the 2..``max_bucket``-member
+  key set back, expand pairs per bucket — never a self-join;
+* n-gram Jaccard is the exact verifier, shingle-set based, vectorised;
+* the measured-side joins (boilerplate hot lines, decontamination eval
+  grams) pick broadcast or sort-merge through ``_broadcast_or_merge``.
 
 Nothing here collects the corpus to the driver.
 """
@@ -151,9 +156,9 @@ def _flat_shingle_hashes(texts: pd.Series, shingle_n: int) -> tuple[np.ndarray, 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                        num_perm: int = 64, shingle_n: int = 3, seed: int = 42,
-                       bands: int | None = None) -> DataFrame:
-    """(id, sig: array<long>[, buckets: array<long>]) — universal-hash
-    MinHash over word shingles; pass ``bands`` to also emit the LSH band
+                       bands: int = 8) -> DataFrame:
+    """(id, sig: array<long>, buckets: array<long>, sig_format) —
+    universal-hash MinHash over word shingles plus the ``bands`` LSH band
     buckets from the same pass (one Python stage total — chained Python
     runners in one Spark stage measured 3-10x slower and erratic).
 
@@ -164,7 +169,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
     MinHash is min-over-multiset, so shingle de-duplication is unnecessary.
     """
     a_params, b_params = _minhash_params(num_perm, seed)
-    if bands is not None and num_perm % bands:
+    if num_perm % bands:
         raise ValueError("num_perm must be divisible by bands")
 
     def _sig_matrix(texts: pd.Series) -> np.ndarray:
@@ -187,20 +192,11 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
                     ).T.astype(np.int64)
         return out
 
-    if bands is None:
-        @pandas_udf("array<long>")
-        def signature(texts: pd.Series) -> pd.Series:
-            return pd.Series(list(_sig_matrix(texts)))
-
-        return df.select(F.col(id_col), signature(F.col(text_col)).alias("sig"))
-
-    n_bands = bands
-
     @pandas_udf("sig array<long>, buckets array<long>")
     def sig_and_buckets(texts: pd.Series) -> pd.DataFrame:
         m = _sig_matrix(texts)
         return pd.DataFrame(
-            {"sig": list(m), "buckets": list(_fold_buckets(m, n_bands))}
+            {"sig": list(m), "buckets": list(_fold_buckets(m, bands))}
         )
 
     return df.select(
@@ -211,173 +207,72 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
     )
 
 
-def minhash_lsh_candidates(sigs: DataFrame, id_col: str = "doc_id",
-                           bands: int = 8, max_bucket: int = 4096,
-                           broadcast_hot: bool = True) -> DataFrame:
-    """Candidate near-dup pairs: ids sharing any LSH band bucket.
+def _bucket_pairs(banded: DataFrame, keys: list[str], member, pair: str,
+                  max_bucket: int) -> DataFrame:
+    """Distinct member pairs sharing a bucket — the one candidate expander
+    behind every banded near-dup operator.
 
-    Scale design (each choice measured):
+    ``banded`` holds one row per (bucket ``keys``, member); ``member`` is
+    the column collected per bucket and ``pair`` the SQL struct built from
+    two of them, ``a`` (the smaller) and ``b``.  Scale design (each choice
+    measured):
 
-    * NOT a self-join — a self-join re-evaluates the whole upstream (twice the
-      signature pass) and leaves the pairing to join planning.  Instead:
-      count buckets, keep only buckets with >1 member, join those keys back
-      (broadcast-able: the multi-member bucket set is tiny relative to the
-      corpus), and expand (a, b) pairs per bucket map-side.
+    * NOT a self-join — a self-join re-evaluates the whole upstream (twice
+      the signature pass) and leaves the pairing to join planning.  Instead:
+      count buckets, keep only buckets with 2..``max_bucket`` members, and
+      join that key set back BROADCAST (AQE's size estimate for the post-agg
+      set is unknown, so without the hint it sorts the full banded side —
+      measured 41s vs 6s at 12.8M banded rows; the near-dup key set is small
+      relative to the corpus by construction).
     * collect_list runs only AFTER the singleton filter — building 3M
       single-element lists first measured ~10x the whole job.
     * buckets of more than ``max_bucket`` members are dropped (quadratic pair
       blowup; at that size the members are exact dups better handled by
       exact_dedup first — standard LSH practice).
     """
-    # Band identity is folded INTO the bucket value (band-salted finalizer in
-    # `_fold_buckets`; band index mixed into the hash on the compat path), so
-    # every stage below keys on ONE long column: the 2-col (band, bucket)
-    # grouping was the measured scaling pin of this operator (a hash
-    # aggregate over ~n_docs*bands mostly-unique keys is memory-system
-    # bound; narrowing the key and the shuffled row is the lever available).
-    if "buckets" in sigs.columns:
-        banded = sigs.select(F.col(id_col), F.explode("buckets").alias("bucket"))
-    else:  # derive buckets from the signature (compat path, JVM-side hash)
-        banded = sigs.select(
-            F.col(id_col),
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(bands - 1)),
-                    lambda b: F.xxhash64(
-                        b,
-                        F.slice(
-                            F.col("sig"),
-                            b * (F.size("sig") / bands).cast("int") + 1,
-                            (F.size("sig") / bands).cast("int"),
-                        ),
-                    ),
-                )
-            ).alias("bucket"),
-        )
     hot = (
-        banded.groupBy("bucket")
+        banded.groupBy(*keys)
         .agg(F.count("*").alias("c"))
         .where((F.col("c") > 1) & (F.col("c") <= max_bucket))
-        .select("bucket")
+        .select(*keys)
     )
-    if broadcast_hot:
-        # Explicit hint: AQE's size estimate for the post-agg hot set is
-        # unknown, so it falls back to sorting the full banded side
-        # (measured 41s vs 6s at 12.8M banded rows).  The hot set is the
-        # near-dup bucket keys — small relative to the corpus by
-        # construction; pass broadcast_hot=False for pathological corpora
-        # where most documents are duplicates.
-        hot = F.broadcast(hot)
     return (
-        banded.join(hot, ["bucket"])
-        .groupBy("bucket")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+        banded.join(F.broadcast(hot), keys)
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(member)).alias("ms"))
         .select(
             F.explode(
                 F.expr(
-                    "flatten(transform(ids, (a, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "b -> struct(a AS id_a, b AS id_b))))"
+                    "flatten(transform(ms, (a, i) -> "
+                    "transform(slice(ms, i + 2, size(ms) - i - 1), "
+                    f"b -> {pair})))"
                 )
             ).alias("p")
         )
-        .select("p.id_a", "p.id_b")
+        .select("p.*")
         .distinct()
     )
 
 
-def _run_pairs_stream(batch_iter, max_bucket: int):
-    """Stream Arrow batches of (key, id[, extra...]) rows sorted within the
-    partition; yield pair tuples for every key run of 2..max_bucket members.
-    Run detection is vectorised; only the (rare) multi-member runs are
-    expanded, so per-row Python never happens."""
-    import pandas as pd  # pylint: disable=C0415
+def minhash_lsh_candidates(sigs: DataFrame, id_col: str = "doc_id",
+                           bands: int = 8, max_bucket: int = 4096) -> DataFrame:
+    """Candidate near-dup pairs (id_a < id_b): ids sharing any LSH band
+    bucket, expanded by ``_bucket_pairs``.
 
-    carry = None  # (key, ids) of the run left open by the last batch
-
-    def expand(members, out_a, out_b):
-        if 1 < len(members) <= max_bucket:
-            a_idx, b_idx = np.triu_indices(len(members), k=1)
-            out_a.append(members[a_idx])
-            out_b.append(members[b_idx])
-
-    for pdf in batch_iter:
-        if not len(pdf):
-            continue
-        keys = pdf.iloc[:, 0].to_numpy()
-        ids = pdf.iloc[:, 1].to_numpy()
-        new_run = np.ones(len(pdf), dtype=bool)
-        new_run[1:] = keys[1:] != keys[:-1]
-        starts = np.nonzero(new_run)[0]
-        ends = np.append(starts[1:], len(pdf))
-        out_a, out_b = [], []
-        for k, (s, e) in enumerate(zip(starts, ends)):
-            members = ids[s:e]
-            if k == 0 and carry is not None:
-                if carry[0] == keys[0]:
-                    members = np.concatenate([carry[1], members])
-                else:  # the carried run ended at the batch boundary
-                    expand(carry[1], out_a, out_b)
-                carry = None
-            if e == len(pdf):
-                # the batch's final run may continue into the next batch —
-                # hold it (capped: runs beyond max_bucket are dropped anyway,
-                # so a mega-bucket cannot buffer unboundedly)
-                carry = (keys[-1], members[: max_bucket + 1])
-            else:
-                expand(members, out_a, out_b)
-        if out_a:
-            yield pd.DataFrame(
-                {"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)}
-            )
-    if carry is not None:
-        out_a, out_b = [], []
-        expand(carry[1], out_a, out_b)
-        if out_a:
-            yield pd.DataFrame({"id_a": out_a[0], "id_b": out_b[0]})
-
-
-def minhash_lsh_candidates_fused(sigs: DataFrame, id_col: str = "doc_id",
-                                 bands: int = 8, max_bucket: int = 4096,
-                                 partitions: int | None = None) -> DataFrame:
-    """Single-shuffle candidate pairs: hash-repartition the banded rows on
-    (band, bucket), sort within partitions, and stream key runs in one
-    Arrow pass — pairs are emitted map-side per run, singletons cost only
-    their shuffled row (no lists, no broadcast, no second aggregation).
-
-    Measured tradeoff vs ``minhash_lsh_candidates`` (800k docs, local[32]):
-    comparable from a persisted signature table (6.5s vs 6.9s) but SLOWER
-    end-to-end, because this path must shuffle every banded row including
-    its document id (ids are often long urls), while the count-filter path's
-    wide shuffle carries only (band, bucket) counts and re-shuffles ids for
-    the few hot buckets.  Kept as the alternative for corpora where the
-    multi-member bucket set is too large to broadcast (mostly-duplicate
-    corpora), where the count-filter design degrades."""
-    del bands  # signature compatibility; buckets must be precomputed
+    ``sigs`` must carry the ``buckets`` column of ``minhash_signatures``;
+    the band count is implied by it (``bands`` is accepted for call-site
+    symmetry with ``minhash_signatures`` and not otherwise used).  Band
+    identity is salted INTO each bucket id (``_fold_buckets``), so the
+    expander keys on one long column: the 2-col (band, bucket) grouping was
+    the measured scaling pin of this operator.
+    """
+    del bands
     if "buckets" not in sigs.columns:
-        raise ValueError("fused candidates need the fused `buckets` column")
-    spark = sigs.sparkSession
-    # "spark.sql.shuffle.partitions" may be "auto" under AQE-managed
-    # clusters — fall back to the cluster's default parallelism rather than
-    # crashing exactly on the path meant for such deployments.
-    if partitions:
-        n_parts = partitions
-    else:
-        try:
-            n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (ValueError, TypeError):
-            n_parts = spark.sparkContext.defaultParallelism
-    id_type = dict(sigs.dtypes)[id_col]
+        raise ValueError("sigs need the `buckets` column "
+                         "(minhash_signatures(..., bands=N))")
     banded = sigs.select(F.col(id_col), F.explode("buckets").alias("bucket"))
-    shuffled = banded.repartition(n_parts, "bucket").sortWithinPartitions(
-        "bucket", id_col
-    ).select("bucket", id_col)
-
-    def gen(batches):
-        yield from _run_pairs_stream(batches, max_bucket)
-
-    pairs = shuffled.mapInPandas(gen, schema=f"id_a {id_type}, id_b {id_type}")
-    return pairs.distinct()
+    return _bucket_pairs(banded, ["bucket"], F.col(id_col),
+                         "struct(a AS id_a, b AS id_b)", max_bucket)
 
 
 def jaccard_pairs(df: DataFrame, pairs: DataFrame, text_col: str = "text",
@@ -494,7 +389,9 @@ def simhash_column(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 def simhash_near_dups(hashes: DataFrame, id_col: str = "doc_id",
                       max_hamming: int = 3, chunks: int = 8) -> DataFrame:
     """Near-dup pairs by Hamming distance: pigeonhole banding then exact
-    popcount verification.
+    popcount verification.  Each (chunk index, chunk value) is a bucket;
+    ``_bucket_pairs`` expands the candidates (buckets of 2..4096 members),
+    carrying both hashes so verification needs no join back.
 
     Completeness requires ``chunks > max_hamming`` (a pair differing in at
     most ``max_hamming`` bits cannot touch all chunks, so it must agree on
@@ -517,34 +414,10 @@ def simhash_near_dups(hashes: DataFrame, id_col: str = "doc_id",
         F.col("simhash"),
         F.posexplode(F.array(*chunk_exprs)).alias("chunk_idx", "chunk_val"),
     )
-    # Same candidate structure as minhash_lsh_candidates (measured there):
-    # count-filter buckets, broadcast the small multi-member key set back,
-    # expand pairs map-side — never a self-join of the banded table.
-    hot = (
-        banded.groupBy("chunk_idx", "chunk_val")
-        .agg(F.count("*").alias("c"))
-        .where((F.col("c") > 1) & (F.col("c") <= 4096))
-        .select("chunk_idx", "chunk_val")
-    )
-    cands = (
-        banded.join(F.broadcast(hot), ["chunk_idx", "chunk_val"])
-        .groupBy("chunk_idx", "chunk_val")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col(id_col).alias("i"), F.col("simhash").alias("h")))
-            ).alias("ms")
-        )
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ms, (a, i) -> "
-                    "transform(slice(ms, i + 2, size(ms) - i - 1), "
-                    "b -> struct(a.i AS id_a, b.i AS id_b, a.h AS h_a, b.h AS h_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.*")
-        .distinct()
+    member = F.struct(F.col(id_col).alias("i"), F.col("simhash").alias("h"))
+    cands = _bucket_pairs(
+        banded, ["chunk_idx", "chunk_val"], member,
+        "struct(a.i AS id_a, b.i AS id_b, a.h AS h_a, b.h AS h_b)", 4096,
     )
     hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
     return cands.withColumn("hamming", hamming).where(
@@ -673,18 +546,27 @@ def boilerplate_lines(df: DataFrame, min_docs: int = 3,
     )
 
 
-def _boilerplate_broadcast_max() -> int:
-    """Hot-line-set row budget under which the anti-join side broadcasts.
-    8-byte hashes x 8M rows ~= 64 MB serialised — comfortable on any
-    executor.  Read per call so tests can force either path."""
-    import os  # pylint: disable=C0415
+# Row budget under which a measured join side broadcasts: 8-byte hashes x
+# 8M rows ~= 64 MB serialised — comfortable on any executor.
+_BROADCAST_MAX_ROWS = 8_000_000
 
-    return int(os.environ.get("YG_BOILERPLATE_BROADCAST_MAX", str(8_000_000)))
+
+def _broadcast_or_merge(side: DataFrame) -> DataFrame:
+    """``side`` materialised once (``localCheckpoint``; the join consumes it
+    anyway), counted, and hinted broadcast under ``_BROADCAST_MAX_ROWS``
+    rows, else pinned to sort-merge: Catalyst's row estimate for a
+    distinct/count aggregate is unreliable (it auto-broadcast a
+    measured-huge hot set in testing), and a mistaken broadcast OOMs every
+    executor at corpus scale.  The checkpoint's blocks are freed by the
+    ContextCleaner once the plan runs and the RDD is unreferenced."""
+    side = side.localCheckpoint(eager=True)
+    if side.count() <= _BROADCAST_MAX_ROWS:
+        return F.broadcast(side)
+    return side.hint("merge")
 
 
 def remove_boilerplate_lines(df: DataFrame, min_docs: int = 3,
-                             text_col: str = "text", id_col: str = "doc_id",
-                             broadcast_hot: "bool | None" = None) -> DataFrame:
+                             text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Strip lines that repeat across >= ``min_docs`` distinct documents
     (RefinedWeb/CCNet-style boilerplate removal), preserving every other
     line's order; the cleaned text replaces ``text_col``.
@@ -694,28 +576,14 @@ def remove_boilerplate_lines(df: DataFrame, min_docs: int = 3,
     The hot side's strategy is MEASURED, not assumed: at the default
     ``min_docs=3`` a web-scale corpus has *millions* of distinct lines
     appearing in >=3 documents (common sentences, licence blocks, quoted
-    headlines) — far past broadcast range — so by default the hot set is
-    materialised once (``localCheckpoint``; it feeds the anti-join anyway),
-    counted, and broadcast only under ``YG_BOILERPLATE_BROADCAST_MAX`` rows
-    (default 8M ~= 64 MB); above that the anti-join shuffles on the 8-byte
-    hash.  Pass ``broadcast_hot=True/False`` to skip the count and force a
-    side.  Documents whose every line is boilerplate keep an empty string.
+    headlines) — far past broadcast range — so ``_broadcast_or_merge``
+    counts the hot set and broadcasts it only under ``_BROADCAST_MAX_ROWS``
+    rows; above that the anti-join shuffles on the 8-byte hash.  Documents
+    whose every line is boilerplate keep an empty string.
     """
-    hot = boilerplate_lines(df, min_docs, text_col, id_col).select("line_hash")
-    if broadcast_hot is None:
-        # Materialise + count: one cheap aggregate over a frame the join
-        # consumes anyway (blocks are freed by the ContextCleaner once the
-        # plan is executed and the RDD unreferenced).
-        hot = hot.localCheckpoint(eager=True)
-        broadcast_hot = hot.count() <= _boilerplate_broadcast_max()
-    if broadcast_hot:
-        hot = F.broadcast(hot)
-    else:
-        # Explicit sort-merge: Catalyst's own row estimate for a distinct-
-        # count aggregate is unreliable (it auto-broadcast a measured-huge
-        # hot set in testing), and a mistaken broadcast OOMs every executor
-        # at corpus scale — pin the spillable strategy.
-        hot = hot.hint("merge")
+    hot = _broadcast_or_merge(
+        boilerplate_lines(df, min_docs, text_col, id_col).select("line_hash")
+    )
     numbered = df.select(
         id_col,
         F.posexplode(F.split(F.col(text_col), "\n")).alias("_pos", "_line"),
@@ -848,21 +716,10 @@ def minhash_dedup_against_index(new_docs: DataFrame, index_sigs: DataFrame,
 # -- Eval-set decontamination --------------------------------------------------
 
 
-def _decontam_broadcast_max() -> int:
-    """Eval-gram row budget under which the probe side broadcasts (8-byte
-    hashes; 8M rows ~= 64 MB).  Eval sets are benchmark-sized, so the
-    broadcast path is the norm — but the guard is measured, not assumed
-    (same rationale as the boilerplate hot-set guard)."""
-    import os  # pylint: disable=C0415
-
-    return int(os.environ.get("YG_DECONTAM_BROADCAST_MAX", str(8_000_000)))
-
-
 def contaminated_ids(docs: DataFrame, eval_docs: DataFrame,
                      text_col: str = "text", id_col: str = "doc_id",
                      eval_text_col: "str | None" = None, n: int = 13,
-                     min_hits: int = 1,
-                     broadcast_eval: "bool | None" = None) -> DataFrame:
+                     min_hits: int = 1) -> DataFrame:
     """(id, n_hits) for every training document sharing >= ``min_hits``
     DISTINCT word ``n``-grams with the evaluation corpus — the GPT-3 /
     Gopher eval-set decontamination rule (13-gram overlap in the
@@ -870,27 +727,19 @@ def contaminated_ids(docs: DataFrame, eval_docs: DataFrame,
     whole word sequence as one gram, same rule as ``lm.ngram_column``).
 
     Plan: the eval side collapses to a distinct 8-byte gram-hash table
-    (benchmark-sized), measured and broadcast under
-    ``$YG_DECONTAM_BROADCAST_MAX`` rows (pinned sort-merge above); the
+    (benchmark-sized), which ``_broadcast_or_merge`` counts and broadcasts
+    under ``_BROADCAST_MAX_ROWS`` rows (pinned sort-merge above); the
     training side is one explode + join + per-doc distinct count — no
-    driver rows, linear in corpus grams, the scan prunes to
-    (id, text).
+    driver rows, linear in corpus grams, the scan prunes to (id, text).
     """
     from .lm import ngram_column  # pylint: disable=C0415
 
     ecol = eval_text_col or text_col
-    eval_grams = (
+    eval_grams = _broadcast_or_merge(
         eval_docs.select(F.explode(ngram_column(F.col(ecol), n)).alias("_gram"))
         .select(F.xxhash64("_gram").alias("_g"))
         .distinct()
     )
-    if broadcast_eval is None:
-        eval_grams = eval_grams.localCheckpoint(eager=True)
-        broadcast_eval = eval_grams.count() <= _decontam_broadcast_max()
-    if broadcast_eval:
-        eval_grams = F.broadcast(eval_grams)
-    else:
-        eval_grams = eval_grams.hint("merge")
     train = docs.select(
         F.col(id_col),
         F.explode(ngram_column(F.col(text_col), n)).alias("_gram"),
@@ -907,16 +756,14 @@ def contaminated_ids(docs: DataFrame, eval_docs: DataFrame,
 def decontaminate(docs: DataFrame, eval_docs: DataFrame,
                   text_col: str = "text", id_col: str = "doc_id",
                   eval_text_col: "str | None" = None, n: int = 13,
-                  min_hits: int = 1,
-                  broadcast_eval: "bool | None" = None) -> DataFrame:
+                  min_hits: int = 1) -> DataFrame:
     """Training rows with fewer than ``min_hits`` distinct ``n``-gram
     overlaps against the eval corpus (anti-join of ``contaminated_ids``)
     — run before training so benchmark answers cannot leak into the
     corpus; the published pipelines remove, rather than rewrite,
     overlapping documents."""
     bad = contaminated_ids(
-        docs, eval_docs, text_col, id_col, eval_text_col, n, min_hits,
-        broadcast_eval,
+        docs, eval_docs, text_col, id_col, eval_text_col, n, min_hits
     ).select(id_col)
     return docs.join(bad, id_col, "left_anti")
 

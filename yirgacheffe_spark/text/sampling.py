@@ -97,6 +97,10 @@ def train_test_split(df: DataFrame, test_fraction: float, key_col: str,
     return df.where(u >= test_fraction), df.where(u < test_fraction)
 
 
+# Rows per packing partition when ``pack_sequences`` derives the count.
+_PACK_ROWS_PER_PARTITION = 1_000_000
+
+
 def pack_sequences(df: DataFrame, token_budget: int,
                    token_col: str = "n_tokens", id_col: str = "doc_id",
                    partitions: int | None = None) -> DataFrame:
@@ -124,14 +128,13 @@ def pack_sequences(df: DataFrame, token_budget: int,
     open bins accumulate for the partition's lifetime (~rows x mean_size /
     budget) — so when ``partitions`` is not passed it is DERIVED from the
     row count (one count() job) at ~10^6 rows per partition
-    (``$YG_PACK_ROWS_PER_PARTITION``), floored at the cluster parallelism.
+    (``_PACK_ROWS_PER_PARTITION``), floored at the cluster parallelism.
     rows/parallelism per partition — the naive default — would hand each
     partition ~10^9 rows at 10^12-row scale and the greedy pass would never
     finish; deriving from the count keeps the per-partition pass bounded at
     any input size.
     """
     import math  # pylint: disable=C0415
-    import os  # pylint: disable=C0415
 
     import numpy as np  # pylint: disable=C0415
     import pandas as pd  # pylint: disable=C0415
@@ -140,13 +143,10 @@ def pack_sequences(df: DataFrame, token_budget: int,
         raise ValueError("token_budget must be positive")
     spark = df.sparkSession
     if partitions is None:
-        rows_per_part = max(
-            int(os.environ.get("YG_PACK_ROWS_PER_PARTITION", str(1_000_000))), 1
-        )
         n_rows = df.count()
         partitions = max(
             spark.sparkContext.defaultParallelism,
-            math.ceil(n_rows / rows_per_part),
+            math.ceil(n_rows / _PACK_ROWS_PER_PARTITION),
         )
     n_parts = max(int(partitions), 1)
     ordered = (
