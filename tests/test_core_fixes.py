@@ -294,14 +294,14 @@ def test_dag_walkers_linear_on_shared_subtrees(spark):
 
 
 def test_forget_zip_finders_skips_rereads_and_never_serves_stale(tmp_path, monkeypatch):
-    """The kernels' task-start helper leaves no zipimporter for PySpark's
+    """The Python task entry hook leaves no zipimporter for PySpark's
     per-task ``importlib.invalidate_caches()`` to re-read, while imports
     from the archive keep working and a rewritten archive is read afresh."""
     import importlib
     import zipfile
     import zipimport
 
-    from yirgacheffe_spark.plans import executor as ex
+    from yirgacheffe_spark._worker import task_start
 
     archive = tmp_path / "zprobe.zip"
     names = ("zprobe_pkg", "zprobe_pkg.first", "zprobe_pkg.second", "zprobe_pkg.third")
@@ -323,7 +323,7 @@ def test_forget_zip_finders_skips_rereads_and_never_serves_stale(tmp_path, monke
         assert first.VALUE == 1
         assert zip_finders()
 
-        ex._forget_zip_finders()
+        task_start()
         assert not zip_finders()
         reads = []
         real_read = zipimport._read_directory
@@ -339,7 +339,7 @@ def test_forget_zip_finders_skips_rereads_and_never_serves_stale(tmp_path, monke
 
         # Rewrite the archive at the same path with other offsets and a
         # new module: a cached directory would serve the old one.
-        ex._forget_zip_finders()
+        task_start()
         write({"first": "rewritten", "third": 3})
         for name in names:
             sys.modules.pop(name, None)
@@ -348,4 +348,4 @@ def test_forget_zip_finders_skips_rereads_and_never_serves_stale(tmp_path, monke
     finally:
         for name in names:
             sys.modules.pop(name, None)
-        ex._forget_zip_finders()
+        task_start()

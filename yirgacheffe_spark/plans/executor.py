@@ -38,12 +38,9 @@ Implementation notes for throughput:
 * One Python worker per task.  A kernel's input rows come from the JVM (a
   parquet scan, or a ``spark.range`` of manifest group ids), never from a
   parallelized Python RDD, which would start a second worker per task just
-  to emit rows.  Each Python task also pays a fixed start cost: PySpark's
-  worker calls ``importlib.invalidate_caches()`` before every task, and on
-  Python < 3.12 every cached zip finder re-reads its whole archive then
-  (175-209 ms of CPU per task for ``pyspark.zip`` on a 4-core host).  The
-  kernels evict those finders at task start (``_forget_zip_finders``), so
-  the next task on the same worker skips the re-read.
+  to emit rows.  Every kernel body is wrapped in ``_worker.task_entry``,
+  the library-wide Python task entry hook, so the next task on the same
+  worker skips PySpark's per-task zip-archive re-read (see ``_worker``).
 * Driver-side plan construction keeps py4j chatter low: tile arithmetic is
   emitted as single ``selectExpr`` strings and parquet readers are cached
   per path, so repeated terminal actions cost milliseconds of planning.
@@ -59,8 +56,6 @@ from __future__ import annotations
 
 import math
 import os
-import sys
-import zipimport
 from functools import reduce
 from typing import Iterator
 
@@ -70,6 +65,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import constants
+from .._worker import task_entry
 from ..grid import Window
 from ..operators import LayerOperation
 from . import kernel as K
@@ -352,8 +348,8 @@ def _halo_strips_direct(spark: SparkSession, payload: dict, slot: int,
     rows = [(f, rg) for f, rg, _ymm, _xmm
             in _pruned_row_groups(meta["path"], band, band, rng)]
 
+    @task_entry
     def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _forget_zip_finders()
         out_ty, out_tx, out_struct = [], [], []
         for batch in batches:
             for rid in batch.column(0).to_pylist():
@@ -811,23 +807,6 @@ def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
             )
 
 
-def _forget_zip_finders() -> None:
-    """Evict cached zip-archive import finders, so the next task's start
-    costs no archive re-read.
-
-    PySpark's worker calls ``importlib.invalidate_caches()`` before every
-    task, and before Python 3.12 each cached ``zipimporter`` re-reads its
-    whole archive directory then: 175-209 ms of CPU per task for the
-    ``pyspark.zip`` finders a warm worker holds.  Their directory-cache
-    entries go too, so a finder the import system rebuilds on demand
-    re-reads its archive at most once, on its next import, and never
-    serves a stale directory.  Kernels call this at task start."""
-    for key, finder in list(sys.path_importer_cache.items()):
-        if isinstance(finder, zipimport.zipimporter):
-            del sys.path_importer_cache[key]
-            zipimport._zip_directory_cache.pop(finder.archive, None)  # noqa: SLF001
-
-
 def _tile_results(bc, batch_iter: Iterator[pa.RecordBatch]):
     """Generator core of every kernel: yields (ty, tx, h, w, result) per tile.
 
@@ -839,7 +818,6 @@ def _tile_results(bc, batch_iter: Iterator[pa.RecordBatch]):
     """
     from ..sources import parquet as pq_raster  # pylint: disable=C0415
 
-    _forget_zip_finders()
     # Task-scoped ranged-read cache: kernel-side mosaic fetches of this
     # task's contiguous tile run reuse decoded row groups (nothing survives
     # the task — see parquet.push_read_scope).
@@ -935,6 +913,7 @@ def tiles_dataframe(tree, spark: SparkSession | None = None,
     spark, root, payload, bc, df = _build(tree, spark, sub_window)
     out_dtype = payload["out_dtype"]
 
+    @task_entry
     def compute(batches):
         # Whole-partition pass (tiles may straddle Arrow batch boundaries —
         # see aggregate.compute); results stream out in bounded chunks.
@@ -1028,6 +1007,7 @@ def _zonal_stats_distributed(tree, polygons: DataFrame,
     n_ty, n_tx = -(-window.ysize // ty_size), -(-window.xsize // tx_size)
     left0, top0 = area.left, area.top
 
+    @task_entry
     def cover_gen(batches):
         for pdf in batches:
             rows = {"tile_y": [], "tile_x": [], "poly_id": [], "geom_wkt": []}
@@ -1060,6 +1040,7 @@ def _zonal_stats_distributed(tree, polygons: DataFrame,
         "tile_y", "tile_x", "ysize", "xsize", "payload"
     )
 
+    @task_entry
     def burn(tiles_pdf: pd.DataFrame, cover_pdf: pd.DataFrame) -> pd.DataFrame:
         cols = ["poly_id", "ty", "tx", "partial", "pcount", "pmin", "pmax"]
         if not len(tiles_pdf) or not len(cover_pdf):
@@ -1148,6 +1129,7 @@ def zonal_stats(tree, polygons, spark: SparkSession | None = None,
     spark2, root, payload, bc, df = _build(tree, spark)
     polys_bc = spark2.sparkContext.broadcast(parsed)
 
+    @task_entry
     def compute(batches):
         pl = bc.value
         area, proj = pl["area"], pl["projection"]
@@ -1204,6 +1186,7 @@ def aggregate(tree, stat: str, spark: SparkSession | None = None) -> float:
     assert stat in ("sum", "min", "max")
     spark, root, payload, bc, df = _build(tree, spark)
 
+    @task_entry
     def compute(batches):
         # One _tile_results pass over the WHOLE partition: a tile's pieces
         # may straddle Arrow batch boundaries, so per-batch grouping would
@@ -1276,6 +1259,7 @@ def unique(tree, return_counts: bool = False, spark: SparkSession | None = None,
     bound explicitly)."""
     spark, root, payload, bc, df = _build(tree, spark)
 
+    @task_entry
     def compute(batches):
         # Whole-partition pass: tiles may straddle Arrow batch boundaries
         # (see aggregate.compute).  Partials here are tiny (distinct values).
@@ -1463,8 +1447,8 @@ def save(tree, path: str, and_sum: bool = False, sparse: bool = False,
         # the old flat collect was a multi-GB driver transfer).
         dt = root.datatype.to_numpy()
 
+        @task_entry
         def _partials(batches):
-            _forget_zip_finders()
             for batch in batches:
                 tys = batch.column("tile_y").to_numpy()
                 txs = batch.column("tile_x").to_numpy()

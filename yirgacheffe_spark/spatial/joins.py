@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .._worker import task_entry
 from . import cells as cellindex
 from ..sources.vector import parse_wkt_polygon
 
@@ -112,6 +113,7 @@ def _pip_broadcast(
         candidates = pages.join(F.broadcast(cover), "cell", "inner")
 
     @pandas_udf("boolean")
+    @task_entry
     def contains_bc(lat: pd.Series, lng: pd.Series,
                     poly_id: pd.Series) -> pd.Series:
         lat_v, lng_v = lat.to_numpy(), lng.to_numpy()
@@ -150,6 +152,7 @@ def point_in_polygon_join_df(
     the cell column.  ``polygons`` must carry ``poly_id`` and ``geom_wkt``.
     """
 
+    @task_entry
     def cover_gen(batches):
         for pdf in batches:
             rows_poly, rows_cell = [], []
@@ -178,6 +181,7 @@ def point_in_polygon_join_df(
     )
 
     @pandas_udf("boolean")
+    @task_entry
     def contains(lat: pd.Series, lng: pd.Series, poly_id: pd.Series,
                  wkt: pd.Series) -> pd.Series:
         lat_v, lng_v = lat.to_numpy(), lng.to_numpy()
@@ -806,6 +810,7 @@ def knn_join_df(
         if n_plan_parts > 1:
             pend_df = pend_df.repartition(n_plan_parts)
 
+        @task_entry
         def plan_gen(batches, _hist=hist, _p=p, _k=k):
             for pdf in batches:
                 yield _knn_histogram_plan(pdf, _hist, _p, _k)

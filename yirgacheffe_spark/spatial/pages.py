@@ -19,6 +19,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .._worker import task_entry
 from . import cells as cellindex
 
 _LANGS = np.array(["en", "de", "fr", "es", "pt", "zh", "ja", "ru"])
@@ -103,6 +104,7 @@ def generate_pages(spark: SparkSession, n_rows: int, seed: int = 42,
     if partitions is None:
         partitions = max(spark.sparkContext.defaultParallelism, 1)
 
+    @task_entry
     def gen(batches):
         for pdf in batches:
             yield synthesize_batch(pdf["id"].to_numpy(), seed)
@@ -208,6 +210,7 @@ def enriched_pages(spark: SparkSession, n_rows: int, res: int = 7, seed: int = 4
 
     schema = PAGES_SCHEMA + ", extracted string, lat double, lng double, cell long"
 
+    @task_entry
     def enrich(batches):
         for pdf in batches:
             base = synthesize_batch(pdf["id"].to_numpy(), seed)
@@ -234,6 +237,7 @@ def enrich_pages_df(df: DataFrame, res: int = 7, seed: int = 42) -> DataFrame:
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     ) + ", extracted string, lat double, lng double, cell long"
 
+    @task_entry
     def enrich(batches):
         for pdf in batches:
             pdf = pdf.copy()

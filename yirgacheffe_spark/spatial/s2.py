@@ -41,6 +41,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from .._worker import task_entry
+
 MAX_LEVEL = 30
 _LOOKUP_BITS = 4
 _SWAP = 1
@@ -388,6 +390,7 @@ def s2_cell_column(lat_col: str, lng_col: str, level: int):
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
+    @task_entry
     def _s2(lat: pd.Series, lng: pd.Series) -> pd.Series:
         ids = latlng_to_cell(lat.to_numpy(np.float64), lng.to_numpy(np.float64), level)
         return pd.Series(np.asarray(ids, dtype=np.int64))
@@ -406,6 +409,7 @@ def s2_token_column(cell_col: str):
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")
+    @task_entry
     def _tok(cell: pd.Series) -> pd.Series:
         return pd.Series(cell_token(cell.to_numpy(np.int64)).astype(object))
 

@@ -14,6 +14,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .._worker import task_entry
 from ..spatial import cells as cellindex
 from ..spatial.pages import PAGES_SCHEMA, extract_text_batch, geocode_batch
 
@@ -32,6 +33,7 @@ def enrich_stream(df: DataFrame, res: int = 6) -> DataFrame:
     stateless, one Arrow batch at a time)."""
     schema = PAGES_SCHEMA + ", extracted string, lat double, lng double, cell long"
 
+    @task_entry
     def enrich(batches):
         for pdf in batches:
             pdf = pdf.copy()

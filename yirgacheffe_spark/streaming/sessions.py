@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .._worker import task_entry
+
 # State travels as epoch milliseconds (longs): timestamp columns in state
 # structs are tz-fragile across restore.
 _STATE_SCHEMA = "start_ms long, last_ms long, n_events long, total_value double"
@@ -68,6 +70,7 @@ def sessionize_stream(
             }
         )
 
+    @task_entry
     def assemble(key, pdf_iter, state: GroupState):
         (key_val,) = key
         if state.hasTimedOut:

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window as W
 
+from .._worker import task_entry
 from .dedup import _bucket_pairs
 
 
@@ -92,6 +93,7 @@ def brute_force_topk_fast(
     qid_type = dict(queries.dtypes)[query_id_col]
     id_type = dict(corpus.dtypes)[id_col]
 
+    @task_entry
     def gen(batches):
         qids_, qn = bc.value
         nq = len(qids_)
@@ -180,6 +182,7 @@ def lsh_bucket_udf(bits: int, tables: int, seed: int = 42):
     ``.first()`` to fetch the dimension) is needed."""
 
     @pandas_udf("array<long>")
+    @task_entry
     def buckets(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
@@ -352,6 +355,7 @@ def ivf_assign(
     bc = corpus.sparkSession.sparkContext.broadcast(centroids)
 
     @pandas_udf("int")
+    @task_entry
     def assign(vecs: pd.Series) -> pd.Series:
         cents = bc.value
         if not len(vecs):
@@ -412,6 +416,7 @@ def ivf_topk(
     bc = spark.sparkContext.broadcast({qid: qmat[i] for i, qid in enumerate(qids)})
     id_type = dict(corpus.dtypes)[id_col]
 
+    @task_entry
     def gen(batches):
         qvecs = bc.value
         for pdf in batches:
@@ -491,6 +496,7 @@ def semantic_dedup(
     assigned = ivf_assign(emb, cents, vec_col)
     schema = assigned.drop("list_id").schema
 
+    @task_entry
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) <= 1:
             return pdf.drop(columns=["list_id"])

@@ -34,6 +34,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .._worker import task_entry
+
 BLOOM_FORMAT = "ygbloom-v1"
 
 
@@ -144,6 +146,7 @@ class BloomFilter:
         words = self.words  # closure capture; ships once per job
 
         @pandas_udf("boolean")
+        @task_entry
         def _probe(pos: pd.Series) -> pd.Series:
             if len(pos) == 0:
                 return pd.Series([], dtype=bool)

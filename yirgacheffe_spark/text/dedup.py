@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .._worker import task_entry
+
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Keep one representative (lowest id) per identical text."""
@@ -193,6 +195,7 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
         return out
 
     @pandas_udf("sig array<long>, buckets array<long>")
+    @task_entry
     def sig_and_buckets(texts: pd.Series) -> pd.DataFrame:
         m = _sig_matrix(texts)
         return pd.DataFrame(
@@ -294,6 +297,7 @@ def jaccard_pairs(df: DataFrame, pairs: DataFrame, text_col: str = "text",
         return row[keep], sh[keep]
 
     @pandas_udf("double")
+    @task_entry
     def jaccard(ta: pd.Series, tb: pd.Series) -> pd.Series:
         # Fully vectorised set algebra over 64-bit shingle fingerprints (the
         # same hashing as minhash_signatures): |A∩B| = duplicates in the
@@ -352,6 +356,7 @@ def simhash_column(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     """(id, simhash: long) — 64-bit SimHash over MD5 word hashes."""
 
     @pandas_udf("long")
+    @task_entry
     def simhash(texts: pd.Series) -> pd.Series:
         # One hash pass over the batch's flattened words, one (words x 64)
         # sign matrix, per-doc bit votes via add.reduceat — no per-doc loop.

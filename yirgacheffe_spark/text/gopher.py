@@ -40,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .._worker import task_entry
+
 # The paper's stop-word presence set.
 _GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
@@ -158,7 +160,7 @@ _NGRAM_REP_UDF = None
 def _ngram_repetition(col):
     global _NGRAM_REP_UDF  # pylint: disable=W0603 — one-time lazy build
     if _NGRAM_REP_UDF is None:
-        _NGRAM_REP_UDF = pandas_udf(_NGRAM_REP_SCHEMA)(_ngram_repetition_batch)
+        _NGRAM_REP_UDF = pandas_udf(_NGRAM_REP_SCHEMA)(task_entry(_ngram_repetition_batch))
     return _NGRAM_REP_UDF(col)
 
 

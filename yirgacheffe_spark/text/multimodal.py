@@ -16,6 +16,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .._worker import task_entry
+
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, width int, height int, "
     "sample_rate int, n_frames int"
@@ -66,6 +68,7 @@ def extract_features(df: DataFrame, decode: str = "fake", dim: int = 16) -> Data
         np.searchsorted(edges, np.arange(256), side="right") - 1, 0, dim - 1
     ).astype(np.int32)
 
+    @task_entry
     def run(batches):
         for pdf in batches:
             n = len(pdf)
@@ -112,6 +115,7 @@ def resize(df: DataFrame, out_w: int, out_h: int, decode: str = "fake") -> DataF
     resolutions)."""
     decoder = DECODERS[decode]
 
+    @task_entry
     def run(batches):
         for pdf in batches:
             n = len(pdf)
@@ -164,6 +168,7 @@ def synthesize_media(spark, n_rows: int, seed: int = 42) -> DataFrame:
     """Deterministic fake media table for tests/benchmarks."""
     from ..spatial.pages import _mix  # deterministic splitmix
 
+    @task_entry
     def gen(batches):
         for pdf in batches:
             ids = pdf["id"].to_numpy()

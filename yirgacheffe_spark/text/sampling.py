@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .._worker import task_entry
+
 # 2^64 as a float divisor: uniform in [0, 1) from a uint64 hash.
 _TWO64 = float(1 << 64)
 
@@ -156,6 +158,7 @@ def pack_sequences(df: DataFrame, token_budget: int,
         .withColumn("_pid", F.spark_partition_id())
     )
 
+    @task_entry
     def pack(batches):
         residuals: list[int] = []  # remaining capacity per open bin
         for pdf in batches:
