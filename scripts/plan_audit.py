@@ -12,9 +12,10 @@ Checks (each FAILS the script if violated):
    hot bucket set and its executed plan holds NO CartesianProduct /
    BroadcastNestedLoopJoin (all-pairs is the classic scale failure) and no
    SortMergeJoin.
-4. The kNN output plan is shuffle-light — the heavy one-shot disk join
-   ran eagerly (broadcast side asserted by the test suite); what remains
-   must hold no joins or parquet scans.
+4. The kNN plan scans the page table exactly once and broadcast-joins the
+   ``MapInPandas`` planner's keep rows (a ``MapInPandas`` under a
+   ``BroadcastHashJoin``), with no CartesianProduct /
+   BroadcastNestedLoopJoin / SortMergeJoin.
 5. Whole-stage codegen covers the text-quality column pipeline (the JVM
    hot path stays fused).
 6-10. Curation plans: scan-side sampling filter, JVM LM scoring,
@@ -43,6 +44,19 @@ def plan_of(df) -> str:
     return jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def subtree(lines: list[str], i: int) -> list[str]:
+    """The lines of a plan tree string below node ``lines[i]``."""
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = []
+    for line in lines[i + 1:]:
+        if depth(line) <= depth(lines[i]):
+            break
+        out.append(line)
+    return out
 
 
 def main() -> int:
@@ -134,22 +148,26 @@ def main() -> int:
               "nested-loop/sort-merge join", ok)
     sigs.unpersist()
 
-    # 4. kNN disk join broadcasts the query side
+    # 4. kNN: one page scan, broadcast keep rows from the planner
     qdf = spark.range(4).selectExpr(
         "id AS query_id", "CAST(id * 10 - 20 + 0.5 AS DOUBLE) AS lat",
         "CAST(id * 30 - 60 + 0.5 AS DOUBLE) AS lng"
     )
     knn = joins.knn_join_df(spark, pts.selectExpr("c_custkey AS url", "lat", "lng", "cell"),
                             qdf, k=2, res=5, max_ring=8)
-    plan = plan_of(knn)
-    # The heavy candidate join ran eagerly inside knn_join_df (broadcast
-    # disk side; asserted by the no-crossJoin test suite); the RETURNED
-    # plan must be shuffle-light: one Exchange for the final rank, no
-    # joins over the page table.
-    ok = ("SortMergeJoin" not in plan and "CartesianProduct" not in plan
-          and plan.count("Scan parquet") == 0)
-    check("kNN output plan is shuffle-light (no joins/scans after the "
-          "materialised one-shot disk job)", ok)
+    knn.collect()
+    final = knn._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    final = final.split("== Initial Plan ==")[0].splitlines()
+    scans = [l for l in final if "Scan parquet" in l]
+    ok = (len(scans) == 1
+          and any("MapInPandas" in m
+                  for i, l in enumerate(final) if "BroadcastHashJoin" in l
+                  for m in subtree(final, i))
+          and not any(op in l for l in final for op in (
+              "CartesianProduct", "BroadcastNestedLoopJoin", "SortMergeJoin")))
+    check("kNN plan: one page scan, MapInPandas planner under a "
+          "BroadcastHashJoin, no cartesian/nested-loop/sort-merge join", ok,
+          f"{len(scans)} page scan(s)")
 
     # 5. whole-stage codegen on the JVM text pipeline
     from yirgacheffe_spark.text import quality

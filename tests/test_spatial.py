@@ -325,10 +325,10 @@ def test_salted_is_deterministic_under_recompute(spark):
 
 
 def test_knn_escalation_path_exact(spark):
-    """A longitude void the per-latitude-band density cannot see: bands look
-    dense (pages cluster in the west), but the eastern query's first disk is
-    empty -> the settle check fails -> the escalation scan at max_ring must
-    still produce the exact brute-force answer."""
+    """A longitude void: pages cluster in the western hemisphere and every
+    latitude band holds some, but the eastern queries' nearest pages are
+    thousands of km away — the answer must still be the exact brute-force
+    one."""
     import pandas as pd
 
     rng = np.random.default_rng(11)
@@ -345,7 +345,7 @@ def test_knn_escalation_path_exact(spark):
     qdf = spark.createDataFrame(pd.DataFrame({
         "query_id": [1, 2],
         "lat": [5.0, -5.0],
-        "lng": [120.0, 150.0],  # far east: first adaptive disk is empty
+        "lng": [120.0, 150.0],  # far east of every page
     }))
     out = joins.knn_join_df(spark, pts, qdf, k=4, res=5, max_ring=64).collect()
     d = joins.haversine_m
@@ -405,34 +405,6 @@ def test_zonal_stats_full_columns(spark):
     assert row["zsum"] == float(data[sel].sum())
     assert row["zmin"] == data[sel].min() and row["zmax"] == data[sel].max()
     assert row["zmean"] == pytest.approx(data[sel].mean())
-
-
-def test_knn_initial_ring_override_matches_default(spark):
-    """Forcing a (too-small) uniform initial_ring must not change results:
-    the exact settle verification escalates whatever the prediction was."""
-    import pandas as pd
-
-    rng = np.random.default_rng(13)
-    n = 2000
-    pdf = pd.DataFrame({
-        "url": [f"u{i}" for i in range(n)],
-        "lat": rng.uniform(-60, 60, n),
-        "lng": rng.uniform(-180, 180, n),
-    })
-    pts = spark.createDataFrame(pdf).withColumn(
-        "cell", joins.cell_expr("lat", "lng", 5)
-    )
-    qdf = spark.createDataFrame(pd.DataFrame({
-        "query_id": [1, 2, 3],
-        "lat": [10.5, -30.5, 55.5],
-        "lng": [20.5, -120.5, 170.5],
-    }))
-    base = {(r["query_id"], r["rank"]): r["url"] for r in
-            joins.knn_join_df(spark, pts, qdf, k=5, res=5, max_ring=64).collect()}
-    forced = {(r["query_id"], r["rank"]): r["url"] for r in
-              joins.knn_join_df(spark, pts, qdf, k=5, res=5, max_ring=64,
-                                initial_ring=1).collect()}
-    assert base == forced and len(base) == 15
 
 
 def test_knn_correct_with_density_cache_disabled(spark, monkeypatch):
@@ -791,18 +763,16 @@ def test_asof_string_tiebreak_keeps_own_type(spark):
 
 @pytest.mark.parametrize("res", [6, 10, 12])
 def test_knn_exact_even_with_tiny_max_ring(spark, res):
-    """max_ring bounds only the cheap cell-disk search, never correctness:
-    when the disk cannot certify the k nearest (sparse corner data, tiny
-    max_ring), the unverifiable queries fall through to an exact pass.  The
-    old force-settle at max_ring returned disk-corner pages as 'nearest'
-    and silently DROPPED queries whose disk was empty.  Above res 8 the
-    same fallback planner runs on parent cells: its plan is the
-    mapInPandas planner, never a cells x queries cross join."""
+    """max_ring is accepted and ignored, never a correctness bound: sparse
+    corner data far from the query still yields the true k nearest, and no
+    query vanishes from the output.  Above res 8 the same planner runs on
+    parent cells: its plan is the mapInPandas planner, never a cells x
+    queries cross join."""
     import pandas as pd
 
     from yirgacheffe_spark.spatial import joins
 
-    # pages cluster far from the query; nothing within a 1-ring disk
+    # pages cluster far from the queries
     pages = spark.createDataFrame(pd.DataFrame({
         "url": [f"u{i}" for i in range(6)],
         "lat": [40.0, 40.1, 40.2, -35.0, -35.1, -35.2],
@@ -813,7 +783,7 @@ def test_knn_exact_even_with_tiny_max_ring(spark, res):
 
     pages = pages.withColumn("cell", joins.cell_expr("lat", "lng", res))
     queries = [
-        {"query_id": 1, "lat": 0.0, "lng": 0.0},     # empty disk at ring 1
+        {"query_id": 1, "lat": 0.0, "lng": 0.0},     # nothing within 30 deg
         {"query_id": 2, "lat": -30.0, "lng": 140.0}, # nearer to the -35 cluster
     ]
     knn = joins.knn_join(spark, pages, queries, k=2, res=res, max_ring=1)
@@ -839,9 +809,8 @@ def test_knn_exact_even_with_tiny_max_ring(spark, res):
 @pytest.mark.parametrize("res", [6, 10, 12])
 def test_knn_k_larger_than_table(spark, res):
     """k exceeding the table's row count returns every row, exactly — the
-    histogram-pruned final pass must not drop any nonempty cell when the
-    whole table is smaller than k, and a query whose disk found some rows
-    gets the fallback's rows instead of them, not as well."""
+    histogram-pruned fetch must not drop any nonempty cell when the whole
+    table is smaller than k, and returns each row once."""
     import pandas as pd
 
     from yirgacheffe_spark.spatial import joins
@@ -852,7 +821,7 @@ def test_knn_k_larger_than_table(spark, res):
         "lng": [10.0, 150.0, -60.0],
     })).withColumn("cell", joins.cell_expr("lat", "lng", res))
     queries = [{"query_id": 1, "lat": 0.0, "lng": 0.0},
-               {"query_id": 2, "lat": 40.0, "lng": 10.0}]  # "a" in its disk
+               {"query_id": 2, "lat": 40.0, "lng": 10.0}]  # on top of "a"
     out = joins.knn_join(
         spark, pages, queries, k=10, res=res, max_ring=1).collect()
     p = pages.toPandas()
@@ -893,7 +862,7 @@ def test_knn_polar_exact(spark, res):
 
     # Pages ONLY at +-89.3 deg (the pole-adjacent rows 0 and 63 at res 6),
     # spread over longitudes including across the antimeridian; every
-    # query's ring-1 disk is empty -> all take the histogram fallback.
+    # query's nearest pages sit across a pole-adjacent cell.
     lngs = np.arange(-175.0, 180.0, 10.0)
     lat_n = np.full(len(lngs), 89.3)
     lat_s = np.full(len(lngs), -89.3)
@@ -945,3 +914,154 @@ def test_knn_polar_exact(spark, res):
         spark, pinned, [{"query_id": 1, "lat": 40.0, "lng": 179.0}],
         k=1, res=6, max_ring=1).collect()
     assert [r.url for r in got] == ["near"]
+
+
+def _reference_histogram_plan(qlat, qlng, hist, p, k):
+    """Naive per-query twin of ``joins._knn_histogram_plan``: the same
+    sound bounds for every cell, a full sort by ub, the cap at the first
+    cell whose cumulative count reaches k (the largest ub when the table
+    holds fewer than k rows), and every cell with lb <= cap kept."""
+    cells, counts = hist
+    mask28 = (1 << 28) - 1
+    h, w, m = 180.0 / (1 << p), 360.0 / (1 << (p + 1)), 111_194.9
+    north = 90.0 - ((cells >> 28) & mask28).astype(np.float64) * h
+    south = north - h
+    lng0 = (cells & mask28).astype(np.float64) * w - 180.0
+    cos_n, cos_s = np.cos(np.radians(north)), np.cos(np.radians(south))
+    cos_par = np.where((north >= 0) & (south <= 0), 1.0, np.maximum(cos_n, cos_s))
+    keep, caps, tied = set(), [], 0
+    for i, (ql, qg) in enumerate(zip(qlat, qlng)):
+        ang = np.mod(qg - lng0, 360.0)
+        far_lng = np.where(
+            (ang >= 180.0) & (ang <= 180.0 + w), 180.0,
+            np.maximum(np.minimum(ang, 360.0 - ang),
+                       np.minimum(np.abs(ang - w), 360.0 - np.abs(ang - w))))
+        far_lat = np.where(np.abs(ql - north) > np.abs(ql - south), north, south)
+        ub = np.abs(ql - far_lat) * m + far_lng * m * cos_par
+        order = np.argsort(ub, kind="stable")
+        reach = np.cumsum(counts[order]) >= k
+        cap = ub[order][np.argmax(reach)] if reach.any() else ub.max()
+        tied += int(np.count_nonzero(ub == cap) > 1)
+        gap_lat = np.maximum(np.maximum(south - ql, ql - north), 0.0)
+        gap_lng = np.where(ang < w, 0.0, np.minimum(ang - w, 360.0 - ang))
+        lb_lng = 2.0 * joins.EARTH_RADIUS_M * np.arcsin(
+            np.sqrt(np.maximum(np.cos(np.radians(ql)) * np.minimum(cos_n, cos_s), 0.0))
+            * np.sin(np.radians(gap_lng) / 2.0))
+        lb = np.maximum(gap_lat * m, lb_lng)
+        keep |= {(i, int(c)) for c in cells[lb <= cap]}
+        caps.append(cap)
+    return keep, np.array(caps), tied
+
+
+@pytest.mark.parametrize("p", [6, 8])
+def test_knn_histogram_plan_matches_naive_reference(monkeypatch, p):
+    """The planner's argpartition cap and pair-budget chunks select exactly
+    the cells and caps of a naive per-query sort by ub, with tied ubs,
+    k = 1 and k above the table's row count."""
+    rng = np.random.default_rng(41 + p)
+    rows_n, cols_n = 1 << p, 1 << (p + 1)
+    # A full block (symmetric neighbors: tied ubs for queries at cell
+    # centres), scattered cells, both polar rows and the antimeridian.
+    block = [(r, c) for r in range(rows_n // 3, rows_n // 3 + 6)
+             for c in range(cols_n // 2, cols_n // 2 + 6)]
+    scatter = zip(rng.integers(0, rows_n, 400), rng.integers(0, cols_n, 400))
+    edges = [(0, 0), (0, cols_n - 1), (rows_n - 1, 3), (rows_n // 2, cols_n - 1)]
+    rc = np.array(sorted(set(block) | set(scatter) | set(edges)), dtype=np.int64)
+    cells = np.sort((np.int64(p) << 56) + (rc[:, 0] << 28) + rc[:, 1])
+    # Mostly single-row cells: the k nearest cells then hold barely k rows.
+    counts = np.where(rng.random(len(cells)) < 0.8, 1,
+                      rng.integers(2, 5, len(cells))).astype(np.int64)
+    h, w = 180.0 / rows_n, 360.0 / cols_n
+    centres_lat = 90.0 - (rows_n // 3 + 2.5) * h
+    centres_lng = -180.0 + (cols_n // 2 + np.arange(1, 5) + 0.5) * w
+    qlat = np.concatenate([rng.uniform(-90, 90, 40), [90.0, -90.0, 0.0, 45.0],
+                           np.full(4, centres_lat)])
+    qlng = np.concatenate([rng.uniform(-180, 180, 40), [0.0, 33.0, 180.0, -179.99],
+                           centres_lng])
+    pdf = pd.DataFrame({"query_id": np.arange(len(qlat), dtype=np.int64),
+                        "qlat": qlat, "qlng": qlng})
+    ties = 0
+    for k in (1, 7, int(counts.sum()) + 5):
+        want_keep, want_cap, tied = _reference_histogram_plan(
+            qlat, qlng, (cells, counts), p, k)
+        ties += tied
+        for budget in (joins._KNN_PLAN_PAIRS, 3 * len(cells) + 1):
+            monkeypatch.setattr(joins, "_KNN_PLAN_PAIRS", budget)
+            got = joins._knn_histogram_plan(pdf, (cells, counts), p, k)
+            assert set(zip(got["query_id"], got["pcell"])) == want_keep, (k, budget)
+            caps = got.groupby("query_id")["cap"].agg(["min", "max"])
+            assert (caps["min"] == caps["max"]).all()
+            np.testing.assert_array_equal(caps["min"].to_numpy(), want_cap)
+            assert (got["qlat"].to_numpy() == qlat[got["query_id"]]).all()
+    assert ties > 0  # the tie-order independence was exercised
+
+
+@pytest.mark.parametrize("res", [6, 10])
+def test_knn_brute_force_clustered_with_empty_regions(spark, res):
+    """~200 queries over clustered pages, 15% of them in empty regions
+    (both poles, the polar caps, open ocean): every query gets exactly its
+    brute-force k nearest, in (distance, url) order."""
+    rng = np.random.default_rng(5)
+    centres = [(40.7, -74.0), (51.5, -0.1), (35.7, 139.7), (-33.9, 151.2),
+               (-23.5, -46.6), (1.3, 103.8)]
+    lat = np.concatenate([rng.normal(a, 2.0, 500) for a, _ in centres])
+    lng = np.concatenate([rng.normal(b, 3.0, 500) for _, b in centres])
+    urls = np.array([f"u{i:05d}" for i in range(len(lat))])
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"url": urls, "lat": lat, "lng": lng})).withColumn(
+        "cell", joins.cell_expr("lat", "lng", res))
+    near = rng.integers(0, len(lat), 170)
+    empty_lat = np.concatenate([[90.0, -90.0], rng.uniform(70, 89.9, 10),
+                                rng.uniform(-89.9, -70, 10), rng.uniform(-50, -40, 8)])
+    empty_lng = np.concatenate([[0.0, 120.0], rng.uniform(-180, 180, 20),
+                                rng.uniform(-140, -110, 8)])
+    qlat = np.concatenate([lat[near] + rng.normal(0, 1.0, 170), empty_lat])
+    qlng = np.concatenate([lng[near] + rng.normal(0, 1.0, 170), empty_lng])
+    qlat = np.clip(qlat, -90, 90)
+    qdf = spark.createDataFrame(pd.DataFrame(
+        {"query_id": np.arange(len(qlat)), "lat": qlat, "lng": qlng}))
+    k = 5
+    got = {}
+    for r in joins.knn_join_df(spark, pts, qdf, k=k, res=res).collect():
+        got.setdefault(r["query_id"], []).append((r["rank"], r["url"]))
+    assert set(got) == set(range(len(qlat)))
+    for q in range(len(qlat)):
+        d = joins.haversine_m(lat, lng, qlat[q], qlng[q])
+        want = list(urls[np.lexsort((urls, d))[:k]])
+        assert [u for _, u in sorted(got[q])] == want, q
+
+
+def test_invalidate_density_cache_empties_cell_histograms(spark):
+    pts = spark.createDataFrame(pd.DataFrame({
+        "url": ["a", "b"], "lat": [1.0, -20.0], "lng": [2.0, 40.0]})
+    ).withColumn("cell", joins.cell_expr("lat", "lng", 6))
+    qdf = spark.createDataFrame(pd.DataFrame(
+        {"query_id": [1], "lat": [0.0], "lng": [0.0]}))
+    joins.knn_join_df(spark, pts, qdf, k=1, res=6)
+    assert joins._CELL_HIST_CACHE
+    joins.invalidate_density_cache()
+    assert joins._CELL_HIST_CACHE == {}
+
+
+def test_knn_exact_after_table_overwrite(spark, tmp_path):
+    """Overwriting a pages table in place keeps its analyzed plan's hash; the
+    cached cell histogram must still not outlive the files it counted."""
+    path = str(tmp_path / "pages")
+
+    def write(lat, lng):
+        pdf = pd.DataFrame({"url": [f"u{i}" for i in range(len(lat))],
+                            "lat": lat, "lng": lng})
+        spark.createDataFrame(pdf).withColumn(
+            "cell", joins.cell_expr("lat", "lng", 6)
+        ).write.mode("overwrite").parquet(path)
+        return pdf
+
+    qdf = spark.createDataFrame(pd.DataFrame(
+        {"query_id": [1], "lat": [-30.0], "lng": [140.0]}))
+    write(np.full(5, 40.0), np.linspace(10.0, 11.0, 5))
+    joins.knn_join_df(spark, spark.read.parquet(path), qdf, k=3, res=6).collect()
+    pdf = write(np.linspace(-35.0, -34.0, 6), np.full(6, 150.0))
+    got = joins.knn_join_df(spark, spark.read.parquet(path), qdf, k=3, res=6)
+    d = joins.haversine_m(pdf["lat"].to_numpy(), pdf["lng"].to_numpy(), -30.0, 140.0)
+    want = list(pdf["url"].to_numpy()[np.argsort(d)][:3])
+    assert [r["url"] for r in got.orderBy("rank").collect()] == want
