@@ -3,8 +3,10 @@ depends on, and print the evidence.
 
 Checks (each FAILS the script if violated):
 
-1. Raster scans carry PushedFilters on (band, tile_y, tile_x) and prune
-   columns (ReadSchema excludes payload-less metadata the kernel ignores).
+1. A raster off the computation grid (stored at half the tile size) runs
+   on the tile grid: its ``MapInArrow`` kernel reads a JVM ``Range`` of
+   tile ids and the parquet leaf itself — no ``FileScan parquet`` and no
+   ``Exchange`` (no JVM payload decode, no payload shuffle).
 2. The PIP candidate plan broadcast-joins (or inlines) the polygon side —
    no SortMergeJoin on the page table for a dim-sized polygon list.
 3. Every banded near-dup plan (MinHash candidates on persisted
@@ -86,10 +88,9 @@ def main() -> int:
         if not ok:
             failures.append(name)
 
-    # 1. raster scan pushdown on the general plan.  A table stored at half
-    # the computation tile size is unaligned by construction, so it is
-    # read by a JVM scan (aligned tables take the manifest plan, which
-    # prunes row groups on the driver and bypasses the JVM scan).
+    # 1. tile grid for a raster off the computation grid.  A table stored
+    # at half the computation tile size is unaligned by construction, so
+    # it cannot take the manifest plan.
     import tempfile
 
     import numpy as np
@@ -105,10 +106,14 @@ def main() -> int:
         )
         df = X.tiles_dataframe(X._as_root(layer * 2), spark)  # noqa: SLF001
         plan = plan_of(df)
-        pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
-        ok = any("tile_y" in l and "tile_x" in l for l in pushed)
-        check("raster scan pushes tile-range filters to parquet", ok,
-              pushed[0] if pushed else "(no PushedFilters line)")
+        tree = plan.split("\n\n")[0].splitlines()
+        kernel = [i for i, l in enumerate(tree) if "MapInArrow" in l]
+        ok = (len(kernel) == 1
+              and any("Range" in l for l in subtree(tree, kernel[0]))
+              and "Scan parquet" not in plan and "FileScan" not in plan
+              and "Exchange" not in plan)
+        check("off-grid raster runs on the tile grid: MapInArrow over Range, "
+              "no FileScan parquet, no Exchange", ok, "\n".join(tree))
 
     # 2. PIP broadcast / inlined cover
     pts = harness.customer_points(spark, SF_DIR).withColumn(

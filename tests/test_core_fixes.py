@@ -42,7 +42,7 @@ class TestMultiRingHalo:
 
     def test_conv2d_pad_exceeding_tile_repartition_fallback(self, spark, tmp_path,
                                                             monkeypatch):
-        """Same case through the non-broadcast (repartition) halo path."""
+        """Same case through the non-broadcast halo path (the tile grid)."""
         from yirgacheffe_spark.plans import executor
 
         monkeypatch.setattr(executor, "_HALO_BROADCAST_MAX", 1)
@@ -55,7 +55,7 @@ class TestMultiRingHalo:
         layer = yg.read_raster(path)
         expr = layer.conv2d(np.ones((11, 11), dtype=np.float32))
         plan = expr.to_dataframe(spark=spark)._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" in plan  # the general plan
+        assert "Range" in plan and "Exchange" not in plan  # the tile grid
         got = expr.to_numpy(spark=spark)
         want = kernel.evaluate_window(expr)
         np.testing.assert_allclose(got, want, rtol=1e-6, equal_nan=True)
@@ -117,7 +117,6 @@ class TestReaderCacheInvalidation:
         Keyed on float st_mtime, the footer-stats and tile-manifest caches
         served the old table's row-group ranges, which prune away the new
         table's second row group."""
-        from yirgacheffe_spark.plans import executor as ex
         from yirgacheffe_spark.sources import parquet as pqr
 
         path = str(tmp_path / "ow")
@@ -143,7 +142,7 @@ class TestReaderCacheInvalidation:
         write(tall, stamp + 1)
         assert os.stat(part).st_mtime == old_mtime  # the old key collides
 
-        assert ex._footer_stats(part) == pqr.row_group_tile_stats(part)
+        assert pqr._footer_stats(part) == pqr.row_group_tile_stats(part)
         assert yg.read_raster(path).sum(spark=spark) == tall.sum()
 
 
@@ -231,6 +230,7 @@ class TestManifestBandPruning:
         the other bands' row groups at planning time (files are band-pure),
         not decode them only to discard every row — and still be correct."""
         from yirgacheffe_spark.plans import executor as ex
+        from yirgacheffe_spark.sources import parquet as pqr
 
         path = str(tmp_path / "mb")
         area = Area(10.0, 50.0, 10.0 + 8 * 0.02, 50.0 - 8 * 0.02, _proj())
@@ -253,7 +253,7 @@ class TestManifestBandPruning:
         for f in sorted(_os.listdir(path)):
             if not f.endswith(".parquet"):
                 continue
-            stats = ex._footer_stats(_os.path.join(path, f))
+            stats = pqr._footer_stats(_os.path.join(path, f))
             total_rgs += len(stats)
             for _rg, _ymm, _xmm, bmm in stats:
                 assert bmm is not None  # v2 manifest carries band stats
@@ -262,7 +262,7 @@ class TestManifestBandPruning:
         # band-pure files: only band-2 files may survive the band filter
         assert kept_files and len(kept_files) < total_rgs
         for f in kept_files:
-            stats = ex._footer_stats(_os.path.join(path, f))
+            stats = pqr._footer_stats(_os.path.join(path, f))
             assert all(bmm == (2, 2) for _rg, _y, _x, bmm in stats)
 
 

@@ -131,7 +131,7 @@ def test_save_and_sum_parquet_roundtrip(spark, tmp_path):
     assert total == pytest.approx(float((A * 2).sum()))
     back = yg.read_raster(path)
     np.testing.assert_allclose(back.read_array(0, 0, 17, 13), A * 2)
-    # And compute on the read-back layer through the retiling join path.
+    # And compute on the read-back layer through Spark.
     assert (back + 0).sum(spark=spark) == pytest.approx(total)
 
 
@@ -153,11 +153,11 @@ def test_save_writes_tile_manifest_and_planner_uses_it(tmp_path, spark):
     # Writer emitted the manifest and its row-group ranges are valid.
     manifest = pqr.read_tile_manifest(str(tmp_path / "m"))
     assert manifest and all(rows for rows in manifest.values())
-    # A corrupted manifest entry would change planning; verify the planner
-    # consumes the manifest by poisoning it and observing _footer_stats.
-    X._FOOTER_CACHE.clear()
+    # The row-group listing reads the manifest first; its ranges must equal
+    # what the footers give a table without one.
+    pqr._FOOTER_CACHE.clear()
     f = sorted(manifest)[0]
-    stats = X._footer_stats(str(tmp_path / "m" / f))
+    stats = pqr._footer_stats(str(tmp_path / "m" / f))
     assert stats == manifest[f]
     # save() also writes one.
     out = str(tmp_path / "out")
@@ -181,10 +181,20 @@ def _executed_plan(expr, spark) -> str:
     return expr.to_dataframe(spark=spark)._jdf.queryExecution().executedPlan().toString()
 
 
+def _assert_tile_grid(expr, spark) -> None:
+    """The tile grid: a JVM range of tile ids, no exchange, no manifest."""
+    from yirgacheffe_spark.plans import executor
+
+    plan = _executed_plan(expr, spark)
+    assert "Range" in plan and "Exchange" not in plan
+    assert "manifest" not in executor._build(expr, spark)[2]
+
+
 def test_conv2d_halo_fallback_matches_broadcast(spark, tmp_path, monkeypatch):
-    """Above the halo broadcast budget the stencil takes the general plan —
-    strip rows co-located by one payload repartition — with bit-identical
-    results to the broadcast halo exchange (the 100-TB-safe path)."""
+    """Above the halo broadcast budget the stencil takes the tile grid —
+    each task reads its tiles' halo-grown windows itself — with
+    bit-identical results to the broadcast halo exchange (the 100-TB-safe
+    path)."""
     import numpy as np
 
     import yirgacheffe_spark as yg
@@ -206,7 +216,7 @@ def test_conv2d_halo_fallback_matches_broadcast(spark, tmp_path, monkeypatch):
     assert "Exchange hashpartitioning" not in _executed_plan(expr, spark)
 
     monkeypatch.setattr(executor, "_HALO_BROADCAST_MAX", 0)  # force the fallback
-    assert "Exchange hashpartitioning" in _executed_plan(expr, spark)
+    _assert_tile_grid(expr, spark)
     fallback_out = expr.to_numpy(spark=spark)
     fallback_sum = expr.sum(spark=spark)
     np.testing.assert_array_equal(fallback_out, broadcast_out)
@@ -238,7 +248,7 @@ def test_conv2d_over_widened_window_sees_neighbour_data(spark, tmp_path, monkeyp
 
     np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
     monkeypatch.setattr(executor, "_HALO_BROADCAST_MAX", 0)
-    assert "Exchange hashpartitioning" in _executed_plan(expr, spark)
+    _assert_tile_grid(expr, spark)
     np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
 
 
@@ -323,7 +333,7 @@ def test_multi_table_planar_manifest_matches(spark, tmp_path, monkeypatch):
         sexpr.to_numpy(spark=spark), kernel.evaluate_window(sexpr))
 
     # Tables whose stored grids differ (different heights) must NOT be
-    # stitched by the multi-table manifest — the general plans take over.
+    # stitched by the multi-table manifest — the tile grid takes over.
     c = rng.integers(0, 9, (12, 20)).astype(np.int16)
     lc = yg.write_array_as_raster_table(
         str(tmp_path / "c"), c, yg.Area(0.0, 0.0, 0.20, -0.12, proj), tile_size=4)

@@ -16,8 +16,9 @@ TILE_YSIZE = int(os.environ.get("YG_SPARK_TILE_YSIZE", "512"))
 TILE_XSIZE = int(os.environ.get("YG_SPARK_TILE_XSIZE", "512"))
 
 # Tile size used when *storing* rasters as parquet tile tables.  Kept equal to
-# the computation tile size by default so aligned reads need no re-tiling
-# shuffle, but either may be overridden.
+# the computation tile size by default so aligned reads take the manifest plan
+# (an unaligned leaf is read tile by tile inside the kernel), but either may
+# be overridden.
 STORAGE_TILE_SIZE = int(os.environ.get("YG_SPARK_STORAGE_TILE_SIZE", "512"))
 
 # Default shuffle partitions for a local session; on a real cluster this is

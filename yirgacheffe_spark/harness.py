@@ -17,8 +17,8 @@ elev = l_partkey % 1000, hab = l_suppkey % 20 — all integer-valued doubles,
 so float64 aggregation is exact and order-independent (no fp-hash flakes).
 
 Raster tables are materialised once per (sf_dir) under /tmp and read back as
-``ParquetRasterLayer``s, so oracle queries exercise the real scan +
-re-tiling join path.  (Fixture *construction* is driver-side pyarrow: it is
+``ParquetRasterLayer``s, so oracle queries exercise the real raster
+plans (the manifest plan, or the tile grid's in-kernel leaf reads).  (Fixture *construction* is driver-side pyarrow: it is
 test plumbing, not the engine; at real scale rasters arrive as tables.)
 """
 

@@ -4,25 +4,23 @@ Physical shape of every computation:
 
 1. **Plan (driver)** — resolve the operation area/window with the reference's
    extent algebra, split the window into a grid of tiles, and classify
-   leaves: parquet-backed rasters are *slots* fed by a scan; everything else
-   (in-memory arrays, constants, generated layers) ships inside the kernel
-   closure via a broadcast.  ``_build`` feeds the slots with one of two
-   scan plans:
+   leaves: parquet-backed rasters, and everything else (in-memory arrays,
+   constants, generated layers), which ships inside the kernel closure via a
+   broadcast.  ``_build`` picks one of two plans:
 
-   * the **manifest plan**, whenever every leaf lies on the computation grid
-     (one table, one interleaved multiband table, or per-band tables whose
-     row-group sequences match): the driver lists the (file, row group)
-     pairs that survive footer-statistics pruning, a JVM range of group ids
-     hands them to tasks, and workers decode them with pyarrow — no JVM
-     payload decode, no shuffle.  Stencil halos ride along as edge strips
-     inside the payload broadcast.
-   * the **general plan** for everything else: a JVM scan per leaf emits one
-     row per (computation tile, piece) — a *re-tiling* of the stored grid
-     whose tile-range predicates push down to parquet row-group stats —
-     and the leaves are unioned and repartitioned on tile coordinates.
-
-   A tree with no parquet leaf scans nothing: the kernel runs over a
-   generated tile grid.
+   * the **manifest plan**, whenever every parquet leaf lies on the
+     computation grid (one table, one interleaved multiband table, or
+     per-band tables whose row-group sequences match): the leaves become
+     *slots*, the driver lists the (file, row group) pairs that survive
+     manifest/footer-statistics pruning, a JVM range of group ids hands
+     them to tasks, and workers decode them with pyarrow — no JVM payload
+     decode, no shuffle.  Stencil halos ride along as edge strips inside
+     the payload broadcast.
+   * the **tile grid** for every other tree, including one with no parquet
+     leaf: a JVM range of tile ids, and the kernel reads each parquet leaf
+     of its tile in-process (``ParquetRasterLayer.read_window`` over the
+     task's decoded-row-group cache), exactly as the ``evaluate_window``
+     oracle does.
 2. **Execute (cluster)** — one ``mapInArrow`` kernel per stage evaluates the
    *whole* numpy expression tree per tile (operator fusion, per-tile CSE),
    emitting either result tiles (save / read_array) or per-tile aggregate
@@ -32,24 +30,21 @@ Physical shape of every computation:
 Implementation notes for throughput:
 
 * Kernels use ``mapInArrow`` (not ``mapInPandas``): tile payloads are
-  multi-megabyte binaries inside list<struct> columns, and Arrow buffers are
-  sliced zero-copy into numpy, where pandas conversion would materialise
-  Python dicts/bytes per piece.
+  multi-megabyte binaries, and Arrow buffers are sliced zero-copy into
+  numpy, where pandas conversion would materialise Python bytes per tile.
 * One Python worker per task.  A kernel's input rows come from the JVM (a
-  parquet scan, or a ``spark.range`` of manifest group ids), never from a
+  ``spark.range`` of manifest group ids or tile ids), never from a
   parallelized Python RDD, which would start a second worker per task just
   to emit rows.  Every kernel body is wrapped in ``_worker.task_entry``,
   the library-wide Python task entry hook, so the next task on the same
   worker skips PySpark's per-task zip-archive re-read (see ``_worker``).
-* Driver-side plan construction keeps py4j chatter low: tile arithmetic is
-  emitted as single ``selectExpr`` strings and parquet readers are cached
-  per path, so repeated terminal actions cost milliseconds of planning.
+* Driver-side plan construction keeps py4j chatter low: a plan is one JVM
+  range, and manifests and footer statistics are cached per (file,
+  mtime_ns), so repeated terminal actions cost milliseconds of planning.
 
 Scale notes: tiles are the unit of parallelism and shuffle keys are tile
-coordinates, so plans scale by adding executors; the only payload shuffle is
-the general plan's repartition (the manifest plan — rasters written by this
-engine read back at the same grid — has none); aggregations move eight
-bytes per tile.
+coordinates, so plans scale by adding executors; neither raster plan
+shuffles a payload, and aggregations move eight bytes per tile.
 """
 
 from __future__ import annotations
@@ -68,6 +63,7 @@ from .. import constants
 from .._worker import task_entry
 from ..grid import Window
 from ..operators import LayerOperation
+from ..sources import parquet as pq_raster
 from . import kernel as K
 from .session import get_spark
 
@@ -87,27 +83,9 @@ _PA_UNIQUE = pa.schema(
     [("value", pa.float64()), ("is_nan", pa.bool_()), ("count", pa.int64())]
 )
 
-_reader_cache: dict[tuple[int, str, int], DataFrame] = {}
-
 
 def _as_root(tree) -> LayerOperation:
     return tree if isinstance(tree, LayerOperation) else LayerOperation(tree)
-
-
-def _read_raster_table(spark: SparkSession, path: str) -> DataFrame:
-    # mtime in the key (like the footer/manifest caches): an overwrite of
-    # the table replaces the part files, and the cached DataFrame's file
-    # index would keep pointing at the deleted names — FileNotFoundException
-    # on the next action, or stale data on a name collision.
-    key = (id(spark), path, os.stat(path).st_mtime_ns)
-    if key not in _reader_cache:
-        # Evict superseded mtimes of the same table first: an overwrite
-        # loop would otherwise leak one cached DataFrame per rewrite for
-        # the process lifetime.
-        for old in [k for k in _reader_cache if k[:2] == key[:2]]:
-            del _reader_cache[old]
-        _reader_cache[key] = spark.read.parquet(path)
-    return _reader_cache[key]
 
 
 def _plan_payload(root: LayerOperation):
@@ -139,8 +117,6 @@ def _plan_payload(root: LayerOperation):
                 "path": leaf.path,
                 "band": leaf.band,
                 "stored_tiles": leaf.stored_tiles,
-                "leaf_h": leaf.window.ysize,
-                "leaf_w": leaf.window.xsize,
                 "interleaved": getattr(leaf, "interleaved", False),
                 "dense": getattr(leaf, "dense", True),
             }
@@ -169,10 +145,10 @@ _PIECE_PA_TYPE = pa.struct(
 )
 
 # Halo strips travel inside the payload broadcast, which every executor
-# holds whole: above this many strip bytes a stencil takes the general plan
-# (strip rows co-located with the body by ONE payload repartition — linear
-# and cluster-safe).  At 100 TB the strips alone are ~1.6% of the raster —
-# terabytes — so the broadcast must be size-guarded, not assumed.
+# holds whole: above this many strip bytes a stencil takes the tile grid
+# (each task reads its tiles' halo-grown windows itself).  At 100 TB the
+# strips alone are ~1.6% of the raster — terabytes — so the broadcast must
+# be size-guarded, not assumed.
 _HALO_BROADCAST_MAX = 256 * 1024 * 1024
 
 
@@ -193,96 +169,11 @@ def _stored_range(payload: dict, meta: dict, tile_box: tuple[int, int, int, int]
             max(x_px_lo // s, 0), min((x_px_hi - 1) // s, stored_x - 1))
 
 
-def _slot_rows(spark: SparkSession, payload: dict, slot: int,
-               tile_box: tuple[int, int, int, int]):
-    """Scan one parquet leaf and emit one row per (computation tile, piece):
-    ``(ty, tx, piece struct<slot, py0, px0, sh, sw, p>)``.
-
-    Returns (rows, coverage_rect).  All arithmetic is Spark SQL (JVM-side,
-    emitted as single selectExpr strings); the scan carries tile-range
-    predicates that push down to parquet row-group statistics.
-    """
-    meta = payload["slot_meta"][slot]
-    s = meta["S"]
-    p = meta["pad"]
-    ayoff, axoff = meta["ayoff"], meta["axoff"]
-    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    ty_lo, ty_hi, tx_lo, tx_hi = tile_box
-
-    # Computation tiles this leaf can contribute to (its coverage rectangle).
-    leaf_h, leaf_w = meta["leaf_h"], meta["leaf_w"]
-    cov = (
-        max(ty_lo, (-ayoff - ty_size - p) // ty_size + 1),
-        min(ty_hi, (-ayoff + leaf_h + p - 1) // ty_size),
-        max(tx_lo, (-axoff - tx_size - p) // tx_size + 1),
-        min(tx_hi, (-axoff + leaf_w + p - 1) // tx_size),
-    )
-
-    sy_lo, sy_hi, sx_lo, sx_hi = _stored_range(payload, meta, tile_box, p)
-    src = _read_raster_table(spark, meta["path"]).where(
-        f"band = {meta['band']} AND tile_y BETWEEN {int(sy_lo)} AND {int(sy_hi)} "
-        f"AND tile_x BETWEEN {int(sx_lo)} AND {int(sx_hi)}"
-    )
-
-    # Aligned geometry with no halo: stored grid coincides with the
-    # computation grid (equal tile size, whole-tile origin offset) — each
-    # stored tile feeds exactly one computation tile, no explode.
-    if p == 0 and s == ty_size == tx_size and ayoff % s == 0 and axoff % s == 0:
-        rows = src.selectExpr(
-            f"CAST((CAST(tile_y AS BIGINT) * {s} - {ayoff}) / {ty_size} AS INT) AS ty",
-            f"CAST((CAST(tile_x AS BIGINT) * {s} - {axoff}) / {tx_size} AS INT) AS tx",
-            f"struct(CAST({slot} AS INT) AS slot, CAST(tile_y AS BIGINT) * {s} AS py0, "
-            f"CAST(tile_x AS BIGINT) * {s} AS px0, ysize AS sh, xsize AS sw, "
-            f"payload AS p) AS piece",
-        ).where(f"ty BETWEEN {ty_lo} AND {ty_hi} AND tx BETWEEN {tx_lo} AND {tx_hi}")
-        return rows, cov
-
-    # General: window-space start of each stored tile decides which
-    # computation tiles (with halo) it intersects; explode those ranges and
-    # slice the payload to the row strip each target actually needs
-    # (row-major payload: a row range is one contiguous byte slice, cut
-    # JVM-side before the shuffle, so halo duplication ships strips,
-    # not whole tiles).
-    itemsize = np.dtype(meta["np_dtype"]).itemsize
-    a_y = f"(CAST(tile_y AS BIGINT) * {s} - {ayoff})"
-    a_x = f"(CAST(tile_x AS BIGINT) * {s} - {axoff})"
-    r0 = f"GREATEST(ty * {ty_size} - {p} - ({a_y}), 0)"
-    r1 = f"LEAST((ty + 1) * {ty_size} + {p} - ({a_y}), CAST(ysize AS BIGINT))"
-    rows = (
-        src.selectExpr(
-            "tile_y", "tile_x", "ysize", "xsize", "payload",
-            f"GREATEST({ty_lo}, CAST(FLOOR(({a_y} - {ty_size} - {p}) / {ty_size}) + 1 AS INT)) AS first_ty",
-            f"LEAST({ty_hi}, CAST(FLOOR(({a_y} + ysize + {p} - 1) / {ty_size}) AS INT)) AS last_ty",
-            f"GREATEST({tx_lo}, CAST(FLOOR(({a_x} - {tx_size} - {p}) / {tx_size}) + 1 AS INT)) AS first_tx",
-            f"LEAST({tx_hi}, CAST(FLOOR(({a_x} + xsize + {p} - 1) / {tx_size}) AS INT)) AS last_tx",
-        )
-        .where("first_ty <= last_ty AND first_tx <= last_tx")
-        .selectExpr(
-            "explode(sequence(first_ty, last_ty)) AS ty",
-            "first_tx", "last_tx",
-            "tile_y", "tile_x", "ysize", "xsize",
-            # Slice rows before the tx explode so column-duplicated copies
-            # carry strips rather than whole payloads.
-            f"CAST(tile_y AS BIGINT) * {s} + {r0} AS py0",
-            f"CAST({r1} - ({r0}) AS INT) AS sh",
-            f"substring(payload, CAST({r0} * xsize * {itemsize} + 1 AS INT), "
-            f"CAST(({r1} - ({r0})) * xsize * {itemsize} AS INT)) AS pslice",
-        )
-        .selectExpr(
-            "ty",
-            "explode(sequence(first_tx, last_tx)) AS tx",
-            f"struct(CAST({slot} AS INT) AS slot, py0, "
-            f"CAST(tile_x AS BIGINT) * {s} AS px0, sh, xsize AS sw, pslice AS p) AS piece",
-        )
-    )
-    return rows, cov
-
-
 def _strip_rows_for_tile(out_ty, out_tx, out_struct, slot, payload, tile_box,
-                         meta, sy, sx, sh, sw, buf_fn):
-    """Append the halo strips one stored tile owes its neighbours.
-    ``buf_fn`` lazily yields the tile's payload buffer (decoded at most
-    once, and only when a strip is actually emitted)."""
+                         meta, sy, sx, sh, sw, buf):
+    """Append the halo strips one stored tile owes its neighbours; ``buf``
+    is the tile's payload, viewed as an array only when a strip is
+    actually emitted."""
     s_sz = meta["S"]
     p = meta["pad"]
     ayoff, axoff = meta["ayoff"], meta["axoff"]
@@ -315,9 +206,7 @@ def _strip_rows_for_tile(out_ty, out_tx, out_struct, slot, payload, tile_box,
             if r0 >= r1 or c0 >= c1:
                 continue
             if data is None:
-                data = np.frombuffer(
-                    buf_fn(), dtype=meta["np_dtype"]
-                ).reshape(sh, sw)
+                data = np.frombuffer(buf, dtype=meta["np_dtype"]).reshape(sh, sw)
             strip = np.ascontiguousarray(data[r0:r1, c0:c1])
             out_ty.append(t_ty)
             out_tx.append(t_tx)
@@ -346,7 +235,7 @@ def _halo_strips_direct(spark: SparkSession, payload: dict, slot: int,
     rng = _stored_range(payload, meta, tile_box, meta["pad"])
     sy_lo, sy_hi, sx_lo, sx_hi = rng
     rows = [(f, rg) for f, rg, _ymm, _xmm
-            in _pruned_row_groups(meta["path"], band, band, rng)]
+            in pq_raster._pruned_row_groups(meta["path"], band, band, rng)]
 
     @task_entry
     def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -354,16 +243,7 @@ def _halo_strips_direct(spark: SparkSession, payload: dict, slot: int,
         for batch in batches:
             for rid in batch.column(0).to_pylist():
                 f, rg = rows[rid]
-                tbl = _read_row_group(f, rg)
-                b_arr = tbl.column("band").to_numpy()
-                sy_c = tbl.column("tile_y").to_numpy()
-                sx_c = tbl.column("tile_x").to_numpy()
-                sh_c = tbl.column("ysize").to_numpy()
-                sw_c = tbl.column("xsize").to_numpy()
-                pay = tbl.column("payload")
-                if pay.num_chunks != 1:
-                    pay = pay.combine_chunks()
-                chunk = pay.chunk(0) if hasattr(pay, "chunk") else pay
+                b_arr, sy_c, sx_c, sh_c, sw_c, bufs = pq_raster._decoded_row_group(f, rg)
                 for i in range(len(b_arr)):
                     # Interleaved row groups hold every band of a tile.
                     if int(b_arr[i]) != band:
@@ -373,8 +253,7 @@ def _halo_strips_direct(spark: SparkSession, payload: dict, slot: int,
                         continue
                     _strip_rows_for_tile(
                         out_ty, out_tx, out_struct, slot, payload, tile_box, meta,
-                        sy, sx, int(sh_c[i]), int(sw_c[i]),
-                        lambda i=i: memoryview(chunk[i].as_buffer()),
+                        sy, sx, int(sh_c[i]), int(sw_c[i]), bufs[i],
                     )
         if out_ty:
             yield pa.RecordBatch.from_arrays(
@@ -416,70 +295,6 @@ def _halo_strip_bytes(payload: dict, slot: int,
     n_tiles = (ty_hi - ty_lo + 1) * (tx_hi - tx_lo + 1)
     frame_px = 2 * p * (ty_size + tx_size) + 4 * p * p
     return n_tiles * frame_px * np.dtype(meta["np_dtype"]).itemsize
-
-
-# Footer statistics cache: repeated terminal actions over the same raster
-# (every bench/production loop) must not re-read every parquet footer on the
-# driver.  Keyed by (file, mtime_ns); entries are (row_group, (ty_min, ty_max),
-# (tx_min, tx_max)) with None when the writer recorded no statistics.
-_FOOTER_CACHE: dict[tuple[str, int], list] = {}
-
-
-def _footer_cache_put(key: tuple[str, int], value: list) -> None:
-    # FIFO size bound — must run on EVERY insertion point (the manifest-hit
-    # branch previously skipped it, so long-lived sessions touching many
-    # distinct files/mtimes grew the driver cache unboundedly).
-    while len(_FOOTER_CACHE) >= 4096:
-        _FOOTER_CACHE.pop(next(iter(_FOOTER_CACHE)))
-    _FOOTER_CACHE[key] = value
-
-
-def _footer_stats(path: str) -> list:
-    key = (path, os.stat(path).st_mtime_ns)
-    got = _FOOTER_CACHE.get(key)
-    if got is None:
-        # Prefer the save-time manifest: one JSON fetch for the whole table
-        # instead of a footer read per file (the scale path for tables with
-        # many part files on object storage).
-        from ..sources.parquet import (  # pylint: disable=C0415
-            read_tile_manifest,
-            row_group_tile_stats,
-        )
-
-        manifest = read_tile_manifest(os.path.dirname(path))
-        if manifest is not None and os.path.basename(path) in manifest:
-            got = manifest[os.path.basename(path)]
-            _footer_cache_put(key, got)
-            return got
-        got = row_group_tile_stats(path)
-        _footer_cache_put(key, got)
-    return got
-
-
-def _pruned_row_groups(path: str, band_lo: int, band_hi: int,
-                       stored_range: tuple[int, int, int, int]) -> list:
-    """(file, rg, ty_minmax, tx_minmax) of every row group of the table at
-    ``path`` whose footer statistics may hold a tile of bands
-    [band_lo, band_hi] inside the stored-tile range."""
-    sy_lo, sy_hi, sx_lo, sx_hi = stored_range
-    out = []
-    for name in sorted(os.listdir(path)):
-        if not name.endswith(".parquet"):
-            continue
-        f = os.path.join(path, name)
-        for rg, ymm, xmm, bmm in _footer_stats(f):
-            # Band pruning: non-interleaved multiband tables are band-pure
-            # per file, so a single-band query drops the other bands' row
-            # groups entirely instead of decoding their payloads only to
-            # discard every row kernel-side.
-            if bmm is not None and (bmm[1] < band_lo or bmm[0] > band_hi):
-                continue
-            if ymm is not None and (ymm[1] < sy_lo or ymm[0] > sy_hi):
-                continue
-            if xmm is not None and (xmm[1] < sx_lo or xmm[0] > sx_hi):
-                continue
-            out.append((f, rg, ymm, xmm))
-    return out
 
 
 def _manifest_rows(spark: SparkSession, payload: dict,
@@ -538,7 +353,7 @@ def _manifest_rows(spark: SparkSession, payload: dict,
     rng = _stored_range(payload, first, tile_box, 0)
 
     if same_path:
-        stats = _pruned_row_groups(first["path"], min(bands), max(bands), rng)
+        stats = pq_raster._pruned_row_groups(first["path"], min(bands), max(bands), rng)
         groups = [[(f, rg)] for f, rg, _ymm, _xmm in stats]
         file_slots = {"*": [(int(b), i) for i, b in enumerate(bands)]}
     else:
@@ -546,9 +361,8 @@ def _manifest_rows(spark: SparkSession, payload: dict,
         # IDENTICAL ordered (rg, tile-range) sequences (our writer is
         # deterministic, so per-channel tables of one grid do) — then
         # row group i of every table holds the same tile run, and group i
-        # lists all of them.  Any divergence falls back to the general
-        # plan.
-        per_slot = [_pruned_row_groups(m["path"], m["band"], m["band"], rng)
+        # lists all of them.  Any divergence takes the tile grid.
+        per_slot = [pq_raster._pruned_row_groups(m["path"], m["band"], m["band"], rng)
                     for m in metas]
         shape0 = [(rg, ymm, xmm) for _f, rg, ymm, xmm in per_slot[0]]
         for st in per_slot[1:]:
@@ -576,7 +390,8 @@ def _manifest_rows(spark: SparkSession, payload: dict,
     else:
         present = set()
         for f, rg, _ymm, _xmm in stats:
-            keys = _read_row_group(f, rg, ("band", "tile_y", "tile_x"))
+            keys = pq_raster._pq_handle(f).read_row_group(
+                rg, columns=["band", "tile_y", "tile_x"])
             for b, sy, sx in zip(*(col.to_pylist() for col in keys.columns)):
                 if b == first["band"]:
                     present.add((sy - off_y, sx - off_x))
@@ -612,33 +427,9 @@ def _range_of(spark: SparkSession, n: int) -> DataFrame:
     return spark.range(0, n, numPartitions=max(min(n, parallelism), 1))
 
 
-def _missing_grid(spark: SparkSession, payload: dict,
-                  tile_box: tuple[int, int, int, int],
-                  covs: list[tuple[int, int, int, int]],
-                  sparse_rows: DataFrame | None) -> DataFrame | None:
-    """Grid of (ty, tx) tiles no stored row covers, or None when coverage is
-    complete.  Dense tables: closed-form rectangle complement (zero extra
-    scans).  Sparse tables (``sparse_rows`` given): key-only anti-join."""
-    ty_lo, ty_hi, tx_lo, tx_hi = tile_box
-    if sparse_rows is not None:
-        present = sparse_rows.select("ty", "tx").distinct()
-        return _base_grid(spark, payload, tile_box).join(
-            present, ["ty", "tx"], "left_anti"
-        )
-    if any(
-        c[0] <= ty_lo and ty_hi <= c[1] and c[2] <= tx_lo and tx_hi <= c[3]
-        for c in covs
-    ):
-        return None
-    covered = " OR ".join(
-        f"(ty BETWEEN {c[0]} AND {c[1]} AND tx BETWEEN {c[2]} AND {c[3]})"
-        for c in covs
-    )
-    return _base_grid(spark, payload, tile_box).where(f"NOT ({covered})")
-
-
-def _base_grid(spark: SparkSession, payload: dict,
-               tile_box: tuple[int, int, int, int]) -> DataFrame:
+def _base_grid(spark: SparkSession, tile_box: tuple[int, int, int, int]) -> DataFrame:
+    """One ``(ty, tx)`` row per tile of the box, row-major, so each task
+    gets a contiguous run of neighbouring tiles."""
     ty_lo, ty_hi, tx_lo, tx_hi = tile_box
     n_y, n_x = ty_hi - ty_lo + 1, tx_hi - tx_lo + 1
     return _range_of(spark, n_y * n_x).selectExpr(
@@ -648,7 +439,7 @@ def _base_grid(spark: SparkSession, payload: dict,
 
 
 def _build(tree, spark: SparkSession | None, sub_window: Window | None = None):
-    """Choose the scan plan that feeds the kernel and broadcast its payload.
+    """Choose the plan that feeds the kernel and broadcast its payload.
 
     * **Manifest plan** (``_manifest_rows``) whenever every leaf lies on
       the computation grid: one table (dense or sparse), distinct bands of
@@ -659,22 +450,11 @@ def _build(tree, spark: SparkSession | None, sub_window: Window | None = None):
       leaves add halo strips (``_halo_pieces``), collected once and shipped
       inside the payload broadcast while they fit ``_HALO_BROADCAST_MAX``;
       the kernel merges them at assembly.
-    * **General plan** for everything else — unaligned grids, halos over
-      the budget, planar tables whose row groups differ, a sparse table
-      next to other leaves: one row per (tile, piece) per leaf
-      (``_slot_rows``), unioned with the tiles no leaf covers
-      (``_missing_grid``) and co-located per tile by one repartition.
-
-    Design notes for the general plan (measured, not guessed):
-    * No joins: an outer join of the tile grid against big piece rows tempts
-      Catalyst into broadcasting the piece side (outer joins can only build
-      the non-preserved side), and pairwise leaf joins shuffle every leaf
-      per join.
-    * No collect_list: ObjectHashAggregate over multi-megabyte binaries is an
-      order of magnitude slower than shuffle+sort of the same rows.
-    * Repartition only — co-location is enough.  A partition-local sort of
-      multi-megabyte rows thrashes Tungsten's record sorter (measured 35 s
-      vs 3 s for the bare shuffle); the kernel groups rows hash-side.
+    * **Tile grid** for every other tree — no parquet leaf, unaligned
+      grids, differing offsets, planar tables whose row groups differ, a
+      sparse table next to other leaves, halos over the budget: one
+      ``(ty, tx)`` row per tile (``_base_grid``), and the kernel reads
+      each parquet leaf of its tile through ``read_region``.
     """
     spark = get_spark(spark)
     root = _as_root(tree)
@@ -693,27 +473,13 @@ def _build(tree, spark: SparkSession | None, sub_window: Window | None = None):
 
     metas = payload["slot_meta"]
     manifest = _manifest_rows(spark, payload, tile_box) if metas else None
-    if not metas:
-        df = _base_grid(spark, payload, tile_box).selectExpr(
-            "ty", "tx", f"CAST(NULL AS {PIECE_STRUCT_SQL}) AS piece"
-        )
-    elif manifest is not None:
+    if manifest is None:
+        df = _base_grid(spark, tile_box)
+    else:
         payload["manifest"], df = manifest
         padded = [slot for slot, m in enumerate(metas) if m["pad"]]
         if padded:
             payload["halo_pieces"] = _halo_pieces(spark, payload, padded, tile_box)
-    else:
-        slot_rows, covs = zip(*(_slot_rows(spark, payload, slot, tile_box)
-                                for slot in range(len(metas))))
-        df = reduce(DataFrame.unionByName, slot_rows)
-        all_dense = all(m["dense"] for m in metas)
-        missing = _missing_grid(spark, payload, tile_box, covs,
-                                None if all_dense else df)
-        if missing is not None:
-            df = df.unionByName(
-                missing.selectExpr("ty", "tx", f"CAST(NULL AS {PIECE_STRUCT_SQL}) AS piece")
-            )
-        df = df.repartition(F.col("ty"), F.col("tx"))
 
     bc = spark.sparkContext.broadcast(payload)
     return spark, root, payload, bc, df
@@ -747,18 +513,8 @@ def _assemble_slot(meta: dict, pieces, y0: int, x0: int, h: int, w: int):
     return out, (oy, ox)
 
 
-_TILE_COLUMNS = ("band", "tile_y", "tile_x", "ysize", "xsize", "payload")
-
-
-def _read_row_group(f: str, rg: int, columns=_TILE_COLUMNS) -> pa.Table:
-    """One row group of a tile table, through the process's open-file cache."""
-    from ..sources.parquet import _pq_handle  # pylint: disable=C0415
-
-    return _pq_handle(f).read_row_group(rg, columns=list(columns))
-
-
 def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
-                     groups: dict, retained: list) -> None:
+                     groups: dict) -> None:
     """Manifest-mode piece collection: the worker reads its (file, row-group)
     assignments directly with pyarrow (C++ decode, zero JVM bytes)."""
     n_slots = len(payload["slot_meta"])
@@ -778,18 +534,7 @@ def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
     for f, rg in reads:
         band_slot = dict(shared_slots if shared_slots is not None
                          else file_slots[f])
-        tbl = _read_row_group(f, rg)
-        retained.append(tbl)
-        b_arr = tbl.column("band").to_numpy()
-        sy = tbl.column("tile_y").to_numpy()
-        sx = tbl.column("tile_x").to_numpy()
-        sh = tbl.column("ysize").to_numpy()
-        sw = tbl.column("xsize").to_numpy()
-        pay = tbl.column("payload")
-        if pay.num_chunks != 1:
-            pay = pay.combine_chunks()
-            retained.append(pay)
-        chunk = pay.chunk(0) if hasattr(pay, "chunk") else pay
+        b_arr, sy, sx, sh, sw, bufs = pq_raster._decoded_row_group(f, rg)
         for j in range(len(b_arr)):
             slot = band_slot.get(int(b_arr[j]))
             if slot is None:
@@ -802,25 +547,22 @@ def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
             if acc is None:
                 acc = groups[(ty, tx)] = [[] for _ in range(n_slots)]
             acc[slot].append(
-                (int(sy[j]) * s, int(sx[j]) * s, int(sh[j]), int(sw[j]),
-                 memoryview(chunk[j].as_buffer()))
+                (int(sy[j]) * s, int(sx[j]) * s, int(sh[j]), int(sw[j]), bufs[j])
             )
 
 
 def _tile_results(bc, batch_iter: Iterator[pa.RecordBatch]):
     """Generator core of every kernel: yields (ty, tx, h, w, result) per tile.
 
-    Rows arrive co-located per tile (one partition holds all of a tile's
-    rows, with no partition-local sort — big rows sort terribly); the kernel
-    groups them into tiles with a per-partition dict.  Arrow-native: piece
-    payloads are sliced zero-copy from the Arrow buffers, which stay alive
-    via the retained batch references until the partition is evaluated.
+    Manifest plan: the task's row groups are decoded and grouped into tiles
+    with a per-partition dict (a tile's slots all arrive in one task), and
+    the payloads are sliced zero-copy from the decoded Arrow buffers.  Tile
+    grid: one ``(ty, tx)`` row per tile, and the kernel reads any parquet
+    leaf itself (``read_region``).
     """
-    from ..sources import parquet as pq_raster  # pylint: disable=C0415
-
-    # Task-scoped ranged-read cache: kernel-side mosaic fetches of this
-    # task's contiguous tile run reuse decoded row groups (nothing survives
-    # the task — see parquet.push_read_scope).
+    # Task-scoped ranged-read cache: kernel-side leaf and mosaic reads of
+    # this task's contiguous tile run reuse decoded row groups (nothing
+    # survives the task — see parquet.push_read_scope).
     pq_raster.push_read_scope()
     try:
         yield from _tile_results_scoped(bc.value, batch_iter)
@@ -832,22 +574,20 @@ def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
     ty_size, tx_size = payload["ty_size"], payload["tx_size"]
     window = payload["window"]
     slot_meta = payload["slot_meta"]
-    n_slots = len(slot_meta)
     tree = payload["tree"]
     man = payload.get("manifest")
     halo_map = payload.get("halo_pieces", {})
 
-    def evaluate(ty: int, tx: int, pieces_by_slot):
-        if man is not None:
-            # The manifest plan reads every slot of a stored tile in one
-            # task; a partial tile means that property broke.
-            filled = [bool(p) for p in pieces_by_slot]
-            if any(filled) and not all(filled):
-                raise RuntimeError(
-                    f"manifest tile ({ty},{tx}) received only "
-                    f"{sum(filled)}/{len(filled)} band slots — stored tile "
-                    "split across scan tasks (row-group/tile alignment broken)"
-                )
+    def evaluate(ty: int, tx: int, pieces_by_slot: list):
+        # The manifest plan reads every slot of a stored tile in one task;
+        # a partial tile means that property broke.
+        filled = [bool(p) for p in pieces_by_slot]
+        if any(filled) and not all(filled):
+            raise RuntimeError(
+                f"manifest tile ({ty},{tx}) received only "
+                f"{sum(filled)}/{len(filled)} band slots — stored tile "
+                "split across scan tasks (row-group/tile alignment broken)"
+            )
         for h_slot, py0, px0, sh, sw, buf in halo_map.get((ty, tx), ()):
             pieces_by_slot[h_slot].append((py0, px0, sh, sw, buf))
         y0, x0 = ty * ty_size, tx * tx_size
@@ -858,53 +598,28 @@ def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
             projection=payload["projection"],
             shared_hashes=payload["shared_hashes"],
         )
-        for slot in range(n_slots):
-            assembled, origin = _assemble_slot(
-                slot_meta[slot], pieces_by_slot[slot], y0, x0, h, w
-            )
-            ctx.slots[slot] = assembled
-            ctx.slot_origins[slot] = origin
+        # Slots are filled by the manifest plan only: on the tile grid
+        # ``ctx.slots`` stays empty and ``eval_tree`` reads each leaf.
+        for slot, pieces in enumerate(pieces_by_slot):
+            ctx.slots[slot], ctx.slot_origins[slot] = _assemble_slot(
+                slot_meta[slot], pieces, y0, x0, h, w)
         result = K.eval_tree(tree, ctx, x0, y0, w, h)
         result = np.asarray(result)
         if result.shape != (h, w):
             result = np.broadcast_to(result, (h, w))
         return ty, tx, h, w, result
 
+    if man is None:
+        for batch in batch_iter:
+            for ty, tx in zip(batch.column("ty").to_pylist(),
+                              batch.column("tx").to_pylist()):
+                yield evaluate(ty, tx, [])
+        return
     groups: dict[tuple, list[list]] = {}
-    retained = []  # keeps Arrow buffers alive until evaluation
     for batch in batch_iter:
-        retained.append(batch)
-        if man is not None:
-            _manifest_pieces(batch, man, payload, groups, retained)
-            continue
-        ty_col = batch.column(batch.schema.get_field_index("ty")).to_numpy()
-        tx_col = batch.column(batch.schema.get_field_index("tx")).to_numpy()
-        if n_slots:
-            col = batch.column(batch.schema.get_field_index("piece"))
-            nulls = col.is_null().to_numpy(zero_copy_only=False)
-            slot_a = col.field("slot").to_numpy(zero_copy_only=False)
-            py0_a = col.field("py0").to_numpy(zero_copy_only=False)
-            px0_a = col.field("px0").to_numpy(zero_copy_only=False)
-            sh_a = col.field("sh").to_numpy(zero_copy_only=False)
-            sw_a = col.field("sw").to_numpy(zero_copy_only=False)
-            p_arr = col.field("p")
-        for i in range(batch.num_rows):
-            key = (int(ty_col[i]), int(tx_col[i]))
-            slots_acc = groups.get(key)
-            if slots_acc is None:
-                slots_acc = [[] for _ in range(n_slots)]
-                groups[key] = slots_acc
-            if n_slots and not nulls[i]:
-                slots_acc[int(slot_a[i])].append(
-                    (
-                        int(py0_a[i]), int(px0_a[i]),
-                        int(sh_a[i]), int(sw_a[i]),
-                        memoryview(p_arr[i].as_buffer()),
-                    )
-                )
+        _manifest_pieces(batch, man, payload, groups)
     for (ty, tx), slots_acc in groups.items():
         yield evaluate(ty, tx, slots_acc)
-
 
 
 def tiles_dataframe(tree, spark: SparkSession | None = None,
@@ -1220,12 +935,18 @@ def aggregate(tree, stat: str, spark: SparkSession | None = None) -> float:
         return float(partials.agg(F.min("partial").alias("v")).collect()[0]["v"])
     if stat == "max":
         return float(partials.agg(F.max("partial").alias("v")).collect()[0]["v"])
-    # Deterministic float addition, hierarchically: fold each tile row's
-    # partials in tx order inside Spark (array_sort on (tx, partial) structs +
-    # a left fold keeps IEEE addition order fixed regardless of partitioning),
-    # then add the per-row sums in ty order on the driver.  Driver traffic is
-    # O(tile rows), not O(tiles) — at 10^8 tiles that is the difference
-    # between kilobytes and gigabytes.
+    return _ordered_sum(partials)
+
+
+def _ordered_sum(partials: DataFrame) -> float:
+    """Sum of ``(ty, tx, partial)`` rows in a fixed IEEE addition order.
+
+    Deterministic float addition, hierarchically: fold each tile row's
+    partials in tx order inside Spark (array_sort on (tx, partial) structs +
+    a left fold keeps the order fixed regardless of partitioning), then add
+    the per-row sums in ty order on the driver.  Driver traffic is O(tile
+    rows), not O(tiles) — at 10^8 tiles that is the difference between
+    kilobytes and gigabytes."""
     per_ty = (
         partials.groupBy("ty")
         .agg(
@@ -1347,40 +1068,38 @@ def read_array(tree, x: int, y: int, width: int, height: int,
 _SAVE_ZSTD_LEVEL = 1
 
 
-def save_multiband(trees: list, path: str, spark: SparkSession | None = None) -> None:
-    """Write several expressions as bands 1..N of one raster table (the
-    analog of multiband GeoTIFF output, reference ``_core.py:314-414``).
-    All bands must share projection, extent and dtype; each band's tile plan
-    is an independent Spark job unioned into one atomic write."""
-    from ..sources import parquet as pq_raster  # pylint: disable=C0415
+def _write_bands(roots: list, path: str, spark: SparkSession,
+                 sparse: bool = False) -> None:
+    """The one raster-table sink: expression ``i`` becomes band ``i + 1``
+    of the table at ``path``, then the metadata and tile manifest follow.
 
-    spark = get_spark(spark)
-    roots = [_as_root(t) for t in trees]
+    One append-mode write per band, NO shuffle: each band's tile plan emits
+    rows clustered by (tile_y, tile_x) — manifest row groups or a JVM range
+    of tile ids, in contiguous runs per task — and the band is constant per
+    file, so parquet row-group stats give readers tile pruning without a
+    payload shuffle + Tungsten sort of multi-MB rows (measured 10x the whole
+    job's cost).  Atomicity: the reader requires _raster_meta.json, which is
+    written only after every band's job commits — an interrupted save leaves
+    no readable table.  ``sparse`` drops all-zero tiles."""
     if constants.TILE_YSIZE != constants.TILE_XSIZE:
-        # Same guard as save(): write_meta records ONE tile_size, so
-        # non-square computation tiles would be read back on a wrong grid
-        # (every tile column displaced) — refuse instead.
-        raise ValueError("save_multiband requires square computation tiles")
-    windows = {r.window for r in roots}
-    if len(windows) != 1:
-        raise ValueError("All bands must share the same extent/window")
-    if len({r.datatype for r in roots}) != 1:
-        raise ValueError("All bands must share one datatype (use as_type to align)")
-    # One append-mode write per band, NO shuffle: each band's
-    # tiles_dataframe already emits rows clustered by (tile_y, tile_x) and
-    # the band is constant per file, so parquet row-group stats give
-    # readers the same pruning the old repartition+sortWithinPartitions
-    # produced — without paying a full payload shuffle + Tungsten sort of
-    # multi-MB rows (the engine's documented 10-35x pathology shape; at
-    # cluster scale the shuffle doubles the sink's I/O).  Atomicity: the
-    # reader requires _raster_meta.json, which is written only after every
-    # band's job commits — an interrupted save leaves no readable table.
+        # write_meta records ONE tile_size, so non-square computation tiles
+        # would be read back on a wrong grid (every tile column displaced).
+        raise ValueError("save requires square computation tiles")
     for i, r in enumerate(roots):
+        tiles = tiles_dataframe(r, spark)
+        if len(roots) > 1:
+            # A literal band is a non-null (``required``) parquet column; a
+            # one-band table keeps the kernel's nullable band of 1, so both
+            # write the same bytes as their former separate writers.
+            tiles = tiles.withColumn("band", F.lit(i + 1))
+        if sparse:
+            tiles = tiles.where("nonzero")
         (
-            tiles_dataframe(r, spark).withColumn("band", F.lit(i + 1))
-            .write.mode("overwrite" if i == 0 else "append")
+            tiles.write.mode("overwrite" if i == 0 else "append")
             .option("compression", "zstd")
             .option("parquet.compression.codec.zstd.level", _SAVE_ZSTD_LEVEL)
+            # bounded row groups so readers can split files finer than the
+            # writer's task count
             .option("parquet.block.size", 8 * 1024 * 1024)
             .parquet(path)
         )
@@ -1392,8 +1111,22 @@ def save_multiband(trees: list, path: str, spark: SparkSession | None = None) ->
         None,
         constants.TILE_YSIZE,
         bands=len(roots),
+        dense=not sparse,
     )
     pq_raster.write_tile_manifest(path)
+
+
+def save_multiband(trees: list, path: str, spark: SparkSession | None = None) -> None:
+    """Write several expressions as bands 1..N of one raster table (the
+    analog of multiband GeoTIFF output, reference ``_core.py:314-414``).
+    All bands must share projection, extent and dtype; each band's tile plan
+    is an independent Spark job unioned into one atomic write."""
+    roots = [_as_root(t) for t in trees]
+    if len({r.window for r in roots}) != 1:
+        raise ValueError("All bands must share the same extent/window")
+    if len({r.datatype for r in roots}) != 1:
+        raise ValueError("All bands must share one datatype (use as_type to align)")
+    _write_bands(roots, path, get_spark(spark))
 
 
 def save(tree, path: str, and_sum: bool = False, sparse: bool = False,
@@ -1403,80 +1136,32 @@ def save(tree, path: str, and_sum: bool = False, sparse: bool = False,
 
     ``sparse=True`` drops all-zero tiles (the GeoTIFF SPARSE_OK analog);
     readers treat missing tiles as zeros."""
-    from ..sources import parquet as pq_raster  # pylint: disable=C0415
-
     spark = get_spark(spark)
     root = _as_root(tree)
-    if constants.TILE_YSIZE != constants.TILE_XSIZE:
-        raise ValueError("save requires square computation tiles")
-    result = tiles_dataframe(root, spark)
-    if sparse:
-        result = result.where("nonzero")
-    # No repartition/sort before write: tiles_dataframe emits rows already
-    # clustered by (tile_y, tile_x) (scan splits follow the sorted source),
-    # so parquet row-group min/max stats give readers tile pruning without
-    # paying a full payload shuffle (measured 10x the whole job's cost).
-    (
-        result.write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", _SAVE_ZSTD_LEVEL)
-        # bounded row groups so readers can split files finer than the
-        # writer's task count
-        .option("parquet.block.size", 8 * 1024 * 1024)
-        .parquet(path)
-    )
-    os.makedirs(path, exist_ok=True)
-    pq_raster.write_meta(
-        path,
-        root.operation_area(root.projection),
-        root.datatype,
-        None,
-        constants.TILE_YSIZE,
-        dense=not sparse,
-    )
-    pq_raster.write_tile_manifest(path)
-    total = None
-    if and_sum:
-        # Distributed partial sums over the freshly written table (re-reading
-        # the compressed output beats persist(): caching wide binary rows in
-        # local mode measured erratically 10-20x slower).  Same hierarchical
-        # deterministic fold as ``aggregate(sum)``: per-ty partials combined
-        # in tx order inside Spark, per-ty sums added in ty order on the
-        # driver — driver traffic is O(tile rows), not O(tiles), so the
-        # flagship sink no longer collects one row per tile (at 10^8 tiles
-        # the old flat collect was a multi-GB driver transfer).
-        dt = root.datatype.to_numpy()
+    _write_bands([root], path, spark, sparse=sparse)
+    if not and_sum:
+        return None
+    # Distributed partial sums over the freshly written table (re-reading
+    # the compressed output beats persist(): caching wide binary rows in
+    # local mode measured erratically 10-20x slower), combined by the same
+    # ordered fold as ``aggregate(sum)``.
+    dt = root.datatype.to_numpy()
 
-        @task_entry
-        def _partials(batches):
-            for batch in batches:
-                tys = batch.column("tile_y").to_numpy()
-                txs = batch.column("tile_x").to_numpy()
-                sums = [
-                    float(np.sum(np.frombuffer(buf.as_py(), dtype=dt), dtype=np.float64))
-                    for buf in batch.column("payload")
-                ]
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(tys, pa.int32()), pa.array(txs, pa.int32()),
-                     pa.array(sums, pa.float64())],
-                    schema=_PA_PARTIAL,
-                )
-
-        per_ty = (
-            spark.read.parquet(path)
-            .select("tile_y", "tile_x", "payload")
-            .mapInArrow(_partials, PARTIAL_SCHEMA)
-            .groupBy("ty")
-            .agg(
-                F.aggregate(
-                    F.array_sort(F.collect_list(F.struct("tx", "partial"))),
-                    F.lit(0.0),
-                    lambda acc, s: acc + s["partial"],
-                ).alias("partial")
+    @task_entry
+    def _partials(batches):
+        for batch in batches:
+            tys = batch.column("tile_y").to_numpy()
+            txs = batch.column("tile_x").to_numpy()
+            sums = [
+                float(np.sum(np.frombuffer(buf.as_py(), dtype=dt), dtype=np.float64))
+                for buf in batch.column("payload")
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(tys, pa.int32()), pa.array(txs, pa.int32()),
+                 pa.array(sums, pa.float64())],
+                schema=_PA_PARTIAL,
             )
-            .collect()
-        )
-        total = 0.0
-        for r in sorted(per_ty, key=lambda r: r["ty"]):
-            total += r["partial"]
-    return total
+
+    return _ordered_sum(spark.read.parquet(path)
+                        .select("tile_y", "tile_x", "payload")
+                        .mapInArrow(_partials, PARTIAL_SCHEMA))

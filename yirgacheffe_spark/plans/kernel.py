@@ -140,8 +140,8 @@ def eval_tree(node, ctx: EvalContext, x: int, y: int, width: int, height: int) -
             else:
                 result = fn(lhs, **node.kwargs)
     else:
-        # A source layer.  Pre-assembled slot data (parquet leaves routed
-        # through the re-tiling join) takes priority; otherwise read directly.
+        # A source layer.  Pre-assembled slot data (parquet leaves fed by
+        # the manifest plan) takes priority; otherwise read directly.
         slot = getattr(node, "_slot_index", None)
         if slot is not None and slot in ctx.slots:
             assembled = ctx.slots[slot]

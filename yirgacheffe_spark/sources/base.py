@@ -150,7 +150,7 @@ class Layer(LayerMathMixin):
 
     def region_pixel_origin(self, target_area: Area) -> tuple[int, int]:
         """Integer pixel coordinates of ``target_area``'s origin on this
-        layer's grid — the translation the parquet re-tiling join uses."""
+        layer's grid — the translation the manifest plan's slots use."""
         assert self.projection is not None
         target_offset = target_area._grid_offset
         if target_offset is not None:

@@ -14,10 +14,15 @@ Binary payloads (rather than ``array<double>``) keep all eleven dtypes —
 including the unsigned ones Spark lacks — byte-exact, and avoid per-element
 list overhead in both parquet and Arrow.
 
-At execution time a parquet layer is *not* read via this class: the planner
-turns it into a DataFrame scan + re-tiling join (see ``plans/executor.py``),
-so Catalyst performs the pruning and the shuffle.  The ``read_window`` here
-is the driver-side/direct path used by tests, mosaics and small reads.
+At execution time the engine reads a parquet layer in one of two ways (see
+``plans/executor.py``): the manifest plan lists the table's pruned (file,
+row group) pairs on the driver and its workers decode them into tile slots;
+any other tree runs over a tile grid whose kernel reads the layer through
+``read_window`` in-process.  Both ask this module which row groups hold a
+tile range (``_pruned_row_groups``: the save-time manifest first, parquet
+footers otherwise) and decode them with ``_decoded_row_group``.
+``read_window`` is also the driver-side read of tests, mosaics and the
+``evaluate_window`` oracle.
 """
 
 from __future__ import annotations
@@ -36,30 +41,9 @@ from .base import Layer, pad_to_window, stable_hash
 
 META_FILENAME = "_raster_meta.json"
 
-# Per-process dataset handle cache: kernels read mosaic children tile by
-# tile, and rebuilding a pyarrow dataset (a directory listing against object
-# storage) per tile read is a scale-killer.  Keyed by path + directory mtime
-# so a rewritten raster is picked up.
-_DATASET_CACHE: dict[tuple[str, int], Any] = {}
-
-
-def _dataset_for(path: str):
-    import pyarrow.dataset as ds  # pylint: disable=C0415
-
-    key = (path, os.stat(path).st_mtime_ns)
-    found = _DATASET_CACHE.get(key)
-    if found is None:
-        # Default ignore_prefixes ('.', '_') skips _raster_meta.json.
-        found = ds.dataset(path, format="parquet")
-        while len(_DATASET_CACHE) >= 64:  # bound live handles (FIFO evict)
-            _DATASET_CACHE.pop(next(iter(_DATASET_CACHE)))
-        _DATASET_CACHE[key] = found
-    return found
-
-
-# TASK-scoped decoded-row-group cache for kernel-side ranged reads (mosaic
-# children): a per-tile ``dataset.to_table(filter)`` decodes every matching
-# row group (~16 tiles) to use 1-2 of them — up to 16x decode amplification
+# TASK-scoped decoded-row-group cache for kernel-side ranged reads (tile-grid
+# leaves, mosaic children): a row group holds ~16 tiles and a tile read
+# uses 1-2 of them, so decoding per read would amplify decode up to 16x
 # over a task's contiguous tile run.  The executor pushes a scope around
 # each task's tile loop and pops it when the task ends, so consecutive
 # tiles reuse the decoded groups while NOTHING persists across tasks or
@@ -190,22 +174,25 @@ def row_group_tile_stats(file_path: str) -> list:
     return out
 
 
-_TILE_MANIFEST_CACHE: dict[tuple[str, int], dict] = {}
+_TILE_MANIFEST_CACHE: dict[tuple[str, int], tuple[dict, list]] = {}
 
 
-def read_tile_manifest(path: str) -> dict | None:
-    """The saved manifest as {file -> [(rg, (ty_min, ty_max), (tx_min,
-    tx_max)), ...]}, or None when the table predates manifests.  Cached per
-    (dir, manifest mtime_ns)."""
+def _manifest_entry(path: str) -> tuple[dict, list] | None:
+    """The saved manifest of the table at ``path`` as ({file -> [(rg,
+    ty_minmax, tx_minmax, band_minmax), ...]}, the same rows flattened to
+    ``(file path, rg, ...)``), or None when the table predates manifests.
+    Cached per (dir, manifest mtime_ns), so a repeated lookup costs one
+    stat."""
     mf = os.path.join(path, MANIFEST_JSON)
-    if not os.path.exists(mf):
+    try:
+        key = (path, os.stat(mf).st_mtime_ns)
+    except FileNotFoundError:
         return None
-    key = (path, os.stat(mf).st_mtime_ns)
     got = _TILE_MANIFEST_CACHE.get(key)
     if got is None:
         with open(mf, encoding="utf-8") as fp:
             doc = json.load(fp)
-        got = {
+        by_file = {
             name: [
                 # v1 rows have 3 fields (no band stats); pad with None.
                 (r[0],
@@ -216,10 +203,85 @@ def read_tile_manifest(path: str) -> dict | None:
             ]
             for name, rows in doc.get("entries", {}).items()
         }
+        flat = [(os.path.join(path, name), *row)
+                for name in sorted(by_file) for row in by_file[name]]
         while len(_TILE_MANIFEST_CACHE) >= 64:
             _TILE_MANIFEST_CACHE.pop(next(iter(_TILE_MANIFEST_CACHE)))
-        _TILE_MANIFEST_CACHE[key] = got
+        got = _TILE_MANIFEST_CACHE[key] = (by_file, flat)
     return got
+
+
+def read_tile_manifest(path: str) -> dict | None:
+    """The saved manifest as {file -> [(rg, (ty_min, ty_max), (tx_min,
+    tx_max), (band_min, band_max)), ...]}, or None when the table predates
+    manifests."""
+    entry = _manifest_entry(path)
+    return None if entry is None else entry[0]
+
+
+# Footer statistics cache for tables without a manifest: repeated reads of
+# the same raster must not re-read every parquet footer.  Keyed by (file,
+# mtime_ns), so an overwrite that reuses a file name is re-read.
+_FOOTER_CACHE: dict[tuple[str, int], list] = {}
+
+
+def _footer_stats(path: str) -> list:
+    """``row_group_tile_stats`` of one part file, cached per (file,
+    mtime_ns) and FIFO-bounded for long-lived sessions."""
+    key = (path, os.stat(path).st_mtime_ns)
+    got = _FOOTER_CACHE.get(key)
+    if got is None:
+        while len(_FOOTER_CACHE) >= 4096:
+            _FOOTER_CACHE.pop(next(iter(_FOOTER_CACHE)))
+        got = _FOOTER_CACHE[key] = row_group_tile_stats(path)
+    return got
+
+
+def _pruned_row_groups(path: str, band_lo: int, band_hi: int,
+                       stored_range: tuple[int, int, int, int]) -> list:
+    """(file, rg, ty_minmax, tx_minmax) of every row group of the table at
+    ``path`` whose statistics may hold a tile of bands [band_lo, band_hi]
+    inside the stored-tile range (sy_lo, sy_hi, sx_lo, sx_hi).  The
+    statistics come from the save-time manifest when the table has one (one
+    cached lookup), else from each part file's footer."""
+    entry = _manifest_entry(path)
+    if entry is not None:
+        rows = entry[1]
+    else:
+        rows = [(f, *row)
+                for f in (os.path.join(path, n) for n in sorted(os.listdir(path))
+                          if n.endswith(".parquet"))
+                for row in _footer_stats(f)]
+    sy_lo, sy_hi, sx_lo, sx_hi = stored_range
+    out = []
+    for f, rg, ymm, xmm, bmm in rows:
+        # Band pruning: non-interleaved multiband tables are band-pure per
+        # file, so a single-band read drops the other bands' row groups
+        # instead of decoding their payloads only to discard every row.
+        if bmm is not None and (bmm[1] < band_lo or bmm[0] > band_hi):
+            continue
+        if ymm is not None and (ymm[1] < sy_lo or ymm[0] > sy_hi):
+            continue
+        if xmm is not None and (xmm[1] < sx_lo or xmm[0] > sx_hi):
+            continue
+        out.append((f, rg, ymm, xmm))
+    return out
+
+
+_TILE_COLUMNS = ("band", "tile_y", "tile_x", "ysize", "xsize")
+
+
+def _decoded_row_group(f: str, rg: int) -> tuple:
+    """One row group of a tile table through the process's open-file cache:
+    its ``band, tile_y, tile_x, ysize, xsize`` columns as numpy arrays and
+    one zero-copy payload buffer per row."""
+    tbl = _pq_handle(f).read_row_group(rg, columns=[*_TILE_COLUMNS, "payload"])
+    pay = tbl.column("payload")
+    if pay.num_chunks != 1:
+        pay = pay.combine_chunks()
+    chunk = pay.chunk(0) if hasattr(pay, "chunk") else pay
+    return (*(tbl.column(c).to_numpy() for c in _TILE_COLUMNS),
+            [memoryview(chunk[i].as_buffer()) for i in range(len(chunk))])
 
 
 class ParquetRasterLayer(Layer):
@@ -272,70 +334,11 @@ class ParquetRasterLayer(Layer):
             return np.where(data == self._nodata, float("nan"), data)
         return data
 
-    def _ranged_rows_scoped(self, ty_lo: int, ty_hi: int, tx_lo: int, tx_hi: int):
-        """Row-group-cached form of the ranged fetch, active only inside a
-        task read scope (see ``push_read_scope``).  Returns (tys, txs, hs,
-        ws, payloads) for rows in range, or None when no scope is active or
-        the table carries no manifest (then the dataset filter path runs).
-        Decoded groups are kept per task so a contiguous tile run stops
-        re-decoding the same ~16-tile group per tile."""
-        if not _READ_SCOPE:
-            return None
-        manifest = read_tile_manifest(self.path)
-        if manifest is None:
-            return None
-        cache = _READ_SCOPE[-1]
-        tys, txs, hs, ws, payloads = [], [], [], [], []
-        for fname, rgs in manifest.items():
-            fpath = os.path.join(self.path, fname)
-            for rg, ymm, xmm, bmm in rgs:
-                if ymm is not None and (ymm[1] < ty_lo or ymm[0] > ty_hi):
-                    continue
-                if xmm is not None and (xmm[1] < tx_lo or xmm[0] > tx_hi):
-                    continue
-                if bmm is not None and (bmm[1] < self.band or bmm[0] > self.band):
-                    continue
-                key = (fpath, rg)
-                entry = cache.get(key)
-                if entry is None:
-                    tbl = _pq_handle(fpath).read_row_group(
-                        rg, columns=["band", "tile_y", "tile_x",
-                                     "ysize", "xsize", "payload"]
-                    )
-                    pay = tbl.column("payload")
-                    if pay.num_chunks != 1:
-                        pay = pay.combine_chunks()
-                    chunk = pay.chunk(0) if hasattr(pay, "chunk") else pay
-                    entry = (
-                        tbl.column("band").to_numpy(),
-                        tbl.column("tile_y").to_numpy(),
-                        tbl.column("tile_x").to_numpy(),
-                        tbl.column("ysize").to_numpy(),
-                        tbl.column("xsize").to_numpy(),
-                        [memoryview(chunk[i].as_buffer())
-                         for i in range(len(chunk))],
-                    )
-                    while len(cache) >= _READ_SCOPE_MAX_RGS:
-                        cache.pop(next(iter(cache)))
-                    cache[key] = entry
-                b_a, ty_a, tx_a, h_a, w_a, bufs = entry
-                sel = np.nonzero(
-                    (b_a == self.band)
-                    & (ty_a >= ty_lo) & (ty_a <= ty_hi)
-                    & (tx_a >= tx_lo) & (tx_a <= tx_hi)
-                )[0]
-                for i in sel:
-                    tys.append(int(ty_a[i]))
-                    txs.append(int(tx_a[i]))
-                    hs.append(int(h_a[i]))
-                    ws.append(int(w_a[i]))
-                    payloads.append(bufs[i])
-        return tys, txs, hs, ws, payloads
-
     def read_window(self, xoff: int, yoff: int, xsize: int, ysize: int, window: Window) -> Any:
-        """Direct pyarrow read of the requested region (tests / mosaics)."""
-        import pyarrow.dataset as ds  # pylint: disable=C0415
-
+        """Direct pyarrow read of the requested region: the row groups whose
+        tile ranges it touches (``_pruned_row_groups``), decoded once per
+        task read scope — consecutive tiles of a task reuse them — or once
+        per call outside a scope."""
         if xsize <= 0 or ysize <= 0:
             raise ValueError("Request dimensions must be positive and non-zero")
         requested = Window(window.xoff + xoff, window.yoff + yoff, xsize, ysize)
@@ -348,38 +351,36 @@ class ParquetRasterLayer(Layer):
         s = self.tile_size
         ty_lo, ty_hi = overlap.yoff // s, (overlap.ymax - 1) // s
         tx_lo, tx_hi = overlap.xoff // s, (overlap.xmax - 1) // s
-        cached = self._ranged_rows_scoped(ty_lo, ty_hi, tx_lo, tx_hi)
-        if cached is not None:
-            tys, txs, hs, ws, payloads = cached
-        else:
-            dataset = _dataset_for(self.path)
-            table = dataset.to_table(
-                filter=(
-                    (ds.field("band") == self.band)
-                    & (ds.field("tile_y") >= ty_lo) & (ds.field("tile_y") <= ty_hi)
-                    & (ds.field("tile_x") >= tx_lo) & (ds.field("tile_x") <= tx_hi)
-                )
-            )
-            tys = table.column("tile_y").to_numpy()
-            txs = table.column("tile_x").to_numpy()
-            hs = table.column("ysize").to_numpy()
-            ws = table.column("xsize").to_numpy()
-            payloads = table.column("payload").to_pylist()
+        cache = _READ_SCOPE[-1] if _READ_SCOPE else {}
         out = np.zeros((overlap.ysize, overlap.xsize), dtype=np_dtype)
-        for ty, tx, h, w, payload in zip(tys, txs, hs, ws, payloads):
-            tile = np.frombuffer(payload, dtype=np_dtype).reshape(h, w)
-            y0, x0 = int(ty) * s, int(tx) * s
-            src_y0 = max(overlap.yoff - y0, 0)
-            src_x0 = max(overlap.xoff - x0, 0)
-            src_y1 = min(overlap.ymax - y0, h)
-            src_x1 = min(overlap.xmax - x0, w)
-            if src_y0 >= src_y1 or src_x0 >= src_x1:
-                continue
-            dst_y0 = y0 + src_y0 - overlap.yoff
-            dst_x0 = x0 + src_x0 - overlap.xoff
-            out[dst_y0 : dst_y0 + (src_y1 - src_y0), dst_x0 : dst_x0 + (src_x1 - src_x0)] = tile[
-                src_y0:src_y1, src_x0:src_x1
-            ]
+        for f, rg, _ymm, _xmm in _pruned_row_groups(
+                self.path, self.band, self.band, (ty_lo, ty_hi, tx_lo, tx_hi)):
+            entry = cache.get((f, rg))
+            if entry is None:
+                entry = _decoded_row_group(f, rg)
+                while len(cache) >= _READ_SCOPE_MAX_RGS:
+                    cache.pop(next(iter(cache)))
+                cache[(f, rg)] = entry
+            b_a, ty_a, tx_a, h_a, w_a, bufs = entry
+            sel = np.nonzero(
+                (b_a == self.band)
+                & (ty_a >= ty_lo) & (ty_a <= ty_hi)
+                & (tx_a >= tx_lo) & (tx_a <= tx_hi)
+            )[0]
+            for i in sel:
+                h, w = int(h_a[i]), int(w_a[i])
+                tile = np.frombuffer(bufs[i], dtype=np_dtype).reshape(h, w)
+                y0, x0 = int(ty_a[i]) * s, int(tx_a[i]) * s
+                src_y0 = max(overlap.yoff - y0, 0)
+                src_x0 = max(overlap.xoff - x0, 0)
+                src_y1 = min(overlap.ymax - y0, h)
+                src_x1 = min(overlap.xmax - x0, w)
+                if src_y0 >= src_y1 or src_x0 >= src_x1:
+                    continue
+                dst_y0 = y0 + src_y0 - overlap.yoff
+                dst_x0 = x0 + src_x0 - overlap.xoff
+                out[dst_y0 : dst_y0 + (src_y1 - src_y0),
+                    dst_x0 : dst_x0 + (src_x1 - src_x0)] = tile[src_y0:src_y1, src_x0:src_x1]
         if overlap != requested:
             out = pad_to_window(out, overlap, requested)
         return self.apply_nodata(out)
