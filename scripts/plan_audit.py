@@ -27,6 +27,9 @@ Checks (each FAILS the script if violated):
 13. A manifest raster plan scans a JVM Range of group ids: no parallelized
    Python RDD (``Scan ExistingRDD``) under its kernel, so each task runs
    one Python worker.
+14. Raster actions on one manifest table stay within their job budget,
+   counted by job group: ``read_array`` 0 (it runs in the driver), ``sum``
+   1 (one Arrow collect of the tile partials) and ``unique`` at most 2.
 
 Run: python scripts/plan_audit.py [sf_dir]
 """
@@ -285,6 +288,39 @@ def main() -> int:
         check("manifest raster plan scans a JVM Range (no Scan ExistingRDD)", ok,
               next((l for l in plan.splitlines() if "Range" in l or "ExistingRDD" in l),
                    "(no Range line)"))
+
+    # 14. raster action job budget on one manifest table: read_array runs
+    # in the driver, sum folds one Arrow collect of its tile partials, and
+    # unique collects its Spark-combined values through one limit.
+    sc = spark.sparkContext
+
+    def jobs_of(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    with tempfile.TemporaryDirectory(prefix="plan_audit_") as tmp:
+        proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
+        s = constants.TILE_YSIZE
+        # 24 tiles in two row groups: a one-partition scan would let a
+        # Spark-side fold of the partials share the kernel's job.
+        table = yg.write_array_as_raster_table(
+            os.path.join(tmp, "t"),
+            (np.arange(6 * s * 4 * s) % 7).astype(np.int16).reshape(6 * s, 4 * s),
+            yg.Area(0.0, 0.0, 4 * s * 0.01, -6 * s * 0.01, proj), tile_size=s)
+        assert "manifest" in X._build(X._as_root(table), spark)[2]  # noqa: SLF001
+        jobs = {
+            "read_array": jobs_of("audit-read-array", lambda: table.read_array(0, 0, s, s)),
+            "sum": jobs_of("audit-sum", lambda: table.sum(spark=spark)),
+            "unique": jobs_of("audit-unique", lambda: table.unique(spark=spark)),
+        }
+        ok = jobs["read_array"] == 0 and jobs["sum"] == 1 and jobs["unique"] <= 2
+        check("raster action job budget: read_array 0, sum 1, unique <= 2", ok,
+              ", ".join(f"{k} {v}" for k, v in jobs.items()))
 
     print("\nPLAN AUDIT:", "all checks passed" if not failures else f"FAILURES: {failures}")
     return 1 if failures else 0

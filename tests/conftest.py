@@ -30,6 +30,32 @@ def small_tiles(monkeypatch):
 
 
 @pytest.fixture
+def distributed(spark):
+    """``distributed(expr)``: the whole computation assembled from the
+    distributed tile plan (``tiles_dataframe(...).toArrow()``), i.e. the
+    manifest plan with its halo strips whenever ``_build`` picks it.
+    ``to_numpy`` evaluates in the driver, so a test that pins a Spark
+    plan's pixels compares this, not ``to_numpy``, with its oracle."""
+    from yirgacheffe_spark.plans import executor
+
+    def assemble(expr) -> np.ndarray:
+        root = executor._as_root(expr)
+        win = root.window
+        full = np.zeros((win.ysize, win.xsize), dtype=root.datatype.to_numpy())
+        table = executor.tiles_dataframe(root, spark).toArrow()
+        ys, xs = C.TILE_YSIZE, C.TILE_XSIZE
+        for i in range(table.num_rows):
+            ty, tx, th, tw = (table.column(c)[i].as_py()
+                              for c in ("tile_y", "tile_x", "ysize", "xsize"))
+            tile = np.frombuffer(table.column("payload")[i].as_buffer(),
+                                 dtype=full.dtype).reshape(th, tw)
+            full[ty * ys:ty * ys + th, tx * xs:tx * xs + tw] = tile
+        return full
+
+    return assemble
+
+
+@pytest.fixture
 def wgs84_02():
     from yirgacheffe_spark import MapProjection
 

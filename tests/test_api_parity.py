@@ -64,7 +64,7 @@ def test_reference_aliases():
     assert yg.H3CellLayer is yg.CellLayer
 
 
-def test_sparse_save_roundtrip(spark, tmp_path):
+def test_sparse_save_roundtrip(spark, tmp_path, distributed):
     import yirgacheffe_spark.constants as C
 
     data = np.zeros((12, 12))
@@ -80,12 +80,13 @@ def test_sparse_save_roundtrip(spark, tmp_path):
     np.testing.assert_array_equal(back.read_array(0, 0, 12, 12), data)
     # Expressions where f(0) != 0 must still cover the holes (the missing
     # tiles get zero-filled manifest rows).
+    np.testing.assert_array_equal(distributed(back + 5), data + 5)
     got = (back + 5).to_numpy(spark=spark)
     np.testing.assert_array_equal(got, data + 5)
     assert (back + 5).sum(spark=spark) == data.sum() + 5 * 144
 
 
-def test_sparse_plus_dense_two_leaf(spark, tmp_path):
+def test_sparse_plus_dense_two_leaf(spark, tmp_path, distributed):
     # Mixed coverage strategies in one plan: the sparse leaf's holes need the
     # key anti-join, the dense leaf uses closed-form coverage; both must
     # zero-fill identically.
@@ -99,12 +100,13 @@ def test_sparse_plus_dense_two_leaf(spark, tmp_path):
     dn_path = str(tmp_path / "dn")
     dn.save(dn_path, spark=spark)
     expr = yg.read_raster(sp_path) + yg.read_raster(dn_path) * 2
+    np.testing.assert_array_equal(distributed(expr), z + d * 2)
     got = expr.to_numpy(spark=spark)
     np.testing.assert_array_equal(got, z + d * 2)
     assert expr.sum(spark=spark) == (z + d * 2).sum()
 
 
-def test_interleaved_multiband_single_scan(spark, tmp_path):
+def test_interleaved_multiband_single_scan(spark, tmp_path, distributed):
     from yirgacheffe_spark.sources.parquet import write_multiband_interleaved
     from yirgacheffe_spark.plans.kernel import evaluate_window
 
@@ -119,6 +121,7 @@ def test_interleaved_multiband_single_scan(spark, tmp_path):
     expr = layers[1].isin(list(range(0, 25))) * (layers[2] >= 10) * layers[3]
     got = expr.to_numpy(spark=spark)
     np.testing.assert_array_equal(got, evaluate_window(expr))
+    np.testing.assert_array_equal(distributed(expr), got)
     want = np.isin(a, list(range(0, 25))) * (b >= 10) * c
     np.testing.assert_array_equal(got, want)
     assert expr.sum(spark=spark) == float(want.sum())
@@ -130,12 +133,13 @@ def test_interleaved_multiband_single_scan(spark, tmp_path):
     # cut from row groups that also hold the other bands' tiles.
     conv = layers[2].conv2d(np.ones((3, 3), dtype=np.float32))
     local = evaluate_window(conv)
+    np.testing.assert_array_equal(distributed(conv), local)
     np.testing.assert_array_equal(conv.to_numpy(spark=spark), local)
     assert conv.sum(spark=spark) == float(local.sum(dtype=np.float64))
 
 
 @pytest.mark.parametrize("stencil", [False, True])
-def test_sparse_single_band_takes_manifest_plan(spark, tmp_path, stencil):
+def test_sparse_single_band_takes_manifest_plan(spark, tmp_path, stencil, distributed):
     """A sparse table read alone takes the manifest plan: tile presence comes
     from the pruned row groups' key columns and every absent tile of the
     box gets a zero-filled manifest row — so f(0) != 0 still covers the
@@ -157,6 +161,7 @@ def test_sparse_single_band_takes_manifest_plan(spark, tmp_path, stencil):
     _spark, _root, payload, _bc, _df = executor._build(expr, spark)
     assert "manifest" in payload
     local = evaluate_window(expr)
+    np.testing.assert_array_equal(distributed(expr), local)
     np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
     assert expr.sum(spark=spark) == float(local.sum(dtype=np.float64))
 

@@ -23,7 +23,8 @@ def _proj(step=0.02):
 
 
 class TestMultiRingHalo:
-    def test_conv2d_pad_exceeding_tile_size_on_aligned_leaf(self, spark, tmp_path):
+    def test_conv2d_pad_exceeding_tile_size_on_aligned_leaf(self, spark, tmp_path,
+                                                            distributed):
         """Stencil pad (5) > computation tile size (4): the aligned
         body+halo path must reach ring-2 neighbours; the old 1-ring
         exchange silently zeroed the outer halo rows."""
@@ -36,12 +37,17 @@ class TestMultiRingHalo:
         layer = yg.read_raster(path)
         k = np.ones((11, 11), dtype=np.float32)  # pad 5 > tile 4
         expr = layer.conv2d(k)
-        got = expr.to_numpy(spark=spark)
+        from yirgacheffe_spark.plans import executor
+
+        assert "manifest" in executor._build(expr, spark)[2]
         want = kernel.evaluate_window(expr)
+        # The manifest plan's halo strips reach the ring-2 neighbours.
+        np.testing.assert_allclose(distributed(expr), want, rtol=1e-6, equal_nan=True)
+        got = expr.to_numpy(spark=spark)
         np.testing.assert_allclose(got, want, rtol=1e-6, equal_nan=True)
 
     def test_conv2d_pad_exceeding_tile_repartition_fallback(self, spark, tmp_path,
-                                                            monkeypatch):
+                                                            monkeypatch, distributed):
         """Same case through the non-broadcast halo path (the tile grid)."""
         from yirgacheffe_spark.plans import executor
 
@@ -56,8 +62,9 @@ class TestMultiRingHalo:
         expr = layer.conv2d(np.ones((11, 11), dtype=np.float32))
         plan = expr.to_dataframe(spark=spark)._jdf.queryExecution().executedPlan().toString()
         assert "Range" in plan and "Exchange" not in plan  # the tile grid
-        got = expr.to_numpy(spark=spark)
         want = kernel.evaluate_window(expr)
+        np.testing.assert_allclose(distributed(expr), want, rtol=1e-6, equal_nan=True)
+        got = expr.to_numpy(spark=spark)
         np.testing.assert_allclose(got, want, rtol=1e-6, equal_nan=True)
 
 

@@ -190,7 +190,8 @@ def _assert_tile_grid(expr, spark) -> None:
     assert "manifest" not in executor._build(expr, spark)[2]
 
 
-def test_conv2d_halo_fallback_matches_broadcast(spark, tmp_path, monkeypatch):
+def test_conv2d_halo_fallback_matches_broadcast(spark, tmp_path, monkeypatch,
+                                                distributed):
     """Above the halo broadcast budget the stencil takes the tile grid —
     each task reads its tiles' halo-grown windows itself — with
     bit-identical results to the broadcast halo exchange (the 100-TB-safe
@@ -210,20 +211,22 @@ def test_conv2d_halo_fallback_matches_broadcast(spark, tmp_path, monkeypatch):
     kernel = np.ones((3, 3), dtype=np.float32)
     expr = layer.conv2d(kernel)
 
-    broadcast_out = expr.to_numpy(spark=spark)
+    broadcast_out = distributed(expr)
     broadcast_sum = expr.sum(spark=spark)
+    np.testing.assert_array_equal(expr.to_numpy(spark=spark), broadcast_out)
 
     assert "Exchange hashpartitioning" not in _executed_plan(expr, spark)
 
     monkeypatch.setattr(executor, "_HALO_BROADCAST_MAX", 0)  # force the fallback
     _assert_tile_grid(expr, spark)
-    fallback_out = expr.to_numpy(spark=spark)
+    fallback_out = distributed(expr)
     fallback_sum = expr.sum(spark=spark)
     np.testing.assert_array_equal(fallback_out, broadcast_out)
     assert fallback_sum == broadcast_sum
 
 
-def test_conv2d_over_widened_window_sees_neighbour_data(spark, tmp_path, monkeypatch):
+def test_conv2d_over_widened_window_sees_neighbour_data(spark, tmp_path, monkeypatch,
+                                                        distributed):
     """A stencil window widened beyond stored coverage must still read real
     neighbour pixels at the coverage edge: tiles just outside the data get
     a row (unpadded-coverage missing grid) and their neighbours' halo
@@ -246,13 +249,15 @@ def test_conv2d_over_widened_window_sees_neighbour_data(spark, tmp_path, monkeyp
     local = kernel.evaluate_window(expr)
     assert local[8].sum() > 0  # the border outside coverage is nonzero
 
+    np.testing.assert_array_equal(distributed(expr), local)
     np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
     monkeypatch.setattr(executor, "_HALO_BROADCAST_MAX", 0)
     _assert_tile_grid(expr, spark)
-    np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
+    np.testing.assert_array_equal(distributed(expr), local)
 
 
-def test_conv2d_manifest_halo_path_matches_jvm(spark, tmp_path, monkeypatch):
+def test_conv2d_manifest_halo_path_matches_jvm(spark, tmp_path, monkeypatch,
+                                               distributed):
     """When storage tiles coincide with computation tiles, a stencil query
     takes the manifest body (pyarrow-direct decode) with halo strips
     collected once and shipped inside the payload broadcast.  Results must
@@ -280,6 +285,7 @@ def test_conv2d_manifest_halo_path_matches_jvm(spark, tmp_path, monkeypatch):
     assert executor._manifest_rows(spark, payload, box) is not None
 
     local = kernel.evaluate_window(expr)
+    np.testing.assert_array_equal(distributed(expr), local)
     np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
     assert expr.sum(spark=spark) == float(local.sum(dtype=np.float64))
 
@@ -287,12 +293,17 @@ def test_conv2d_manifest_halo_path_matches_jvm(spark, tmp_path, monkeypatch):
     # real neighbour pixels through the broadcast halo map too.
     wide = layer.as_area(yg.Area(0.0, 0.0, 0.32, -0.28, proj))
     wexpr = wide.conv2d(np.ones((3, 3), np.float32))
+    wpayload = executor._plan_payload(executor._as_root(wexpr))
+    wbox = (0, wpayload["tiles_y"] - 1, 0, wpayload["tiles_x"] - 1)
+    assert executor._manifest_rows(spark, wpayload, wbox) is not None
     wlocal = kernel.evaluate_window(wexpr)
     assert wlocal[20].sum() > 0
+    np.testing.assert_array_equal(distributed(wexpr), wlocal)
     np.testing.assert_array_equal(wexpr.to_numpy(spark=spark), wlocal)
+    assert wexpr.sum(spark=spark) == float(wlocal.sum(dtype=np.float64))
 
 
-def test_multi_table_planar_manifest_matches(spark, tmp_path, monkeypatch):
+def test_multi_table_planar_manifest_matches(spark, tmp_path, monkeypatch, distributed):
     """Per-band tables on one grid take the co-partitioned multi-table
     manifest scan (zero shuffles, slot completeness verified) and match
     the local oracle bit-for-bit."""
@@ -318,6 +329,7 @@ def test_multi_table_planar_manifest_matches(spark, tmp_path, monkeypatch):
     assert executor._manifest_rows(spark, payload, box) is not None
 
     local = kernel.evaluate_window(expr)
+    np.testing.assert_array_equal(distributed(expr), local)
     np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
     assert expr.sum(spark=spark) == float(local.sum(dtype=np.float64))
 
@@ -329,8 +341,9 @@ def test_multi_table_planar_manifest_matches(spark, tmp_path, monkeypatch):
     spayload = executor._plan_payload(executor._as_root(sexpr))
     sbox = (0, spayload["tiles_y"] - 1, 0, spayload["tiles_x"] - 1)
     assert executor._manifest_rows(spark, spayload, sbox) is not None
-    np.testing.assert_array_equal(
-        sexpr.to_numpy(spark=spark), kernel.evaluate_window(sexpr))
+    slocal = kernel.evaluate_window(sexpr)
+    np.testing.assert_array_equal(distributed(sexpr), slocal)
+    np.testing.assert_array_equal(sexpr.to_numpy(spark=spark), slocal)
 
     # Tables whose stored grids differ (different heights) must NOT be
     # stitched by the multi-table manifest — the tile grid takes over.
@@ -341,11 +354,12 @@ def test_multi_table_planar_manifest_matches(spark, tmp_path, monkeypatch):
     payload2 = executor._plan_payload(executor._as_root(expr2))
     box2 = (0, payload2["tiles_y"] - 1, 0, payload2["tiles_x"] - 1)
     assert executor._manifest_rows(spark, payload2, box2) is None
-    np.testing.assert_array_equal(
-        expr2.to_numpy(spark=spark), kernel.evaluate_window(expr2))
+    local2 = kernel.evaluate_window(expr2)
+    np.testing.assert_array_equal(distributed(expr2), local2)
+    np.testing.assert_array_equal(expr2.to_numpy(spark=spark), local2)
 
 
-def test_manifest_plan_scans_a_jvm_range(spark, tmp_path):
+def test_manifest_plan_scans_a_jvm_range(spark, tmp_path, distributed):
     """The manifest plan feeds its kernel from a JVM ``Range`` over group
     ids, not a parallelized Python RDD (``Scan ExistingRDD``), so each task
     runs one Python worker: a single table, the planar three-table aoh
@@ -375,11 +389,12 @@ def test_manifest_plan_scans_a_jvm_range(spark, tmp_path):
         assert "manifest" in payload
         plan = _executed_plan(expr, spark)
         assert "Range" in plan and "ExistingRDD" not in plan, plan
-        np.testing.assert_array_equal(expr.to_numpy(spark=spark),
-                                      kernel.evaluate_window(expr))
+        local = kernel.evaluate_window(expr)
+        np.testing.assert_array_equal(distributed(expr), local)
+        np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
 
 
-def test_planar_manifest_more_groups_than_partitions(spark, tmp_path):
+def test_planar_manifest_more_groups_than_partitions(spark, tmp_path, distributed):
     """Planar tables with more row-group groups than range partitions, in a
     window widened past the data: each range id carries one whole group, so
     every band of a tile meets in one task (the kernel's slot check would
@@ -408,5 +423,6 @@ def test_planar_manifest_more_groups_than_partitions(spark, tmp_path):
     assert man["missing"]
 
     local = kernel.evaluate_window(expr)
+    np.testing.assert_array_equal(distributed(expr), local)
     np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
     assert expr.sum(spark=spark) == float(local.sum(dtype=np.float64))

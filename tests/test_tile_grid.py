@@ -101,7 +101,7 @@ CASES = {
 
 
 @pytest.mark.parametrize("case", sorted(CASES))
-def test_tile_grid_matches_local_oracle(spark, tmp_path, case):
+def test_tile_grid_matches_local_oracle(spark, tmp_path, case, distributed):
     make = CASES[case]
     expr = make(tmp_path, spark) if case == "sparse_next_to_dense" else make(tmp_path)
     root = executor._as_root(expr)
@@ -110,6 +110,7 @@ def test_tile_grid_matches_local_oracle(spark, tmp_path, case):
     assert "Range" in plan and "Exchange" not in plan
 
     local = np.asarray(kernel.evaluate_window(expr))
+    np.testing.assert_array_equal(distributed(expr), local)
     np.testing.assert_array_equal(np.asarray(expr.to_numpy(spark=spark)), local)
     assert expr.sum(spark=spark) == float(local.sum(dtype=np.float64))
     # A window straddling the lower-right edge reads zeros outside.

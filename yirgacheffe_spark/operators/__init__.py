@@ -481,7 +481,8 @@ class LayerMathMixin:
         when ``path`` is given) as a grayscale PNG written with the
         pure-stdlib encoder — this environment has no plotting stack, and a
         min-max-stretched PNG is what the reference's ``show`` amounts to
-        for single-band data."""
+        for single-band data.  The whole window is read with
+        ``read_array``, in the driver, one tile at a time."""
         root = LayerOperation(self) if not isinstance(self, LayerOperation) else self
         window = root.window
         data = root.read_array(0, 0, window.xsize, window.ysize, spark=spark)
@@ -737,6 +738,10 @@ class LayerOperation(LayerMathMixin):
         return executor.read_array(self, x, y, width, height, spark=spark)
 
     def to_numpy(self, spark=None) -> np.ndarray:
+        """The whole computation window as numpy: ``read_array`` over the
+        window, so every tile is evaluated in the driver process, one after
+        another, with no Spark job (use ``save`` to compute a large raster
+        on the cluster)."""
         w = self.window
         return self.read_array(0, 0, w.xsize, w.ysize, spark=spark)
 

@@ -23,9 +23,18 @@ Physical shape of every computation:
      oracle does.
 2. **Execute (cluster)** — one ``mapInArrow`` kernel per stage evaluates the
    *whole* numpy expression tree per tile (operator fusion, per-tile CSE),
-   emitting either result tiles (save / read_array) or per-tile aggregate
-   partials (sum/min/max/unique), which Spark combines — the classic
-   partial/final two-stage aggregation.
+   emitting either result tiles (save) or per-tile aggregate partials.
+   sum/min/max are one Spark job (a stencil adds one for its halo
+   strips): they collect their ``(ty, tx, partial)`` rows with one Arrow
+   collect and fold them on the driver in a fixed order.  unique combines
+   its per-tile value counts by key in Spark and collects at most
+   ``max_values + 1`` of them through one limit (at most two jobs: the
+   combine's shuffle stage and the collect).
+   ``read_array`` submits no job: it runs the same kernel over the
+   window's tiles of the tile grid in the calling process, one tile after
+   another, because its output is driver-resident anyway.  ``to_numpy``
+   and ``show`` read the whole window this way, so on a large raster they
+   use one driver core, not the cluster.
 
 Implementation notes for throughput:
 
@@ -44,7 +53,10 @@ Implementation notes for throughput:
 
 Scale notes: tiles are the unit of parallelism and shuffle keys are tile
 coordinates, so plans scale by adding executors; neither raster plan
-shuffles a payload, and aggregations move eight bytes per tile.
+shuffles a payload.  sum/min/max bring one 16-byte ``(ty, tx, partial)``
+row per tile to the driver, so their driver memory grows with the number
+of tiles (see ``_ordered_sum`` for the bound).  unique brings at most
+``max_values + 1`` combined rows.
 """
 
 from __future__ import annotations
@@ -438,8 +450,9 @@ def _base_grid(spark: SparkSession, tile_box: tuple[int, int, int, int]) -> Data
     )
 
 
-def _build(tree, spark: SparkSession | None, sub_window: Window | None = None):
-    """Choose the plan that feeds the kernel and broadcast its payload.
+def _build(tree, spark: SparkSession | None):
+    """Choose the plan that feeds the kernel over every tile of the
+    computation window, and broadcast its payload.
 
     * **Manifest plan** (``_manifest_rows``) whenever every leaf lies on
       the computation grid: one table (dense or sparse), distinct bands of
@@ -459,18 +472,7 @@ def _build(tree, spark: SparkSession | None, sub_window: Window | None = None):
     spark = get_spark(spark)
     root = _as_root(tree)
     payload = _plan_payload(root)
-
-    if sub_window is None:
-        tile_box = (0, payload["tiles_y"] - 1, 0, payload["tiles_x"] - 1)
-    else:
-        ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-        tile_box = (
-            max(sub_window.yoff // ty_size, 0),
-            min((sub_window.ymax - 1) // ty_size, payload["tiles_y"] - 1),
-            max(sub_window.xoff // tx_size, 0),
-            min((sub_window.xmax - 1) // tx_size, payload["tiles_x"] - 1),
-        )
-
+    tile_box = (0, payload["tiles_y"] - 1, 0, payload["tiles_x"] - 1)
     metas = payload["slot_meta"]
     manifest = _manifest_rows(spark, payload, tile_box) if metas else None
     if manifest is None:
@@ -551,21 +553,21 @@ def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
             )
 
 
-def _tile_results(bc, batch_iter: Iterator[pa.RecordBatch]):
+def _tile_results(payload, batch_iter: Iterator[pa.RecordBatch]):
     """Generator core of every kernel: yields (ty, tx, h, w, result) per tile.
 
     Manifest plan: the task's row groups are decoded and grouped into tiles
     with a per-partition dict (a tile's slots all arrive in one task), and
     the payloads are sliced zero-copy from the decoded Arrow buffers.  Tile
     grid: one ``(ty, tx)`` row per tile, and the kernel reads any parquet
-    leaf itself (``read_region``).
+    leaf itself (``read_region``).  Kernels pass their broadcast payload;
+    ``read_array`` runs it in the calling process.
     """
-    # Task-scoped ranged-read cache: kernel-side leaf and mosaic reads of
-    # this task's contiguous tile run reuse decoded row groups (nothing
-    # survives the task — see parquet.push_read_scope).
+    # Read scope: leaf and mosaic reads of this run of tiles reuse decoded
+    # row groups (nothing survives the run — see parquet.push_read_scope).
     pq_raster.push_read_scope()
     try:
-        yield from _tile_results_scoped(bc.value, batch_iter)
+        yield from _tile_results_scoped(payload, batch_iter)
     finally:
         pq_raster.pop_read_scope()
 
@@ -622,10 +624,10 @@ def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
         yield evaluate(ty, tx, slots_acc)
 
 
-def tiles_dataframe(tree, spark: SparkSession | None = None,
-                    sub_window: Window | None = None) -> DataFrame:
-    """The computation as a DataFrame of result tiles (the save/read plan)."""
-    spark, root, payload, bc, df = _build(tree, spark, sub_window)
+def tiles_dataframe(tree, spark: SparkSession | None = None) -> DataFrame:
+    """The computation as a DataFrame of result tiles, one row per tile of
+    the computation window (the save plan)."""
+    spark, root, payload, bc, df = _build(tree, spark)
     out_dtype = payload["out_dtype"]
 
     @task_entry
@@ -650,7 +652,7 @@ def tiles_dataframe(tree, spark: SparkSession | None = None,
             )
 
         rows = []
-        for row in _tile_results(bc, batches):
+        for row in _tile_results(bc.value, batches):
             rows.append(row)
             if len(rows) >= 32:
                 yield emit(rows)
@@ -851,7 +853,7 @@ def zonal_stats(tree, polygons, spark: SparkSession | None = None,
         ty_size, tx_size = pl["ty_size"], pl["tx_size"]
         xstep, ystep = proj.xstep, proj.ystep
         out_rows = []
-        for ty, tx, h, w, result in _tile_results(bc, batches):
+        for ty, tx, h, w, result in _tile_results(bc.value, batches):
             left = area.left + (tx * tx_size) * xstep
             top = area.top + (ty * ty_size) * ystep
             right = left + w * xstep
@@ -909,7 +911,7 @@ def aggregate(tree, stat: str, spark: SparkSession | None = None) -> float:
         # bounded by maxPartitionBytes / shuffle sizing, the same contract
         # applyInPandas assumes.
         tys, txs, parts = [], [], []
-        for ty, tx, _h, _w, result in _tile_results(bc, batches):
+        for ty, tx, _h, _w, result in _tile_results(bc.value, batches):
             if stat == "sum":
                 # dtype=float64 accumulates identically to astype(float64)
                 # (same pairwise tree, exact per-element widening) without
@@ -930,37 +932,56 @@ def aggregate(tree, stat: str, spark: SparkSession | None = None) -> float:
                 schema=_PA_PARTIAL,
             )
 
-    partials = df.mapInArrow(compute, schema=PARTIAL_SCHEMA)
+    ty, tx, part = _collect_partials(df.mapInArrow(compute, schema=PARTIAL_SCHEMA))
+    n_y, n_x = payload["tiles_y"], payload["tiles_x"]
+    # One partial per tile of the window, or the scan lost (or doubled) a
+    # stored tile — e.g. a tile manifest that no longer lists a row group
+    # would otherwise read as zeros.
+    if not np.array_equal(ty.astype(np.int64) * n_x + tx, np.arange(n_y * n_x)):
+        raise RuntimeError(
+            f"{stat}() collected {len(part)} tile partials for the "
+            f"{n_y * n_x} tiles of the computation window: the scan lost or "
+            "repeated a stored tile (is the tile manifest stale?)")
     if stat == "min":
-        return float(partials.agg(F.min("partial").alias("v")).collect()[0]["v"])
+        # Spark's ordering, which the distributed combine used: NaN sorts
+        # above every number, so min skips NaN unless all are NaN...
+        nums = part[~np.isnan(part)]
+        return float(nums.min()) if nums.size else float("nan")
     if stat == "max":
-        return float(partials.agg(F.max("partial").alias("v")).collect()[0]["v"])
-    return _ordered_sum(partials)
+        # ...and max is NaN as soon as one partial is.
+        return float(part.max())
+    return _ordered_sum(ty, part)
 
 
-def _ordered_sum(partials: DataFrame) -> float:
-    """Sum of ``(ty, tx, partial)`` rows in a fixed IEEE addition order.
+def _collect_partials(partials: DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The ``(ty, tx, partial)`` rows of a kernel as numpy columns, sorted
+    by (ty, tx): one Arrow collect, so the action is one Spark job."""
+    table = partials.toArrow()
+    ty, tx, part = (table.column(c).to_numpy() for c in ("ty", "tx", "partial"))
+    order = np.lexsort((tx, ty))
+    return ty[order], tx[order], part[order]
 
-    Deterministic float addition, hierarchically: fold each tile row's
-    partials in tx order inside Spark (array_sort on (tx, partial) structs +
-    a left fold keeps the order fixed regardless of partitioning), then add
-    the per-row sums in ty order on the driver.  Driver traffic is O(tile
-    rows), not O(tiles) — at 10^8 tiles that is the difference between
-    kilobytes and gigabytes."""
-    per_ty = (
-        partials.groupBy("ty")
-        .agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("tx", "partial"))),
-                F.lit(0.0),
-                lambda acc, s: acc + s["partial"],
-            ).alias("partial")
-        )
-        .collect()
-    )
+
+def _ordered_sum(ty: np.ndarray, part: np.ndarray) -> float:
+    """Sum of the partials of ``(ty, tx, partial)`` rows sorted by (ty, tx)
+    (``_collect_partials``) in a fixed IEEE addition order: per tile row, a
+    left fold in ascending ``tx`` (``np.cumsum`` adds sequentially); then a
+    left fold from 0.0 over the row sums in ascending ``ty``.  The order
+    depends on tile coordinates only, so the sum is bit-stable under any
+    partitioning.
+
+    The fold runs on the driver over one collect of the partials.  The
+    trade: folding each tile row inside Spark first (a ``groupBy`` on
+    ``ty``) brought one value per tile row to the driver, but cost a second
+    Spark job on every sum; here driver memory grows with the number of
+    tiles instead, about 60 bytes per tile at peak (the Arrow collect, its
+    numpy columns and the sorted copies).  That is accepted up to about
+    10^7 tiles (~0.6 GB; 2.6e12 pixels at 512-pixel tiles), beyond which
+    the per-row fold would have to move back into Spark."""
     total = 0.0
-    for r in sorted(per_ty, key=lambda r: r["ty"]):
-        total += r["partial"]
+    starts = np.flatnonzero(np.diff(ty, prepend=ty[:1] - 1))
+    for a, b in zip(starts.tolist(), starts[1:].tolist() + [len(ty)]):
+        total += float(np.cumsum(part[a:b])[-1])
     return total
 
 
@@ -974,10 +995,13 @@ def unique(tree, return_counts: bool = False, spark: SparkSession | None = None,
 
     The final distinct set is collected to the driver (reference parity:
     ``unique`` returns numpy arrays).  On continuous float data distinct ~=
-    pixels, so the combined frame is cached post-shuffle and COUNTED before
-    collecting; beyond ``max_values`` the call raises instead of silently
+    pixels, so the combined frame is collected through ``limit(max_values
+    + 1)`` in one Arrow collect: the driver never holds more than that many
+    rows, and when all of them arrive the call raises instead of silently
     OOM-ing the driver (use a classed/quantised expression, or raise the
-    bound explicitly)."""
+    bound explicitly).  The combine stays in Spark for that bound: folding
+    per-tile partials on the driver measured no faster and holds every
+    tile's distinct values at once."""
     spark, root, payload, bc, df = _build(tree, spark)
 
     @task_entry
@@ -985,7 +1009,7 @@ def unique(tree, return_counts: bool = False, spark: SparkSession | None = None,
         # Whole-partition pass: tiles may straddle Arrow batch boundaries
         # (see aggregate.compute).  Partials here are tiny (distinct values).
         vals_out, nan_out, cnt_out = [], [], []
-        for _ty, _tx, _h, _w, result in _tile_results(bc, batches):
+        for _ty, _tx, _h, _w, result in _tile_results(bc.value, batches):
             values, counts = np.unique(np.asarray(result), return_counts=True)
             values = values.astype(np.float64)
             nan_mask = np.isnan(values)
@@ -1006,26 +1030,27 @@ def unique(tree, return_counts: bool = False, spark: SparkSession | None = None,
         df.mapInArrow(compute, schema=UNIQUE_SCHEMA)
         .groupBy("value", "is_nan")
         .agg(F.sum("count").alias("count"))
-        .persist()
     )
-    try:
-        n_distinct = grouped.count()
-        if n_distinct > max_values:
-            raise ValueError(
-                f"unique() would collect {n_distinct} distinct values "
-                f"(> max_values={max_values}) to the driver; quantise the "
-                "expression (e.g. .round()/astype) or pass a larger max_values"
-            )
-        combined = grouped.collect()
-    finally:
-        grouped.unpersist()
-    pairs = sorted(
-        ((float("nan") if r["is_nan"] else r["value"], r["count"]) for r in combined),
-        key=lambda kv: (math.isnan(kv[0]), kv[0]),
-    )
-    values = np.array([v for v, _ in pairs])
+    # One action: the limit keeps the driver bound without a count first.
+    table = grouped.limit(max_values + 1).toArrow()
+    if table.num_rows > max_values:
+        raise ValueError(
+            f"unique() would collect more than max_values={max_values} "
+            "distinct values to the driver; quantise the expression (e.g. "
+            ".round()/astype) or pass a larger max_values"
+        )
+    value, is_nan, count = (table.column(c).to_numpy()
+                            for c in ("value", "is_nan", "count"))
+    n_px = payload["window"].xsize * payload["window"].ysize
+    if int(count.sum()) != n_px:  # a lost stored tile, as in ``aggregate``
+        raise RuntimeError(
+            f"unique() counted {int(count.sum())} of the {n_px} pixels of the "
+            "computation window: the scan lost or repeated a stored tile (is "
+            "the tile manifest stale?)")
+    order = np.lexsort((value, is_nan))  # ascending, NaN last
+    values = np.where(is_nan, np.nan, value)[order]
     if return_counts:
-        return values, np.array([c for _, c in pairs], dtype=np.int64)
+        return values, count[order]
     return values
 
 
@@ -1033,31 +1058,39 @@ def read_array(tree, x: int, y: int, width: int, height: int,
                spark: SparkSession | None = None) -> np.ndarray:
     """Materialise a window of the computation as numpy on the driver.
 
-    Regions outside the computation window read as zeros.  Only the tiles
-    overlapping the request are computed (tile-range pruning)."""
+    Regions outside the computation window read as zeros.  The window's
+    tiles are evaluated in the calling process, one after another, with no
+    Spark job: the kernel of the tile grid runs over exactly the tiles
+    overlapping the request and reads each leaf of a tile itself (stencils
+    read their halo-grown leaf windows), inside one read scope so
+    neighbouring tiles share decoded row groups.  The output is
+    driver-resident anyway, and the work is what the window covers: a
+    window of a few tiles costs milliseconds, while a whole-raster read
+    (``to_numpy``, ``show``) runs every tile on one driver core.  ``spark``
+    is accepted for API parity and not used."""
+    del spark
     root = _as_root(tree)
     request = Window(x, y, width, height)
     window = root.window
     full = Window(0, 0, window.xsize, window.ysize)
     overlap = Window.intersection_or_none([request, full])
-    out_dtype = root.datatype.to_numpy()
-    out = np.zeros((height, width), dtype=out_dtype)
+    out = np.zeros((height, width), dtype=root.datatype.to_numpy())
     if overlap is None:
         return out
-    # One Arrow transfer: a row collect() pickles every tile payload.
-    table = tiles_dataframe(root, spark, sub_window=overlap).select(
-        "tile_y", "tile_x", "ysize", "xsize", "payload").toArrow()
-    ty_size, tx_size = constants.TILE_YSIZE, constants.TILE_XSIZE
-    payloads = table.column("payload")
-    keys = zip(*(table.column(c).to_pylist() for c in ("tile_y", "tile_x", "ysize", "xsize")))
-    for i, (tile_y, tile_x, ysize, xsize) in enumerate(keys):
-        tile = np.frombuffer(payloads[i].as_buffer(), dtype=out_dtype).reshape(ysize, xsize)
-        ty0, tx0 = tile_y * ty_size, tile_x * tx_size
-        iy0, iy1 = max(ty0, overlap.yoff), min(ty0 + ysize, overlap.ymax)
-        ix0, ix1 = max(tx0, overlap.xoff), min(tx0 + xsize, overlap.xmax)
-        if iy0 >= iy1 or ix0 >= ix1:
-            continue
-        out[iy0 - y : iy1 - y, ix0 - x : ix1 - x] = tile[iy0 - ty0 : iy1 - ty0, ix0 - tx0 : ix1 - tx0]
+    payload = _plan_payload(root)
+    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
+    tys = range(overlap.yoff // ty_size, (overlap.ymax - 1) // ty_size + 1)
+    txs = range(overlap.xoff // tx_size, (overlap.xmax - 1) // tx_size + 1)
+    grid = pa.RecordBatch.from_arrays(
+        [pa.array([ty for ty in tys for _ in txs], pa.int32()),
+         pa.array([tx for _ in tys for tx in txs], pa.int32())],
+        names=["ty", "tx"])
+    for ty, tx, h, w, tile in _tile_results(payload, [grid]):
+        ty0, tx0 = ty * ty_size, tx * tx_size
+        iy0, iy1 = max(ty0, overlap.yoff), min(ty0 + h, overlap.ymax)
+        ix0, ix1 = max(tx0, overlap.xoff), min(tx0 + w, overlap.xmax)
+        out[iy0 - y : iy1 - y, ix0 - x : ix1 - x] = \
+            tile[iy0 - ty0 : iy1 - ty0, ix0 - tx0 : ix1 - tx0]
     return out
 
 
@@ -1162,6 +1195,7 @@ def save(tree, path: str, and_sum: bool = False, sparse: bool = False,
                 schema=_PA_PARTIAL,
             )
 
-    return _ordered_sum(spark.read.parquet(path)
-                        .select("tile_y", "tile_x", "payload")
-                        .mapInArrow(_partials, PARTIAL_SCHEMA))
+    ty, _tx, part = _collect_partials(
+        spark.read.parquet(path).select("tile_y", "tile_x", "payload")
+        .mapInArrow(_partials, PARTIAL_SCHEMA))
+    return _ordered_sum(ty, part)

@@ -302,11 +302,13 @@ _OPEN_FILES: dict[str, Any] = {}
 
 
 def _fileobj(path: str):
+    """The process's open handle on ``path``.  Threads share it, so block
+    reads use ``os.pread`` (no shared file position); past 64 files the
+    handles are dropped, not closed, so a thread still reading one keeps
+    it open until its last reference goes."""
     fo = _OPEN_FILES.get(path)
     if fo is None or fo.closed:
         if len(_OPEN_FILES) > 64:
-            for v in _OPEN_FILES.values():
-                v.close()
             _OPEN_FILES.clear()
         fo = _OPEN_FILES[path] = open(path, "rb")  # noqa: SIM115
     return fo
@@ -404,9 +406,8 @@ class GeoTIFFLayer(Layer):
             return np.full((h, w), fill,
                            dtype=p.dtype.newbyteorder("=")
                            if p.dtype.byteorder in ("<", ">") else p.dtype)
-        f = _fileobj(self.path)
-        f.seek(p.offsets[file_idx])
-        raw = f.read(p.counts[file_idx])
+        f = _fileobj(self.path)  # held: a dropped handle closes when freed
+        raw = os.pread(f.fileno(), p.counts[file_idx], p.offsets[file_idx])
         if p.compression in (8, 32946):
             raw = zlib.decompress(raw)
         elif p.compression == 5:

@@ -21,7 +21,7 @@ any other tree runs over a tile grid whose kernel reads the layer through
 ``read_window`` in-process.  Both ask this module which row groups hold a
 tile range (``_pruned_row_groups``: the save-time manifest first, parquet
 footers otherwise) and decode them with ``_decoded_row_group``.
-``read_window`` is also the driver-side read of tests, mosaics and the
+``read_window`` is also the driver-side read of ``read_array``, mosaics and the
 ``evaluate_window`` oracle.
 """
 
@@ -30,6 +30,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import threading
 from typing import Any
 
 import numpy as np
@@ -47,19 +48,43 @@ META_FILENAME = "_raster_meta.json"
 # over a task's contiguous tile run.  The executor pushes a scope around
 # each task's tile loop and pops it when the task ends, so consecutive
 # tiles reuse the decoded groups while NOTHING persists across tasks or
-# passes (each bench/oracle invocation still decodes from parquet).
-_READ_SCOPE: list[dict] = []
+# passes (each bench/oracle invocation still decodes from parquet).  The
+# driver's ``read_array`` opens a scope too, and user code may call it from
+# several threads, so each thread keeps its own scope stack.
+_READ_SCOPE = threading.local()
 _READ_SCOPE_MAX_RGS = 16  # ~16 x 8 MB decoded per task, bounded
 _PQ_HANDLE_CACHE: dict[tuple, Any] = {}
+# The module caches below are shared by every thread of the process.  Their
+# FIFO eviction is a check-then-act (two threads could pick the same oldest
+# key), so eviction and insert run under one lock; lookups need none.
+_CACHE_LOCK = threading.Lock()
+
+
+def _cache_put(cache: dict, key, value, limit: int):
+    """Insert ``value`` into a module cache bounded to ``limit`` entries,
+    evicting the oldest first; returns ``value``."""
+    with _CACHE_LOCK:
+        while len(cache) >= limit:
+            cache.pop(next(iter(cache)))
+        cache[key] = value
+    return value
+
+
+def _scope_stack() -> list[dict]:
+    stack = getattr(_READ_SCOPE, "stack", None)
+    if stack is None:
+        stack = _READ_SCOPE.stack = []
+    return stack
 
 
 def push_read_scope() -> None:
-    _READ_SCOPE.append({})
+    _scope_stack().append({})
 
 
 def pop_read_scope() -> None:
-    if _READ_SCOPE:
-        _READ_SCOPE.pop()
+    stack = _scope_stack()
+    if stack:
+        stack.pop()
 
 
 def _pq_handle(fpath: str):
@@ -74,9 +99,7 @@ def _pq_handle(fpath: str):
     key = (fpath, st.st_mtime_ns, st.st_size)
     pf = _PQ_HANDLE_CACHE.get(key)
     if pf is None:
-        while len(_PQ_HANDLE_CACHE) >= 64:
-            _PQ_HANDLE_CACHE.pop(next(iter(_PQ_HANDLE_CACHE)))
-        pf = _PQ_HANDLE_CACHE[key] = pq.ParquetFile(fpath)
+        pf = _cache_put(_PQ_HANDLE_CACHE, key, pq.ParquetFile(fpath), 64)
     return pf
 
 
@@ -205,9 +228,7 @@ def _manifest_entry(path: str) -> tuple[dict, list] | None:
         }
         flat = [(os.path.join(path, name), *row)
                 for name in sorted(by_file) for row in by_file[name]]
-        while len(_TILE_MANIFEST_CACHE) >= 64:
-            _TILE_MANIFEST_CACHE.pop(next(iter(_TILE_MANIFEST_CACHE)))
-        got = _TILE_MANIFEST_CACHE[key] = (by_file, flat)
+        got = _cache_put(_TILE_MANIFEST_CACHE, key, (by_file, flat), 64)
     return got
 
 
@@ -231,9 +252,7 @@ def _footer_stats(path: str) -> list:
     key = (path, os.stat(path).st_mtime_ns)
     got = _FOOTER_CACHE.get(key)
     if got is None:
-        while len(_FOOTER_CACHE) >= 4096:
-            _FOOTER_CACHE.pop(next(iter(_FOOTER_CACHE)))
-        got = _FOOTER_CACHE[key] = row_group_tile_stats(path)
+        got = _cache_put(_FOOTER_CACHE, key, row_group_tile_stats(path), 4096)
     return got
 
 
@@ -337,8 +356,9 @@ class ParquetRasterLayer(Layer):
     def read_window(self, xoff: int, yoff: int, xsize: int, ysize: int, window: Window) -> Any:
         """Direct pyarrow read of the requested region: the row groups whose
         tile ranges it touches (``_pruned_row_groups``), decoded once per
-        task read scope — consecutive tiles of a task reuse them — or once
-        per call outside a scope."""
+        read scope — consecutive tiles of a task reuse them — or once per
+        call outside a scope.  On a dense table every stored tile of the
+        region must be found, or the read raises."""
         if xsize <= 0 or ysize <= 0:
             raise ValueError("Request dimensions must be positive and non-zero")
         requested = Window(window.xoff + xoff, window.yoff + yoff, xsize, ysize)
@@ -351,8 +371,10 @@ class ParquetRasterLayer(Layer):
         s = self.tile_size
         ty_lo, ty_hi = overlap.yoff // s, (overlap.ymax - 1) // s
         tx_lo, tx_hi = overlap.xoff // s, (overlap.xmax - 1) // s
-        cache = _READ_SCOPE[-1] if _READ_SCOPE else {}
+        stack = _scope_stack()
+        cache = stack[-1] if stack else {}
         out = np.zeros((overlap.ysize, overlap.xsize), dtype=np_dtype)
+        found = np.zeros((ty_hi - ty_lo + 1, tx_hi - tx_lo + 1), dtype=bool)
         for f, rg, _ymm, _xmm in _pruned_row_groups(
                 self.path, self.band, self.band, (ty_lo, ty_hi, tx_lo, tx_hi)):
             entry = cache.get((f, rg))
@@ -370,6 +392,7 @@ class ParquetRasterLayer(Layer):
             for i in sel:
                 h, w = int(h_a[i]), int(w_a[i])
                 tile = np.frombuffer(bufs[i], dtype=np_dtype).reshape(h, w)
+                found[int(ty_a[i]) - ty_lo, int(tx_a[i]) - tx_lo] = True
                 y0, x0 = int(ty_a[i]) * s, int(tx_a[i]) * s
                 src_y0 = max(overlap.yoff - y0, 0)
                 src_x0 = max(overlap.xoff - x0, 0)
@@ -381,6 +404,14 @@ class ParquetRasterLayer(Layer):
                 dst_x0 = x0 + src_x0 - overlap.xoff
                 out[dst_y0 : dst_y0 + (src_y1 - src_y0),
                     dst_x0 : dst_x0 + (src_x1 - src_x0)] = tile[src_y0:src_y1, src_x0:src_x1]
+        if self.dense and not found.all():
+            # A dense table stores every tile, so an absent one means the
+            # row-group listing (e.g. a stale tile manifest) lost it;
+            # reading it as zeros would be silently wrong.
+            ty, tx = (int(v[0]) for v in np.nonzero(~found))
+            raise RuntimeError(
+                f"{self.path}: stored tile ({ty + ty_lo},{tx + tx_lo}) of band "
+                f"{self.band} is in no listed row group (is the tile manifest stale?)")
         if overlap != requested:
             out = pad_to_window(out, overlap, requested)
         return self.apply_nodata(out)
