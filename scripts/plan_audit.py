@@ -29,7 +29,9 @@ Checks (each FAILS the script if violated):
    one Python worker.
 14. Raster actions on one manifest table stay within their job budget,
    counted by job group: ``read_array`` 0 (it runs in the driver), ``sum``
-   1 (one Arrow collect of the tile partials) and ``unique`` at most 2.
+   1 (one Arrow collect of the tile partials), ``unique`` at most 2, and
+   ``save`` 1 with or without ``and_sum`` (its sink tasks return their
+   tiles' partials; the table is not read back).
 
 Run: python scripts/plan_audit.py [sf_dir]
 """
@@ -290,8 +292,9 @@ def main() -> int:
                    "(no Range line)"))
 
     # 14. raster action job budget on one manifest table: read_array runs
-    # in the driver, sum folds one Arrow collect of its tile partials, and
-    # unique collects its Spark-combined values through one limit.
+    # in the driver, sum folds one Arrow collect of its tile partials,
+    # unique collects its Spark-combined values through one limit, and
+    # save (with or without its sum) is its one sink job.
     sc = spark.sparkContext
 
     def jobs_of(group, action):
@@ -317,9 +320,15 @@ def main() -> int:
             "read_array": jobs_of("audit-read-array", lambda: table.read_array(0, 0, s, s)),
             "sum": jobs_of("audit-sum", lambda: table.sum(spark=spark)),
             "unique": jobs_of("audit-unique", lambda: table.unique(spark=spark)),
+            "save": jobs_of("audit-save", lambda: table.save(
+                os.path.join(tmp, "saved"), spark=spark)),
+            "save(and_sum=True)": jobs_of("audit-save-sum", lambda: table.save(
+                os.path.join(tmp, "saved"), and_sum=True, spark=spark)),
         }
-        ok = jobs["read_array"] == 0 and jobs["sum"] == 1 and jobs["unique"] <= 2
-        check("raster action job budget: read_array 0, sum 1, unique <= 2", ok,
+        ok = (jobs["read_array"] == 0 and jobs["sum"] == 1 and jobs["unique"] <= 2
+              and jobs["save"] == 1 and jobs["save(and_sum=True)"] == 1)
+        check("raster action job budget: read_array 0, sum 1, unique <= 2, "
+              "save 1, save(and_sum=True) 1", ok,
               ", ".join(f"{k} {v}" for k, v in jobs.items()))
 
     print("\nPLAN AUDIT:", "all checks passed" if not failures else f"FAILURES: {failures}")

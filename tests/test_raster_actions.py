@@ -4,9 +4,12 @@ it costs.
 * ``sum`` folds per-tile float64 partials on the driver in a documented
   order (per tile row in ascending ``tx``, then the rows in ascending
   ``ty``), bit for bit, whichever plan produced the partials.
-* ``min``/``max`` keep Spark's NaN ordering over the per-tile partials.
+* ``min``/``max`` keep Spark's NaN ordering over the pixels.
 * ``read_array`` runs in the calling process, submits no Spark job, and
   equals the distributed tile plan on every kind of leaf.
+* Row groups decoded concurrently (ahead of each tile of the tile grid, per
+  manifest task, per halo task) give the same bits as one-by-one decodes,
+  and a read scope never holds more than its bound.
 * A dense table whose tile manifest lost a row group fails loudly instead
   of reading as zeros.
 """
@@ -23,6 +26,7 @@ import pytest
 
 import yirgacheffe_spark as yg
 from yirgacheffe_spark.plans import executor
+from yirgacheffe_spark.plans.kernel import evaluate_window
 from yirgacheffe_spark.sources import geotiff as G
 from yirgacheffe_spark.sources import parquet as pqr
 
@@ -91,15 +95,21 @@ def test_sum_is_the_documented_fold_on_both_plans_and_after_save(spark, tmp_path
 
 
 def test_min_max_keep_spark_nan_ordering(spark, tmp_path):
+    """Pixel-level Spark (and DuckDB) ordering: ``min`` ignores NaN unless
+    every pixel is NaN, and ``max`` is NaN as soon as one pixel is."""
     data = np.arange(H * W, dtype=np.float64).reshape(H, W) - 100.0
     data[0, 0] = np.nan  # tile (0, 0) holds the smallest value, and a NaN
     for layer in (_table(tmp_path, "t", data), yg.from_array(data, (0.0, 0.0), PROJ)):
-        # A tile's partial is NaN once it holds a NaN: min skips NaN
-        # partials, so tile (0, 0)'s numbers drop out; max is NaN.
-        clean = data.copy()
-        clean[:T, :T] = np.nan
-        assert layer.min(spark=spark) == float(np.nanmin(clean))
+        # The NaN pixel must not hide the rest of its tile's numbers.
+        assert layer.min(spark=spark) == float(np.nanmin(data)) == -99.0
         assert np.isnan(layer.max(spark=spark))
+
+    # A nodata pixel reads as NaN: the same ordering, on an integer table.
+    ints = (np.arange(H * W).reshape(H, W) - 100).astype(np.int16)
+    nodata = yg.write_array_as_raster_table(
+        str(tmp_path / "nodata"), ints, _area(H, W), nodata=-100, tile_size=T)
+    assert nodata.min(spark=spark) == -99.0
+    assert np.isnan(nodata.max(spark=spark))
 
     nan_only = yg.from_array(np.full((H, W), np.nan), (0.0, 0.0), PROJ)
     assert np.isnan(nan_only.min(spark=spark))
@@ -188,6 +198,77 @@ def test_read_array_equals_the_distributed_tile_plan(spark, tmp_path, leaf,
         np.testing.assert_array_equal(
             expr.read_array(x, y, w, h, spark=spark), _window(full, x, y, w, h),
             err_msg=f"{leaf} window {(x, y, w, h)}")
+
+
+def _unaligned(tmp_path, spark):
+    return _table(tmp_path, "u", _ints(13), tile_size=3) * 3 - 1
+
+
+# Windows that straddle row-group boundaries of the 16-tile row groups
+# (tile rows 2 and 4 of a 7-tile-wide table at tile 4 are split).
+RG_WINDOWS = [(0, 8, W, 4), (6, 9, 10, 8), (10, 14, 9, 6), (1, 5, 24, 15)]
+
+
+@pytest.mark.parametrize("leaf", sorted({**LEAVES, "unaligned": _unaligned}))
+def test_concurrent_decode_is_exact_against_the_local_oracle(spark, tmp_path, leaf):
+    """``read_array`` (row groups decoded concurrently ahead of each tile),
+    ``sum`` and ``unique`` are bit-identical to ``evaluate_window``, which
+    decodes one row group at a time."""
+    expr = {**LEAVES, "unaligned": _unaligned}[leaf](tmp_path, spark)
+    full = np.asarray(evaluate_window(expr))
+    # read_array returns the expression's dtype; the reductions see the
+    # kernel's result as evaluated.
+    out = full.astype(executor._as_root(expr).datatype.to_numpy())
+    for x, y, w, h in WINDOWS + RG_WINDOWS:
+        np.testing.assert_array_equal(
+            expr.read_array(x, y, w, h, spark=spark), _window(out, x, y, w, h),
+            err_msg=f"{leaf} window {(x, y, w, h)}")
+    assert expr.sum(spark=spark) == _documented_fold(full)
+    np.testing.assert_array_equal(expr.unique(spark=spark),
+                                  np.unique(full.astype(np.float64)))
+
+
+def test_concurrent_decodes_of_one_file_equal_sequential_ones(tmp_path):
+    layer = _table(tmp_path, "big", _ints(14, 40, 44))
+    (f, rows), = ((os.path.join(layer.path, n), rows)
+                  for n, rows in pqr.read_tile_manifest(layer.path).items())
+    keys = [(f, row[0]) for row in rows]
+    assert len(keys) > 4
+    with ThreadPoolExecutor(3) as pool:
+        runs = [fut.result(timeout=60) for fut in
+                [pool.submit(pqr._decoded_row_groups, keys) for _ in range(3)]]
+    for got in runs:
+        assert list(got) == keys
+        for key in keys:
+            want = pqr._decoded_row_group(*key)
+            for a, b in zip(got[key][:5], want[:5]):
+                np.testing.assert_array_equal(a, b)
+            assert [bytes(v) for v in got[key][5]] == [bytes(v) for v in want[5]]
+
+
+def test_read_scope_never_exceeds_its_bound(spark, tmp_path, monkeypatch):
+    """``to_numpy`` over a table of more row groups than a read scope may
+    hold, with a stencil so each tile reads its neighbours' row groups:
+    the instrumented scope peaks at its bound, never above it."""
+    peak = [0]
+
+    class Counting(dict):
+        def __setitem__(self, key, value):
+            super().__setitem__(key, value)
+            peak[0] = max(peak[0], len(self))
+
+    class Scope(pqr._ReadScope):
+        def __init__(self):
+            super().__init__()
+            self.rgs = Counting()
+
+    monkeypatch.setattr(pqr, "_ReadScope", Scope)
+    data = _ints(15, 72, 72)
+    layer = _table(tmp_path, "big", data)
+    assert sum(map(len, pqr.read_tile_manifest(layer.path).values())) > pqr._READ_SCOPE_MAX_RGS
+    expr = layer.conv2d(np.ones((3, 3), dtype=np.float32)) + layer
+    np.testing.assert_array_equal(expr.to_numpy(spark=spark), evaluate_window(expr))
+    assert peak[0] == pqr._READ_SCOPE_MAX_RGS
 
 
 def test_read_array_submits_no_spark_job(spark, tmp_path, distributed):

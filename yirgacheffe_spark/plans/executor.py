@@ -23,7 +23,13 @@ Physical shape of every computation:
      oracle does.
 2. **Execute (cluster)** — one ``mapInArrow`` kernel per stage evaluates the
    *whole* numpy expression tree per tile (operator fusion, per-tile CSE),
-   emitting either result tiles (save) or per-tile aggregate partials.
+   emitting per-tile aggregate partials, or result tiles that ``save``'s
+   tasks write to parquet themselves (the sink, ``_write_bands``: one job
+   per band, no tile crosses to the JVM, and the driver commits the files
+   its collect returned once every band's job has succeeded).  Workers
+   decode a task's row groups concurrently, one thread per core: a manifest
+   task all of its row groups, a halo task a core's worth at a time, and
+   the tile grid the row groups of each tile that its read scope lacks.
    sum/min/max are one Spark job (a stencil adds one for its halo
    strips): they collect their ``(ty, tx, partial)`` rows with one Arrow
    collect and fold them on the driver in a fixed order.  unique combines
@@ -56,13 +62,20 @@ coordinates, so plans scale by adding executors; neither raster plan
 shuffles a payload.  sum/min/max bring one 16-byte ``(ty, tx, partial)``
 row per tile to the driver, so their driver memory grows with the number
 of tiles (see ``_ordered_sum`` for the bound).  unique brings at most
-``max_values + 1`` combined rows.
+``max_values + 1`` combined rows.  ``save`` brings one row per task (its
+file and tile count; with ``and_sum`` also its tiles' partials).  Its tasks
+write straight into the destination's ``_temporary`` directory, so like
+the readers, which open part files by path, the sink needs the table on a
+path that every executor and the driver see (a POSIX mount, not an object
+store URL).
 """
 
 from __future__ import annotations
 
 import math
 import os
+import shutil
+import uuid
 from functools import reduce
 from typing import Iterator
 
@@ -252,10 +265,13 @@ def _halo_strips_direct(spark: SparkSession, payload: dict, slot: int,
     @task_entry
     def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         out_ty, out_tx, out_struct = [], [], []
-        for batch in batches:
-            for rid in batch.column(0).to_pylist():
-                f, rg = rows[rid]
-                b_arr, sy_c, sx_c, sh_c, sw_c, bufs = pq_raster._decoded_row_group(f, rg)
+        keys = [rows[rid] for batch in batches for rid in batch.column(0).to_pylist()]
+        # One row group per core at a time, decoded concurrently: the task
+        # holds a core's worth of decoded row groups, not all of its own.
+        step = len(os.sched_getaffinity(0))
+        for k in range(0, len(keys), step):
+            for b_arr, sy_c, sx_c, sh_c, sw_c, bufs in \
+                    pq_raster._decoded_row_groups(keys[k:k + step]).values():
                 for i in range(len(b_arr)):
                     # Interleaved row groups hold every band of a tile.
                     if int(b_arr[i]) != band:
@@ -533,10 +549,12 @@ def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
         else:  # tile with no stored row: exists as zeros
             groups.setdefault(missing[gid - len(man_groups)],
                               [[] for _ in range(n_slots)])
-    for f, rg in reads:
+    # The task holds all of its row groups until its tiles are evaluated
+    # anyway, so they are decoded together, concurrently.
+    for (f, _rg), (b_arr, sy, sx, sh, sw, bufs) in \
+            pq_raster._decoded_row_groups(reads).items():
         band_slot = dict(shared_slots if shared_slots is not None
                          else file_slots[f])
-        b_arr, sy, sx, sh, sw, bufs = pq_raster._decoded_row_group(f, rg)
         for j in range(len(b_arr)):
             slot = band_slot.get(int(b_arr[j]))
             if slot is None:
@@ -615,6 +633,7 @@ def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
         for batch in batch_iter:
             for ty, tx in zip(batch.column("ty").to_pylist(),
                               batch.column("tx").to_pylist()):
+                _prefetch_tile(payload, ty, tx)
                 yield evaluate(ty, tx, [])
         return
     groups: dict[tuple, list[list]] = {}
@@ -622,6 +641,39 @@ def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
         _manifest_pieces(batch, man, payload, groups)
     for (ty, tx), slots_acc in groups.items():
         yield evaluate(ty, tx, slots_acc)
+
+
+def _prefetch_tile(payload: dict, ty: int, tx: int) -> None:
+    """Fill the read scope, before tile (ty, tx) of the tile grid is
+    evaluated, with the row groups its parquet leaves read (halo-grown by
+    each leaf's pad), decoding those not yet in the scope together
+    (``parquet.prefetch_row_groups``).  The leaves' ``read_window`` calls
+    then find them there."""
+    keys = []
+    for meta in payload["slot_meta"]:
+        rng = _stored_range(payload, meta, (ty, ty, tx, tx), meta["pad"])
+        if rng[0] <= rng[1] and rng[2] <= rng[3]:
+            keys += [(f, rg) for f, rg, _ymm, _xmm in pq_raster._pruned_row_groups(
+                meta["path"], meta["band"], meta["band"], rng)]
+    if keys:
+        pq_raster.prefetch_row_groups(keys)
+
+
+def _tile_batch(rows: list) -> pa.RecordBatch:
+    """``(band, ty, tx, h, w, nonzero, payload)`` rows as one batch of
+    result tiles (``_PA_TILE``)."""
+    return pa.RecordBatch.from_arrays(
+        [pa.array(col, f.type) for col, f in zip(zip(*rows), _PA_TILE)],
+        schema=_PA_TILE)
+
+
+def _tile_rows(tiles, out_dtype, band: int = 1):
+    """The result-tile row of each ``(ty, tx, h, w, result)`` kernel tile:
+    its payload is the result cast to ``out_dtype``, and ``nonzero`` says
+    whether any pixel of the result is."""
+    for ty, tx, h, w, result in tiles:
+        yield (band, ty, tx, h, w, bool(np.any(result)),
+               np.ascontiguousarray(result.astype(out_dtype)).tobytes())
 
 
 def tiles_dataframe(tree, spark: SparkSession | None = None) -> DataFrame:
@@ -634,31 +686,14 @@ def tiles_dataframe(tree, spark: SparkSession | None = None) -> DataFrame:
     def compute(batches):
         # Whole-partition pass (tiles may straddle Arrow batch boundaries —
         # see aggregate.compute); results stream out in bounded chunks.
-        def emit(rows):
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array([1] * len(rows), pa.int32()),
-                    pa.array([r[0] for r in rows], pa.int32()),
-                    pa.array([r[1] for r in rows], pa.int32()),
-                    pa.array([r[2] for r in rows], pa.int32()),
-                    pa.array([r[3] for r in rows], pa.int32()),
-                    pa.array([bool(np.any(r[4])) for r in rows], pa.bool_()),
-                    pa.array(
-                        [np.ascontiguousarray(r[4].astype(out_dtype)).tobytes() for r in rows],
-                        pa.binary(),
-                    ),
-                ],
-                schema=_PA_TILE,
-            )
-
         rows = []
-        for row in _tile_results(bc.value, batches):
+        for row in _tile_rows(_tile_results(bc.value, batches), out_dtype):
             rows.append(row)
             if len(rows) >= 32:
-                yield emit(rows)
+                yield _tile_batch(rows)
                 rows = []
         if rows:
-            yield emit(rows)
+            yield _tile_batch(rows)
 
     return df.mapInArrow(compute, schema=TILE_SCHEMA)
 
@@ -919,7 +954,9 @@ def aggregate(tree, stat: str, spark: SparkSession | None = None) -> float:
                 # astype's extra memory writes were the aoh scan's floor.
                 partial = float(np.sum(result, dtype=np.float64))
             elif stat == "min":
-                partial = float(np.min(result))
+                # NaN only when the whole tile is: a NaN pixel (say, a
+                # nodata one) must not hide the tile's numbers.
+                partial = float(np.fmin.reduce(result, axis=None))
             else:
                 partial = float(np.max(result))
             tys.append(ty)
@@ -943,12 +980,12 @@ def aggregate(tree, stat: str, spark: SparkSession | None = None) -> float:
             f"{n_y * n_x} tiles of the computation window: the scan lost or "
             "repeated a stored tile (is the tile manifest stale?)")
     if stat == "min":
-        # Spark's ordering, which the distributed combine used: NaN sorts
-        # above every number, so min skips NaN unless all are NaN...
+        # Spark's ordering over the pixels: NaN sorts above every number,
+        # so min skips NaN unless every pixel is NaN...
         nums = part[~np.isnan(part)]
         return float(nums.min()) if nums.size else float("nan")
     if stat == "max":
-        # ...and max is NaN as soon as one partial is.
+        # ...and max is NaN as soon as one pixel is.
         return float(part.max())
     return _ordered_sum(ty, part)
 
@@ -957,7 +994,10 @@ def _collect_partials(partials: DataFrame) -> tuple[np.ndarray, np.ndarray, np.n
     """The ``(ty, tx, partial)`` rows of a kernel as numpy columns, sorted
     by (ty, tx): one Arrow collect, so the action is one Spark job."""
     table = partials.toArrow()
-    ty, tx, part = (table.column(c).to_numpy() for c in ("ty", "tx", "partial"))
+    return _sorted_partials(*(table.column(c).to_numpy() for c in ("ty", "tx", "partial")))
+
+
+def _sorted_partials(ty: np.ndarray, tx: np.ndarray, part: np.ndarray):
     order = np.lexsort((tx, ty))
     return ty[order], tx[order], part[order]
 
@@ -1063,11 +1103,12 @@ def read_array(tree, x: int, y: int, width: int, height: int,
     Spark job: the kernel of the tile grid runs over exactly the tiles
     overlapping the request and reads each leaf of a tile itself (stencils
     read their halo-grown leaf windows), inside one read scope so
-    neighbouring tiles share decoded row groups.  The output is
-    driver-resident anyway, and the work is what the window covers: a
-    window of a few tiles costs milliseconds, while a whole-raster read
-    (``to_numpy``, ``show``) runs every tile on one driver core.  ``spark``
-    is accepted for API parity and not used."""
+    neighbouring tiles share decoded row groups; the row groups a tile
+    still lacks are decoded together, one thread per core, before it is
+    evaluated.  The output is driver-resident anyway, and the work is what
+    the window covers: a window of a few tiles costs milliseconds, while a
+    whole-raster read (``to_numpy``, ``show``) evaluates every tile on one
+    driver core.  ``spark`` is accepted for API parity and not used."""
     del spark
     root = _as_root(tree)
     request = Window(x, y, width, height)
@@ -1096,47 +1137,151 @@ def read_array(tree, x: int, y: int, width: int, height: int,
 
 # zstd level for raster-table sinks.  Level 1 measured BOTH faster (2.04s vs
 # 2.28s for a 2.3 GB write at sf1.0) and smaller (447 MB vs 540 MB) than
-# parquet-java's default level 3 on integer tile payloads — the byte-planar
-# repetition of raster data rewards the fast match finder.
+# level 3 on integer tile payloads — the byte-planar repetition of raster
+# data rewards the fast match finder.
 _SAVE_ZSTD_LEVEL = 1
+
+# One row per sink task: the staged file it wrote (null when it wrote no
+# tile) and the number of tiles its kernel produced, written or, in a sparse
+# save, dropped as all-zero; for ``save(and_sum=True)`` also the ``(ty, tx,
+# partial)`` of every tile it wrote.
+SINK_SCHEMA = "file string, tiles long"
+SINK_SUM_SCHEMA = f"{SINK_SCHEMA}, ty array<int>, tx array<int>, partial array<double>"
+_PA_SINK = pa.schema(
+    [("file", pa.string()), ("tiles", pa.int64())])
+_PA_SINK_SUM = pa.schema(
+    [*_PA_SINK, ("ty", pa.list_(pa.int32())), ("tx", pa.list_(pa.int32())),
+     ("partial", pa.list_(pa.float64()))])
+
+
+def _sink_band(root, band: int, staging: str, spark: SparkSession,
+               sparse: bool, and_sum: bool) -> tuple[pa.Table, int]:
+    """Band ``band`` of a save: one ``mapInArrow`` over the tile plan of
+    ``root`` whose every task writes its result tiles to its own parquet
+    file under ``staging`` with pyarrow, named by partition and attempt, so
+    a retried task never writes over the file of the attempt it replaces.
+    Returns the tasks' ``_PA_SINK`` rows, collected in one Arrow collect
+    (one Spark job), and the number of tiles of the computation window."""
+    spark, root, payload, bc, df = _build(root, spark)
+    out_dtype = payload["out_dtype"]
+    schema = _PA_SINK_SUM if and_sum else _PA_SINK
+
+    @task_entry
+    def sink(batches):
+        import pyarrow.parquet as pq  # pylint: disable=C0415
+        from pyspark import TaskContext  # pylint: disable=C0415
+
+        ctx = TaskContext.get()
+        name = f"part-{band:05d}-{ctx.partitionId():05d}-{ctx.attemptNumber()}.parquet"
+        writer = None
+        tiles = 0
+        rows, tys, txs, parts = [], [], [], []
+        try:
+            for row in _tile_rows(_tile_results(bc.value, batches), out_dtype, band):
+                tiles += 1
+                if sparse and not row[5]:
+                    continue
+                if writer is None:
+                    writer = pq.ParquetWriter(
+                        os.path.join(staging, name), _PA_TILE,
+                        compression="zstd", compression_level=_SAVE_ZSTD_LEVEL,
+                        use_dictionary=["band", "tile_y", "tile_x", "ysize", "xsize"],
+                        write_statistics=["band", "tile_y", "tile_x"])
+                rows.append(row)
+                if and_sum:  # the partial of the very bytes written
+                    tys.append(row[1])
+                    txs.append(row[2])
+                    parts.append(float(np.sum(np.frombuffer(row[6], dtype=out_dtype),
+                                              dtype=np.float64)))
+                if len(rows) == pq_raster.ROW_GROUP_TILES:
+                    writer.write_batch(_tile_batch(rows))
+                    rows = []
+            if rows:
+                writer.write_batch(_tile_batch(rows))
+        finally:
+            if writer is not None:
+                writer.close()
+        out = [name if writer is not None else None, tiles]
+        if and_sum:
+            out += [tys, txs, parts]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([v], f.type) for v, f in zip(out, schema)], schema=schema)
+
+    table = df.mapInArrow(sink, SINK_SUM_SCHEMA if and_sum else SINK_SCHEMA).toArrow()
+    return table, payload["tiles_y"] * payload["tiles_x"]
+
+
+def _remove_if_empty(path: str) -> None:
+    try:
+        os.rmdir(path)
+    except OSError:
+        pass
 
 
 def _write_bands(roots: list, path: str, spark: SparkSession,
-                 sparse: bool = False) -> None:
+                 sparse: bool = False, and_sum: bool = False) -> float | None:
     """The one raster-table sink: expression ``i`` becomes band ``i + 1``
-    of the table at ``path``, then the metadata and tile manifest follow.
+    of the table at ``path``; returns the pixel sum of band 1 when
+    ``and_sum``.  ``sparse`` drops all-zero tiles.
 
-    One append-mode write per band, NO shuffle: each band's tile plan emits
-    rows clustered by (tile_y, tile_x) — manifest row groups or a JVM range
-    of tile ids, in contiguous runs per task — and the band is constant per
-    file, so parquet row-group stats give readers tile pruning without a
-    payload shuffle + Tungsten sort of multi-MB rows (measured 10x the whole
-    job's cost).  Atomicity: the reader requires _raster_meta.json, which is
-    written only after every band's job commits — an interrupted save leaves
-    no readable table.  ``sparse`` drops all-zero tiles."""
+    Each band is one Spark job (``_sink_band``) and NO shuffle: its tasks
+    write their runs of tiles, clustered by (tile_y, tile_x), in row groups
+    of at most ``ROW_GROUP_TILES`` tiles, to ``path/_temporary/<job>/``.
+    The result tiles never cross to the JVM.  Once every band's job has
+    succeeded, the driver checks the tile counts (every tile of the window
+    written, or dropped as all-zero by a sparse save) and commits only the
+    files its collect returned: it moves them into ``path`` under names
+    unique to this save, removes the previous table's part files and the
+    staging directory, and writes ``_raster_meta.json``, then the tile
+    manifest, each by rename.  Until then the previous table stays whole
+    and readable; a failed job or count leaves it as it was, with no
+    staging directory.  A reader that overlaps the commit reads the old
+    table or the new one (its read scope pins one manifest) or fails on a
+    removed file.  Writer and readers assume a POSIX-visible ``path``."""
+    import pyarrow.compute as pc  # pylint: disable=C0415
+
     if constants.TILE_YSIZE != constants.TILE_XSIZE:
         # write_meta records ONE tile_size, so non-square computation tiles
         # would be read back on a wrong grid (every tile column displaced).
         raise ValueError("save requires square computation tiles")
-    for i, r in enumerate(roots):
-        tiles = tiles_dataframe(r, spark)
-        if len(roots) > 1:
-            # A literal band is a non-null (``required``) parquet column; a
-            # one-band table keeps the kernel's nullable band of 1, so both
-            # write the same bytes as their former separate writers.
-            tiles = tiles.withColumn("band", F.lit(i + 1))
-        if sparse:
-            tiles = tiles.where("nonzero")
-        (
-            tiles.write.mode("overwrite" if i == 0 else "append")
-            .option("compression", "zstd")
-            .option("parquet.compression.codec.zstd.level", _SAVE_ZSTD_LEVEL)
-            # bounded row groups so readers can split files finer than the
-            # writer's task count
-            .option("parquet.block.size", 8 * 1024 * 1024)
-            .parquet(path)
-        )
-    os.makedirs(path, exist_ok=True)
+    job = uuid.uuid4().hex
+    existed = os.path.isdir(path)
+    temporary = os.path.join(path, "_temporary")
+    staging = os.path.join(temporary, job)
+    os.makedirs(staging)
+    try:
+        sinks = [_sink_band(r, i + 1, staging, spark, sparse, and_sum)
+                 for i, r in enumerate(roots)]
+        for band, (table, n_tiles) in enumerate(sinks, 1):
+            produced = pc.sum(table.column("tiles")).as_py() or 0
+            if produced != n_tiles:
+                # E.g. a tile manifest that no longer lists a row group of
+                # a dense source: its tiles were never produced.
+                raise RuntimeError(
+                    f"save of band {band} produced {produced} of the {n_tiles} "
+                    "tiles of the computation window (written, or dropped as "
+                    "all-zero): the scan lost or repeated a stored tile (is "
+                    "the tile manifest stale?)")
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        _remove_if_empty(temporary)
+        if not existed:
+            _remove_if_empty(path)
+        raise
+
+    # Commit: the previous table's files are its part files, and Spark
+    # writer leftovers (checksums, the success marker) of older tables.
+    previous = [n for n in os.listdir(path)
+                if n.endswith((".parquet", ".crc")) or n == "_SUCCESS"]
+    for table, _n in sinks:
+        for name in table.column("file").to_pylist():
+            if name is not None:
+                final = f"{name.rsplit('-', 1)[0]}-{job}.parquet"
+                os.replace(os.path.join(staging, name), os.path.join(path, final))
+    for name in previous:
+        os.remove(os.path.join(path, name))
+    shutil.rmtree(staging)
+    _remove_if_empty(temporary)
     pq_raster.write_meta(
         path,
         roots[0].operation_area(roots[0].projection),
@@ -1147,13 +1292,21 @@ def _write_bands(roots: list, path: str, spark: SparkSession,
         dense=not sparse,
     )
     pq_raster.write_tile_manifest(path)
+    if not and_sum:
+        return None
+    # Band 1's partials, folded like ``aggregate(sum)``.
+    table = sinks[0][0]
+    ty, _tx, part = _sorted_partials(
+        *(pc.list_flatten(table.column(c)).to_numpy() for c in ("ty", "tx", "partial")))
+    return _ordered_sum(ty, part)
 
 
 def save_multiband(trees: list, path: str, spark: SparkSession | None = None) -> None:
     """Write several expressions as bands 1..N of one raster table (the
     analog of multiband GeoTIFF output, reference ``_core.py:314-414``).
     All bands must share projection, extent and dtype; each band's tile plan
-    is an independent Spark job unioned into one atomic write."""
+    is one Spark job, and the table is committed once all have succeeded
+    (see ``_write_bands``)."""
     roots = [_as_root(t) for t in trees]
     if len({r.window for r in roots}) != 1:
         raise ValueError("All bands must share the same extent/window")
@@ -1164,38 +1317,17 @@ def save_multiband(trees: list, path: str, spark: SparkSession | None = None) ->
 
 def save(tree, path: str, and_sum: bool = False, sparse: bool = False,
          spark: SparkSession | None = None):
-    """Write the computation as a parquet raster table (atomic via Spark's
-    job-commit protocol), optionally also returning the pixel sum.
+    """Write the computation as a parquet raster table, optionally also
+    returning the pixel sum; either way it is one Spark job.
+
+    The sink tasks write the table's files themselves and the driver
+    commits them once the job has succeeded (see ``_write_bands``): until
+    then a previous table at ``path`` stays readable, and a failed save
+    leaves it as it was.  With ``and_sum`` the tasks also return each
+    written tile's float64 partial, folded on the driver in the same fixed
+    order as ``aggregate(sum)``.
 
     ``sparse=True`` drops all-zero tiles (the GeoTIFF SPARSE_OK analog);
     readers treat missing tiles as zeros."""
-    spark = get_spark(spark)
-    root = _as_root(tree)
-    _write_bands([root], path, spark, sparse=sparse)
-    if not and_sum:
-        return None
-    # Distributed partial sums over the freshly written table (re-reading
-    # the compressed output beats persist(): caching wide binary rows in
-    # local mode measured erratically 10-20x slower), combined by the same
-    # ordered fold as ``aggregate(sum)``.
-    dt = root.datatype.to_numpy()
-
-    @task_entry
-    def _partials(batches):
-        for batch in batches:
-            tys = batch.column("tile_y").to_numpy()
-            txs = batch.column("tile_x").to_numpy()
-            sums = [
-                float(np.sum(np.frombuffer(buf.as_py(), dtype=dt), dtype=np.float64))
-                for buf in batch.column("payload")
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(tys, pa.int32()), pa.array(txs, pa.int32()),
-                 pa.array(sums, pa.float64())],
-                schema=_PA_PARTIAL,
-            )
-
-    ty, _tx, part = _collect_partials(
-        spark.read.parquet(path).select("tile_y", "tile_x", "payload")
-        .mapInArrow(_partials, PARTIAL_SCHEMA))
-    return _ordered_sum(ty, part)
+    return _write_bands([_as_root(tree)], path, get_spark(spark),
+                        sparse=sparse, and_sum=and_sum)

@@ -6,9 +6,12 @@ Layout (one directory per raster):
   xsize:int, payload:binary)``; ``payload`` is the row-major numpy buffer of
   that tile in the raster's dtype.  Tile ``(tile_y, tile_x)`` covers pixels
   ``[tile_y*S, tile_y*S+ysize) x [tile_x*S, tile_x*S+xsize)`` of the raster's
-  own pixel space.  Files are written sorted by ``(band, tile_y, tile_x)`` so
-  parquet row-group statistics give tile-range predicate pushdown for free.
+  own pixel space.  Files are written clustered by ``(band, tile_y, tile_x)``
+  in row groups of at most ``ROW_GROUP_TILES`` tiles, so row-group statistics
+  give tile-range pruning for free.
 * ``_raster_meta.json`` — area, projection, pitch, dtype, nodata, tile size.
+* ``_tile_manifest.json`` — every row group's tile ranges (see
+  ``write_tile_manifest``).
 
 Binary payloads (rather than ``array<double>``) keep all eleven dtypes —
 including the unsigned ones Spark lacks — byte-exact, and avoid per-element
@@ -20,9 +23,14 @@ row group) pairs on the driver and its workers decode them into tile slots;
 any other tree runs over a tile grid whose kernel reads the layer through
 ``read_window`` in-process.  Both ask this module which row groups hold a
 tile range (``_pruned_row_groups``: the save-time manifest first, parquet
-footers otherwise) and decode them with ``_decoded_row_group``.
-``read_window`` is also the driver-side read of ``read_array``, mosaics and the
-``evaluate_window`` oracle.
+footers otherwise) and decode them with ``_decoded_row_group``, or several
+at once on a thread pool with ``_decoded_row_groups`` (pyarrow releases the
+GIL while it decompresses).  ``read_window`` is also the driver-side read
+of ``read_array``, mosaics and the ``evaluate_window`` oracle.
+
+The writers (``write_array_as_raster_table`` here, ``save`` in the
+executor) and the readers share one assumption: the table is a directory on
+a POSIX-visible path.
 """
 
 from __future__ import annotations
@@ -31,6 +39,7 @@ import json
 import math
 import os
 import threading
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 import numpy as np
@@ -41,16 +50,25 @@ from .. import constants
 from .base import Layer, pad_to_window, stable_hash
 
 META_FILENAME = "_raster_meta.json"
+# Tiles per parquet row group, for every writer of the format: row groups
+# are the unit a reader decodes, so a tile read decodes at most this many
+# tiles' payloads.
+ROW_GROUP_TILES = 16
 
-# TASK-scoped decoded-row-group cache for kernel-side ranged reads (tile-grid
-# leaves, mosaic children): a row group holds ~16 tiles and a tile read
-# uses 1-2 of them, so decoding per read would amplify decode up to 16x
-# over a task's contiguous tile run.  The executor pushes a scope around
-# each task's tile loop and pops it when the task ends, so consecutive
-# tiles reuse the decoded groups while NOTHING persists across tasks or
-# passes (each bench/oracle invocation still decodes from parquet).  The
-# driver's ``read_array`` opens a scope too, and user code may call it from
-# several threads, so each thread keeps its own scope stack.
+# Read scopes: a task's (or a ``read_array`` call's) run of tile reads keeps
+# the row groups it decoded, because a row group holds ~16 tiles and a tile
+# read uses 1-2 of them: decoding per read would amplify decode up to 16x
+# over a contiguous run of tiles.  The executor pushes a scope around each
+# run and pops it when the run ends, so NOTHING persists across tasks or
+# passes (each bench/oracle invocation still decodes from parquet).  A scope
+# holds at most ``_READ_SCOPE_MAX_RGS`` decoded row groups, evicted oldest
+# first; the tile grid fills it ahead of each tile, decoding the tile's
+# missing row groups concurrently (``prefetch_row_groups``).  A scope also
+# pins the row-group listing each table was first read with, so a run of
+# reads never mixes two versions of a table that ``save`` overwrites
+# meanwhile: it sees one, or fails on a file the overwrite removed.  User
+# code may call ``read_array`` from several threads, so each thread keeps
+# its own scope stack.
 _READ_SCOPE = threading.local()
 _READ_SCOPE_MAX_RGS = 16  # ~16 x 8 MB decoded per task, bounded
 _PQ_HANDLE_CACHE: dict[tuple, Any] = {}
@@ -70,7 +88,16 @@ def _cache_put(cache: dict, key, value, limit: int):
     return value
 
 
-def _scope_stack() -> list[dict]:
+class _ReadScope:
+    """One run of reads in one thread: decoded row groups by (file, rg),
+    oldest first, and the row-group listing of each table path read."""
+
+    def __init__(self):
+        self.rgs: dict[tuple, tuple] = {}
+        self.listings: dict[str, list] = {}
+
+
+def _scope_stack() -> list[_ReadScope]:
     stack = getattr(_READ_SCOPE, "stack", None)
     if stack is None:
         stack = _READ_SCOPE.stack = []
@@ -78,7 +105,7 @@ def _scope_stack() -> list[dict]:
 
 
 def push_read_scope() -> None:
-    _scope_stack().append({})
+    _scope_stack().append(_ReadScope())
 
 
 def pop_read_scope() -> None:
@@ -136,8 +163,16 @@ def write_meta(
         # instead (no key read).
         "dense": dense,
     }
-    with open(os.path.join(path, META_FILENAME), "w", encoding="utf-8") as fp:
-        json.dump(meta, fp, indent=1)
+    _write_json(os.path.join(path, META_FILENAME), meta, indent=1)
+
+
+def _write_json(fpath: str, doc: dict, indent: int | None = None) -> None:
+    """Write ``doc`` to ``fpath`` by rename, so a concurrent reader sees
+    the old file or the new one, never a partial one."""
+    tmp = f"{fpath}.{os.getpid()}.{threading.get_ident()}.tmp"
+    with open(tmp, "w", encoding="utf-8") as fp:
+        json.dump(doc, fp, indent=indent)
+    os.replace(tmp, fpath)
 
 
 def read_meta(path: str) -> dict:
@@ -164,8 +199,7 @@ def write_tile_manifest(path: str) -> None:
             for rg, ymm, xmm, bmm in row_group_tile_stats(
                 os.path.join(path, name))
         ]
-    with open(os.path.join(path, MANIFEST_JSON), "w", encoding="utf-8") as fp:
-        json.dump({"version": 2, "entries": entries}, fp)
+    _write_json(os.path.join(path, MANIFEST_JSON), {"version": 2, "entries": entries})
 
 
 def row_group_tile_stats(file_path: str) -> list:
@@ -197,20 +231,22 @@ def row_group_tile_stats(file_path: str) -> list:
     return out
 
 
-_TILE_MANIFEST_CACHE: dict[tuple[str, int], tuple[dict, list]] = {}
+_TILE_MANIFEST_CACHE: dict[tuple[str, int, int], tuple[dict, list]] = {}
 
 
 def _manifest_entry(path: str) -> tuple[dict, list] | None:
     """The saved manifest of the table at ``path`` as ({file -> [(rg,
     ty_minmax, tx_minmax, band_minmax), ...]}, the same rows flattened to
     ``(file path, rg, ...)``), or None when the table predates manifests.
-    Cached per (dir, manifest mtime_ns), so a repeated lookup costs one
-    stat."""
+    Cached per (dir, manifest mtime_ns, inode), so a repeated lookup costs
+    one stat; the inode tells apart two manifests renamed into place within
+    one tick of the file system's clock."""
     mf = os.path.join(path, MANIFEST_JSON)
     try:
-        key = (path, os.stat(mf).st_mtime_ns)
+        st = os.stat(mf)
     except FileNotFoundError:
         return None
+    key = (path, st.st_mtime_ns, st.st_ino)
     got = _TILE_MANIFEST_CACHE.get(key)
     if got is None:
         with open(mf, encoding="utf-8") as fp:
@@ -256,13 +292,14 @@ def _footer_stats(path: str) -> list:
     return got
 
 
-def _pruned_row_groups(path: str, band_lo: int, band_hi: int,
-                       stored_range: tuple[int, int, int, int]) -> list:
-    """(file, rg, ty_minmax, tx_minmax) of every row group of the table at
-    ``path`` whose statistics may hold a tile of bands [band_lo, band_hi]
-    inside the stored-tile range (sy_lo, sy_hi, sx_lo, sx_hi).  The
-    statistics come from the save-time manifest when the table has one (one
-    cached lookup), else from each part file's footer."""
+def _table_row_groups(path: str) -> list:
+    """(file, rg, ty_minmax, tx_minmax, band_minmax) of every row group of
+    the table at ``path``: from the save-time manifest when the table has
+    one (one cached lookup), else from each part file's footer.  Inside a
+    read scope, the listing the scope first saw."""
+    stack = _scope_stack()
+    if stack and path in stack[-1].listings:
+        return stack[-1].listings[path]
     entry = _manifest_entry(path)
     if entry is not None:
         rows = entry[1]
@@ -271,9 +308,19 @@ def _pruned_row_groups(path: str, band_lo: int, band_hi: int,
                 for f in (os.path.join(path, n) for n in sorted(os.listdir(path))
                           if n.endswith(".parquet"))
                 for row in _footer_stats(f)]
+    if stack:
+        stack[-1].listings[path] = rows
+    return rows
+
+
+def _pruned_row_groups(path: str, band_lo: int, band_hi: int,
+                       stored_range: tuple[int, int, int, int]) -> list:
+    """(file, rg, ty_minmax, tx_minmax) of every row group of the table at
+    ``path`` whose statistics may hold a tile of bands [band_lo, band_hi]
+    inside the stored-tile range (sy_lo, sy_hi, sx_lo, sx_hi)."""
     sy_lo, sy_hi, sx_lo, sx_hi = stored_range
     out = []
-    for f, rg, ymm, xmm, bmm in rows:
+    for f, rg, ymm, xmm, bmm in _table_row_groups(path):
         # Band pruning: non-interleaved multiband tables are band-pure per
         # file, so a single-band read drops the other bands' row groups
         # instead of decoding their payloads only to discard every row.
@@ -290,17 +337,61 @@ def _pruned_row_groups(path: str, band_lo: int, band_hi: int,
 _TILE_COLUMNS = ("band", "tile_y", "tile_x", "ysize", "xsize")
 
 
-def _decoded_row_group(f: str, rg: int) -> tuple:
-    """One row group of a tile table through the process's open-file cache:
-    its ``band, tile_y, tile_x, ysize, xsize`` columns as numpy arrays and
-    one zero-copy payload buffer per row."""
-    tbl = _pq_handle(f).read_row_group(rg, columns=[*_TILE_COLUMNS, "payload"])
+def _decode(pf, rg: int) -> tuple:
+    tbl = pf.read_row_group(rg, columns=[*_TILE_COLUMNS, "payload"])
     pay = tbl.column("payload")
     if pay.num_chunks != 1:
         pay = pay.combine_chunks()
     chunk = pay.chunk(0) if hasattr(pay, "chunk") else pay
     return (*(tbl.column(c).to_numpy() for c in _TILE_COLUMNS),
             [memoryview(chunk[i].as_buffer()) for i in range(len(chunk))])
+
+
+def _decoded_row_group(f: str, rg: int) -> tuple:
+    """One row group of a tile table through the process's open-file cache:
+    its ``band, tile_y, tile_x, ysize, xsize`` columns as numpy arrays and
+    one zero-copy payload buffer per row."""
+    return _decode(_pq_handle(f), rg)
+
+
+def _decoded_row_groups(keys: list) -> dict:
+    """``{(file, rg): _decoded_row_group(file, rg)}`` for ``keys``, decoded
+    concurrently on up to one thread per usable core; pyarrow releases the
+    GIL while it decompresses.  No two threads share a ``ParquetFile``:
+    each decode opens its own handle on the cached footer."""
+    import pyarrow.parquet as pq  # pylint: disable=C0415
+
+    keys = list(dict.fromkeys(keys))
+    n = min(len(keys), len(os.sched_getaffinity(0)))
+    if n <= 1:
+        return {k: _decoded_row_group(*k) for k in keys}
+
+    def decode(key):
+        f, rg = key
+        with pq.ParquetFile(f, metadata=_pq_handle(f).metadata) as pf:
+            return _decode(pf, rg)
+
+    with ThreadPoolExecutor(n) as pool:
+        return dict(zip(keys, pool.map(decode, keys)))
+
+
+def prefetch_row_groups(keys: list) -> None:
+    """Decode, together, the row groups of ``keys`` that the current read
+    scope lacks, and add them to it.  The scope's oldest entries that
+    ``keys`` does not name are evicted first, and it never holds more than
+    ``_READ_SCOPE_MAX_RGS`` row groups: past that, the reads decode the
+    rest one by one."""
+    rgs = _scope_stack()[-1].rgs
+    wanted = set(keys)
+    missing = [k for k in dict.fromkeys(keys) if k not in rgs][:_READ_SCOPE_MAX_RGS]
+    if not missing:
+        return
+    for k in [k for k in rgs if k not in wanted] + list(rgs):
+        if len(rgs) + len(missing) <= _READ_SCOPE_MAX_RGS:
+            break
+        rgs.pop(k, None)
+    for k, entry in _decoded_row_groups(missing).items():
+        rgs[k] = entry
 
 
 class ParquetRasterLayer(Layer):
@@ -372,7 +463,7 @@ class ParquetRasterLayer(Layer):
         ty_lo, ty_hi = overlap.yoff // s, (overlap.ymax - 1) // s
         tx_lo, tx_hi = overlap.xoff // s, (overlap.xmax - 1) // s
         stack = _scope_stack()
-        cache = stack[-1] if stack else {}
+        cache = stack[-1].rgs if stack else {}
         out = np.zeros((overlap.ysize, overlap.xsize), dtype=np_dtype)
         found = np.zeros((ty_hi - ty_lo + 1, tx_hi - tx_lo + 1), dtype=bool)
         for f, rg, _ymm, _xmm in _pruned_row_groups(
@@ -453,11 +544,11 @@ def write_array_as_raster_table(
         }
     )
     # Small row groups: tile rows are megabytes, and row-group boundaries are
-    # what lets Spark split one file across tasks and skip pruned tile ranges.
+    # what lets a scan split one file across tasks and skip pruned tile ranges.
     # zstd over snappy: integer-valued raster payloads compress ~2x smaller,
     # and at scale scan bytes (disk/network) are the bottleneck, not decode.
     pq.write_table(
-        table, os.path.join(path, "part-00000.parquet"), row_group_size=16,
+        table, os.path.join(path, "part-00000.parquet"), row_group_size=ROW_GROUP_TILES,
         compression="zstd", compression_level=3,
     )
     write_meta(path, area, DataType.of_array(data), nodata, s)
