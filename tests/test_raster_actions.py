@@ -7,9 +7,10 @@ it costs.
 * ``min``/``max`` keep Spark's NaN ordering over the pixels.
 * ``read_array`` runs in the calling process, submits no Spark job, and
   equals the distributed tile plan on every kind of leaf.
-* Row groups decoded concurrently (ahead of each tile of the tile grid, per
-  manifest task, per halo task) give the same bits as one-by-one decodes,
-  and a read scope never holds more than its bound.
+* Row groups decoded concurrently (ahead of each tile of the tile grid, on
+  the driver's cores; a task decodes on the cores it owns) give the same
+  bits as one-by-one decodes, and a read scope never holds more than its
+  bound.
 * A dense table whose tile manifest lost a row group fails loudly instead
   of reading as zeros.
 """
@@ -228,7 +229,19 @@ def test_concurrent_decode_is_exact_against_the_local_oracle(spark, tmp_path, le
                                   np.unique(full.astype(np.float64)))
 
 
-def test_concurrent_decodes_of_one_file_equal_sequential_ones(tmp_path):
+def test_decode_threads_follow_the_cores_the_caller_owns(spark):
+    """The driver decodes on every core it may use; a task on the cores
+    Spark gave it (``spark.task.cpus``), as its executor already runs one
+    task per core."""
+    assert pqr._caller_cores() == len(os.sched_getaffinity(0))
+    got = spark.sparkContext.parallelize([0], 1).map(
+        lambda _: pqr._caller_cores()).collect()
+    assert got == [int(spark.sparkContext.getConf().get("spark.task.cpus", "1"))]
+
+
+def test_concurrent_decodes_of_one_file_equal_sequential_ones(tmp_path, monkeypatch):
+    # Four decode threads per call whatever this host's core count.
+    monkeypatch.setattr(pqr, "_caller_cores", lambda: 4)
     layer = _table(tmp_path, "big", _ints(14, 40, 44))
     (f, rows), = ((os.path.join(layer.path, n), rows)
                   for n, rows in pqr.read_tile_manifest(layer.path).items())

@@ -7,6 +7,8 @@ has succeeded.
 * Saved tables keep the tile columns, row groups of at most
   ``ROW_GROUP_TILES`` tiles, statistics on the key columns only, and read
   back exactly (dense, sparse, two bands).
+* ``save`` and the array writer cut row groups by tile bytes, so a wide
+  dtype gets fewer tiles per row group, not bigger row groups.
 * Failure paths: a sink task that fails on its first attempt is retried
   into the same rows, a failed overwrite keeps the previous table byte for
   byte, and a read that overlaps an overwrite sees the old table or the
@@ -162,6 +164,38 @@ def test_saved_table_layout_and_readback(spark, tmp_path, kind):
         np.testing.assert_array_equal((layer * 1).read_array(-2, 3, W, H - 5),
                                       np.pad(data, ((0, 0), (2, 0)))[3:H - 2, :W])
         assert layer.sum(spark=spark) == float(data.sum())
+
+
+def _group_rows(path) -> list:
+    """Rows of every row group of every part file of the table at ``path``."""
+    return [pf.metadata.row_group(i).num_rows
+            for pf in (pq.ParquetFile(os.path.join(path, n))
+                       for n in sorted(os.listdir(path)) if n.endswith(".parquet"))
+            for i in range(pf.metadata.num_row_groups)]
+
+
+def test_row_groups_are_cut_by_tile_bytes(spark, tmp_path, monkeypatch):
+    """Both writers size row groups by decoded bytes: 16 int16 tiles of 512
+    fill ``ROW_GROUP_BYTES``, so float64 tiles of 512 go 4 to a row group.
+    With the bound shrunk to 16 int16 tiles of ``T``, an int16 save keeps
+    16 tiles per row group and a float64 save of the same pixels 4."""
+    assert pqr.row_group_tiles(512 * 512 * 2) == 16
+    assert pqr.row_group_tiles(512 * 512 * 8) == 4
+    assert pqr.row_group_tiles(1024 * 1024 * 16) == 1
+    assert pqr.row_group_tiles(T * T) == pqr.ROW_GROUP_TILES
+    monkeypatch.setattr(pqr, "ROW_GROUP_BYTES", 16 * T * T * 2)
+    data = _ints(6)
+    layer = _table(tmp_path, "a", data)
+    assert _group_rows(layer.path) == [16, 16, 10]
+    for dtype, most in ((yg.DataType.Int16, 16), (yg.DataType.Float64, 4)):
+        path = str(tmp_path / dtype.name)
+        layer.as_type(dtype).save(path, spark=spark)
+        rows = _group_rows(path)
+        assert sum(rows) == N_TILES and max(rows) == most
+        np.testing.assert_array_equal(yg.read_raster(path).read_array(0, 0, W, H), data)
+    wide = yg.write_array_as_raster_table(str(tmp_path / "wide"), data.astype(np.float64),
+                                          _area(H, W), tile_size=T)
+    assert max(_group_rows(wide.path)) == 4
 
 
 def test_save_is_one_spark_job_with_or_without_its_sum(spark, tmp_path):

@@ -26,10 +26,11 @@ Physical shape of every computation:
    emitting per-tile aggregate partials, or result tiles that ``save``'s
    tasks write to parquet themselves (the sink, ``_write_bands``: one job
    per band, no tile crosses to the JVM, and the driver commits the files
-   its collect returned once every band's job has succeeded).  Workers
-   decode a task's row groups concurrently, one thread per core: a manifest
-   task all of its row groups, a halo task a core's worth at a time, and
-   the tile grid the row groups of each tile that its read scope lacks.
+   its collect returned once every band's job has succeeded).  The tile
+   grid decodes the row groups of each tile that its read scope lacks
+   together, on one thread per core the caller owns: several in
+   ``read_array`` on the driver, one in a task, where Spark already runs a
+   task per core.
    sum/min/max are one Spark job (a stencil adds one for its halo
    strips): they collect their ``(ty, tx, partial)`` rows with one Arrow
    collect and fold them on the driver in a fixed order.  unique combines
@@ -265,13 +266,10 @@ def _halo_strips_direct(spark: SparkSession, payload: dict, slot: int,
     @task_entry
     def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         out_ty, out_tx, out_struct = [], [], []
-        keys = [rows[rid] for batch in batches for rid in batch.column(0).to_pylist()]
-        # One row group per core at a time, decoded concurrently: the task
-        # holds a core's worth of decoded row groups, not all of its own.
-        step = len(os.sched_getaffinity(0))
-        for k in range(0, len(keys), step):
-            for b_arr, sy_c, sx_c, sh_c, sw_c, bufs in \
-                    pq_raster._decoded_row_groups(keys[k:k + step]).values():
+        for batch in batches:
+            for rid in batch.column(0).to_pylist():
+                f, rg = rows[rid]
+                b_arr, sy_c, sx_c, sh_c, sw_c, bufs = pq_raster._decoded_row_group(f, rg)
                 for i in range(len(b_arr)):
                     # Interleaved row groups hold every band of a tile.
                     if int(b_arr[i]) != band:
@@ -549,12 +547,10 @@ def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
         else:  # tile with no stored row: exists as zeros
             groups.setdefault(missing[gid - len(man_groups)],
                               [[] for _ in range(n_slots)])
-    # The task holds all of its row groups until its tiles are evaluated
-    # anyway, so they are decoded together, concurrently.
-    for (f, _rg), (b_arr, sy, sx, sh, sw, bufs) in \
-            pq_raster._decoded_row_groups(reads).items():
+    for f, rg in reads:
         band_slot = dict(shared_slots if shared_slots is not None
                          else file_slots[f])
+        b_arr, sy, sx, sh, sw, bufs = pq_raster._decoded_row_group(f, rg)
         for j in range(len(b_arr)):
             slot = band_slot.get(int(b_arr[j]))
             if slot is None:
@@ -1135,12 +1131,6 @@ def read_array(tree, x: int, y: int, width: int, height: int,
     return out
 
 
-# zstd level for raster-table sinks.  Level 1 measured BOTH faster (2.04s vs
-# 2.28s for a 2.3 GB write at sf1.0) and smaller (447 MB vs 540 MB) than
-# level 3 on integer tile payloads — the byte-planar repetition of raster
-# data rewards the fast match finder.
-_SAVE_ZSTD_LEVEL = 1
-
 # One row per sink task: the staged file it wrote (null when it wrote no
 # tile) and the number of tiles its kernel produced, written or, in a sparse
 # save, dropped as all-zero; for ``save(and_sum=True)`` also the ``(ty, tx,
@@ -1165,10 +1155,11 @@ def _sink_band(root, band: int, staging: str, spark: SparkSession,
     spark, root, payload, bc, df = _build(root, spark)
     out_dtype = payload["out_dtype"]
     schema = _PA_SINK_SUM if and_sum else _PA_SINK
+    group = pq_raster.row_group_tiles(
+        payload["ty_size"] * payload["tx_size"] * np.dtype(out_dtype).itemsize)
 
     @task_entry
     def sink(batches):
-        import pyarrow.parquet as pq  # pylint: disable=C0415
         from pyspark import TaskContext  # pylint: disable=C0415
 
         ctx = TaskContext.get()
@@ -1182,18 +1173,15 @@ def _sink_band(root, band: int, staging: str, spark: SparkSession,
                 if sparse and not row[5]:
                     continue
                 if writer is None:
-                    writer = pq.ParquetWriter(
-                        os.path.join(staging, name), _PA_TILE,
-                        compression="zstd", compression_level=_SAVE_ZSTD_LEVEL,
-                        use_dictionary=["band", "tile_y", "tile_x", "ysize", "xsize"],
-                        write_statistics=["band", "tile_y", "tile_x"])
+                    writer = pq_raster.open_tile_writer(
+                        os.path.join(staging, name), _PA_TILE)
                 rows.append(row)
                 if and_sum:  # the partial of the very bytes written
                     tys.append(row[1])
                     txs.append(row[2])
                     parts.append(float(np.sum(np.frombuffer(row[6], dtype=out_dtype),
                                               dtype=np.float64)))
-                if len(rows) == pq_raster.ROW_GROUP_TILES:
+                if len(rows) == group:
                     writer.write_batch(_tile_batch(rows))
                     rows = []
             if rows:
@@ -1226,7 +1214,8 @@ def _write_bands(roots: list, path: str, spark: SparkSession,
 
     Each band is one Spark job (``_sink_band``) and NO shuffle: its tasks
     write their runs of tiles, clustered by (tile_y, tile_x), in row groups
-    of at most ``ROW_GROUP_TILES`` tiles, to ``path/_temporary/<job>/``.
+    of ``parquet.row_group_tiles`` tiles (``parquet.open_tile_writer``), to
+    ``path/_temporary/<job>/``.
     The result tiles never cross to the JVM.  Once every band's job has
     succeeded, the driver checks the tile counts (every tile of the window
     written, or dropped as all-zero by a sparse save) and commits only the
