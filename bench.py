@@ -27,8 +27,7 @@ capability, and the per-query spread (max-min over the passes) is emitted
 alongside so a reader can see which numbers are trustworthy.  Because the
 VM's stall windows can outlast three back-to-back passes, passes continue
 adaptively (up to ``$YG_BENCH_MAX_PASSES``, default 7) while any query's
-min is still falling >10% per pass.  Run
-scripts/scaling_bench.py for the N-vs-4N-cores scaling measurement.
+min is still falling >10% per pass.
 """
 
 from __future__ import annotations

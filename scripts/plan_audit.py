@@ -29,7 +29,8 @@ Checks (each FAILS the script if violated):
    one Python worker.
 14. Raster actions on one manifest table stay within their job budget,
    counted by job group: ``read_array`` 0 (it runs in the driver), ``sum``
-   1 (one Arrow collect of the tile partials), ``unique`` at most 2, and
+   1 (one Arrow collect of the tile partials), a stencil's ``sum`` 1 too
+   (each task reads its tiles' halos itself), ``unique`` at most 2, and
    ``save`` 1 with or without ``and_sum`` (its sink tasks return their
    tiles' partials; the table is not read back).
 
@@ -292,8 +293,8 @@ def main() -> int:
                    "(no Range line)"))
 
     # 14. raster action job budget on one manifest table: read_array runs
-    # in the driver, sum folds one Arrow collect of its tile partials,
-    # unique collects its Spark-combined values through one limit, and
+    # in the driver, sum folds one Arrow collect of its tile partials (a
+    # stencil's tasks read their halos themselves), unique collects its Spark-combined values through one limit, and
     # save (with or without its sum) is its one sink job.
     sc = spark.sparkContext
 
@@ -315,20 +316,24 @@ def main() -> int:
             os.path.join(tmp, "t"),
             (np.arange(6 * s * 4 * s) % 7).astype(np.int16).reshape(6 * s, 4 * s),
             yg.Area(0.0, 0.0, 4 * s * 0.01, -6 * s * 0.01, proj), tile_size=s)
-        assert "manifest" in X._build(X._as_root(table), spark)[2]  # noqa: SLF001
+        stencil = table.conv2d(np.ones((3, 3), np.float32))
+        for expr in (table, stencil):
+            assert "manifest" in X._build(X._as_root(expr), spark)[2]  # noqa: SLF001
         jobs = {
             "read_array": jobs_of("audit-read-array", lambda: table.read_array(0, 0, s, s)),
             "sum": jobs_of("audit-sum", lambda: table.sum(spark=spark)),
+            "stencil sum": jobs_of("audit-stencil-sum", lambda: stencil.sum(spark=spark)),
             "unique": jobs_of("audit-unique", lambda: table.unique(spark=spark)),
             "save": jobs_of("audit-save", lambda: table.save(
                 os.path.join(tmp, "saved"), spark=spark)),
             "save(and_sum=True)": jobs_of("audit-save-sum", lambda: table.save(
                 os.path.join(tmp, "saved"), and_sum=True, spark=spark)),
         }
-        ok = (jobs["read_array"] == 0 and jobs["sum"] == 1 and jobs["unique"] <= 2
+        ok = (jobs["read_array"] == 0 and jobs["sum"] == 1 and jobs["stencil sum"] == 1
+              and jobs["unique"] <= 2
               and jobs["save"] == 1 and jobs["save(and_sum=True)"] == 1)
-        check("raster action job budget: read_array 0, sum 1, unique <= 2, "
-              "save 1, save(and_sum=True) 1", ok,
+        check("raster action job budget: read_array 0, sum 1, stencil sum 1, "
+              "unique <= 2, save 1, save(and_sum=True) 1", ok,
               ", ".join(f"{k} {v}" for k, v in jobs.items()))
 
     print("\nPLAN AUDIT:", "all checks passed" if not failures else f"FAILURES: {failures}")

@@ -33,7 +33,7 @@ def small_tiles(monkeypatch):
 def distributed(spark):
     """``distributed(expr)``: the whole computation assembled from the
     distributed tile plan (``tiles_dataframe(...).toArrow()``), i.e. the
-    manifest plan with its halo strips whenever ``_build`` picks it.
+    manifest plan whenever ``_build`` picks it.
     ``to_numpy`` evaluates in the driver, so a test that pins a Spark
     plan's pixels compares this, not ``to_numpy``, with its oracle."""
     from yirgacheffe_spark.plans import executor

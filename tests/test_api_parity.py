@@ -129,8 +129,8 @@ def test_interleaved_multiband_single_scan(spark, tmp_path, distributed):
     plan = expr.to_dataframe(spark=spark)._jdf.queryExecution().executedPlan().toString()
     payload_side = plan.split("Union")[0]  # the piece-rows branch
     assert "Exchange hashpartitioning" not in payload_side
-    # A stencil over one band of the interleaved table: its halo strips are
-    # cut from row groups that also hold the other bands' tiles.
+    # A stencil over one band of the interleaved table: its halo reads come
+    # from row groups that also hold the other bands' tiles.
     conv = layers[2].conv2d(np.ones((3, 3), dtype=np.float32))
     local = evaluate_window(conv)
     np.testing.assert_array_equal(distributed(conv), local)

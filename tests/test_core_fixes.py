@@ -41,31 +41,32 @@ class TestMultiRingHalo:
 
         assert "manifest" in executor._build(expr, spark)[2]
         want = kernel.evaluate_window(expr)
-        # The manifest plan's halo strips reach the ring-2 neighbours.
+        # The manifest plan's in-task halo reads reach the ring-2 neighbours.
         np.testing.assert_allclose(distributed(expr), want, rtol=1e-6, equal_nan=True)
         got = expr.to_numpy(spark=spark)
         np.testing.assert_allclose(got, want, rtol=1e-6, equal_nan=True)
 
-    def test_conv2d_pad_exceeding_tile_repartition_fallback(self, spark, tmp_path,
-                                                            monkeypatch, distributed):
-        """Same case through the non-broadcast halo path (the tile grid)."""
+    def test_conv2d_pad_exceeding_tile_size_on_tile_grid(self, spark, tmp_path,
+                                                        distributed):
+        """Same case over storage tiles of 3, off the computation grid: the
+        tile grid's halo-grown reads reach ring-2 neighbours too."""
         from yirgacheffe_spark.plans import executor
 
-        monkeypatch.setattr(executor, "_HALO_BROADCAST_MAX", 1)
         rng = np.random.default_rng(18)
-        data = rng.normal(size=(16, 16)).astype(np.float32)
-        path = str(tmp_path / "big_pad_rep")
+        # Small integers: every sum is exact, so the tiles compare bit for bit.
+        data = rng.integers(-9, 10, (16, 16)).astype(np.float32)
+        path = str(tmp_path / "big_pad_grid")
         yg.write_array_as_raster_table(path, data, Area(10.0, 50.0, 10.0 + 16 * 0.02,
                                                         50.0 - 16 * 0.02, _proj()),
-                                       tile_size=4)
+                                       tile_size=3)
         layer = yg.read_raster(path)
         expr = layer.conv2d(np.ones((11, 11), dtype=np.float32))
         plan = expr.to_dataframe(spark=spark)._jdf.queryExecution().executedPlan().toString()
         assert "Range" in plan and "Exchange" not in plan  # the tile grid
+        assert "manifest" not in executor._build(expr, spark)[2]
         want = kernel.evaluate_window(expr)
-        np.testing.assert_allclose(distributed(expr), want, rtol=1e-6, equal_nan=True)
-        got = expr.to_numpy(spark=spark)
-        np.testing.assert_allclose(got, want, rtol=1e-6, equal_nan=True)
+        np.testing.assert_array_equal(distributed(expr), want)
+        np.testing.assert_array_equal(expr.to_numpy(spark=spark), want)
 
 
 class TestNodataFormatParity:

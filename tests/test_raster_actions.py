@@ -10,7 +10,8 @@ it costs.
 * Row groups decoded concurrently (ahead of each tile of the tile grid, on
   the driver's cores; a task decodes on the cores it owns) give the same
   bits as one-by-one decodes, and a read scope never holds more than its
-  bound.
+  bound.  Stencil halos read through a manifest task's scope stay exact
+  when the scope evicts row groups the task still needs.
 * A dense table whose tile manifest lost a row group fails loudly instead
   of reading as zeros.
 """
@@ -23,6 +24,8 @@ import sys
 from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 import yirgacheffe_spark as yg
@@ -259,10 +262,9 @@ def test_concurrent_decodes_of_one_file_equal_sequential_ones(tmp_path, monkeypa
             assert [bytes(v) for v in got[key][5]] == [bytes(v) for v in want[5]]
 
 
-def test_read_scope_never_exceeds_its_bound(spark, tmp_path, monkeypatch):
-    """``to_numpy`` over a table of more row groups than a read scope may
-    hold, with a stencil so each tile reads its neighbours' row groups:
-    the instrumented scope peaks at its bound, never above it."""
+def _scope_peak(monkeypatch) -> list:
+    """Instrument every read scope opened from now on; the returned
+    one-item list holds the most row groups any of them held at once."""
     peak = [0]
 
     class Counting(dict):
@@ -276,12 +278,86 @@ def test_read_scope_never_exceeds_its_bound(spark, tmp_path, monkeypatch):
             self.rgs = Counting()
 
     monkeypatch.setattr(pqr, "_ReadScope", Scope)
+    return peak
+
+
+def test_read_scope_never_exceeds_its_bound(spark, tmp_path, monkeypatch):
+    """``to_numpy`` over a table of more row groups than a read scope may
+    hold, with a stencil so each tile reads its neighbours' row groups:
+    the instrumented scope peaks at its bound, never above it."""
+    peak = _scope_peak(monkeypatch)
     data = _ints(15, 72, 72)
     layer = _table(tmp_path, "big", data)
     assert sum(map(len, pqr.read_tile_manifest(layer.path).values())) > pqr._READ_SCOPE_MAX_RGS
     expr = layer.conv2d(np.ones((3, 3), dtype=np.float32)) + layer
     np.testing.assert_array_equal(expr.to_numpy(spark=spark), evaluate_window(expr))
     assert peak[0] == pqr._READ_SCOPE_MAX_RGS
+
+
+def _one_tile_per_row_group(layer):
+    """Rewrite every part file of ``layer``'s table (and its manifest) with
+    one tile per row group."""
+    for name in os.listdir(layer.path):
+        if name.endswith(".parquet"):
+            part = os.path.join(layer.path, name)
+            pq.write_table(pq.read_table(part), part, row_group_size=1)
+    pqr.write_tile_manifest(layer.path)
+    return layer
+
+
+def _manifest_kernel_in_one_task(expr, spark) -> np.ndarray:
+    """Every group id of ``expr``'s manifest plan through the kernel in this
+    process, as one task would run them, assembled into the window."""
+    _spark, root, payload, _bc, _df = executor._build(expr, spark)
+    man = payload["manifest"]
+    ids = pa.RecordBatch.from_arrays(
+        [pa.array(range(len(man["groups"]) + len(man["missing"])), pa.int64())],
+        names=["id"])
+    win = root.window
+    full = np.zeros((win.ysize, win.xsize), dtype=root.datatype.to_numpy())
+    for ty, tx, h, w, result in executor._tile_results(payload, iter([ids])):
+        full[ty * T:ty * T + h, tx * T:tx * T + w] = result
+    return full
+
+
+def test_stencil_halos_stay_exact_when_the_read_scope_evicts(spark, tmp_path,
+                                                              monkeypatch, distributed):
+    """Stencils on the manifest plan read their halos through the task's
+    read scope.  With one tile per row group, a task holds more row groups
+    than its scope keeps, so halo reads find some evicted and decode them
+    again: tiles and sums still equal the local oracle bit for bit, and the
+    scope never holds more than its bound."""
+    h, w = 48, 64  # 192 tiles of 4
+    k = np.ones((3, 3), dtype=np.float32)
+    a = _one_tile_per_row_group(_table(tmp_path, "a", _ints(20, h, w).astype(np.float32)))
+    b = _one_tile_per_row_group(_table(tmp_path, "b", _ints(21, h, w).astype(np.float32)))
+    sparse = _ints(22, h, w)
+    sparse[:16] = 0  # four tile rows the sparse save drops
+    path = str(tmp_path / "sparse")
+    yg.from_array(sparse, (0.0, 0.0), PROJ).save(path, sparse=True, spark=spark)
+    sparse_layer = _one_tile_per_row_group(yg.read_raster(path))
+    exprs = {"single": a.conv2d(k), "planar": a.conv2d(k) + b,
+             "sparse": sparse_layer.conv2d(k)}
+    for name, expr in exprs.items():
+        assert _plan(expr, spark) == "manifest", name
+        _spark, _root, payload, _bc, df = executor._build(expr, spark)
+        man = payload["manifest"]
+        # Ids run groups first, then missing tiles, in even contiguous
+        # ranges: the first task reads this many groups.  The executors'
+        # scopes keep their unpatched bound, so their tasks must overflow it.
+        n_ids = len(man["groups"]) + len(man["missing"])
+        first_task = min(n_ids // df.rdd.getNumPartitions(), len(man["groups"]))
+        assert first_task > pqr._READ_SCOPE_MAX_RGS, name
+        want = np.asarray(evaluate_window(expr))
+        np.testing.assert_array_equal(distributed(expr), want, err_msg=name)
+        assert expr.sum(spark=spark) == float(want.sum(dtype=np.float64)), name
+
+    monkeypatch.setattr(pqr, "_READ_SCOPE_MAX_RGS", 2)
+    peak = _scope_peak(monkeypatch)
+    for name, expr in exprs.items():
+        np.testing.assert_array_equal(_manifest_kernel_in_one_task(expr, spark),
+                                      evaluate_window(expr), err_msg=name)
+    assert peak[0] == 2
 
 
 def test_read_array_submits_no_spark_job(spark, tmp_path, distributed):

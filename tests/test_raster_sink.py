@@ -3,7 +3,8 @@ themselves, and the driver commits the files it collected once every job
 has succeeded.
 
 * The tile counts are checked before the commit: a save that lost tiles
-  raises and leaves the destination as it was.
+  raises and leaves the destination as it was.  ``to_geotiff`` checks its
+  count too, and leaves no file.
 * Saved tables keep the tile columns, row groups of at most
   ``ROW_GROUP_TILES`` tiles, statistics on the key columns only, and read
   back exactly (dense, sparse, two bands).
@@ -109,6 +110,19 @@ def test_save_that_lost_tiles_raises_before_commit(spark, tmp_path):
     with pytest.raises(RuntimeError, match="stale"):
         (stale * 1).save(fresh, spark=spark)
     assert not os.path.exists(fresh)
+
+
+def test_to_geotiff_that_lost_tiles_raises_and_leaves_no_file(spark, tmp_path):
+    """``to_geotiff`` of a table whose manifest lost its last row group
+    receives 32 of its 42 tiles: it raises instead of writing the lost
+    tiles as zeros, and leaves neither the .tif nor its .part behind."""
+    stale = _table(tmp_path, "stale", _ints(1))
+    _drop_last_row_group(stale)
+    out = tmp_path / "geotiff"
+    out.mkdir()
+    with pytest.raises(RuntimeError, match="received 32 of the 42 tiles"):
+        yg.to_geotiff(stale * 1, str(out / "stale.tif"), spark=spark)
+    assert os.listdir(out) == []
 
 
 def test_sparse_save_counts_dropped_zero_tiles(spark, tmp_path):

@@ -190,79 +190,79 @@ def _assert_tile_grid(expr, spark) -> None:
     assert "manifest" not in executor._build(expr, spark)[2]
 
 
-def test_conv2d_halo_fallback_matches_broadcast(spark, tmp_path, monkeypatch,
-                                                distributed):
-    """Above the halo broadcast budget the stencil takes the tile grid —
-    each task reads its tiles' halo-grown windows itself — with
-    bit-identical results to the broadcast halo exchange (the 100-TB-safe
-    path)."""
+def _assert_manifest_plan(expr, spark) -> None:
+    """The manifest plan: a JVM range of group ids, no exchange."""
+    from yirgacheffe_spark.plans import executor
+
+    plan = _executed_plan(expr, spark)
+    assert "Range" in plan and "Exchange" not in plan
+    assert "manifest" in executor._build(expr, spark)[2]
+
+
+# Storage tiles of 4 lie on the computation grid (the manifest plan); the
+# same pixels stored in tiles of 3 are off it (the tile grid).
+_BOTH_PLANS = ((4, _assert_manifest_plan), (3, _assert_tile_grid))
+
+
+def test_conv2d_halo_same_on_both_plans(spark, tmp_path, distributed):
+    """A stencil tile reads its halo inside its own task on both plans:
+    its tiles and its sum equal the local oracle bit for bit."""
     import numpy as np
 
     import yirgacheffe_spark as yg
-    from yirgacheffe_spark.plans import executor
+    from yirgacheffe_spark.plans import kernel
 
     rng = np.random.default_rng(23)
     data = rng.integers(0, 50, (20, 24)).astype(np.float32)
     proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
     area = yg.Area(0.0, 0.0, 0.24, -0.20, proj)
-    layer = yg.write_array_as_raster_table(
-        str(tmp_path / "conv_src"), data, area, tile_size=4
-    )
-    kernel = np.ones((3, 3), dtype=np.float32)
-    expr = layer.conv2d(kernel)
-
-    broadcast_out = distributed(expr)
-    broadcast_sum = expr.sum(spark=spark)
-    np.testing.assert_array_equal(expr.to_numpy(spark=spark), broadcast_out)
-
-    assert "Exchange hashpartitioning" not in _executed_plan(expr, spark)
-
-    monkeypatch.setattr(executor, "_HALO_BROADCAST_MAX", 0)  # force the fallback
-    _assert_tile_grid(expr, spark)
-    fallback_out = distributed(expr)
-    fallback_sum = expr.sum(spark=spark)
-    np.testing.assert_array_equal(fallback_out, broadcast_out)
-    assert fallback_sum == broadcast_sum
+    for tile_size, assert_plan in _BOTH_PLANS:
+        layer = yg.write_array_as_raster_table(
+            str(tmp_path / f"conv_src{tile_size}"), data, area, tile_size=tile_size
+        )
+        expr = layer.conv2d(np.ones((3, 3), dtype=np.float32))
+        assert_plan(expr, spark)
+        local = kernel.evaluate_window(expr)
+        np.testing.assert_array_equal(distributed(expr), local)
+        np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
+        assert expr.sum(spark=spark) == float(local.sum(dtype=np.float64))
 
 
-def test_conv2d_over_widened_window_sees_neighbour_data(spark, tmp_path, monkeypatch,
-                                                        distributed):
+def test_conv2d_over_widened_window_sees_neighbour_data(spark, tmp_path, distributed):
     """A stencil window widened beyond stored coverage must still read real
     neighbour pixels at the coverage edge: tiles just outside the data get
-    a row (unpadded-coverage missing grid) and their neighbours' halo
-    strips, on BOTH halo paths.  Previously those tiles were dropped
+    a row (unpadded-coverage missing grid) and read their halo across the
+    coverage edge, on both plans.  Previously those tiles were dropped
     entirely and the border one tile outside the data evaluated to zeros."""
     import numpy as np
 
     import yirgacheffe_spark as yg
-    from yirgacheffe_spark.plans import executor, kernel
+    from yirgacheffe_spark.plans import kernel
 
     rng = np.random.default_rng(5)
     data = rng.integers(1, 9, (8, 8)).astype(np.float32)
     proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
-    layer = yg.write_array_as_raster_table(
-        str(tmp_path / "src"), data, yg.Area(0.0, 0.0, 0.08, -0.08, proj),
-        tile_size=4,
-    )
-    wide = layer.as_area(yg.Area(0.0, 0.0, 0.16, -0.16, proj))
-    expr = wide.conv2d(np.ones((3, 3), np.float32))
-    local = kernel.evaluate_window(expr)
-    assert local[8].sum() > 0  # the border outside coverage is nonzero
-
-    np.testing.assert_array_equal(distributed(expr), local)
-    np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
-    monkeypatch.setattr(executor, "_HALO_BROADCAST_MAX", 0)
-    _assert_tile_grid(expr, spark)
-    np.testing.assert_array_equal(distributed(expr), local)
+    for tile_size, assert_plan in _BOTH_PLANS:
+        layer = yg.write_array_as_raster_table(
+            str(tmp_path / f"src{tile_size}"), data, yg.Area(0.0, 0.0, 0.08, -0.08, proj),
+            tile_size=tile_size,
+        )
+        wide = layer.as_area(yg.Area(0.0, 0.0, 0.16, -0.16, proj))
+        expr = wide.conv2d(np.ones((3, 3), np.float32))
+        assert_plan(expr, spark)
+        local = kernel.evaluate_window(expr)
+        assert local[8].sum() > 0  # the border outside coverage is nonzero
+        np.testing.assert_array_equal(distributed(expr), local)
+        np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
 
 
 def test_conv2d_manifest_halo_path_matches_jvm(spark, tmp_path, monkeypatch,
                                                distributed):
     """When storage tiles coincide with computation tiles, a stencil query
-    takes the manifest body (pyarrow-direct decode) with halo strips
-    collected once and shipped inside the payload broadcast.  Results must
-    be bit-identical to the local oracle — including tiles outside stored
-    coverage, which must still receive their neighbours' strips."""
+    takes the manifest body (pyarrow-direct decode), and each task reads its
+    tiles' halo-grown windows itself.  Results must be bit-identical to the
+    local oracle — including tiles outside stored coverage, which must
+    still read their neighbours' pixels."""
     import numpy as np
 
     import yirgacheffe_spark as yg
@@ -290,7 +290,7 @@ def test_conv2d_manifest_halo_path_matches_jvm(spark, tmp_path, monkeypatch,
     assert expr.sum(spark=spark) == float(local.sum(dtype=np.float64))
 
     # Widened window: the border one tile outside stored coverage reads
-    # real neighbour pixels through the broadcast halo map too.
+    # real neighbour pixels too.
     wide = layer.as_area(yg.Area(0.0, 0.0, 0.32, -0.28, proj))
     wexpr = wide.conv2d(np.ones((3, 3), np.float32))
     wpayload = executor._plan_payload(executor._as_root(wexpr))
@@ -333,8 +333,9 @@ def test_multi_table_planar_manifest_matches(spark, tmp_path, monkeypatch, distr
     np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
     assert expr.sum(spark=spark) == float(local.sum(dtype=np.float64))
 
-    # A stencil on one band table next to a plain one: halo strips for the
-    # padded slot only, including tiles of a window widened past the data.
+    # A stencil on one band table next to a plain one: only the padded slot
+    # reads its halo-grown window, including tiles of a window widened past
+    # the data.
     wide = yg.Area(0.0, 0.0, 0.28, -0.24, proj)
     sexpr = (la.as_area(wide).conv2d(np.ones((3, 3), np.float32))
              + lb.as_area(wide))

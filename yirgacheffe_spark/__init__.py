@@ -232,9 +232,11 @@ def _stream_band_tiles(writer, root, spark_s, out_dtype, file_tile) -> None:
             buf_y0 = emitted
 
     cur_ty = None
+    received = 0
     # prefetch: the cluster computes partition k+1 while the driver
     # compresses and writes partition k's strips.
     for row in ordered.toLocalIterator(prefetchPartitions=True):
+        received += 1
         if cur_ty is not None and row["tile_y"] != cur_ty:
             _flush(row["tile_y"] * _c.TILE_YSIZE)
         cur_ty = row["tile_y"]
@@ -244,6 +246,15 @@ def _stream_band_tiles(writer, root, spark_s, out_dtype, file_tile) -> None:
         y0 = row["tile_y"] * _c.TILE_YSIZE
         x0 = row["tile_x"] * _c.TILE_XSIZE
         buf[y0 - buf_y0 : y0 - buf_y0 + row["ysize"], x0 : x0 + row["xsize"]] = tile
+    # The plan emits one row per tile of the window (zeros included), so a
+    # short count means the scan lost tiles, e.g. to a stale tile manifest;
+    # writing them as zeros would be silently wrong.
+    n_tiles = n_engine_rows * -(-w.xsize // _c.TILE_XSIZE)
+    if received != n_tiles:
+        raise RuntimeError(
+            f"to_geotiff received {received} of the {n_tiles} tiles of the "
+            "computation window: the scan lost or repeated a stored tile (is "
+            "the tile manifest stale?)")
     _flush(w.ysize, final=True)
 
 

@@ -13,9 +13,10 @@ Physical shape of every computation:
      per-band tables whose row-group sequences match): the leaves become
      *slots*, the driver lists the (file, row group) pairs that survive
      manifest/footer-statistics pruning, a JVM range of group ids hands
-     them to tasks, and workers decode them with pyarrow — no JVM payload
-     decode, no shuffle.  Stencil halos ride along as edge strips inside
-     the payload broadcast.
+     them to tasks, and workers decode them through the task's read scope
+     with pyarrow — no JVM payload decode, no shuffle.  A stencil's leaf
+     is read like a tile-grid leaf: its halo-grown window, in the task,
+     from the row groups the scope holds or decodes.
    * the **tile grid** for every other tree, including one with no parquet
      leaf: a JVM range of tile ids, and the kernel reads each parquet leaf
      of its tile in-process (``ParquetRasterLayer.read_window`` over the
@@ -31,12 +32,12 @@ Physical shape of every computation:
    together, on one thread per core the caller owns: several in
    ``read_array`` on the driver, one in a task, where Spark already runs a
    task per core.
-   sum/min/max are one Spark job (a stencil adds one for its halo
-   strips): they collect their ``(ty, tx, partial)`` rows with one Arrow
-   collect and fold them on the driver in a fixed order.  unique combines
-   its per-tile value counts by key in Spark and collects at most
-   ``max_values + 1`` of them through one limit (at most two jobs: the
-   combine's shuffle stage and the collect).
+   sum/min/max are one Spark job, a stencil's too: they collect their
+   ``(ty, tx, partial)`` rows with one Arrow collect and fold them on the
+   driver in a fixed order.  unique combines its per-tile value counts by
+   key in Spark and collects at most ``max_values + 1`` of them through
+   one limit (at most two jobs: the combine's shuffle stage and the
+   collect).
    ``read_array`` submits no job: it runs the same kernel over the
    window's tiles of the tile grid in the calling process, one tile after
    another, because its output is driver-resident anyway.  ``to_numpy``
@@ -77,7 +78,6 @@ import math
 import os
 import shutil
 import uuid
-from functools import reduce
 from typing import Iterator
 
 import numpy as np
@@ -164,20 +164,6 @@ def _plan_payload(root: LayerOperation):
     }
 
 
-PIECE_STRUCT_SQL = "struct<slot:int,py0:bigint,px0:bigint,sh:int,sw:int,p:binary>"
-_PIECE_PA_TYPE = pa.struct(
-    [("slot", pa.int32()), ("py0", pa.int64()), ("px0", pa.int64()),
-     ("sh", pa.int32()), ("sw", pa.int32()), ("p", pa.binary())]
-)
-
-# Halo strips travel inside the payload broadcast, which every executor
-# holds whole: above this many strip bytes a stencil takes the tile grid
-# (each task reads its tiles' halo-grown windows itself).  At 100 TB the
-# strips alone are ~1.6% of the raster — terabytes — so the broadcast must
-# be size-guarded, not assumed.
-_HALO_BROADCAST_MAX = 256 * 1024 * 1024
-
-
 def _stored_range(payload: dict, meta: dict, tile_box: tuple[int, int, int, int],
                   pad: int) -> tuple[int, int, int, int]:
     """Stored-tile range (sy_lo, sy_hi, sx_lo, sx_hi) of a leaf that the
@@ -195,134 +181,6 @@ def _stored_range(payload: dict, meta: dict, tile_box: tuple[int, int, int, int]
             max(x_px_lo // s, 0), min((x_px_hi - 1) // s, stored_x - 1))
 
 
-def _strip_rows_for_tile(out_ty, out_tx, out_struct, slot, payload, tile_box,
-                         meta, sy, sx, sh, sw, buf):
-    """Append the halo strips one stored tile owes its neighbours; ``buf``
-    is the tile's payload, viewed as an array only when a strip is
-    actually emitted."""
-    s_sz = meta["S"]
-    p = meta["pad"]
-    ayoff, axoff = meta["ayoff"], meta["axoff"]
-    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    ty_lo, ty_hi, tx_lo, tx_hi = tile_box
-    own_ty = (sy * s_sz - ayoff) // ty_size
-    own_tx = (sx * s_sz - axoff) // tx_size
-    data = None
-    py_base = sy * s_sz
-    px_base = sx * s_sz
-    wy0 = py_base - ayoff  # window coords of this tile's pixels
-    wx0 = px_base - axoff
-    # Pad can exceed one tile (stacked/huge stencils): reach
-    # ceil(p / tile) rings; the per-strip overlap test below
-    # already handles arbitrary distances.
-    ring_y = -(-p // ty_size)
-    ring_x = -(-p // tx_size)
-    for dty in range(-ring_y, ring_y + 1):
-        for dtx in range(-ring_x, ring_x + 1):
-            if dty == 0 and dtx == 0:
-                continue
-            t_ty, t_tx = own_ty + dty, own_tx + dtx
-            if not (ty_lo <= t_ty <= ty_hi and tx_lo <= t_tx <= tx_hi):
-                continue
-            # Target's halo-grown window, in window coords.
-            gy0, gy1 = t_ty * ty_size - p, t_ty * ty_size + ty_size + p
-            gx0, gx1 = t_tx * tx_size - p, t_tx * tx_size + tx_size + p
-            r0, r1 = max(gy0 - wy0, 0), min(gy1 - wy0, sh)
-            c0, c1 = max(gx0 - wx0, 0), min(gx1 - wx0, sw)
-            if r0 >= r1 or c0 >= c1:
-                continue
-            if data is None:
-                data = np.frombuffer(buf, dtype=meta["np_dtype"]).reshape(sh, sw)
-            strip = np.ascontiguousarray(data[r0:r1, c0:c1])
-            out_ty.append(t_ty)
-            out_tx.append(t_tx)
-            out_struct.append(
-                {
-                    "slot": slot,
-                    "py0": py_base + r0,
-                    "px0": px_base + c0,
-                    "sh": r1 - r0,
-                    "sw": c1 - c0,
-                    "p": strip.tobytes(),
-                }
-            )
-
-
-def _halo_strips_direct(spark: SparkSession, payload: dict, slot: int,
-                        tile_box: tuple[int, int, int, int]) -> DataFrame:
-    """Halo exchange for an aligned stencil leaf: workers read their (file,
-    row-group) assignments with the C++ parquet reader and emit only the
-    edge strips each neighbouring tile needs (a few KB per tile) — the body
-    payload never moves, and no full tile crosses the JVM just to have its
-    edges sliced (measured ~3x cheaper than a JVM scan feeding the same
-    extraction)."""
-    meta = payload["slot_meta"][slot]
-    band = meta["band"]
-    rng = _stored_range(payload, meta, tile_box, meta["pad"])
-    sy_lo, sy_hi, sx_lo, sx_hi = rng
-    rows = [(f, rg) for f, rg, _ymm, _xmm
-            in pq_raster._pruned_row_groups(meta["path"], band, band, rng)]
-
-    @task_entry
-    def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        out_ty, out_tx, out_struct = [], [], []
-        for batch in batches:
-            for rid in batch.column(0).to_pylist():
-                f, rg = rows[rid]
-                b_arr, sy_c, sx_c, sh_c, sw_c, bufs = pq_raster._decoded_row_group(f, rg)
-                for i in range(len(b_arr)):
-                    # Interleaved row groups hold every band of a tile.
-                    if int(b_arr[i]) != band:
-                        continue
-                    sy, sx = int(sy_c[i]), int(sx_c[i])
-                    if not (sy_lo <= sy <= sy_hi and sx_lo <= sx <= sx_hi):
-                        continue
-                    _strip_rows_for_tile(
-                        out_ty, out_tx, out_struct, slot, payload, tile_box, meta,
-                        sy, sx, int(sh_c[i]), int(sw_c[i]), bufs[i],
-                    )
-        if out_ty:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ty, pa.int32()),
-                    pa.array(out_tx, pa.int32()),
-                    pa.array(out_struct, type=_PIECE_PA_TYPE),
-                ],
-                names=["ty", "tx", "piece"],
-            )
-
-    return _range_of(spark, len(rows)).mapInArrow(
-        extract, schema=f"ty int, tx int, piece {PIECE_STRUCT_SQL}")
-
-
-def _halo_pieces(spark: SparkSession, payload: dict, slots: list[int],
-                 tile_box: tuple[int, int, int, int]) -> dict:
-    """Collect the halo strips of the stencil ``slots`` to the driver as
-    ``{(ty, tx): [(slot, py0, px0, sh, sw, bytes), ...]}`` for the payload
-    broadcast.  One Arrow collect: the strips are thousands of small
-    binaries, where the py4j row path measured 0.68 s against tens of ms."""
-    strips = reduce(DataFrame.unionByName,
-                    [_halo_strips_direct(spark, payload, slot, tile_box) for slot in slots])
-    table = strips.select("ty", "tx", "piece.*").toArrow()
-    halo: dict = {}
-    for ty, tx, *piece in zip(*(col.to_pylist() for col in table.columns)):
-        halo.setdefault((ty, tx), []).append(tuple(piece))
-    return halo
-
-
-def _halo_strip_bytes(payload: dict, slot: int,
-                      tile_box: tuple[int, int, int, int]) -> int:
-    """Upper-bound estimate of the halo-strip volume for ``slot`` over the
-    tile box: per tile, the 8 neighbour strips cover a pad-wide frame."""
-    meta = payload["slot_meta"][slot]
-    p = meta["pad"]
-    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    ty_lo, ty_hi, tx_lo, tx_hi = tile_box
-    n_tiles = (ty_hi - ty_lo + 1) * (tx_hi - tx_lo + 1)
-    frame_px = 2 * p * (ty_size + tx_size) + 4 * p * p
-    return n_tiles * frame_px * np.dtype(meta["np_dtype"]).itemsize
-
-
 def _manifest_rows(spark: SparkSession, payload: dict,
                    tile_box: tuple[int, int, int, int]):
     """Pyarrow-direct scan plan: (file, row-group) groups the kernel
@@ -331,12 +189,12 @@ def _manifest_rows(spark: SparkSession, payload: dict,
     CPU+GC costs of payload-heavy scans (measured ~2x the kernel itself).
 
     Eligible when every leaf lies on the computation grid (equal tile size,
-    whole-tile offset) of one shared stored grid, and any stencil's halo
-    strips fit ``_HALO_BROADCAST_MAX``.  Several leaves must be distinct
-    bands of one interleaved table (whole tiles per row group by
-    construction) or dense band-pure tables with identical row-group
-    sequences.  A sparse table (zero tiles dropped at write) is eligible
-    alone.  Returns (manifest_meta, DataFrame) or None.
+    whole-tile offset) of one shared stored grid; a stencil does not
+    change this.  Several leaves must be distinct bands of one interleaved
+    table (whole tiles per row group by construction) or dense band-pure
+    tables with identical row-group sequences.  A sparse table (zero tiles
+    dropped at write) is eligible alone.  Returns (manifest_meta,
+    DataFrame) or None.
     """
     metas = payload["slot_meta"]
     ty_size, tx_size = payload["ty_size"], payload["tx_size"]
@@ -352,10 +210,6 @@ def _manifest_rows(spark: SparkSession, payload: dict,
                 and m["ayoff"] == first["ayoff"] and m["axoff"] == first["axoff"]
                 and m["stored_tiles"] == first["stored_tiles"]):
             return None
-    halo_bytes = sum(_halo_strip_bytes(payload, slot, tile_box)
-                     for slot, m in enumerate(metas) if m["pad"])
-    if halo_bytes > _HALO_BROADCAST_MAX:
-        return None
     same_path = all(m["path"] == first["path"] for m in metas)
     bands = [m["band"] for m in metas]
     if same_path:
@@ -448,7 +302,8 @@ def _manifest_rows(spark: SparkSession, payload: dict,
 def _range_of(spark: SparkSession, n: int) -> DataFrame:
     """Ids ``0..n-1`` as a JVM range, in contiguous runs over up to twice
     the default parallelism: a task's ids are neighbouring tiles or row
-    groups, which its ranged-read cache rewards."""
+    groups, which its read scope rewards — neighbouring tiles share row
+    groups, and a stencil's halo reads find most of theirs decoded."""
     parallelism = max(spark.sparkContext.defaultParallelism * 2, 1)
     return spark.range(0, n, numPartitions=max(min(n, parallelism), 1))
 
@@ -473,13 +328,12 @@ def _build(tree, spark: SparkSession | None):
       one interleaved table, or dense per-band tables with identical
       row-group sequences.  A JVM range of ids names groups of (file, row
       group) pairs, listed in the broadcast, that the kernel decodes with
-      pyarrow; no JVM payload bytes, no shuffle.  Stencil
-      leaves add halo strips (``_halo_pieces``), collected once and shipped
-      inside the payload broadcast while they fit ``_HALO_BROADCAST_MAX``;
-      the kernel merges them at assembly.
+      pyarrow; no JVM payload bytes, no shuffle.  A stencil leaf is not
+      assembled from them: the kernel reads its halo-grown window through
+      ``read_region``, as on the tile grid.
     * **Tile grid** for every other tree — no parquet leaf, unaligned
       grids, differing offsets, planar tables whose row groups differ, a
-      sparse table next to other leaves, halos over the budget: one
+      sparse table next to other leaves: one
       ``(ty, tx)`` row per tile (``_base_grid``), and the kernel reads
       each parquet leaf of its tile through ``read_region``.
     """
@@ -493,46 +347,42 @@ def _build(tree, spark: SparkSession | None):
         df = _base_grid(spark, tile_box)
     else:
         payload["manifest"], df = manifest
-        padded = [slot for slot, m in enumerate(metas) if m["pad"]]
-        if padded:
-            payload["halo_pieces"] = _halo_pieces(spark, payload, padded, tile_box)
 
     bc = spark.sparkContext.broadcast(payload)
     return spark, root, payload, bc, df
 
 
 def _assemble_slot(meta: dict, pieces, y0: int, x0: int, h: int, w: int):
-    """Paste a tile's joined source pieces into a halo-padded window-space
-    array, zero-filled, with NODATA substituted to NaN afterwards (matching
-    the reference's pad-then-substitute order, ``rasters.py:343-369``).
+    """Paste a tile's source pieces into a window-space array, zero-filled,
+    with NODATA substituted to NaN afterwards (matching the reference's
+    pad-then-substitute order, ``rasters.py:343-369``).
 
     ``pieces``: iterable of (py0, px0, sh, sw, buffer-like) tuples, where
     (py0, px0) is the piece's absolute leaf-pixel origin.
     """
-    p = meta["pad"]
     dt = meta["np_dtype"]
-    oy, ox = y0 - p, x0 - p
-    out = np.zeros((h + 2 * p, w + 2 * p), dtype=dt)
+    out = np.zeros((h, w), dtype=dt)
     for py0, px0, sh, sw, buf in pieces:
         ay = py0 - meta["ayoff"]
         ax = px0 - meta["axoff"]
-        iy0, iy1 = max(ay, oy), min(ay + sh, oy + out.shape[0])
-        ix0, ix1 = max(ax, ox), min(ax + sw, ox + out.shape[1])
+        iy0, iy1 = max(ay, y0), min(ay + sh, y0 + h)
+        ix0, ix1 = max(ax, x0), min(ax + sw, x0 + w)
         if iy0 >= iy1 or ix0 >= ix1:
             continue
         data = np.frombuffer(buf, dtype=dt).reshape(sh, sw)
-        out[iy0 - oy : iy1 - oy, ix0 - ox : ix1 - ox] = data[
+        out[iy0 - y0 : iy1 - y0, ix0 - x0 : ix1 - x0] = data[
             iy0 - ay : iy1 - ay, ix0 - ax : ix1 - ax
         ]
     if not meta["ignore_nodata"] and meta["nodata"] is not None:
         out = np.where(out == meta["nodata"], float("nan"), out)
-    return out, (oy, ox)
+    return out, (y0, x0)
 
 
 def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
                      groups: dict) -> None:
     """Manifest-mode piece collection: the worker reads its (file, row-group)
-    assignments directly with pyarrow (C++ decode, zero JVM bytes)."""
+    assignments directly with pyarrow (C++ decode, zero JVM bytes), through
+    the task's read scope, where a stencil leaf's halo reads find them."""
     n_slots = len(payload["slot_meta"])
     file_slots = man["file_slots"]
     shared_slots = file_slots.get("*")  # same-table form: one band->slot map
@@ -550,7 +400,7 @@ def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
     for f, rg in reads:
         band_slot = dict(shared_slots if shared_slots is not None
                          else file_slots[f])
-        b_arr, sy, sx, sh, sw, bufs = pq_raster._decoded_row_group(f, rg)
+        b_arr, sy, sx, sh, sw, bufs = pq_raster.scoped_row_group(f, rg)
         for j in range(len(b_arr)):
             slot = band_slot.get(int(b_arr[j]))
             if slot is None:
@@ -572,10 +422,11 @@ def _tile_results(payload, batch_iter: Iterator[pa.RecordBatch]):
 
     Manifest plan: the task's row groups are decoded and grouped into tiles
     with a per-partition dict (a tile's slots all arrive in one task), and
-    the payloads are sliced zero-copy from the decoded Arrow buffers.  Tile
-    grid: one ``(ty, tx)`` row per tile, and the kernel reads any parquet
-    leaf itself (``read_region``).  Kernels pass their broadcast payload;
-    ``read_array`` runs it in the calling process.
+    the payloads are sliced zero-copy from the decoded Arrow buffers; a
+    stencil leaf is read as on the tile grid.  Tile grid: one ``(ty, tx)``
+    row per tile, and the kernel reads any parquet leaf itself
+    (``read_region``, halo-grown by the leaf's pad).  Kernels pass their
+    broadcast payload; ``read_array`` runs it in the calling process.
     """
     # Read scope: leaf and mosaic reads of this run of tiles reuse decoded
     # row groups (nothing survives the run — see parquet.push_read_scope).
@@ -592,7 +443,6 @@ def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
     slot_meta = payload["slot_meta"]
     tree = payload["tree"]
     man = payload.get("manifest")
-    halo_map = payload.get("halo_pieces", {})
 
     def evaluate(ty: int, tx: int, pieces_by_slot: list):
         # The manifest plan reads every slot of a stored tile in one task;
@@ -604,8 +454,6 @@ def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
                 f"{sum(filled)}/{len(filled)} band slots — stored tile "
                 "split across scan tasks (row-group/tile alignment broken)"
             )
-        for h_slot, py0, px0, sh, sw, buf in halo_map.get((ty, tx), ()):
-            pieces_by_slot[h_slot].append((py0, px0, sh, sw, buf))
         y0, x0 = ty * ty_size, tx * tx_size
         h = min(ty_size, window.ysize - y0)
         w = min(tx_size, window.xsize - x0)
@@ -614,11 +462,14 @@ def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
             projection=payload["projection"],
             shared_hashes=payload["shared_hashes"],
         )
-        # Slots are filled by the manifest plan only: on the tile grid
-        # ``ctx.slots`` stays empty and ``eval_tree`` reads each leaf.
+        # The manifest plan fills the slots of its unpadded leaves.  A
+        # stencil's leaf, and every leaf on the tile grid, stays out of
+        # ``ctx.slots``: ``eval_tree`` reads its (halo-grown) window through
+        # ``read_region``, from the row groups this task's scope holds.
         for slot, pieces in enumerate(pieces_by_slot):
-            ctx.slots[slot], ctx.slot_origins[slot] = _assemble_slot(
-                slot_meta[slot], pieces, y0, x0, h, w)
+            if not slot_meta[slot]["pad"]:
+                ctx.slots[slot], ctx.slot_origins[slot] = _assemble_slot(
+                    slot_meta[slot], pieces, y0, x0, h, w)
         result = K.eval_tree(tree, ctx, x0, y0, w, h)
         result = np.asarray(result)
         if result.shape != (h, w):

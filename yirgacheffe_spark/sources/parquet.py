@@ -25,11 +25,13 @@ row group) pairs on the driver and its workers decode them into tile slots;
 any other tree runs over a tile grid whose kernel reads the layer through
 ``read_window`` in-process.  Both ask this module which row groups hold a
 tile range (``_pruned_row_groups``: the save-time manifest first, parquet
-footers otherwise) and decode them with ``_decoded_row_group``; the tile
-grid decodes a tile's row groups together with ``_decoded_row_groups``, on
-a thread pool sized by the cores the caller owns (pyarrow releases the GIL
-while it decompresses).  ``read_window`` is also the driver-side read
-of ``read_array``, mosaics and the ``evaluate_window`` oracle.
+footers otherwise) and decode them through the read scope
+(``scoped_row_group``), so a stencil's halo reads find the row groups its
+task already decoded; the tile grid decodes a tile's row groups together
+with ``_decoded_row_groups``, on a thread pool sized by the cores the
+caller owns (pyarrow releases the GIL while it decompresses).
+``read_window`` is also the driver-side read of ``read_array``, mosaics
+and the ``evaluate_window`` oracle.
 
 The writers (``write_array_as_raster_table`` here, ``save`` in the
 executor) and the readers share one assumption: the table is a directory on
@@ -386,6 +388,24 @@ def _decoded_row_group(f: str, rg: int) -> tuple:
     return _decode(_pq_handle(f), rg)
 
 
+def scoped_row_group(f: str, rg: int) -> tuple:
+    """``_decoded_row_group`` through the current read scope: a row group
+    the scope holds is not decoded again, and one it lacks is decoded and
+    added, evicting the oldest past ``_READ_SCOPE_MAX_RGS``.  Outside a
+    scope every call decodes."""
+    stack = _scope_stack()
+    if not stack:
+        return _decoded_row_group(f, rg)
+    cache = stack[-1].rgs
+    entry = cache.get((f, rg))
+    if entry is None:
+        entry = _decoded_row_group(f, rg)
+        while len(cache) >= _READ_SCOPE_MAX_RGS:
+            cache.pop(next(iter(cache)))
+        cache[(f, rg)] = entry
+    return entry
+
+
 def _caller_cores() -> int:
     """The cores the calling code owns: inside a Spark task its
     ``spark.task.cpus`` (the executor already runs one task per core), on
@@ -506,19 +526,11 @@ class ParquetRasterLayer(Layer):
         s = self.tile_size
         ty_lo, ty_hi = overlap.yoff // s, (overlap.ymax - 1) // s
         tx_lo, tx_hi = overlap.xoff // s, (overlap.xmax - 1) // s
-        stack = _scope_stack()
-        cache = stack[-1].rgs if stack else {}
         out = np.zeros((overlap.ysize, overlap.xsize), dtype=np_dtype)
         found = np.zeros((ty_hi - ty_lo + 1, tx_hi - tx_lo + 1), dtype=bool)
         for f, rg, _ymm, _xmm in _pruned_row_groups(
                 self.path, self.band, self.band, (ty_lo, ty_hi, tx_lo, tx_hi)):
-            entry = cache.get((f, rg))
-            if entry is None:
-                entry = _decoded_row_group(f, rg)
-                while len(cache) >= _READ_SCOPE_MAX_RGS:
-                    cache.pop(next(iter(cache)))
-                cache[(f, rg)] = entry
-            b_a, ty_a, tx_a, h_a, w_a, bufs = entry
+            b_a, ty_a, tx_a, h_a, w_a, bufs = scoped_row_group(f, rg)
             sel = np.nonzero(
                 (b_a == self.band)
                 & (ty_a >= ty_lo) & (ty_a <= ty_hi)
