@@ -866,7 +866,7 @@ def q_layer_read_array_window(spark, sf_dir):
 
 def q_layer_multiband_sum(spark, sf_dir):
     """Interleaved multiband table (one tile table, bands in shared row
-    groups -> zero-shuffle manifest plan): sum(b1 * b2) where b1 = qty
+    groups -> zero-shuffle tile grid): sum(b1 * b2) where b1 = qty
     and b2 = hab derive from lineitem."""
     import pyarrow.parquet as pq
     from yirgacheffe_spark.sources.parquet import write_multiband_interleaved

@@ -3,10 +3,13 @@ depends on, and print the evidence.
 
 Checks (each FAILS the script if violated):
 
-1. A raster off the computation grid (stored at half the tile size) runs
-   on the tile grid: its ``MapInArrow`` kernel reads a JVM ``Range`` of
-   tile ids and the parquet leaf itself — no ``FileScan parquet`` and no
-   ``Exchange`` (no JVM payload decode, no payload shuffle).
+1. Every raster tree runs on the tile grid: its one ``MapInArrow`` kernel
+   reads a JVM ``Range`` of tile ids and the parquet leaves itself — no
+   ``FileScan`` (no JVM payload decode), no ``Exchange`` (no payload
+   shuffle) and no ``Scan ExistingRDD`` (a parallelized Python RDD would
+   cost every task a second Python worker).  Covered: a table on the
+   computation grid, planar tables, a sparse table, a table off the grid
+   (stored at half the tile size) and a tree with no parquet leaf.
 2. The PIP candidate plan broadcast-joins (or inlines) the polygon side —
    no SortMergeJoin on the page table for a dim-sized polygon list.
 3. Every banded near-dup plan (MinHash candidates on persisted
@@ -24,10 +27,7 @@ Checks (each FAILS the script if violated):
    broadcast decontamination probe, Python-free URL canonical dedup,
    single-Arrow-batch Gopher signals.
 11-12. Broadcast DSIR ratio join; single-Arrow-batch Bloom probe.
-13. A manifest raster plan scans a JVM Range of group ids: no parallelized
-   Python RDD (``Scan ExistingRDD``) under its kernel, so each task runs
-   one Python worker.
-14. Raster actions on one manifest table stay within their job budget,
+13. Raster actions on one table stay within their job budget,
    counted by job group: ``read_array`` 0 (it runs in the driver), ``sum``
    1 (one Arrow collect of the tile partials), a stencil's ``sum`` 1 too
    (each task reads its tiles' halos itself), ``unique`` at most 2, and
@@ -94,9 +94,8 @@ def main() -> int:
         if not ok:
             failures.append(name)
 
-    # 1. tile grid for a raster off the computation grid.  A table stored
-    # at half the computation tile size is unaligned by construction, so
-    # it cannot take the manifest plan.
+    # 1. every raster tree runs on the tile grid: one MapInArrow kernel
+    # over a JVM Range of tile ids, reading its parquet leaves itself.
     import tempfile
 
     import numpy as np
@@ -105,21 +104,35 @@ def main() -> int:
 
     with tempfile.TemporaryDirectory(prefix="plan_audit_") as tmp:
         proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
-        layer = yg.write_array_as_raster_table(
-            os.path.join(tmp, "half_tiles"), np.ones((64, 96), dtype=np.int16),
-            yg.Area(0.0, 0.0, 0.96, -0.64, proj),
-            tile_size=max(constants.TILE_YSIZE // 2, 1),
-        )
-        df = X.tiles_dataframe(X._as_root(layer * 2), spark)  # noqa: SLF001
-        plan = plan_of(df)
-        tree = plan.split("\n\n")[0].splitlines()
-        kernel = [i for i, l in enumerate(tree) if "MapInArrow" in l]
-        ok = (len(kernel) == 1
-              and any("Range" in l for l in subtree(tree, kernel[0]))
-              and "Scan parquet" not in plan and "FileScan" not in plan
-              and "Exchange" not in plan)
-        check("off-grid raster runs on the tile grid: MapInArrow over Range, "
-              "no FileScan parquet, no Exchange", ok, "\n".join(tree))
+        area = yg.Area(0.0, 0.0, 0.96, -0.64, proj)
+        data = np.ones((64, 96), dtype=np.int16)
+
+        def table(name, tile_size=constants.TILE_YSIZE):
+            return yg.write_array_as_raster_table(
+                os.path.join(tmp, name), data, area, tile_size=tile_size)
+
+        a, b = table("a"), table("b")
+        holes = np.zeros((64, 96), dtype=np.int16)
+        holes[5, 7] = 3
+        yg.from_array(holes, (0.0, 0.0), proj).save(
+            os.path.join(tmp, "sparse"), sparse=True, spark=spark)
+        trees = {
+            "aligned": a * 2,
+            "planar": a * 2 + b,
+            "sparse": yg.read_raster(os.path.join(tmp, "sparse")) + 1,
+            "unaligned": table("half_tiles", max(constants.TILE_YSIZE // 2, 1)) * 2,
+            "no leaf": yg.from_array(data, (0.0, 0.0), proj) * 2,
+        }
+        for name, expr in trees.items():
+            plan = plan_of(X.tiles_dataframe(X._as_root(expr), spark))  # noqa: SLF001
+            tree = plan.split("\n\n")[0].splitlines()
+            kernel = [i for i, l in enumerate(tree) if "MapInArrow" in l]
+            ok = (len(kernel) == 1
+                  and any("Range" in l for l in subtree(tree, kernel[0]))
+                  and not any(op in plan for op in
+                              ("Scan parquet", "FileScan", "Exchange", "ExistingRDD")))
+            check(f"{name} raster tree runs on the tile grid: MapInArrow over Range, "
+                  "no FileScan, Exchange or ExistingRDD", ok, "\n".join(tree))
 
     # 2. PIP broadcast / inlined cover
     pts = harness.customer_points(spark, SF_DIR).withColumn(
@@ -271,31 +284,11 @@ def main() -> int:
           and "BatchEvalPython" not in probe_plan)
     check(f"bloom probe: one Arrow batch, no join (ArrowEvalPython x{n_arrow})", ok)
 
-    # 13. manifest raster plan: the kernel reads (file, row group) groups
-    # named by a JVM Range — a Python RDD feeding it would cost every task
-    # a second Python worker.  Two planar tables on the computation grid.
-    with tempfile.TemporaryDirectory(prefix="plan_audit_") as tmp:
-        proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
-        area = yg.Area(0.0, 0.0, 0.96, -0.64, proj)
-        a, b = (
-            yg.write_array_as_raster_table(
-                os.path.join(tmp, name), np.ones((64, 96), dtype=np.int16), area,
-                tile_size=constants.TILE_YSIZE)
-            for name in ("a", "b")
-        )
-        root = X._as_root(a * 2 + b)  # noqa: SLF001
-        payload = X._build(root, spark)[2]  # noqa: SLF001
-        plan = plan_of(X.tiles_dataframe(root, spark))
-        ok = ("manifest" in payload and "Range" in plan
-              and "ExistingRDD" not in plan)
-        check("manifest raster plan scans a JVM Range (no Scan ExistingRDD)", ok,
-              next((l for l in plan.splitlines() if "Range" in l or "ExistingRDD" in l),
-                   "(no Range line)"))
-
-    # 14. raster action job budget on one manifest table: read_array runs
-    # in the driver, sum folds one Arrow collect of its tile partials (a
-    # stencil's tasks read their halos themselves), unique collects its Spark-combined values through one limit, and
-    # save (with or without its sum) is its one sink job.
+    # 13. raster action job budget on one table: read_array runs in the
+    # driver, sum folds one Arrow collect of its tile partials (a stencil's
+    # tasks read their halos themselves), unique collects its
+    # Spark-combined values through one limit, and save (with or without
+    # its sum) is its one sink job.
     sc = spark.sparkContext
 
     def jobs_of(group, action):
@@ -310,15 +303,14 @@ def main() -> int:
     with tempfile.TemporaryDirectory(prefix="plan_audit_") as tmp:
         proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
         s = constants.TILE_YSIZE
-        # 24 tiles in two row groups: a one-partition scan would let a
-        # Spark-side fold of the partials share the kernel's job.
+        # 24 tiles, two runs of the tile grid, so two tasks: a one-partition
+        # scan would let a Spark-side fold of the partials share the
+        # kernel's job.
         table = yg.write_array_as_raster_table(
             os.path.join(tmp, "t"),
             (np.arange(6 * s * 4 * s) % 7).astype(np.int16).reshape(6 * s, 4 * s),
             yg.Area(0.0, 0.0, 4 * s * 0.01, -6 * s * 0.01, proj), tile_size=s)
         stencil = table.conv2d(np.ones((3, 3), np.float32))
-        for expr in (table, stencil):
-            assert "manifest" in X._build(X._as_root(expr), spark)[2]  # noqa: SLF001
         jobs = {
             "read_array": jobs_of("audit-read-array", lambda: table.read_array(0, 0, s, s)),
             "sum": jobs_of("audit-sum", lambda: table.sum(spark=spark)),

@@ -32,9 +32,8 @@ def small_tiles(monkeypatch):
 @pytest.fixture
 def distributed(spark):
     """``distributed(expr)``: the whole computation assembled from the
-    distributed tile plan (``tiles_dataframe(...).toArrow()``), i.e. the
-    manifest plan whenever ``_build`` picks it.
-    ``to_numpy`` evaluates in the driver, so a test that pins a Spark
+    distributed tile plan (``tiles_dataframe(...).toArrow()``): the tile
+    grid, in the runs of tile ids its tasks get.  ``to_numpy`` evaluates in the driver, so a test that pins a Spark
     plan's pixels compares this, not ``to_numpy``, with its oracle."""
     from yirgacheffe_spark.plans import executor
 

@@ -125,10 +125,9 @@ def test_interleaved_multiband_single_scan(spark, tmp_path, distributed):
     want = np.isin(a, list(range(0, 25))) * (b >= 10) * c
     np.testing.assert_array_equal(got, want)
     assert expr.sum(spark=spark) == float(want.sum())
-    # Plan shape: the single-scan multiband path must not shuffle payloads.
+    # Plan shape: the tile grid shuffles no payload.
     plan = expr.to_dataframe(spark=spark)._jdf.queryExecution().executedPlan().toString()
-    payload_side = plan.split("Union")[0]  # the piece-rows branch
-    assert "Exchange hashpartitioning" not in payload_side
+    assert "Exchange" not in plan
     # A stencil over one band of the interleaved table: its halo reads come
     # from row groups that also hold the other bands' tiles.
     conv = layers[2].conv2d(np.ones((3, 3), dtype=np.float32))
@@ -140,12 +139,9 @@ def test_interleaved_multiband_single_scan(spark, tmp_path, distributed):
 
 @pytest.mark.parametrize("stencil", [False, True])
 def test_sparse_single_band_takes_manifest_plan(spark, tmp_path, stencil, distributed):
-    """A sparse table read alone takes the manifest plan: tile presence comes
-    from the pruned row groups' key columns and every absent tile of the
-    box gets a zero-filled manifest row — so f(0) != 0 still covers the
-    holes, and a stencil still sees its neighbours' pixels at their edge."""
-    from yirgacheffe_spark.plans import executor
-
+    """A sparse table read alone, with its tile manifest: every absent tile
+    reads as zeros — so f(0) != 0 still covers the holes, and a stencil
+    still sees its neighbours' pixels at their edge."""
     data = np.zeros((16, 12))
     data[0:3, 0:3] = 7.0
     data[9, 5] = 2.0
@@ -158,8 +154,6 @@ def test_sparse_single_band_takes_manifest_plan(spark, tmp_path, stencil, distri
     if stencil:
         expr = expr.conv2d(np.ones((3, 3), dtype=np.float32))
 
-    _spark, _root, payload, _bc, _df = executor._build(expr, spark)
-    assert "manifest" in payload
     local = evaluate_window(expr)
     np.testing.assert_array_equal(distributed(expr), local)
     np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)

@@ -9,9 +9,10 @@ it costs.
   equals the distributed tile plan on every kind of leaf.
 * Row groups decoded concurrently (ahead of each tile of the tile grid, on
   the driver's cores; a task decodes on the cores it owns) give the same
-  bits as one-by-one decodes, and a read scope never holds more than its
-  bound.  Stencil halos read through a manifest task's scope stay exact
-  when the scope evicts row groups the task still needs.
+  bits as one-by-one decodes, a decoded payload is a view into the
+  column's data buffer, and a read scope never holds more than its
+  bound.  Stencil halos read through a task's scope stay exact when the
+  scope evicts row groups the task still needs.
 * A dense table whose tile manifest lost a row group fails loudly instead
   of reading as zeros.
 """
@@ -27,6 +28,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import PythonException
 
 import yirgacheffe_spark as yg
 from yirgacheffe_spark.plans import executor
@@ -67,10 +69,6 @@ def _documented_fold(data: np.ndarray) -> float:
     return total
 
 
-def _plan(expr, spark) -> str:
-    return "manifest" if "manifest" in executor._build(executor._as_root(expr), spark)[2] else "grid"
-
-
 def test_sum_is_the_documented_fold_on_both_plans_and_after_save(spark, tmp_path):
     data = _wide_floats(1)
     want = _documented_fold(data)
@@ -84,15 +82,12 @@ def test_sum_is_the_documented_fold_on_both_plans_and_after_save(spark, tmp_path
     assert want != flat
 
     aligned = _table(tmp_path, "aligned", data)
-    assert _plan(aligned, spark) == "manifest"
     assert aligned.sum(spark=spark) == want
 
     unaligned = _table(tmp_path, "unaligned", data, tile_size=3)
-    assert _plan(unaligned, spark) == "grid"
     assert unaligned.sum(spark=spark) == want
 
     in_memory = yg.from_array(data, (0.0, 0.0), PROJ)
-    assert _plan(in_memory, spark) == "grid"
     assert in_memory.sum(spark=spark) == want
 
     assert in_memory.save(str(tmp_path / "saved"), and_sum=True, spark=spark) == want
@@ -262,6 +257,23 @@ def test_concurrent_decodes_of_one_file_equal_sequential_ones(tmp_path, monkeypa
             assert [bytes(v) for v in got[key][5]] == [bytes(v) for v in want[5]]
 
 
+def test_decoded_payloads_are_views_into_the_column_buffer(tmp_path):
+    """A decoded payload is a slice of the decoded payload column's one
+    data buffer, not a copy, and holds the stored tile's bytes."""
+    layer = _table(tmp_path, "t", _ints(16, 40, 44))
+    f = os.path.join(layer.path, "part-00000.parquet")
+    stored = pq.ParquetFile(f).read_row_group(1).column("payload").to_pylist()
+    views = pqr._decoded_row_group(f, 1)[5]
+    assert [bytes(v) for v in views] == stored
+    column = views[0].obj
+    assert isinstance(column, pa.Buffer)
+    assert all(v.obj is column for v in views)
+    # Back to back in the buffer, as the column's offsets put them.
+    starts = [np.frombuffer(v, np.uint8).ctypes.data - column.address for v in views]
+    assert starts == list(np.cumsum([0] + [len(v) for v in views[:-1]]) + starts[0])
+    assert 0 <= starts[0] and starts[-1] + len(views[-1]) <= column.size
+
+
 def _scope_peak(monkeypatch) -> list:
     """Instrument every read scope opened from now on; the returned
     one-item list holds the most row groups any of them held at once."""
@@ -305,29 +317,37 @@ def _one_tile_per_row_group(layer):
     return layer
 
 
-def _manifest_kernel_in_one_task(expr, spark) -> np.ndarray:
-    """Every group id of ``expr``'s manifest plan through the kernel in this
+def _kernel_in_one_task(expr, spark) -> np.ndarray:
+    """Every tile of ``expr``'s tile grid through the kernel in this
     process, as one task would run them, assembled into the window."""
-    _spark, root, payload, _bc, _df = executor._build(expr, spark)
-    man = payload["manifest"]
-    ids = pa.RecordBatch.from_arrays(
-        [pa.array(range(len(man["groups"]) + len(man["missing"])), pa.int64())],
-        names=["id"])
+    _spark, root, payload, _bc, df = executor._build(expr, spark)
     win = root.window
     full = np.zeros((win.ysize, win.xsize), dtype=root.datatype.to_numpy())
-    for ty, tx, h, w, result in executor._tile_results(payload, iter([ids])):
+    for ty, tx, h, w, result in executor._tile_results(payload, df.toArrow().to_batches()):
         full[ty * T:ty * T + h, tx * T:tx * T + w] = result
     return full
 
 
+def _most_row_groups_of_a_task(expr, spark) -> int:
+    """The most (file, row group) pairs that one task of ``expr``'s tile
+    grid reads, halos included."""
+    _spark, _root, payload, _bc, df = executor._build(expr, spark)
+    return max(
+        len({(f, rg) for ty, tx in tiles for meta in payload["leaf_meta"]
+             for f, rg, _ymm, _xmm in pqr._pruned_row_groups(
+                 meta["path"], meta["band"], meta["band"],
+                 executor._stored_range(payload, meta, ty, tx))})
+        for tiles in df.rdd.glom().collect())
+
+
 def test_stencil_halos_stay_exact_when_the_read_scope_evicts(spark, tmp_path,
                                                               monkeypatch, distributed):
-    """Stencils on the manifest plan read their halos through the task's
-    read scope.  With one tile per row group, a task holds more row groups
-    than its scope keeps, so halo reads find some evicted and decode them
-    again: tiles and sums still equal the local oracle bit for bit, and the
-    scope never holds more than its bound."""
-    h, w = 48, 64  # 192 tiles of 4
+    """Stencils read their halos through the task's read scope.  With one
+    tile per row group, and more tile-id runs than partitions, a task reads
+    more row groups than its scope keeps, so halo reads find some evicted
+    and decode them again: tiles and sums still equal the local oracle bit
+    for bit, and the scope never holds more than its bound."""
+    h, w = 48, 64  # 192 tiles of 4: 12 runs of 16
     k = np.ones((3, 3), dtype=np.float32)
     a = _one_tile_per_row_group(_table(tmp_path, "a", _ints(20, h, w).astype(np.float32)))
     b = _one_tile_per_row_group(_table(tmp_path, "b", _ints(21, h, w).astype(np.float32)))
@@ -339,15 +359,11 @@ def test_stencil_halos_stay_exact_when_the_read_scope_evicts(spark, tmp_path,
     exprs = {"single": a.conv2d(k), "planar": a.conv2d(k) + b,
              "sparse": sparse_layer.conv2d(k)}
     for name, expr in exprs.items():
-        assert _plan(expr, spark) == "manifest", name
-        _spark, _root, payload, _bc, df = executor._build(expr, spark)
-        man = payload["manifest"]
-        # Ids run groups first, then missing tiles, in even contiguous
-        # ranges: the first task reads this many groups.  The executors'
-        # scopes keep their unpatched bound, so their tasks must overflow it.
-        n_ids = len(man["groups"]) + len(man["missing"])
-        first_task = min(n_ids // df.rdd.getNumPartitions(), len(man["groups"]))
-        assert first_task > pqr._READ_SCOPE_MAX_RGS, name
+        _spark, _root, _payload, _bc, df = executor._build(expr, spark)
+        assert df.rdd.getNumPartitions() < 12, name
+        # The executors' scopes keep their unpatched bound, so their tasks
+        # must overflow it.
+        assert _most_row_groups_of_a_task(expr, spark) > pqr._READ_SCOPE_MAX_RGS, name
         want = np.asarray(evaluate_window(expr))
         np.testing.assert_array_equal(distributed(expr), want, err_msg=name)
         assert expr.sum(spark=spark) == float(want.sum(dtype=np.float64)), name
@@ -355,7 +371,7 @@ def test_stencil_halos_stay_exact_when_the_read_scope_evicts(spark, tmp_path,
     monkeypatch.setattr(pqr, "_READ_SCOPE_MAX_RGS", 2)
     peak = _scope_peak(monkeypatch)
     for name, expr in exprs.items():
-        np.testing.assert_array_equal(_manifest_kernel_in_one_task(expr, spark),
+        np.testing.assert_array_equal(_kernel_in_one_task(expr, spark),
                                       evaluate_window(expr), err_msg=name)
     assert peak[0] == 2
 
@@ -449,10 +465,11 @@ def test_stale_manifest_fails_loudly(spark, tmp_path):
     st = os.stat(path)
     os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
 
-    assert _plan(layer, spark) == "manifest"
-    with pytest.raises(RuntimeError, match="manifest"):
+    # The tasks' reads raise, so Spark reports the failure as a
+    # PythonException that carries the message.
+    with pytest.raises((RuntimeError, PythonException), match="manifest"):
         layer.sum(spark=spark)
-    with pytest.raises(RuntimeError, match="manifest"):
+    with pytest.raises((RuntimeError, PythonException), match="manifest"):
         layer.unique(spark=spark)
     with pytest.raises(RuntimeError, match="manifest"):
         layer.read_array(0, H - 4, W, 4)

@@ -182,30 +182,14 @@ def _executed_plan(expr, spark) -> str:
 
 
 def _assert_tile_grid(expr, spark) -> None:
-    """The tile grid: a JVM range of tile ids, no exchange, no manifest."""
-    from yirgacheffe_spark.plans import executor
-
+    """The tile grid: a JVM range of tile ids, no exchange, no file scan."""
     plan = _executed_plan(expr, spark)
-    assert "Range" in plan and "Exchange" not in plan
-    assert "manifest" not in executor._build(expr, spark)[2]
-
-
-def _assert_manifest_plan(expr, spark) -> None:
-    """The manifest plan: a JVM range of group ids, no exchange."""
-    from yirgacheffe_spark.plans import executor
-
-    plan = _executed_plan(expr, spark)
-    assert "Range" in plan and "Exchange" not in plan
-    assert "manifest" in executor._build(expr, spark)[2]
-
-
-# Storage tiles of 4 lie on the computation grid (the manifest plan); the
-# same pixels stored in tiles of 3 are off it (the tile grid).
-_BOTH_PLANS = ((4, _assert_manifest_plan), (3, _assert_tile_grid))
+    assert "Range" in plan and "Exchange" not in plan and "FileScan" not in plan
 
 
 def test_conv2d_halo_same_on_both_plans(spark, tmp_path, distributed):
-    """A stencil tile reads its halo inside its own task on both plans:
+    """A stencil tile reads its halo inside its own task, whether the table
+    is stored on the computation grid (tiles of 4) or off it (tiles of 3):
     its tiles and its sum equal the local oracle bit for bit."""
     import numpy as np
 
@@ -216,12 +200,12 @@ def test_conv2d_halo_same_on_both_plans(spark, tmp_path, distributed):
     data = rng.integers(0, 50, (20, 24)).astype(np.float32)
     proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
     area = yg.Area(0.0, 0.0, 0.24, -0.20, proj)
-    for tile_size, assert_plan in _BOTH_PLANS:
+    for tile_size in (4, 3):
         layer = yg.write_array_as_raster_table(
             str(tmp_path / f"conv_src{tile_size}"), data, area, tile_size=tile_size
         )
         expr = layer.conv2d(np.ones((3, 3), dtype=np.float32))
-        assert_plan(expr, spark)
+        _assert_tile_grid(expr, spark)
         local = kernel.evaluate_window(expr)
         np.testing.assert_array_equal(distributed(expr), local)
         np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
@@ -230,10 +214,10 @@ def test_conv2d_halo_same_on_both_plans(spark, tmp_path, distributed):
 
 def test_conv2d_over_widened_window_sees_neighbour_data(spark, tmp_path, distributed):
     """A stencil window widened beyond stored coverage must still read real
-    neighbour pixels at the coverage edge: tiles just outside the data get
-    a row (unpadded-coverage missing grid) and read their halo across the
-    coverage edge, on both plans.  Previously those tiles were dropped
-    entirely and the border one tile outside the data evaluated to zeros."""
+    neighbour pixels at the coverage edge: tiles just outside the data read
+    their halo across the coverage edge, for tables stored on and off the
+    computation grid.  Previously those tiles were dropped entirely and
+    the border one tile outside the data evaluated to zeros."""
     import numpy as np
 
     import yirgacheffe_spark as yg
@@ -242,35 +226,32 @@ def test_conv2d_over_widened_window_sees_neighbour_data(spark, tmp_path, distrib
     rng = np.random.default_rng(5)
     data = rng.integers(1, 9, (8, 8)).astype(np.float32)
     proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
-    for tile_size, assert_plan in _BOTH_PLANS:
+    for tile_size in (4, 3):
         layer = yg.write_array_as_raster_table(
             str(tmp_path / f"src{tile_size}"), data, yg.Area(0.0, 0.0, 0.08, -0.08, proj),
             tile_size=tile_size,
         )
         wide = layer.as_area(yg.Area(0.0, 0.0, 0.16, -0.16, proj))
         expr = wide.conv2d(np.ones((3, 3), np.float32))
-        assert_plan(expr, spark)
+        _assert_tile_grid(expr, spark)
         local = kernel.evaluate_window(expr)
         assert local[8].sum() > 0  # the border outside coverage is nonzero
         np.testing.assert_array_equal(distributed(expr), local)
         np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
 
 
-def test_conv2d_manifest_halo_path_matches_jvm(spark, tmp_path, monkeypatch,
-                                               distributed):
-    """When storage tiles coincide with computation tiles, a stencil query
-    takes the manifest body (pyarrow-direct decode), and each task reads its
-    tiles' halo-grown windows itself.  Results must be bit-identical to the
-    local oracle — including tiles outside stored coverage, which must
-    still read their neighbours' pixels."""
+def test_conv2d_manifest_halo_path_matches_jvm(spark, tmp_path, distributed):
+    """A stencil over a table stored on the computation grid, with its tile
+    manifest: each task reads its tiles' halo-grown windows itself.
+    Results must be bit-identical to the local oracle — including tiles
+    outside stored coverage, which must still read their neighbours'
+    pixels."""
     import numpy as np
 
     import yirgacheffe_spark as yg
-    import yirgacheffe_spark.constants as C
-    from yirgacheffe_spark.plans import executor, kernel
+    from yirgacheffe_spark.plans import kernel
+    from yirgacheffe_spark.sources import parquet as pqr
 
-    monkeypatch.setattr(C, "TILE_YSIZE", 4)
-    monkeypatch.setattr(C, "TILE_XSIZE", 4)
     rng = np.random.default_rng(31)
     data = rng.integers(1, 50, (20, 24)).astype(np.float32)
     proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
@@ -278,12 +259,8 @@ def test_conv2d_manifest_halo_path_matches_jvm(spark, tmp_path, monkeypatch,
         str(tmp_path / "conv_src"), data, yg.Area(0.0, 0.0, 0.24, -0.20, proj),
         tile_size=4,
     )
+    assert pqr.read_tile_manifest(layer.path)
     expr = layer.conv2d(np.ones((3, 3), dtype=np.float32))
-    # The padded-manifest plan must actually be eligible here.
-    payload = executor._plan_payload(executor._as_root(expr))
-    box = (0, payload["tiles_y"] - 1, 0, payload["tiles_x"] - 1)
-    assert executor._manifest_rows(spark, payload, box) is not None
-
     local = kernel.evaluate_window(expr)
     np.testing.assert_array_equal(distributed(expr), local)
     np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
@@ -293,9 +270,6 @@ def test_conv2d_manifest_halo_path_matches_jvm(spark, tmp_path, monkeypatch,
     # real neighbour pixels too.
     wide = layer.as_area(yg.Area(0.0, 0.0, 0.32, -0.28, proj))
     wexpr = wide.conv2d(np.ones((3, 3), np.float32))
-    wpayload = executor._plan_payload(executor._as_root(wexpr))
-    wbox = (0, wpayload["tiles_y"] - 1, 0, wpayload["tiles_x"] - 1)
-    assert executor._manifest_rows(spark, wpayload, wbox) is not None
     wlocal = kernel.evaluate_window(wexpr)
     assert wlocal[20].sum() > 0
     np.testing.assert_array_equal(distributed(wexpr), wlocal)
@@ -303,18 +277,16 @@ def test_conv2d_manifest_halo_path_matches_jvm(spark, tmp_path, monkeypatch,
     assert wexpr.sum(spark=spark) == float(wlocal.sum(dtype=np.float64))
 
 
-def test_multi_table_planar_manifest_matches(spark, tmp_path, monkeypatch, distributed):
-    """Per-band tables on one grid take the co-partitioned multi-table
-    manifest scan (zero shuffles, slot completeness verified) and match
-    the local oracle bit-for-bit."""
+def test_multi_table_planar_manifest_matches(spark, tmp_path, distributed):
+    """Per-band tables on one grid, next to each other in one expression,
+    match the local oracle bit for bit: plain, with a stencil on one of
+    them over a window widened past the data, and with tables whose
+    stored grids differ."""
     import numpy as np
 
     import yirgacheffe_spark as yg
-    import yirgacheffe_spark.constants as C
-    from yirgacheffe_spark.plans import executor, kernel
+    from yirgacheffe_spark.plans import kernel
 
-    monkeypatch.setattr(C, "TILE_YSIZE", 4)
-    monkeypatch.setattr(C, "TILE_XSIZE", 4)
     rng = np.random.default_rng(32)
     a = rng.integers(0, 90, (16, 20)).astype(np.int16)
     b = rng.integers(0, 900, (16, 20)).astype(np.int16)
@@ -323,50 +295,40 @@ def test_multi_table_planar_manifest_matches(spark, tmp_path, monkeypatch, distr
     la = yg.write_array_as_raster_table(str(tmp_path / "a"), a, area, tile_size=4)
     lb = yg.write_array_as_raster_table(str(tmp_path / "b"), b, area, tile_size=4)
     expr = la * 2 + (lb >= 300) * la
-
-    payload = executor._plan_payload(executor._as_root(expr))
-    box = (0, payload["tiles_y"] - 1, 0, payload["tiles_x"] - 1)
-    assert executor._manifest_rows(spark, payload, box) is not None
+    _assert_tile_grid(expr, spark)
 
     local = kernel.evaluate_window(expr)
     np.testing.assert_array_equal(distributed(expr), local)
     np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
     assert expr.sum(spark=spark) == float(local.sum(dtype=np.float64))
 
-    # A stencil on one band table next to a plain one: only the padded slot
-    # reads its halo-grown window, including tiles of a window widened past
+    # A stencil on one band table next to a plain one: only the padded leaf
+    # reads a halo-grown window, including tiles of a window widened past
     # the data.
     wide = yg.Area(0.0, 0.0, 0.28, -0.24, proj)
     sexpr = (la.as_area(wide).conv2d(np.ones((3, 3), np.float32))
              + lb.as_area(wide))
-    spayload = executor._plan_payload(executor._as_root(sexpr))
-    sbox = (0, spayload["tiles_y"] - 1, 0, spayload["tiles_x"] - 1)
-    assert executor._manifest_rows(spark, spayload, sbox) is not None
     slocal = kernel.evaluate_window(sexpr)
     np.testing.assert_array_equal(distributed(sexpr), slocal)
     np.testing.assert_array_equal(sexpr.to_numpy(spark=spark), slocal)
 
-    # Tables whose stored grids differ (different heights) must NOT be
-    # stitched by the multi-table manifest — the tile grid takes over.
+    # Tables whose stored grids differ (different heights).
     c = rng.integers(0, 9, (12, 20)).astype(np.int16)
     lc = yg.write_array_as_raster_table(
         str(tmp_path / "c"), c, yg.Area(0.0, 0.0, 0.20, -0.12, proj), tile_size=4)
     expr2 = la + lc
-    payload2 = executor._plan_payload(executor._as_root(expr2))
-    box2 = (0, payload2["tiles_y"] - 1, 0, payload2["tiles_x"] - 1)
-    assert executor._manifest_rows(spark, payload2, box2) is None
     local2 = kernel.evaluate_window(expr2)
     np.testing.assert_array_equal(distributed(expr2), local2)
     np.testing.assert_array_equal(expr2.to_numpy(spark=spark), local2)
 
 
 def test_manifest_plan_scans_a_jvm_range(spark, tmp_path, distributed):
-    """The manifest plan feeds its kernel from a JVM ``Range`` over group
-    ids, not a parallelized Python RDD (``Scan ExistingRDD``), so each task
-    runs one Python worker: a single table, the planar three-table aoh
-    shape, and a sparse table."""
+    """The tile grid feeds its kernel from a JVM ``Range`` of tile ids, not
+    a parallelized Python RDD (``Scan ExistingRDD``), so each task runs one
+    Python worker: a single table, the planar three-table aoh shape, and a
+    sparse table."""
     import yirgacheffe_spark as yg
-    from yirgacheffe_spark.plans import executor, kernel
+    from yirgacheffe_spark.plans import kernel
 
     rng = np.random.default_rng(41)
     proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
@@ -386,8 +348,6 @@ def test_manifest_plan_scans_a_jvm_range(spark, tmp_path, distributed):
     assert not sparse.dense
 
     for expr in (qty * 2, aoh, sparse + 1):
-        _s, _root, payload, _bc, _df = executor._build(expr, spark)
-        assert "manifest" in payload
         plan = _executed_plan(expr, spark)
         assert "Range" in plan and "ExistingRDD" not in plan, plan
         local = kernel.evaluate_window(expr)
@@ -396,12 +356,13 @@ def test_manifest_plan_scans_a_jvm_range(spark, tmp_path, distributed):
 
 
 def test_planar_manifest_more_groups_than_partitions(spark, tmp_path, distributed):
-    """Planar tables with more row-group groups than range partitions, in a
-    window widened past the data: each range id carries one whole group, so
-    every band of a tile meets in one task (the kernel's slot check would
-    raise otherwise), and the tiles outside the data are zero-filled."""
+    """Planar tables with more tile-id runs than range partitions, in a
+    window widened past the data: every tile is evaluated once, in runs
+    that each read their own row groups, and the tiles outside the data are
+    zero-filled."""
     import yirgacheffe_spark as yg
     from yirgacheffe_spark.plans import executor, kernel
+    from yirgacheffe_spark.sources import parquet as pqr
 
     rng = np.random.default_rng(42)
     proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
@@ -416,12 +377,9 @@ def test_planar_manifest_more_groups_than_partitions(spark, tmp_path, distribute
     wide = yg.Area(0.0, 0.0, 0.48, -0.72, proj)
     expr = la.as_area(wide) * 3 + lb.as_area(wide) + 1  # f(0) != 0
 
-    payload = executor._plan_payload(executor._as_root(expr))
-    box = (0, payload["tiles_y"] - 1, 0, payload["tiles_x"] - 1)
-    man, df = executor._manifest_rows(spark, payload, box)
-    assert len(man["groups"]) > df.rdd.getNumPartitions()
-    assert all(len(group) == 2 for group in man["groups"])
-    assert man["missing"]
+    _spark, _root, payload, _bc, df = executor._build(expr, spark)
+    runs = -(-payload["tiles_y"] * payload["tiles_x"] // pqr.ROW_GROUP_TILES)
+    assert runs > df.rdd.getNumPartitions()
 
     local = kernel.evaluate_window(expr)
     np.testing.assert_array_equal(distributed(expr), local)

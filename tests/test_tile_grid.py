@@ -1,14 +1,16 @@
-"""The tile grid: every tree whose parquet leaves are not all on the
-computation grid runs over a JVM range of tile ids, and the kernel reads
-its parquet leaves in-process through ``ParquetRasterLayer.read_window``.
+"""The tile grid: every tree runs over a JVM range of tile ids, in runs of
+``parquet.ROW_GROUP_TILES``, and the kernel reads its parquet leaves
+in-process through ``ParquetRasterLayer.read_window``.
 
 Each case is compared against the one-tile local oracle
 (``kernel.evaluate_window``); the data are small integers so sums are
-exact under any addition order.
+exact under any addition order.  The schedule (every tile once, runs of
+whole row groups) and the indexed row-group lookup are tested directly.
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
 
@@ -105,7 +107,6 @@ def test_tile_grid_matches_local_oracle(spark, tmp_path, case, distributed):
     make = CASES[case]
     expr = make(tmp_path, spark) if case == "sparse_next_to_dense" else make(tmp_path)
     root = executor._as_root(expr)
-    assert "manifest" not in executor._build(root, spark)[2]
     plan = root.to_dataframe(spark=spark)._jdf.queryExecution().executedPlan().toString()
     assert "Range" in plan and "Exchange" not in plan
 
@@ -164,3 +165,57 @@ def test_save_clusters_rows_of_a_tile_grid_tree(spark, tmp_path):
     spans = [ymm[1] - ymm[0] + 1
              for rows in pqr.read_tile_manifest(out).values() for _rg, ymm, _x, _b in rows]
     assert spans and max(spans) <= max_rows < tiles_y, (spans, max_rows, tiles_y)
+
+
+@pytest.mark.parametrize("n_y, n_x", [(1, 1), (3, 5), (4, 4), (1, 17), (6, 4), (13, 11),
+                                      (40, 25)])
+def test_grid_runs_every_tile_once_in_whole_row_groups(spark, n_y, n_x):
+    """The tile grid lists every tile of the window exactly once, in
+    row-major order, and every partition starts at a multiple of
+    ``ROW_GROUP_TILES``: on a table stored on the computation grid, no two
+    tasks decode one row group."""
+    run = pqr.ROW_GROUP_TILES
+    parts = executor._base_grid(spark, n_y, n_x).rdd.glom().collect()
+    ids = [[ty * n_x + tx for ty, tx in rows] for rows in parts]
+    assert [i for rows in ids for i in rows] == list(range(n_y * n_x))
+    assert all(rows[0] % run == 0 for rows in ids if rows), ids
+    assert len(parts) <= max(2 * spark.sparkContext.defaultParallelism, 1)
+
+
+def test_indexed_row_group_lookup_equals_a_full_scan(tmp_path):
+    """``_pruned_row_groups`` finds a table's row groups through an index of
+    its listing by first tile row.  Over random listings — row groups that
+    span one tile row or many, and some without statistics, which may hold
+    any tile — it returns what a filter over every row group returns."""
+    rng = np.random.default_rng(3)
+
+    def minmax(lo_max, span_max):
+        if rng.random() < 0.1:
+            return None
+        lo = int(rng.integers(0, lo_max))
+        return [lo, lo + int(rng.integers(0, span_max + 1))]
+
+    for trial in range(20):
+        path = str(tmp_path / f"t{trial}")
+        os.makedirs(path)
+        span = (1, 3, 40)[trial % 3]
+        entries = {
+            f"part-{i:05d}.parquet": [
+                [rg, minmax(60, span), minmax(30, 4), minmax(3, 1)]
+                for rg in range(int(rng.integers(1, 40)))]
+            for i in range(3)}
+        with open(os.path.join(path, pqr.MANIFEST_JSON), "w", encoding="utf-8") as fp:
+            json.dump({"version": 2, "entries": entries}, fp)
+        rows = [(os.path.join(path, name), r[0], *(tuple(v) if v else None for v in r[1:]))
+                for name in sorted(entries) for r in entries[name]]
+        for _ in range(50):
+            sy_lo, sx_lo, b_lo = (int(v) for v in rng.integers(-2, (62, 32, 4)))
+            sy_hi = sy_lo + int(rng.integers(0, 8))
+            sx_hi = sx_lo + int(rng.integers(0, 8))
+            b_hi = b_lo + int(rng.integers(0, 2))
+            want = [(f, rg, y, x) for f, rg, y, x, b in rows
+                    if not (b and (b[1] < b_lo or b[0] > b_hi))
+                    and not (y and (y[1] < sy_lo or y[0] > sy_hi))
+                    and not (x and (x[1] < sx_lo or x[0] > sx_hi))]
+            assert pqr._pruned_row_groups(
+                path, b_lo, b_hi, (sy_lo, sy_hi, sx_lo, sx_hi)) == want

@@ -16,9 +16,10 @@ TILE_YSIZE = int(os.environ.get("YG_SPARK_TILE_YSIZE", "512"))
 TILE_XSIZE = int(os.environ.get("YG_SPARK_TILE_XSIZE", "512"))
 
 # Tile size used when *storing* rasters as parquet tile tables.  Kept equal to
-# the computation tile size by default so aligned reads take the manifest plan
-# (an unaligned leaf is read tile by tile inside the kernel), but either may
-# be overridden.
+# the computation tile size by default, so a computation tile reads one stored
+# tile and a run of the tile grid decodes whole row groups, once; either may
+# be overridden (a leaf off the computation grid reads the stored tiles each
+# computation tile touches).
 STORAGE_TILE_SIZE = int(os.environ.get("YG_SPARK_STORAGE_TILE_SIZE", "512"))
 
 # Default shuffle partitions for a local session; on a real cluster this is

@@ -18,8 +18,9 @@ so float64 aggregation is exact and order-independent (no fp-hash flakes).
 
 Raster tables are materialised once per (sf_dir) under /tmp and read back as
 ``ParquetRasterLayer``s, so oracle queries exercise the real raster
-plans (the manifest plan, or the tile grid's in-kernel leaf reads).  (Fixture *construction* is driver-side pyarrow: it is
-test plumbing, not the engine; at real scale rasters arrive as tables.)
+plan (the tile grid's in-kernel leaf reads).  (Fixture *construction* is
+driver-side pyarrow: it is test plumbing, not the engine; at real scale
+rasters arrive as tables.)
 """
 
 from __future__ import annotations
@@ -317,10 +318,10 @@ def bench_rasters_multiband(sf_dir: str, repeat: int = 48) -> dict[str, ParquetR
     the save input) to decode ALL bands' payloads — 3x the bytes for a
     1-band read, and row-group band statistics cannot prune interleaved
     groups.  Planar per-band tables keep the single scan for
-    multi-channel expressions (the manifest scan co-partitions the
-    band tables' row groups by their tile ranges) while 1-band queries
-    decode only their own band — the 100 TB-correct layout for mixed
-    workloads.
+    multi-channel expressions (a tile-grid task reads the same tile run
+    of every band table, whose row groups hold the same tiles) while
+    1-band queries decode only their own band — the 100 TB-correct
+    layout for mixed workloads.
     """
     base = os.path.join(_cache_dir(sf_dir), f"bench_pb16_r{repeat}")
     names = ("qty", "elev", "hab")

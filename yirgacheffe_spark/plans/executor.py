@@ -3,35 +3,25 @@
 Physical shape of every computation:
 
 1. **Plan (driver)** — resolve the operation area/window with the reference's
-   extent algebra, split the window into a grid of tiles, and classify
-   leaves: parquet-backed rasters, and everything else (in-memory arrays,
-   constants, generated layers), which ships inside the kernel closure via a
-   broadcast.  ``_build`` picks one of two plans:
-
-   * the **manifest plan**, whenever every parquet leaf lies on the
-     computation grid (one table, one interleaved multiband table, or
-     per-band tables whose row-group sequences match): the leaves become
-     *slots*, the driver lists the (file, row group) pairs that survive
-     manifest/footer-statistics pruning, a JVM range of group ids hands
-     them to tasks, and workers decode them through the task's read scope
-     with pyarrow — no JVM payload decode, no shuffle.  A stencil's leaf
-     is read like a tile-grid leaf: its halo-grown window, in the task,
-     from the row groups the scope holds or decodes.
-   * the **tile grid** for every other tree, including one with no parquet
-     leaf: a JVM range of tile ids, and the kernel reads each parquet leaf
-     of its tile in-process (``ParquetRasterLayer.read_window`` over the
-     task's decoded-row-group cache), exactly as the ``evaluate_window``
-     oracle does.
+   extent algebra and split the window into a grid of tiles.  Every tree
+   runs on the **tile grid** (``_build``): a JVM range of tile ids, cut
+   into runs of ``parquet.ROW_GROUP_TILES`` ids (``_base_grid``).  The
+   tree, with its non-parquet leaves (in-memory arrays, constants,
+   generated layers), ships to the kernel in a broadcast.  The kernel
+   reads each parquet leaf of its tile in-process
+   (``ParquetRasterLayer.read_window`` over the task's read scope, grown
+   by the leaf's stencil halo), exactly as the ``evaluate_window`` oracle
+   does — no JVM payload decode, no shuffle.
 2. **Execute (cluster)** — one ``mapInArrow`` kernel per stage evaluates the
    *whole* numpy expression tree per tile (operator fusion, per-tile CSE),
    emitting per-tile aggregate partials, or result tiles that ``save``'s
    tasks write to parquet themselves (the sink, ``_write_bands``: one job
    per band, no tile crosses to the JVM, and the driver commits the files
-   its collect returned once every band's job has succeeded).  The tile
-   grid decodes the row groups of each tile that its read scope lacks
-   together, on one thread per core the caller owns: several in
-   ``read_array`` on the driver, one in a task, where Spark already runs a
-   task per core.
+   its collect returned once every band's job has succeeded).  Ahead of
+   each tile, the kernel decodes the row groups its leaves read that the
+   read scope lacks, together, on one thread per core the caller owns:
+   several in ``read_array`` on the driver, one in a task, where Spark
+   already runs a task per core.
    sum/min/max are one Spark job, a stencil's too: they collect their
    ``(ty, tx, partial)`` rows with one Arrow collect and fold them on the
    driver in a fixed order.  unique combines its per-tile value counts by
@@ -50,18 +40,25 @@ Implementation notes for throughput:
   multi-megabyte binaries, and Arrow buffers are sliced zero-copy into
   numpy, where pandas conversion would materialise Python bytes per tile.
 * One Python worker per task.  A kernel's input rows come from the JVM (a
-  ``spark.range`` of manifest group ids or tile ids), never from a
-  parallelized Python RDD, which would start a second worker per task just
-  to emit rows.  Every kernel body is wrapped in ``_worker.task_entry``,
-  the library-wide Python task entry hook, so the next task on the same
-  worker skips PySpark's per-task zip-archive re-read (see ``_worker``).
+  ``spark.range`` of tile-id runs), never from a parallelized Python RDD,
+  which would start a second worker per task just to emit rows.  Every
+  kernel body is wrapped in ``_worker.task_entry``, the library-wide
+  Python task entry hook, so the next task on the same worker skips
+  PySpark's per-task zip-archive re-read (see ``_worker``).
+* Runs of whole row groups: the writers fill row groups, in row-major tile
+  order, with ``parquet.row_group_tiles`` tiles (16, or 8 or 4 for wider
+  dtypes at 512-pixel tiles, each of which divides ``ROW_GROUP_TILES``),
+  so on a table stored on the computation grid each row group is decoded
+  by one task, once.  A task holds at most its read scope's row groups,
+  whatever the table's size.
 * Driver-side plan construction keeps py4j chatter low: a plan is one JVM
-  range, and manifests and footer statistics are cached per (file,
+  range and lists no row group; the kernels find theirs in the indexed
+  listings (manifests and footer statistics, cached per file and
   mtime_ns), so repeated terminal actions cost milliseconds of planning.
 
 Scale notes: tiles are the unit of parallelism and shuffle keys are tile
-coordinates, so plans scale by adding executors; neither raster plan
-shuffles a payload.  sum/min/max bring one 16-byte ``(ty, tx, partial)``
+coordinates, so plans scale by adding executors; the tile grid shuffles no
+payload.  sum/min/max bring one 16-byte ``(ty, tx, partial)``
 row per tile to the driver, so their driver memory grows with the number
 of tiles (see ``_ordered_sum`` for the bound).  unique brings at most
 ``max_values + 1`` combined rows.  ``save`` brings one row per task (its
@@ -125,26 +122,19 @@ def _plan_payload(root: LayerOperation):
     tiles_y = math.ceil(window.ysize / ty_size)
     tiles_x = math.ceil(window.xsize / tx_size)
 
-    leaves = K.collect_parquet_leaves(root)
     paddings = K.collect_leaf_paddings(root)
-    slot_meta = []
-    for i, leaf in enumerate(leaves):
-        leaf._slot_index = i  # noqa: SLF001 — survives pickling with the tree
+    leaf_meta = []
+    for leaf in K.collect_parquet_leaves(root):
         axoff, ayoff = leaf.region_pixel_origin(area)
-        slot_meta.append(
+        leaf_meta.append(
             {
                 "pad": paddings.get(id(leaf), 0),
                 "S": leaf.tile_size,
                 "ayoff": ayoff,
                 "axoff": axoff,
-                "np_dtype": leaf.datatype.to_numpy(),
-                "nodata": leaf.nodata,
-                "ignore_nodata": leaf._ignore_nodata,  # noqa: SLF001
                 "path": leaf.path,
                 "band": leaf.band,
                 "stored_tiles": leaf.stored_tiles,
-                "interleaved": getattr(leaf, "interleaved", False),
-                "dense": getattr(leaf, "dense", True),
             }
         )
 
@@ -159,346 +149,104 @@ def _plan_payload(root: LayerOperation):
         "tiles_y": tiles_y,
         "tiles_x": tiles_x,
         "shared_hashes": shared,
-        "slot_meta": slot_meta,
+        "leaf_meta": leaf_meta,
         "out_dtype": root.datatype.to_numpy(),
     }
 
 
-def _stored_range(payload: dict, meta: dict, tile_box: tuple[int, int, int, int],
-                  pad: int) -> tuple[int, int, int, int]:
-    """Stored-tile range (sy_lo, sy_hi, sx_lo, sx_hi) of a leaf that the
-    tile box, grown by ``pad`` pixels, can touch."""
-    s = meta["S"]
+def _stored_range(payload: dict, meta: dict, ty: int, tx: int) -> tuple[int, int, int, int]:
+    """Stored-tile range (sy_lo, sy_hi, sx_lo, sx_hi) of a leaf that tile
+    (ty, tx), grown by the leaf's pad, can touch."""
+    s, pad = meta["S"], meta["pad"]
     ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    ty_lo, ty_hi, tx_lo, tx_hi = tile_box
     stored_y, stored_x = meta["stored_tiles"]
     window = payload["window"]
-    y_px_lo = ty_lo * ty_size - pad + meta["ayoff"]
-    y_px_hi = min((ty_hi + 1) * ty_size, window.ysize) + pad + meta["ayoff"]
-    x_px_lo = tx_lo * tx_size - pad + meta["axoff"]
-    x_px_hi = min((tx_hi + 1) * tx_size, window.xsize) + pad + meta["axoff"]
+    y_px_lo = ty * ty_size - pad + meta["ayoff"]
+    y_px_hi = min((ty + 1) * ty_size, window.ysize) + pad + meta["ayoff"]
+    x_px_lo = tx * tx_size - pad + meta["axoff"]
+    x_px_hi = min((tx + 1) * tx_size, window.xsize) + pad + meta["axoff"]
     return (max(y_px_lo // s, 0), min((y_px_hi - 1) // s, stored_y - 1),
             max(x_px_lo // s, 0), min((x_px_hi - 1) // s, stored_x - 1))
 
 
-def _manifest_rows(spark: SparkSession, payload: dict,
-                   tile_box: tuple[int, int, int, int]):
-    """Pyarrow-direct scan plan: (file, row-group) groups the kernel
-    reads itself (C++ parquet decode inside the Python worker), skipping the
-    JVM's payload decode AND the JVM->Arrow re-conversion — the two largest
-    CPU+GC costs of payload-heavy scans (measured ~2x the kernel itself).
-
-    Eligible when every leaf lies on the computation grid (equal tile size,
-    whole-tile offset) of one shared stored grid; a stencil does not
-    change this.  Several leaves must be distinct bands of one interleaved
-    table (whole tiles per row group by construction) or dense band-pure
-    tables with identical row-group sequences.  A sparse table (zero tiles
-    dropped at write) is eligible alone.  Returns (manifest_meta,
-    DataFrame) or None.
-    """
-    metas = payload["slot_meta"]
-    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    first = metas[0]
-    for m in metas:
-        aligned = (
-            (m["dense"] or len(metas) == 1)
-            and m["S"] == ty_size == tx_size
-            and m["ayoff"] % m["S"] == 0
-            and m["axoff"] % m["S"] == 0
-        )
-        if not (aligned
-                and m["ayoff"] == first["ayoff"] and m["axoff"] == first["axoff"]
-                and m["stored_tiles"] == first["stored_tiles"]):
-            return None
-    same_path = all(m["path"] == first["path"] for m in metas)
-    bands = [m["band"] for m in metas]
-    if same_path:
-        if len(set(bands)) != len(bands):
-            return None
-        if len(metas) > 1 and not all(m["interleaved"] for m in metas):
-            return None
-    else:
-        # Planar multi-table form: each leaf is its own (band-pure)
-        # table on the SAME grid — e.g. per-channel rasters.  The leaves'
-        # row groups are co-partitioned by their (identical) tile-range
-        # sequences below, so every band of a tile still reaches one scan
-        # task with zero shuffles — the interleaved table's property —
-        # while single-band queries elsewhere decode only their own band.
-        if len({(m["path"], m["band"]) for m in metas}) != len(metas):
-            return None
-
-    s = first["S"]
-    ayoff, axoff = first["ayoff"], first["axoff"]
-    ty_lo, ty_hi, tx_lo, tx_hi = tile_box
-    rng = _stored_range(payload, first, tile_box, 0)
-
-    if same_path:
-        stats = pq_raster._pruned_row_groups(first["path"], min(bands), max(bands), rng)
-        groups = [[(f, rg)] for f, rg, _ymm, _xmm in stats]
-        file_slots = {"*": [(int(b), i) for i, b in enumerate(bands)]}
-    else:
-        # One stats pass per distinct table; all leaves must expose
-        # IDENTICAL ordered (rg, tile-range) sequences (our writer is
-        # deterministic, so per-channel tables of one grid do) — then
-        # row group i of every table holds the same tile run, and group i
-        # lists all of them.  Any divergence takes the tile grid.
-        per_slot = [pq_raster._pruned_row_groups(m["path"], m["band"], m["band"], rng)
-                    for m in metas]
-        shape0 = [(rg, ymm, xmm) for _f, rg, ymm, xmm in per_slot[0]]
-        for st in per_slot[1:]:
-            if [(rg, ymm, xmm) for _f, rg, ymm, xmm in st] != shape0:
-                return None
-        if any(ymm is None or xmm is None for _rg, ymm, xmm in shape0):
-            return None
-        groups = [[(f, rg) for f, rg, _ymm, _xmm in seq] for seq in zip(*per_slot)]
-        file_slots = {}
-        for slot, st in enumerate(per_slot):
-            band = int(metas[slot]["band"])
-            for f, _rg, _ymm, _xmm in st:
-                file_slots.setdefault(f, []).append((band, slot))
-
-    # Box tiles with no stored row exist as zeros: one (ty, tx) entry
-    # each.  A dense table's coverage is a closed-form rectangle; a
-    # sparse one's is the key columns of the pruned row groups (no payload
-    # decode).
-    off_y, off_x = ayoff // s, axoff // s
-    if first["dense"]:
-        stored_y, stored_x = first["stored_tiles"]
-
-        def stored(ty: int, tx: int) -> bool:
-            return -off_y <= ty < stored_y - off_y and -off_x <= tx < stored_x - off_x
-    else:
-        present = set()
-        for f, rg, _ymm, _xmm in stats:
-            keys = pq_raster._pq_handle(f).read_row_group(
-                rg, columns=["band", "tile_y", "tile_x"])
-            for b, sy, sx in zip(*(col.to_pylist() for col in keys.columns)):
-                if b == first["band"]:
-                    present.add((sy - off_y, sx - off_x))
-
-        def stored(ty: int, tx: int) -> bool:
-            return (ty, tx) in present
-    missing = [(ty, tx)
-               for ty in range(ty_lo, ty_hi + 1)
-               for tx in range(tx_lo, tx_hi + 1)
-               if not stored(ty, tx)]
-
-    # The scan is a JVM range over group ids: a group (one row group per
-    # leaf table) or a missing tile per id, looked up in this broadcast
-    # meta by the kernel.  An id is the unit a task reads, so every slot
-    # of a stored tile reaches one task by construction, and each task
-    # runs one Python worker (a parallelized Python RDD would add a
-    # second one per task just to emit the ids).
-    meta = {
-        "file_slots": file_slots,
-        "groups": groups,
-        "missing": missing,
-        "s": int(s), "ayoff": int(ayoff), "axoff": int(axoff),
-        "box": tuple(int(v) for v in tile_box),
-    }
-    return meta, _range_of(spark, len(groups) + len(missing))
-
-
-def _range_of(spark: SparkSession, n: int) -> DataFrame:
-    """Ids ``0..n-1`` as a JVM range, in contiguous runs over up to twice
-    the default parallelism: a task's ids are neighbouring tiles or row
-    groups, which its read scope rewards — neighbouring tiles share row
-    groups, and a stencil's halo reads find most of theirs decoded."""
+def _base_grid(spark: SparkSession, n_y: int, n_x: int) -> DataFrame:
+    """One ``(ty, tx)`` row per tile of the ``n_y`` x ``n_x`` window,
+    row-major, as a JVM range of runs of ``parquet.ROW_GROUP_TILES`` tile
+    ids over up to twice the default parallelism.  A task gets whole runs
+    of neighbouring tiles, which its read scope rewards: neighbouring tiles
+    share row groups, and a stencil's halo reads find most of theirs
+    decoded.  The writers fill a row group with at most that many tiles
+    (a divisor of it at 512-pixel tiles), row-major, so on a table stored
+    on the computation grid no two tasks decode one row group; a range cut
+    at single tiles would let up to six tasks decode each 16-tile row
+    group."""
+    n, run = n_y * n_x, pq_raster.ROW_GROUP_TILES
+    runs = -(-n // run)
     parallelism = max(spark.sparkContext.defaultParallelism * 2, 1)
-    return spark.range(0, n, numPartitions=max(min(n, parallelism), 1))
-
-
-def _base_grid(spark: SparkSession, tile_box: tuple[int, int, int, int]) -> DataFrame:
-    """One ``(ty, tx)`` row per tile of the box, row-major, so each task
-    gets a contiguous run of neighbouring tiles."""
-    ty_lo, ty_hi, tx_lo, tx_hi = tile_box
-    n_y, n_x = ty_hi - ty_lo + 1, tx_hi - tx_lo + 1
-    return _range_of(spark, n_y * n_x).selectExpr(
-        f"CAST({ty_lo} + id DIV {n_x} AS INT) AS ty",
-        f"CAST({tx_lo} + id % {n_x} AS INT) AS tx",
+    return spark.range(0, runs, numPartitions=max(min(runs, parallelism), 1)).selectExpr(
+        f"explode(sequence(id * {run}, least(id * {run} + {run}, {n}) - 1)) AS id"
+    ).selectExpr(
+        f"CAST(id DIV {n_x} AS INT) AS ty",
+        f"CAST(id % {n_x} AS INT) AS tx",
     )
 
 
 def _build(tree, spark: SparkSession | None):
-    """Choose the plan that feeds the kernel over every tile of the
-    computation window, and broadcast its payload.
-
-    * **Manifest plan** (``_manifest_rows``) whenever every leaf lies on
-      the computation grid: one table (dense or sparse), distinct bands of
-      one interleaved table, or dense per-band tables with identical
-      row-group sequences.  A JVM range of ids names groups of (file, row
-      group) pairs, listed in the broadcast, that the kernel decodes with
-      pyarrow; no JVM payload bytes, no shuffle.  A stencil leaf is not
-      assembled from them: the kernel reads its halo-grown window through
-      ``read_region``, as on the tile grid.
-    * **Tile grid** for every other tree — no parquet leaf, unaligned
-      grids, differing offsets, planar tables whose row groups differ, a
-      sparse table next to other leaves: one
-      ``(ty, tx)`` row per tile (``_base_grid``), and the kernel reads
-      each parquet leaf of its tile through ``read_region``.
-    """
+    """The tile grid that feeds the kernel every tile of the computation
+    window (``_base_grid``), and the kernel's broadcast payload.  There is
+    one plan for every tree: the kernel reads each parquet leaf of its
+    tile itself, through ``read_window``, whatever the leaf's tile size,
+    offset, band layout or sparsity."""
     spark = get_spark(spark)
     root = _as_root(tree)
     payload = _plan_payload(root)
-    tile_box = (0, payload["tiles_y"] - 1, 0, payload["tiles_x"] - 1)
-    metas = payload["slot_meta"]
-    manifest = _manifest_rows(spark, payload, tile_box) if metas else None
-    if manifest is None:
-        df = _base_grid(spark, tile_box)
-    else:
-        payload["manifest"], df = manifest
-
+    df = _base_grid(spark, payload["tiles_y"], payload["tiles_x"])
     bc = spark.sparkContext.broadcast(payload)
     return spark, root, payload, bc, df
 
 
-def _assemble_slot(meta: dict, pieces, y0: int, x0: int, h: int, w: int):
-    """Paste a tile's source pieces into a window-space array, zero-filled,
-    with NODATA substituted to NaN afterwards (matching the reference's
-    pad-then-substitute order, ``rasters.py:343-369``).
-
-    ``pieces``: iterable of (py0, px0, sh, sw, buffer-like) tuples, where
-    (py0, px0) is the piece's absolute leaf-pixel origin.
-    """
-    dt = meta["np_dtype"]
-    out = np.zeros((h, w), dtype=dt)
-    for py0, px0, sh, sw, buf in pieces:
-        ay = py0 - meta["ayoff"]
-        ax = px0 - meta["axoff"]
-        iy0, iy1 = max(ay, y0), min(ay + sh, y0 + h)
-        ix0, ix1 = max(ax, x0), min(ax + sw, x0 + w)
-        if iy0 >= iy1 or ix0 >= ix1:
-            continue
-        data = np.frombuffer(buf, dtype=dt).reshape(sh, sw)
-        out[iy0 - y0 : iy1 - y0, ix0 - x0 : ix1 - x0] = data[
-            iy0 - ay : iy1 - ay, ix0 - ax : ix1 - ax
-        ]
-    if not meta["ignore_nodata"] and meta["nodata"] is not None:
-        out = np.where(out == meta["nodata"], float("nan"), out)
-    return out, (y0, x0)
-
-
-def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
-                     groups: dict) -> None:
-    """Manifest-mode piece collection: the worker reads its (file, row-group)
-    assignments directly with pyarrow (C++ decode, zero JVM bytes), through
-    the task's read scope, where a stencil leaf's halo reads find them."""
-    n_slots = len(payload["slot_meta"])
-    file_slots = man["file_slots"]
-    shared_slots = file_slots.get("*")  # same-table form: one band->slot map
-    s, ayoff, axoff = man["s"], man["ayoff"], man["axoff"]
-    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    ty_lo, ty_hi, tx_lo, tx_hi = man["box"]
-    man_groups, missing = man["groups"], man["missing"]
-    reads = []
-    for gid in batch.column(0).to_pylist():
-        if gid < len(man_groups):
-            reads += man_groups[gid]
-        else:  # tile with no stored row: exists as zeros
-            groups.setdefault(missing[gid - len(man_groups)],
-                              [[] for _ in range(n_slots)])
-    for f, rg in reads:
-        band_slot = dict(shared_slots if shared_slots is not None
-                         else file_slots[f])
-        b_arr, sy, sx, sh, sw, bufs = pq_raster.scoped_row_group(f, rg)
-        for j in range(len(b_arr)):
-            slot = band_slot.get(int(b_arr[j]))
-            if slot is None:
-                continue
-            ty = (int(sy[j]) * s - ayoff) // ty_size
-            tx = (int(sx[j]) * s - axoff) // tx_size
-            if not (ty_lo <= ty <= ty_hi and tx_lo <= tx <= tx_hi):
-                continue
-            acc = groups.get((ty, tx))
-            if acc is None:
-                acc = groups[(ty, tx)] = [[] for _ in range(n_slots)]
-            acc[slot].append(
-                (int(sy[j]) * s, int(sx[j]) * s, int(sh[j]), int(sw[j]), bufs[j])
-            )
-
-
 def _tile_results(payload, batch_iter: Iterator[pa.RecordBatch]):
-    """Generator core of every kernel: yields (ty, tx, h, w, result) per tile.
-
-    Manifest plan: the task's row groups are decoded and grouped into tiles
-    with a per-partition dict (a tile's slots all arrive in one task), and
-    the payloads are sliced zero-copy from the decoded Arrow buffers; a
-    stencil leaf is read as on the tile grid.  Tile grid: one ``(ty, tx)``
-    row per tile, and the kernel reads any parquet leaf itself
-    (``read_region``, halo-grown by the leaf's pad).  Kernels pass their
-    broadcast payload; ``read_array`` runs it in the calling process.
-    """
+    """Generator core of every kernel: yields (ty, tx, h, w, result) per
+    ``(ty, tx)`` row of the tile grid.  The kernel reads each parquet leaf
+    itself (``read_region``, halo-grown by the leaf's pad) after
+    ``_prefetch_tile`` has decoded the tile's row groups.  Kernels pass
+    their broadcast payload; ``read_array`` runs it in the calling
+    process."""
+    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
+    window = payload["window"]
     # Read scope: leaf and mosaic reads of this run of tiles reuse decoded
     # row groups (nothing survives the run — see parquet.push_read_scope).
     pq_raster.push_read_scope()
     try:
-        yield from _tile_results_scoped(payload, batch_iter)
-    finally:
-        pq_raster.pop_read_scope()
-
-
-def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
-    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    window = payload["window"]
-    slot_meta = payload["slot_meta"]
-    tree = payload["tree"]
-    man = payload.get("manifest")
-
-    def evaluate(ty: int, tx: int, pieces_by_slot: list):
-        # The manifest plan reads every slot of a stored tile in one task;
-        # a partial tile means that property broke.
-        filled = [bool(p) for p in pieces_by_slot]
-        if any(filled) and not all(filled):
-            raise RuntimeError(
-                f"manifest tile ({ty},{tx}) received only "
-                f"{sum(filled)}/{len(filled)} band slots — stored tile "
-                "split across scan tasks (row-group/tile alignment broken)"
-            )
-        y0, x0 = ty * ty_size, tx * tx_size
-        h = min(ty_size, window.ysize - y0)
-        w = min(tx_size, window.xsize - x0)
-        ctx = K.EvalContext(
-            area=payload["area"],
-            projection=payload["projection"],
-            shared_hashes=payload["shared_hashes"],
-        )
-        # The manifest plan fills the slots of its unpadded leaves.  A
-        # stencil's leaf, and every leaf on the tile grid, stays out of
-        # ``ctx.slots``: ``eval_tree`` reads its (halo-grown) window through
-        # ``read_region``, from the row groups this task's scope holds.
-        for slot, pieces in enumerate(pieces_by_slot):
-            if not slot_meta[slot]["pad"]:
-                ctx.slots[slot], ctx.slot_origins[slot] = _assemble_slot(
-                    slot_meta[slot], pieces, y0, x0, h, w)
-        result = K.eval_tree(tree, ctx, x0, y0, w, h)
-        result = np.asarray(result)
-        if result.shape != (h, w):
-            result = np.broadcast_to(result, (h, w))
-        return ty, tx, h, w, result
-
-    if man is None:
         for batch in batch_iter:
             for ty, tx in zip(batch.column("ty").to_pylist(),
                               batch.column("tx").to_pylist()):
                 _prefetch_tile(payload, ty, tx)
-                yield evaluate(ty, tx, [])
-        return
-    groups: dict[tuple, list[list]] = {}
-    for batch in batch_iter:
-        _manifest_pieces(batch, man, payload, groups)
-    for (ty, tx), slots_acc in groups.items():
-        yield evaluate(ty, tx, slots_acc)
+                y0, x0 = ty * ty_size, tx * tx_size
+                h = min(ty_size, window.ysize - y0)
+                w = min(tx_size, window.xsize - x0)
+                ctx = K.EvalContext(
+                    area=payload["area"],
+                    projection=payload["projection"],
+                    shared_hashes=payload["shared_hashes"],
+                )
+                result = np.asarray(K.eval_tree(payload["tree"], ctx, x0, y0, w, h))
+                if result.shape != (h, w):
+                    result = np.broadcast_to(result, (h, w))
+                yield ty, tx, h, w, result
+    finally:
+        pq_raster.pop_read_scope()
 
 
 def _prefetch_tile(payload: dict, ty: int, tx: int) -> None:
-    """Fill the read scope, before tile (ty, tx) of the tile grid is
-    evaluated, with the row groups its parquet leaves read (halo-grown by
-    each leaf's pad), decoding those not yet in the scope together
+    """Fill the read scope, before tile (ty, tx) is evaluated, with the row
+    groups its parquet leaves read (halo-grown by each leaf's pad),
+    decoding those not yet in the scope together
     (``parquet.prefetch_row_groups``).  The leaves' ``read_window`` calls
     then find them there."""
     keys = []
-    for meta in payload["slot_meta"]:
-        rng = _stored_range(payload, meta, (ty, ty, tx, tx), meta["pad"])
+    for meta in payload["leaf_meta"]:
+        rng = _stored_range(payload, meta, ty, tx)
         if rng[0] <= rng[1] and rng[2] <= rng[3]:
             keys += [(f, rg) for f, rg, _ymm, _xmm in pq_raster._pruned_row_groups(
                 meta["path"], meta["band"], meta["band"], rng)]
@@ -531,8 +279,8 @@ def tiles_dataframe(tree, spark: SparkSession | None = None) -> DataFrame:
 
     @task_entry
     def compute(batches):
-        # Whole-partition pass (tiles may straddle Arrow batch boundaries —
-        # see aggregate.compute); results stream out in bounded chunks.
+        # Whole-partition pass (one read scope — see aggregate.compute);
+        # results stream out in bounded chunks.
         rows = []
         for row in _tile_rows(_tile_results(bc.value, batches), out_dtype):
             rows.append(row)
@@ -787,11 +535,9 @@ def aggregate(tree, stat: str, spark: SparkSession | None = None) -> float:
 
     @task_entry
     def compute(batches):
-        # One _tile_results pass over the WHOLE partition: a tile's pieces
-        # may straddle Arrow batch boundaries, so per-batch grouping would
-        # evaluate partial tiles (silently wrong).  Partition memory is
-        # bounded by maxPartitionBytes / shuffle sizing, the same contract
-        # applyInPandas assumes.
+        # One _tile_results pass over the whole partition: its runs of
+        # tiles share one read scope, so a row group that several of them
+        # read is decoded once.
         tys, txs, parts = [], [], []
         for ty, tx, _h, _w, result in _tile_results(bc.value, batches):
             if stat == "sum":
@@ -818,9 +564,9 @@ def aggregate(tree, stat: str, spark: SparkSession | None = None) -> float:
 
     ty, tx, part = _collect_partials(df.mapInArrow(compute, schema=PARTIAL_SCHEMA))
     n_y, n_x = payload["tiles_y"], payload["tiles_x"]
-    # One partial per tile of the window, or the scan lost (or doubled) a
-    # stored tile — e.g. a tile manifest that no longer lists a row group
-    # would otherwise read as zeros.
+    # One partial per tile of the window, or the plan lost (or doubled) a
+    # tile, which must not pass for a result.  (A dense leaf's read already
+    # raises on a tile its listing lost, say from a stale tile manifest.)
     if not np.array_equal(ty.astype(np.int64) * n_x + tx, np.arange(n_y * n_x)):
         raise RuntimeError(
             f"{stat}() collected {len(part)} tile partials for the "
@@ -893,8 +639,8 @@ def unique(tree, return_counts: bool = False, spark: SparkSession | None = None,
 
     @task_entry
     def compute(batches):
-        # Whole-partition pass: tiles may straddle Arrow batch boundaries
-        # (see aggregate.compute).  Partials here are tiny (distinct values).
+        # Whole-partition pass (one read scope — see aggregate.compute).
+        # Partials here are tiny (distinct values).
         vals_out, nan_out, cnt_out = [], [], []
         for _ty, _tx, _h, _w, result in _tile_results(bc.value, batches):
             values, counts = np.unique(np.asarray(result), return_counts=True)
@@ -1095,8 +841,7 @@ def _write_bands(roots: list, path: str, spark: SparkSession,
         for band, (table, n_tiles) in enumerate(sinks, 1):
             produced = pc.sum(table.column("tiles")).as_py() or 0
             if produced != n_tiles:
-                # E.g. a tile manifest that no longer lists a row group of
-                # a dense source: its tiles were never produced.
+                # A lost or repeated tile, as in ``aggregate``.
                 raise RuntimeError(
                     f"save of band {band} produced {produced} of the {n_tiles} "
                     "tiles of the computation window (written, or dropped as "

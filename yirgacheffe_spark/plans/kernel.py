@@ -9,8 +9,8 @@ computed once per (hash, request-window) and reused
 (reference ``_operators/cse.py``).
 
 This module is deliberately Spark-free: the executor calls it from
-``mapInPandas`` workers, and tests call it directly on the driver as the
-golden "local oracle" — the same kernel, one giant tile.
+``mapInArrow`` workers and ``read_array``, and tests call it directly on the
+driver as the golden "local oracle" — the same kernel, one giant tile.
 """
 
 from __future__ import annotations
@@ -30,8 +30,6 @@ class EvalContext:
     area: Area
     projection: MapProjection
     shared_hashes: frozenset
-    slots: dict[int, np.ndarray] = field(default_factory=dict)
-    slot_origins: dict[int, tuple[int, int]] = field(default_factory=dict)
     cache: dict = field(default_factory=dict)
 
 
@@ -140,15 +138,7 @@ def eval_tree(node, ctx: EvalContext, x: int, y: int, width: int, height: int) -
             else:
                 result = fn(lhs, **node.kwargs)
     else:
-        # A source layer.  Pre-assembled slot data (parquet leaves fed by
-        # the manifest plan) takes priority; otherwise read directly.
-        slot = getattr(node, "_slot_index", None)
-        if slot is not None and slot in ctx.slots:
-            assembled = ctx.slots[slot]
-            oy, ox = ctx.slot_origins[slot]
-            result = assembled[y - oy : y - oy + height, x - ox : x - ox + width]
-        else:
-            result = node.read_region(ctx.area, ctx.projection, x, y, width, height)
+        result = node.read_region(ctx.area, ctx.projection, x, y, width, height)
 
     if cache_key is not None:
         ctx.cache[cache_key] = result

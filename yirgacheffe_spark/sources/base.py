@@ -150,7 +150,8 @@ class Layer(LayerMathMixin):
 
     def region_pixel_origin(self, target_area: Area) -> tuple[int, int]:
         """Integer pixel coordinates of ``target_area``'s origin on this
-        layer's grid — the translation the manifest plan's slots use."""
+        layer's grid — the translation from computation tiles to the
+        stored tiles a parquet leaf's reads touch."""
         assert self.projection is not None
         target_offset = target_area._grid_offset
         if target_offset is not None:

@@ -19,17 +19,14 @@ Binary payloads (rather than ``array<double>``) keep all eleven dtypes —
 including the unsigned ones Spark lacks — byte-exact, and avoid per-element
 list overhead in both parquet and Arrow.
 
-At execution time the engine reads a parquet layer in one of two ways (see
-``plans/executor.py``): the manifest plan lists the table's pruned (file,
-row group) pairs on the driver and its workers decode them into tile slots;
-any other tree runs over a tile grid whose kernel reads the layer through
-``read_window`` in-process.  Both ask this module which row groups hold a
-tile range (``_pruned_row_groups``: the save-time manifest first, parquet
-footers otherwise) and decode them through the read scope
-(``scoped_row_group``), so a stencil's halo reads find the row groups its
-task already decoded; the tile grid decodes a tile's row groups together
-with ``_decoded_row_groups``, on a thread pool sized by the cores the
-caller owns (pyarrow releases the GIL while it decompresses).
+At execution time every tree runs on the executor's tile grid (see
+``plans/executor.py``), whose kernel reads a parquet layer in-process
+through ``read_window``.  It asks this module which row groups hold a tile
+range (``_pruned_row_groups``, over the table's indexed listing: the
+save-time manifest first, parquet footers otherwise) and finds them in the
+read scope, where the grid decodes each tile's row groups ahead of it,
+together, with ``_decoded_row_groups``, on a thread pool sized by the cores
+the caller owns (pyarrow releases the GIL while it decompresses).
 ``read_window`` is also the driver-side read of ``read_array``, mosaics
 and the ``evaluate_window`` oracle.
 
@@ -40,6 +37,7 @@ a POSIX-visible path.
 
 from __future__ import annotations
 
+import bisect
 import json
 import math
 import os
@@ -108,7 +106,7 @@ class _ReadScope:
 
     def __init__(self):
         self.rgs: dict[tuple, tuple] = {}
-        self.listings: dict[str, list] = {}
+        self.listings: dict[str, _Listing] = {}
 
 
 def _scope_stack() -> list[_ReadScope]:
@@ -129,11 +127,11 @@ def pop_read_scope() -> None:
 
 
 def _pq_handle(fpath: str):
-    """The process's open ``ParquetFile`` for ``fpath``, shared by the
-    executor's manifest reads and the ranged reads here.  Keyed by (path,
-    mtime_ns, size), NOT path alone: an overwrite that reuses the file name
-    would otherwise keep serving the DELETED inode through the cached open
-    handle — stale reads that depend on which worker gets the task."""
+    """The process's open ``ParquetFile`` for ``fpath``, shared by every
+    read here.  Keyed by (path, mtime_ns, size), NOT path alone: an
+    overwrite that reuses the file name would otherwise keep serving the
+    DELETED inode through the cached open handle — stale reads that depend
+    on which worker gets the task."""
     import pyarrow.parquet as pq  # pylint: disable=C0415
 
     st = os.stat(fpath)
@@ -265,13 +263,45 @@ def row_group_tile_stats(file_path: str) -> list:
     return out
 
 
-_TILE_MANIFEST_CACHE: dict[tuple[str, int, int], tuple[dict, list]] = {}
+class _Listing:
+    """The row groups of one table as ``(file, rg, ty_minmax, tx_minmax,
+    band_minmax)`` rows in file order, indexed by first tile row, so that
+    finding the row groups of a tile range costs about the same at 40,000
+    row groups as at 400 (a scan of every row is linear in the table).
+    A row group without ``tile_y`` statistics may hold any tile row, so it
+    meets every range."""
+
+    def __init__(self, rows: list):
+        self.rows = rows
+        self.unbounded: list[int] = []
+        by_start: dict[int, list[int]] = {}
+        self.span = 0  # the most tile rows past its first that a row group spans
+        for i, (_f, _rg, ymm, _xmm, _bmm) in enumerate(rows):
+            if ymm is None:
+                self.unbounded.append(i)
+            else:
+                by_start.setdefault(ymm[0], []).append(i)
+                self.span = max(self.span, ymm[1] - ymm[0])
+        self.starts = sorted(by_start)
+        self.by_start = [by_start[k] for k in self.starts]
+
+    def meeting_rows(self, sy_lo: int, sy_hi: int) -> list:
+        """The rows, in file order, whose tile rows may meet [sy_lo, sy_hi]."""
+        hits = list(self.unbounded)
+        lo = bisect.bisect_left(self.starts, sy_lo - self.span)
+        hi = bisect.bisect_right(self.starts, sy_hi)
+        for group in self.by_start[lo:hi]:
+            hits += [i for i in group if self.rows[i][2][1] >= sy_lo]
+        return [self.rows[i] for i in sorted(hits)]
 
 
-def _manifest_entry(path: str) -> tuple[dict, list] | None:
+_TILE_MANIFEST_CACHE: dict[tuple[str, int, int], tuple[dict, _Listing]] = {}
+
+
+def _manifest_entry(path: str) -> tuple[dict, _Listing] | None:
     """The saved manifest of the table at ``path`` as ({file -> [(rg,
-    ty_minmax, tx_minmax, band_minmax), ...]}, the same rows flattened to
-    ``(file path, rg, ...)``), or None when the table predates manifests.
+    ty_minmax, tx_minmax, band_minmax), ...]}, the same rows as a
+    ``_Listing``), or None when the table predates manifests.
     Cached per (dir, manifest mtime_ns, inode), so a repeated lookup costs
     one stat; the inode tells apart two manifests renamed into place within
     one tick of the file system's clock."""
@@ -296,9 +326,9 @@ def _manifest_entry(path: str) -> tuple[dict, list] | None:
             ]
             for name, rows in doc.get("entries", {}).items()
         }
-        flat = [(os.path.join(path, name), *row)
-                for name in sorted(by_file) for row in by_file[name]]
-        got = _cache_put(_TILE_MANIFEST_CACHE, key, (by_file, flat), 64)
+        listing = _Listing([(os.path.join(path, name), *row)
+                            for name in sorted(by_file) for row in by_file[name]])
+        got = _cache_put(_TILE_MANIFEST_CACHE, key, (by_file, listing), 64)
     return got
 
 
@@ -326,25 +356,25 @@ def _footer_stats(path: str) -> list:
     return got
 
 
-def _table_row_groups(path: str) -> list:
-    """(file, rg, ty_minmax, tx_minmax, band_minmax) of every row group of
-    the table at ``path``: from the save-time manifest when the table has
-    one (one cached lookup), else from each part file's footer.  Inside a
-    read scope, the listing the scope first saw."""
+def _table_row_groups(path: str) -> _Listing:
+    """Every row group of the table at ``path``: from the save-time
+    manifest when the table has one (one cached lookup), else from each
+    part file's footer.  Inside a read scope, the listing the scope first
+    saw."""
     stack = _scope_stack()
     if stack and path in stack[-1].listings:
         return stack[-1].listings[path]
     entry = _manifest_entry(path)
     if entry is not None:
-        rows = entry[1]
+        listing = entry[1]
     else:
-        rows = [(f, *row)
-                for f in (os.path.join(path, n) for n in sorted(os.listdir(path))
-                          if n.endswith(".parquet"))
-                for row in _footer_stats(f)]
+        listing = _Listing([(f, *row)
+                            for f in (os.path.join(path, n) for n in sorted(os.listdir(path))
+                                      if n.endswith(".parquet"))
+                            for row in _footer_stats(f)])
     if stack:
-        stack[-1].listings[path] = rows
-    return rows
+        stack[-1].listings[path] = listing
+    return listing
 
 
 def _pruned_row_groups(path: str, band_lo: int, band_hi: int,
@@ -354,13 +384,11 @@ def _pruned_row_groups(path: str, band_lo: int, band_hi: int,
     inside the stored-tile range (sy_lo, sy_hi, sx_lo, sx_hi)."""
     sy_lo, sy_hi, sx_lo, sx_hi = stored_range
     out = []
-    for f, rg, ymm, xmm, bmm in _table_row_groups(path):
+    for f, rg, ymm, xmm, bmm in _table_row_groups(path).meeting_rows(sy_lo, sy_hi):
         # Band pruning: non-interleaved multiband tables are band-pure per
         # file, so a single-band read drops the other bands' row groups
         # instead of decoding their payloads only to discard every row.
         if bmm is not None and (bmm[1] < band_lo or bmm[0] > band_hi):
-            continue
-        if ymm is not None and (ymm[1] < sy_lo or ymm[0] > sy_hi):
             continue
         if xmm is not None and (xmm[1] < sx_lo or xmm[0] > sx_hi):
             continue
@@ -377,33 +405,22 @@ def _decode(pf, rg: int) -> tuple:
     if pay.num_chunks != 1:
         pay = pay.combine_chunks()
     chunk = pay.chunk(0) if hasattr(pay, "chunk") else pay
+    # Each payload is a slice of the column's data buffer, cut at its
+    # offsets (``chunk[i].as_buffer()`` would copy it).
+    _validity, offsets, data = chunk.buffers()
+    bounds = np.frombuffer(offsets, dtype=np.int32, count=len(chunk) + 1,
+                           offset=4 * chunk.offset).tolist()
+    data = memoryview(data)
     return (*(tbl.column(c).to_numpy() for c in _TILE_COLUMNS),
-            [memoryview(chunk[i].as_buffer()) for i in range(len(chunk))])
+            [data[a:b] for a, b in zip(bounds, bounds[1:])])
 
 
 def _decoded_row_group(f: str, rg: int) -> tuple:
     """One row group of a tile table through the process's open-file cache:
     its ``band, tile_y, tile_x, ysize, xsize`` columns as numpy arrays and
-    one zero-copy payload buffer per row."""
+    one zero-copy payload view per row, into the decoded column's data
+    buffer."""
     return _decode(_pq_handle(f), rg)
-
-
-def scoped_row_group(f: str, rg: int) -> tuple:
-    """``_decoded_row_group`` through the current read scope: a row group
-    the scope holds is not decoded again, and one it lacks is decoded and
-    added, evicting the oldest past ``_READ_SCOPE_MAX_RGS``.  Outside a
-    scope every call decodes."""
-    stack = _scope_stack()
-    if not stack:
-        return _decoded_row_group(f, rg)
-    cache = stack[-1].rgs
-    entry = cache.get((f, rg))
-    if entry is None:
-        entry = _decoded_row_group(f, rg)
-        while len(cache) >= _READ_SCOPE_MAX_RGS:
-            cache.pop(next(iter(cache)))
-        cache[(f, rg)] = entry
-    return entry
 
 
 def _caller_cores() -> int:
@@ -511,9 +528,13 @@ class ParquetRasterLayer(Layer):
     def read_window(self, xoff: int, yoff: int, xsize: int, ysize: int, window: Window) -> Any:
         """Direct pyarrow read of the requested region: the row groups whose
         tile ranges it touches (``_pruned_row_groups``), decoded once per
-        read scope — consecutive tiles of a task reuse them — or once per
-        call outside a scope.  On a dense table every stored tile of the
-        region must be found, or the read raises."""
+        read scope — consecutive tiles of a task reuse them, and the tile
+        grid decodes a tile's row groups into the scope before its reads —
+        or once per call outside a scope.  A row group the scope lacks is
+        decoded and added, evicting the oldest past ``_READ_SCOPE_MAX_RGS``.
+        This is the engine's one parquet leaf reader.  On a dense table
+        every stored tile of the region must be found, or the read
+        raises."""
         if xsize <= 0 or ysize <= 0:
             raise ValueError("Request dimensions must be positive and non-zero")
         requested = Window(window.xoff + xoff, window.yoff + yoff, xsize, ysize)
@@ -528,9 +549,18 @@ class ParquetRasterLayer(Layer):
         tx_lo, tx_hi = overlap.xoff // s, (overlap.xmax - 1) // s
         out = np.zeros((overlap.ysize, overlap.xsize), dtype=np_dtype)
         found = np.zeros((ty_hi - ty_lo + 1, tx_hi - tx_lo + 1), dtype=bool)
+        stack = _scope_stack()
+        scope = stack[-1].rgs if stack else None
         for f, rg, _ymm, _xmm in _pruned_row_groups(
                 self.path, self.band, self.band, (ty_lo, ty_hi, tx_lo, tx_hi)):
-            b_a, ty_a, tx_a, h_a, w_a, bufs = scoped_row_group(f, rg)
+            entry = None if scope is None else scope.get((f, rg))
+            if entry is None:
+                entry = _decoded_row_group(f, rg)
+                if scope is not None:
+                    while len(scope) >= _READ_SCOPE_MAX_RGS:
+                        scope.pop(next(iter(scope)))
+                    scope[(f, rg)] = entry
+            b_a, ty_a, tx_a, h_a, w_a, bufs = entry
             sel = np.nonzero(
                 (b_a == self.band)
                 & (ty_a >= ty_lo) & (ty_a <= ty_hi)
@@ -613,9 +643,8 @@ def write_multiband_interleaved(
     tile_size: int | None = None,
 ) -> dict[int, "ParquetRasterLayer"]:
     """Write several bands as ONE tile table sorted (tile_y, tile_x, band)
-    with row groups aligned to whole tiles, so every band of a tile lands in
-    the same scan task — multi-channel expressions then need no shuffle at
-    all (see the manifest plan in ``plans/executor.py``).
+    in row groups of whole tiles (every band of 4 tiles), so a read of any
+    band of a tile decodes the row group that holds all of its bands.
     """
     import pyarrow as pa  # pylint: disable=C0415
 
@@ -648,8 +677,7 @@ def write_multiband_interleaved(
             "payload": pa.array(rows["payload"], pa.binary()),
         }
     )
-    # Row groups hold whole tiles (a multiple of the band count), so a Spark
-    # file split can never separate one tile's bands.
+    # Row groups hold whole tiles (a multiple of the band count).
     with open_tile_writer(os.path.join(path, "part-00000.parquet"), table.schema) as writer:
         writer.write_table(table, row_group_size=len(band_ids) * 4)
     write_meta(path, area, dtypes.pop(), nodata, s, bands=len(band_ids), interleaved=True)
