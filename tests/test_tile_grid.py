@@ -1,11 +1,13 @@
 """The tile grid: every tree runs over a JVM range of tile ids, in runs of
-``parquet.ROW_GROUP_TILES``, and the kernel reads its parquet leaves
-in-process through ``ParquetRasterLayer.read_window``.
+``parquet.ROW_GROUP_TILES`` when it has a parquet leaf (of one id when it
+has none), and the kernel reads its parquet leaves in-process through
+``ParquetRasterLayer.read_window``.
 
 Each case is compared against the one-tile local oracle
 (``kernel.evaluate_window``); the data are small integers so sums are
-exact under any addition order.  The schedule (every tile once, runs of
-whole row groups) and the indexed row-group lookup are tested directly.
+exact under any addition order.  The schedule (every tile once, in
+whole runs, their length chosen by the tree) and the indexed row-group
+lookup are tested directly.
 """
 
 from __future__ import annotations
@@ -169,17 +171,39 @@ def test_save_clusters_rows_of_a_tile_grid_tree(spark, tmp_path):
 
 @pytest.mark.parametrize("n_y, n_x", [(1, 1), (3, 5), (4, 4), (1, 17), (6, 4), (13, 11),
                                       (40, 25)])
-def test_grid_runs_every_tile_once_in_whole_row_groups(spark, n_y, n_x):
+@pytest.mark.parametrize("run", [pqr.ROW_GROUP_TILES, 1])
+def test_grid_runs_every_tile_once_in_whole_runs(spark, n_y, n_x, run):
     """The tile grid lists every tile of the window exactly once, in
-    row-major order, and every partition starts at a multiple of
-    ``ROW_GROUP_TILES``: on a table stored on the computation grid, no two
-    tasks decode one row group."""
-    run = pqr.ROW_GROUP_TILES
-    parts = executor._base_grid(spark, n_y, n_x).rdd.glom().collect()
+    row-major order, every partition starts at a multiple of ``run``, and
+    there are as many partitions as runs, up to twice the default
+    parallelism."""
+    parts = executor._base_grid(spark, n_y, n_x, run).rdd.glom().collect()
     ids = [[ty * n_x + tx for ty, tx in rows] for rows in parts]
     assert [i for rows in ids for i in rows] == list(range(n_y * n_x))
     assert all(rows[0] % run == 0 for rows in ids if rows), ids
-    assert len(parts) <= max(2 * spark.sparkContext.defaultParallelism, 1)
+    assert len(parts) == min(-(-n_y * n_x // run),
+                             max(2 * spark.sparkContext.defaultParallelism, 1))
+
+
+def test_grid_run_follows_the_tree(spark, tmp_path, distributed):
+    """A tree that reads a parquet table, as a leaf or through a mosaic,
+    runs in whole row groups (``ROW_GROUP_TILES`` tile ids a run): on a
+    table whose first tile and width the window shares, at the
+    computation tile size, no two tasks decode one row group.  A tree
+    that reads none has no row group to share, so its tiles spread over
+    the full parallelism, one id a run."""
+    data = _data(4, 24, 28)  # 6 x 7 tiles of 4
+    k = np.ones((3, 3), dtype=np.float32)
+    for expr, run in ((_table(tmp_path, "a", data).conv2d(k), pqr.ROW_GROUP_TILES),
+                      (yg.GroupLayer([_table(tmp_path, "b", data)]) * 2, pqr.ROW_GROUP_TILES),
+                      (yg.from_array(data, (0.0, 0.0), PROJ).conv2d(k), 1)):
+        _spark, _root, _payload, _bc, df = executor._build(expr, spark)
+        parts = df.rdd.glom().collect()
+        assert len(parts) == min(-(-42 // run), 2 * spark.sparkContext.defaultParallelism)
+        assert all((rows[0].ty * 7 + rows[0].tx) % run == 0 for rows in parts if rows)
+        local = kernel.evaluate_window(expr)
+        np.testing.assert_array_equal(distributed(expr), local)
+        assert expr.sum(spark=spark) == float(local.sum(dtype=np.float64))
 
 
 def test_indexed_row_group_lookup_equals_a_full_scan(tmp_path):
@@ -192,6 +216,8 @@ def test_indexed_row_group_lookup_equals_a_full_scan(tmp_path):
     def minmax(lo_max, span_max):
         if rng.random() < 0.1:
             return None
+        if rng.random() < 0.05:  # a few row groups span far more tile rows
+            span_max = 60
         lo = int(rng.integers(0, lo_max))
         return [lo, lo + int(rng.integers(0, span_max + 1))]
 

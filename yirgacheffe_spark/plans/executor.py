@@ -5,7 +5,8 @@ Physical shape of every computation:
 1. **Plan (driver)** — resolve the operation area/window with the reference's
    extent algebra and split the window into a grid of tiles.  Every tree
    runs on the **tile grid** (``_build``): a JVM range of tile ids, cut
-   into runs of ``parquet.ROW_GROUP_TILES`` ids (``_base_grid``).  The
+   into runs of ``parquet.ROW_GROUP_TILES`` ids when the tree reads a
+   parquet table, of one id otherwise (``_base_grid``).  The
    tree, with its non-parquet leaves (in-memory arrays, constants,
    generated layers), ships to the kernel in a broadcast.  The kernel
    reads each parquet leaf of its tile in-process
@@ -48,9 +49,10 @@ Implementation notes for throughput:
 * Runs of whole row groups: the writers fill row groups, in row-major tile
   order, with ``parquet.row_group_tiles`` tiles (16, or 8 or 4 for wider
   dtypes at 512-pixel tiles, each of which divides ``ROW_GROUP_TILES``),
-  so on a table stored on the computation grid each row group is decoded
-  by one task, once.  A task holds at most its read scope's row groups,
-  whatever the table's size.
+  so when the window starts at a table's first tile, is as wide as the
+  table and tiles it at the computation tile size, each of its row groups
+  is decoded by one task, once (``_build`` says where that fails).  A task
+  holds at most its read scope's row groups, whatever the table's size.
 * Driver-side plan construction keeps py4j chatter low: a plan is one JVM
   range and lists no row group; the kernels find theirs in the indexed
   listings (manifests and footer statistics, cached per file and
@@ -169,23 +171,19 @@ def _stored_range(payload: dict, meta: dict, ty: int, tx: int) -> tuple[int, int
             max(x_px_lo // s, 0), min((x_px_hi - 1) // s, stored_x - 1))
 
 
-def _base_grid(spark: SparkSession, n_y: int, n_x: int) -> DataFrame:
+def _base_grid(spark: SparkSession, n_y: int, n_x: int, run: int) -> DataFrame:
     """One ``(ty, tx)`` row per tile of the ``n_y`` x ``n_x`` window,
-    row-major, as a JVM range of runs of ``parquet.ROW_GROUP_TILES`` tile
-    ids over up to twice the default parallelism.  A task gets whole runs
-    of neighbouring tiles, which its read scope rewards: neighbouring tiles
-    share row groups, and a stencil's halo reads find most of theirs
-    decoded.  The writers fill a row group with at most that many tiles
-    (a divisor of it at 512-pixel tiles), row-major, so on a table stored
-    on the computation grid no two tasks decode one row group; a range cut
-    at single tiles would let up to six tasks decode each 16-tile row
-    group."""
-    n, run = n_y * n_x, pq_raster.ROW_GROUP_TILES
+    row-major, as a JVM range of runs of ``run`` tile ids over up to twice
+    the default parallelism.  A task gets whole runs of neighbouring
+    tiles."""
+    n = n_y * n_x
     runs = -(-n // run)
     parallelism = max(spark.sparkContext.defaultParallelism * 2, 1)
-    return spark.range(0, runs, numPartitions=max(min(runs, parallelism), 1)).selectExpr(
-        f"explode(sequence(id * {run}, least(id * {run} + {run}, {n}) - 1)) AS id"
-    ).selectExpr(
+    ids = spark.range(0, runs, numPartitions=max(min(runs, parallelism), 1))
+    if run > 1:  # the explode costs about 20 ms an action, so runs of 1 skip it
+        ids = ids.selectExpr(
+            f"explode(sequence(id * {run}, least(id * {run} + {run}, {n}) - 1)) AS id")
+    return ids.selectExpr(
         f"CAST(id DIV {n_x} AS INT) AS ty",
         f"CAST(id % {n_x} AS INT) AS tx",
     )
@@ -196,11 +194,27 @@ def _build(tree, spark: SparkSession | None):
     window (``_base_grid``), and the kernel's broadcast payload.  There is
     one plan for every tree: the kernel reads each parquet leaf of its
     tile itself, through ``read_window``, whatever the leaf's tile size,
-    offset, band layout or sparsity."""
+    offset, band layout or sparsity.
+
+    A tree that reads a parquet table (``kernel.reads_parquet``: a leaf,
+    or a mosaic or reprojection of one) runs in runs of
+    ``parquet.ROW_GROUP_TILES`` tile ids, which its read scope rewards: neighbouring tiles share row
+    groups, and a stencil's halo reads find most of theirs decoded.  The
+    writers fill row groups row-major, so when the window starts at a
+    leaf's first stored tile, is as wide as the leaf, tiles it at the
+    computation tile size and its row groups hold a divisor of 16 tiles
+    (the writers' 16, 8 or 4 at 512-pixel tiles), no two tasks decode one
+    of its row groups; single-tile runs would let up to six tasks decode
+    each 16-tile row group.  Elsewhere (an offset or clipped window, a
+    sparse save, another tile size) a row group can straddle two runs and
+    be decoded by both tasks.  A tree that reads no parquet table has no
+    row group to share, so it runs in single-tile runs over the full
+    parallelism."""
     spark = get_spark(spark)
     root = _as_root(tree)
     payload = _plan_payload(root)
-    df = _base_grid(spark, payload["tiles_y"], payload["tiles_x"])
+    run = pq_raster.ROW_GROUP_TILES if K.reads_parquet(root) else 1
+    df = _base_grid(spark, payload["tiles_y"], payload["tiles_x"], run)
     bc = spark.sparkContext.broadcast(payload)
     return spark, root, payload, bc, df
 

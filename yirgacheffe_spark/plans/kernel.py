@@ -104,6 +104,31 @@ def collect_parquet_leaves(node, out: list | None = None,
     return out
 
 
+def reads_parquet(node, _seen: set | None = None) -> bool:
+    """Whether the tree reads a parquet raster table anywhere: as a leaf, or
+    inside a mosaic (``GroupLayer``) or a reprojected layer."""
+    # pylint: disable=C0415,W0212
+    from ..sources.group import GroupLayer
+    from ..sources.parquet import ParquetRasterLayer
+    from ..sources.reprojected import ReprojectedLayer, _ExpressionLayer
+
+    _seen = set() if _seen is None else _seen
+    if id(node) in _seen:
+        return False
+    _seen.add(id(node))
+    if isinstance(node, LayerOperation):
+        inner = node.children
+    elif isinstance(node, GroupLayer):
+        inner = node._layers_reversed
+    elif isinstance(node, ReprojectedLayer):
+        inner = [node._source]
+    elif isinstance(node, _ExpressionLayer):
+        inner = [node._tree]
+    else:
+        return isinstance(node, ParquetRasterLayer)
+    return any(reads_parquet(child, _seen) for child in inner)
+
+
 def eval_tree(node, ctx: EvalContext, x: int, y: int, width: int, height: int) -> Any:
     """Evaluate ``node`` for the region (x, y, width, height) of the
     computation window (pixel offsets relative to the operation area origin).

@@ -268,30 +268,37 @@ class _Listing:
     band_minmax)`` rows in file order, indexed by first tile row, so that
     finding the row groups of a tile range costs about the same at 40,000
     row groups as at 400 (a scan of every row is linear in the table).
-    A row group without ``tile_y`` statistics may hold any tile row, so it
-    meets every range."""
+    The index keeps row groups in classes by span (the tile rows a row
+    group covers past its first: 0, 1, 2-3, 4-7, ...), and searches each
+    class back from the range by its widest span only, so a row group that
+    spans many tile rows (a sparse save over an empty region writes such
+    ones) does not widen the search of the others.  A row group without
+    ``tile_y`` statistics may hold any tile row, so it meets every
+    range."""
 
     def __init__(self, rows: list):
         self.rows = rows
         self.unbounded: list[int] = []
-        by_start: dict[int, list[int]] = {}
-        self.span = 0  # the most tile rows past its first that a row group spans
+        classes: dict[int, dict[int, list[int]]] = {}
         for i, (_f, _rg, ymm, _xmm, _bmm) in enumerate(rows):
             if ymm is None:
                 self.unbounded.append(i)
             else:
-                by_start.setdefault(ymm[0], []).append(i)
-                self.span = max(self.span, ymm[1] - ymm[0])
-        self.starts = sorted(by_start)
-        self.by_start = [by_start[k] for k in self.starts]
+                span = max(ymm[1] - ymm[0], 0)
+                classes.setdefault(span.bit_length(), {}).setdefault(ymm[0], []).append(i)
+        # Per class: (its widest span, its sorted first rows, their rows).
+        self.classes = [((1 << k) - 1, sorted(by_start),
+                         [by_start[start] for start in sorted(by_start)])
+                        for k, by_start in classes.items()]
 
     def meeting_rows(self, sy_lo: int, sy_hi: int) -> list:
         """The rows, in file order, whose tile rows may meet [sy_lo, sy_hi]."""
         hits = list(self.unbounded)
-        lo = bisect.bisect_left(self.starts, sy_lo - self.span)
-        hi = bisect.bisect_right(self.starts, sy_hi)
-        for group in self.by_start[lo:hi]:
-            hits += [i for i in group if self.rows[i][2][1] >= sy_lo]
+        for reach, starts, groups in self.classes:
+            lo = bisect.bisect_left(starts, sy_lo - reach)
+            hi = bisect.bisect_right(starts, sy_hi)
+            for group in groups[lo:hi]:
+                hits += [i for i in group if self.rows[i][2][1] >= sy_lo]
         return [self.rows[i] for i in sorted(hits)]
 
 
