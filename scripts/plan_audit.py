@@ -4,10 +4,11 @@ depends on, and print the evidence.
 Checks (each FAILS the script if violated):
 
 1. Every raster tree runs on the tile grid: its one ``MapInArrow`` kernel
-   reads a JVM ``Range`` of tile ids and the parquet leaves itself — no
-   ``FileScan`` (no JVM payload decode), no ``Exchange`` (no payload
-   shuffle) and no ``Scan ExistingRDD`` (a parallelized Python RDD would
-   cost every task a second Python worker).  Covered: a table on the
+   reads a bare JVM ``Range`` of run ids, which it expands into tile ids
+   itself (no ``Generate`` or ``Project`` between them), and the parquet
+   leaves itself — no ``FileScan`` (no JVM payload decode), no
+   ``Exchange`` (no payload shuffle) and no ``Scan ExistingRDD`` (a
+   parallelized Python RDD would cost every task a second Python worker).  Covered: a table on the
    computation grid, planar tables, a sparse table, a table off the grid
    (stored at half the tile size) and a tree with no parquet leaf.
 2. The PIP candidate plan broadcast-joins (or inlines) the polygon side —
@@ -95,7 +96,7 @@ def main() -> int:
             failures.append(name)
 
     # 1. every raster tree runs on the tile grid: one MapInArrow kernel
-    # over a JVM Range of tile ids, reading its parquet leaves itself.
+    # over a bare JVM Range of run ids, reading its parquet leaves itself.
     import tempfile
 
     import numpy as np
@@ -127,12 +128,15 @@ def main() -> int:
             plan = plan_of(X.tiles_dataframe(X._as_root(expr), spark))  # noqa: SLF001
             tree = plan.split("\n\n")[0].splitlines()
             kernel = [i for i, l in enumerate(tree) if "MapInArrow" in l]
+            below = [l.lstrip(" :+-*") for l in subtree(tree, kernel[0])] if kernel else []
             ok = (len(kernel) == 1
-                  and any("Range" in l for l in subtree(tree, kernel[0]))
+                  and len(below) == 1 and below[0].startswith("Range")
                   and not any(op in plan for op in
-                              ("Scan parquet", "FileScan", "Exchange", "ExistingRDD")))
-            check(f"{name} raster tree runs on the tile grid: MapInArrow over Range, "
-                  "no FileScan, Exchange or ExistingRDD", ok, "\n".join(tree))
+                              ("Generate", "Scan parquet", "FileScan", "Exchange",
+                               "ExistingRDD")))
+            check(f"{name} raster tree runs on the tile grid: MapInArrow over a bare "
+                  "Range, no Generate, FileScan, Exchange or ExistingRDD", ok,
+                  "\n".join(tree))
 
     # 2. PIP broadcast / inlined cover
     pts = harness.customer_points(spark, SF_DIR).withColumn(

@@ -55,6 +55,24 @@ def distributed(spark):
 
 
 @pytest.fixture
+def grid_tasks():
+    """``grid_tasks(payload, df)``: the ``(ty, tx)`` tiles of each task of
+    the tile grid ``df`` that ``executor._build`` returned with
+    ``payload``, expanded from the task's run ids as the kernel expands
+    them (``executor._run_tiles``)."""
+    import pyarrow as pa
+
+    from yirgacheffe_spark.plans import executor
+
+    def tasks(payload, df) -> list[list[tuple[int, int]]]:
+        return [list(executor._run_tiles(
+                    payload, [pa.record_batch({"id": [r.id for r in rows]})]))
+                for rows in df.rdd.glom().collect()]
+
+    return tasks
+
+
+@pytest.fixture
 def wgs84_02():
     from yirgacheffe_spark import MapProjection
 

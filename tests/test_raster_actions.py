@@ -115,6 +115,32 @@ def test_min_max_keep_spark_nan_ordering(spark, tmp_path):
     assert np.isnan(nan_only.max(spark=spark))
 
 
+def test_every_action_sees_the_dtype_save_writes(spark, tmp_path, monkeypatch):
+    """A float32 ``conv2d`` is declared float32 while its kernel computes
+    in float64: every action casts each tile to the declared dtype once,
+    so ``sum`` and ``min``/``max`` equal what ``save`` writes and reads
+    back, bit for bit, and so does the local oracle."""
+    import yirgacheffe_spark.constants as C
+
+    monkeypatch.setattr(C, "TILE_YSIZE", 16)
+    monkeypatch.setattr(C, "TILE_XSIZE", 16)
+    data = np.random.default_rng(0).standard_normal((64, 64)).astype(np.float32)
+    expr = yg.from_array(data, (0.0, 0.0), PROJ).conv2d(np.ones((3, 3), dtype=np.float32))
+    assert expr.datatype == yg.DataType.Float32
+    out = str(tmp_path / "saved")
+    total = expr.save(out, and_sum=True, spark=spark)
+    assert expr.sum(spark=spark) == total
+    saved = yg.read_raster(out)
+    assert saved.sum(spark=spark) == total
+    written = saved.read_array(0, 0, 64, 64)
+    assert written.dtype == np.float32
+    local = evaluate_window(expr)
+    assert local.dtype == np.float32
+    np.testing.assert_array_equal(local, written)
+    assert expr.min(spark=spark) == float(written.min())
+    assert expr.max(spark=spark) == float(written.max())
+
+
 def _window(full: np.ndarray, x, y, w, h) -> np.ndarray:
     """``full[y:y+h, x:x+w]`` with zeros outside ``full``."""
     out = np.zeros((h, w), dtype=full.dtype)
@@ -323,12 +349,13 @@ def _kernel_in_one_task(expr, spark) -> np.ndarray:
     _spark, root, payload, _bc, df = executor._build(expr, spark)
     win = root.window
     full = np.zeros((win.ysize, win.xsize), dtype=root.datatype.to_numpy())
-    for ty, tx, h, w, result in executor._tile_results(payload, df.toArrow().to_batches()):
+    tiles = executor._run_tiles(payload, df.toArrow().to_batches())
+    for ty, tx, h, w, result in executor._tile_results(payload, tiles):
         full[ty * T:ty * T + h, tx * T:tx * T + w] = result
     return full
 
 
-def _most_row_groups_of_a_task(expr, spark) -> int:
+def _most_row_groups_of_a_task(expr, spark, grid_tasks) -> int:
     """The most (file, row group) pairs that one task of ``expr``'s tile
     grid reads, halos included."""
     _spark, _root, payload, _bc, df = executor._build(expr, spark)
@@ -337,11 +364,11 @@ def _most_row_groups_of_a_task(expr, spark) -> int:
              for f, rg, _ymm, _xmm in pqr._pruned_row_groups(
                  meta["path"], meta["band"], meta["band"],
                  executor._stored_range(payload, meta, ty, tx))})
-        for tiles in df.rdd.glom().collect())
+        for tiles in grid_tasks(payload, df))
 
 
-def test_stencil_halos_stay_exact_when_the_read_scope_evicts(spark, tmp_path,
-                                                              monkeypatch, distributed):
+def test_stencil_halos_stay_exact_when_the_read_scope_evicts(spark, tmp_path, monkeypatch,
+                                                              distributed, grid_tasks):
     """Stencils read their halos through the task's read scope.  With one
     tile per row group, and more tile-id runs than partitions, a task reads
     more row groups than its scope keeps, so halo reads find some evicted
@@ -359,11 +386,13 @@ def test_stencil_halos_stay_exact_when_the_read_scope_evicts(spark, tmp_path,
     exprs = {"single": a.conv2d(k), "planar": a.conv2d(k) + b,
              "sparse": sparse_layer.conv2d(k)}
     for name, expr in exprs.items():
-        _spark, _root, _payload, _bc, df = executor._build(expr, spark)
+        _spark, _root, payload, _bc, df = executor._build(expr, spark)
+        assert payload["run"] == pqr.ROW_GROUP_TILES, name
         assert df.rdd.getNumPartitions() < 12, name
         # The executors' scopes keep their unpatched bound, so their tasks
         # must overflow it.
-        assert _most_row_groups_of_a_task(expr, spark) > pqr._READ_SCOPE_MAX_RGS, name
+        assert _most_row_groups_of_a_task(expr, spark, grid_tasks) > pqr._READ_SCOPE_MAX_RGS, \
+            name
         want = np.asarray(evaluate_window(expr))
         np.testing.assert_array_equal(distributed(expr), want, err_msg=name)
         assert expr.sum(spark=spark) == float(want.sum(dtype=np.float64)), name

@@ -355,7 +355,8 @@ def test_manifest_plan_scans_a_jvm_range(spark, tmp_path, distributed):
         np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
 
 
-def test_planar_manifest_more_groups_than_partitions(spark, tmp_path, distributed):
+def test_planar_manifest_more_groups_than_partitions(spark, tmp_path, distributed,
+                                                      grid_tasks):
     """Planar tables with more tile-id runs than range partitions, in a
     window widened past the data: every tile is evaluated once, in runs
     that each read their own row groups, and the tiles outside the data are
@@ -378,8 +379,12 @@ def test_planar_manifest_more_groups_than_partitions(spark, tmp_path, distribute
     expr = la.as_area(wide) * 3 + lb.as_area(wide) + 1  # f(0) != 0
 
     _spark, _root, payload, _bc, df = executor._build(expr, spark)
-    runs = -(-payload["tiles_y"] * payload["tiles_x"] // pqr.ROW_GROUP_TILES)
-    assert runs > df.rdd.getNumPartitions()
+    n = payload["tiles_y"] * payload["tiles_x"]
+    assert payload["run"] == pqr.ROW_GROUP_TILES
+    assert df.count() == -(-n // pqr.ROW_GROUP_TILES) > df.rdd.getNumPartitions()
+    tasks = grid_tasks(payload, df)
+    assert sorted(t for tiles in tasks for t in tiles) == [
+        divmod(i, payload["tiles_x"]) for i in range(n)]
 
     local = kernel.evaluate_window(expr)
     np.testing.assert_array_equal(distributed(expr), local)

@@ -1,13 +1,14 @@
-"""The tile grid: every tree runs over a JVM range of tile ids, in runs of
-``parquet.ROW_GROUP_TILES`` when it has a parquet leaf (of one id when it
-has none), and the kernel reads its parquet leaves in-process through
-``ParquetRasterLayer.read_window``.
+"""The tile grid: every tree runs over a JVM range of run ids, each run
+``parquet.ROW_GROUP_TILES`` tile ids when it has a parquet leaf (one id
+when it has none), halved while the halved runs fit one wave of the
+cores; the kernel expands the runs and reads its parquet leaves
+in-process through ``ParquetRasterLayer.read_window``.
 
 Each case is compared against the one-tile local oracle
 (``kernel.evaluate_window``); the data are small integers so sums are
 exact under any addition order.  The schedule (every tile once, in
-whole runs, their length chosen by the tree) and the indexed row-group
-lookup are tested directly.
+whole runs, their length chosen by the tree and the cores) and the
+indexed row-group lookup are tested directly.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ import math
 import os
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -172,35 +174,72 @@ def test_save_clusters_rows_of_a_tile_grid_tree(spark, tmp_path):
 @pytest.mark.parametrize("n_y, n_x", [(1, 1), (3, 5), (4, 4), (1, 17), (6, 4), (13, 11),
                                       (40, 25)])
 @pytest.mark.parametrize("run", [pqr.ROW_GROUP_TILES, 1])
-def test_grid_runs_every_tile_once_in_whole_runs(spark, n_y, n_x, run):
-    """The tile grid lists every tile of the window exactly once, in
-    row-major order, every partition starts at a multiple of ``run``, and
-    there are as many partitions as runs, up to twice the default
-    parallelism."""
-    parts = executor._base_grid(spark, n_y, n_x, run).rdd.glom().collect()
-    ids = [[ty * n_x + tx for ty, tx in rows] for rows in parts]
+def test_grid_runs_every_tile_once_in_whole_runs(spark, grid_tasks, n_y, n_x, run):
+    """The tile grid is a bare range of run ids, as many partitions as runs
+    up to twice the default parallelism; expanded as the kernel expands
+    them, its runs list every tile of the window exactly once, in
+    row-major order, and every partition starts at a multiple of
+    ``run``."""
+    df = executor._base_grid(spark, n_y * n_x, run)
+    payload = {"run": run, "tiles_y": n_y, "tiles_x": n_x}
+    ids = [[ty * n_x + tx for ty, tx in tiles] for tiles in grid_tasks(payload, df)]
     assert [i for rows in ids for i in rows] == list(range(n_y * n_x))
     assert all(rows[0] % run == 0 for rows in ids if rows), ids
-    assert len(parts) == min(-(-n_y * n_x // run),
-                             max(2 * spark.sparkContext.defaultParallelism, 1))
+    assert len(ids) == min(-(-n_y * n_x // run),
+                           max(2 * spark.sparkContext.defaultParallelism, 1))
 
 
-def test_grid_run_follows_the_tree(spark, tmp_path, distributed):
+@pytest.mark.parametrize("n, cores, reads_parquet, run", [
+    (24, 4, True, 8), (42, 4, True, 16), (6, 4, True, 2), (4, 4, True, 1),
+    (1, 4, True, 1), (24, 4, False, 1), (42, 4, False, 1), (1, 4, False, 1)])
+def test_run_length_fits_the_cores(n, cores, reads_parquet, run):
+    """A tree that reads a parquet table starts from runs of
+    ``ROW_GROUP_TILES`` tiles, one that reads none from runs of one; the
+    run is halved while the halved runs still fit one wave of ``cores``
+    tasks.  The kernel's expansion of the runs, fed in batches of any
+    size, yields every tile once, row-major, the last run short when the
+    run does not divide the window."""
+    start = pqr.ROW_GROUP_TILES if reads_parquet else 1
+    assert executor._run_length(n, start, cores) == run
+    for n_y in (1, n):  # one tile row, and one tile column
+        n_x = n // n_y
+        payload = {"run": run, "tiles_y": n_y, "tiles_x": n_x}
+        runs = list(range(-(-n // run)))
+        for size in (1, 2, len(runs)):
+            batches = [pa.record_batch({"id": runs[i:i + size]})
+                       for i in range(0, len(runs), size)]
+            tiles = list(executor._run_tiles(payload, batches))
+            assert tiles == [divmod(i, n_x) for i in range(n)]
+        last = list(executor._run_tiles(payload, [pa.record_batch({"id": runs[-1:]})]))
+        assert len(last) == n - runs[-1] * run
+
+
+def test_grid_run_follows_the_tree(spark, tmp_path, distributed, grid_tasks):
     """A tree that reads a parquet table, as a leaf or through a mosaic,
-    runs in whole row groups (``ROW_GROUP_TILES`` tile ids a run): on a
-    table whose first tile and width the window shares, at the
-    computation tile size, no two tasks decode one row group.  A tree
-    that reads none has no row group to share, so its tiles spread over
-    the full parallelism, one id a run."""
+    runs in whole row groups (``ROW_GROUP_TILES`` tile ids a run) when
+    its window has enough tiles to fill the cores with them, and in
+    halved runs that fill one wave of the cores when it has not (24 tiles
+    on 4 cores: 3 runs of 8).  A tree that reads none has no row group to
+    share, so its tiles spread over the full parallelism, one id a run.
+    Every task starts at a whole run and the results equal the local
+    oracle's."""
+    assert spark.sparkContext.defaultParallelism == 4
     data = _data(4, 24, 28)  # 6 x 7 tiles of 4
+    small = _data(5, 16, 24)  # 4 x 6 tiles of 4
     k = np.ones((3, 3), dtype=np.float32)
-    for expr, run in ((_table(tmp_path, "a", data).conv2d(k), pqr.ROW_GROUP_TILES),
-                      (yg.GroupLayer([_table(tmp_path, "b", data)]) * 2, pqr.ROW_GROUP_TILES),
-                      (yg.from_array(data, (0.0, 0.0), PROJ).conv2d(k), 1)):
-        _spark, _root, _payload, _bc, df = executor._build(expr, spark)
-        parts = df.rdd.glom().collect()
-        assert len(parts) == min(-(-42 // run), 2 * spark.sparkContext.defaultParallelism)
-        assert all((rows[0].ty * 7 + rows[0].tx) % run == 0 for rows in parts if rows)
+    for expr, n, run in (
+            (_table(tmp_path, "a", data).conv2d(k), 42, pqr.ROW_GROUP_TILES),
+            (yg.GroupLayer([_table(tmp_path, "b", data)]) * 2, 42, pqr.ROW_GROUP_TILES),
+            (_table(tmp_path, "c", small) * 2, 24, 8),
+            (_table(tmp_path, "d", small).conv2d(k), 24, 8),
+            (yg.from_array(data, (0.0, 0.0), PROJ).conv2d(k), 42, 1)):
+        _spark, _root, payload, _bc, df = executor._build(expr, spark)
+        assert payload["run"] == run
+        tasks = grid_tasks(payload, df)
+        assert len(tasks) == min(-(-n // run), 2 * spark.sparkContext.defaultParallelism)
+        n_x = payload["tiles_x"]
+        assert [ty * n_x + tx for tiles in tasks for ty, tx in tiles] == list(range(n))
+        assert all((tiles[0][0] * n_x + tiles[0][1]) % run == 0 for tiles in tasks if tiles)
         local = kernel.evaluate_window(expr)
         np.testing.assert_array_equal(distributed(expr), local)
         assert expr.sum(spark=spark) == float(local.sum(dtype=np.float64))

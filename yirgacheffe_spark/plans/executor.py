@@ -4,9 +4,11 @@ Physical shape of every computation:
 
 1. **Plan (driver)** — resolve the operation area/window with the reference's
    extent algebra and split the window into a grid of tiles.  Every tree
-   runs on the **tile grid** (``_build``): a JVM range of tile ids, cut
-   into runs of ``parquet.ROW_GROUP_TILES`` ids when the tree reads a
-   parquet table, of one id otherwise (``_base_grid``).  The
+   runs on the **tile grid** (``_build``): a bare JVM range of run ids,
+   each run ``parquet.ROW_GROUP_TILES`` tile ids when the tree reads a
+   parquet table, one id otherwise, halved while the halved runs still
+   fit one wave of the cores (``_run_length``, ``_base_grid``); the
+   kernel expands each run into its tile ids (``_run_tiles``).  The
    tree, with its non-parquet leaves (in-memory arrays, constants,
    generated layers), ships to the kernel in a broadcast.  The kernel
    reads each parquet leaf of its tile in-process
@@ -41,20 +43,25 @@ Implementation notes for throughput:
   multi-megabyte binaries, and Arrow buffers are sliced zero-copy into
   numpy, where pandas conversion would materialise Python bytes per tile.
 * One Python worker per task.  A kernel's input rows come from the JVM (a
-  ``spark.range`` of tile-id runs), never from a parallelized Python RDD,
+  ``spark.range`` of run ids), never from a parallelized Python RDD,
   which would start a second worker per task just to emit rows.  Every
   kernel body is wrapped in ``_worker.task_entry``, the library-wide
   Python task entry hook, so the next task on the same worker skips
   PySpark's per-task zip-archive re-read (see ``_worker``).
-* Runs of whole row groups: the writers fill row groups, in row-major tile
-  order, with ``parquet.row_group_tiles`` tiles (16, or 8 or 4 for wider
-  dtypes at 512-pixel tiles, each of which divides ``ROW_GROUP_TILES``),
-  so when the window starts at a table's first tile, is as wide as the
-  table and tiles it at the computation tile size, each of its row groups
-  is decoded by one task, once (``_build`` says where that fails).  A task
-  holds at most its read scope's row groups, whatever the table's size.
-* Driver-side plan construction keeps py4j chatter low: a plan is one JVM
-  range and lists no row group; the kernels find theirs in the indexed
+* Runs fitted to row groups and cores: the writers fill row groups, in
+  row-major tile order, with ``parquet.row_group_tiles`` tiles (16, or 8
+  or 4 for wider dtypes at 512-pixel tiles, each of which divides
+  ``ROW_GROUP_TILES``), so on a window that starts at a table's first
+  tile, is as wide as the table and tiles it at the computation tile
+  size, a run of 16 has each row group decoded by one task, once.  A
+  window too small to fill the cores with such runs gets halved runs, so
+  a row group is decoded by a few tasks at the same time on cores that
+  would otherwise idle (``_build`` gives the bound and where it fails).
+  A task holds at most its read scope's row groups, whatever the table's
+  size.
+* Driver-side plan construction keeps py4j chatter low: a plan is one bare
+  JVM range, with no projection to build, and lists no row group; the
+  kernels find theirs in the indexed
   listings (manifests and footer statistics, cached per file and
   mtime_ns), so repeated terminal actions cost milliseconds of planning.
 
@@ -77,7 +84,7 @@ import math
 import os
 import shutil
 import uuid
-from typing import Iterator
+from typing import Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -171,83 +178,113 @@ def _stored_range(payload: dict, meta: dict, ty: int, tx: int) -> tuple[int, int
             max(x_px_lo // s, 0), min((x_px_hi - 1) // s, stored_x - 1))
 
 
-def _base_grid(spark: SparkSession, n_y: int, n_x: int, run: int) -> DataFrame:
-    """One ``(ty, tx)`` row per tile of the ``n_y`` x ``n_x`` window,
-    row-major, as a JVM range of runs of ``run`` tile ids over up to twice
-    the default parallelism.  A task gets whole runs of neighbouring
-    tiles."""
-    n = n_y * n_x
+def _run_length(n: int, run: int, cores: int) -> int:
+    """The run length of a grid of ``n`` tiles: ``run`` halved while the
+    halved runs still fit one wave of ``cores`` tasks."""
+    while run > 1 and -(-n // (run // 2)) <= cores:
+        run //= 2
+    return run
+
+
+def _base_grid(spark: SparkSession, n: int, run: int) -> DataFrame:
+    """The runs of ``run`` tile ids that cover the ``n`` tiles of a window,
+    row-major, as a bare JVM range of run ids over up to twice the default
+    parallelism.  The kernel expands run ``r`` into tile ids ``[r * run,
+    min(r * run + run, n))`` (``_run_tiles``), so a task gets whole runs of
+    neighbouring tiles."""
     runs = -(-n // run)
     parallelism = max(spark.sparkContext.defaultParallelism * 2, 1)
-    ids = spark.range(0, runs, numPartitions=max(min(runs, parallelism), 1))
-    if run > 1:  # the explode costs about 20 ms an action, so runs of 1 skip it
-        ids = ids.selectExpr(
-            f"explode(sequence(id * {run}, least(id * {run} + {run}, {n}) - 1)) AS id")
-    return ids.selectExpr(
-        f"CAST(id DIV {n_x} AS INT) AS ty",
-        f"CAST(id % {n_x} AS INT) AS tx",
-    )
+    return spark.range(0, runs, numPartitions=max(min(runs, parallelism), 1))
 
 
 def _build(tree, spark: SparkSession | None):
     """The tile grid that feeds the kernel every tile of the computation
-    window (``_base_grid``), and the kernel's broadcast payload.  There is
-    one plan for every tree: the kernel reads each parquet leaf of its
-    tile itself, through ``read_window``, whatever the leaf's tile size,
-    offset, band layout or sparsity.
+    window (``_base_grid``), and the kernel's broadcast payload, whose
+    ``run`` is the grid's run length.  There is one plan for every tree:
+    the kernel reads each parquet leaf of its tile itself, through
+    ``read_window``, whatever the leaf's tile size, offset, band layout or
+    sparsity.
 
-    A tree that reads a parquet table (``kernel.reads_parquet``: a leaf,
-    or a mosaic or reprojection of one) runs in runs of
-    ``parquet.ROW_GROUP_TILES`` tile ids, which its read scope rewards: neighbouring tiles share row
-    groups, and a stencil's halo reads find most of theirs decoded.  The
-    writers fill row groups row-major, so when the window starts at a
-    leaf's first stored tile, is as wide as the leaf, tiles it at the
-    computation tile size and its row groups hold a divisor of 16 tiles
-    (the writers' 16, 8 or 4 at 512-pixel tiles), no two tasks decode one
-    of its row groups; single-tile runs would let up to six tasks decode
-    each 16-tile row group.  Elsewhere (an offset or clipped window, a
-    sparse save, another tile size) a row group can straddle two runs and
-    be decoded by both tasks.  A tree that reads no parquet table has no
-    row group to share, so it runs in single-tile runs over the full
-    parallelism."""
+    The run length follows the tree and the cores.  A tree that reads a
+    parquet table (``kernel.reads_parquet``: a leaf, or a mosaic or
+    reprojection of one) starts from runs of ``parquet.ROW_GROUP_TILES``
+    tile ids, which its read scope rewards: neighbouring tiles share row
+    groups, and a stencil's halo reads find most of theirs decoded.  A tree
+    that reads none has no row group to share and starts from runs of one.
+    The run is then halved while the halved runs still fit one wave of the
+    default parallelism (``_run_length``): 24 tiles on 4 cores run as 3
+    runs of 8, where runs of 16 would leave two cores idle and let the
+    16-tile task set the time of every step; a large window keeps its runs
+    of 16.
+
+    Decode bound: a row group of ``R`` tiles, consecutive in row-major
+    order, is decoded for its own tiles by at most ``ceil(R / run) + 1``
+    tasks (a stencil's halo reads add the tasks of neighbouring tile
+    rows).  The writers fill row groups row-major, so when the window
+    starts at a leaf's first stored tile, is as wide as the leaf, tiles it
+    at the computation tile size and its row groups hold a divisor of
+    ``run`` tiles, no two tasks decode one row group; a halved run splits
+    a 16-tile row group between two tasks that decode it at the same time,
+    on cores that would otherwise idle.  Elsewhere (an offset or clipped window, a sparse save,
+    another tile size) a row group can straddle two runs.  Halving stops at
+    one wave: single-tile runs, 8 partitions of 3 tiles on 4 cores, ran in
+    two waves and let up to six tasks decode each 16-tile row group, and
+    measured slower than runs of 16."""
     spark = get_spark(spark)
     root = _as_root(tree)
     payload = _plan_payload(root)
-    run = pq_raster.ROW_GROUP_TILES if K.reads_parquet(root) else 1
-    df = _base_grid(spark, payload["tiles_y"], payload["tiles_x"], run)
+    n = payload["tiles_y"] * payload["tiles_x"]
+    run = _run_length(n, pq_raster.ROW_GROUP_TILES if K.reads_parquet(root) else 1,
+                      spark.sparkContext.defaultParallelism)
+    payload["run"] = run
+    df = _base_grid(spark, n, run)
     bc = spark.sparkContext.broadcast(payload)
     return spark, root, payload, bc, df
 
 
-def _tile_results(payload, batch_iter: Iterator[pa.RecordBatch]):
+def _run_tiles(payload: dict, batches: Iterable[pa.RecordBatch]) -> Iterator[tuple[int, int]]:
+    """The ``(ty, tx)`` of every tile of the runs whose ids ``batches`` of
+    the tile grid hold, in order: run ``r`` covers tile ids ``[r * run,
+    min(r * run + run, n))``, row-major."""
+    run, n_x = payload["run"], payload["tiles_x"]
+    n = payload["tiles_y"] * n_x
+    for batch in batches:
+        for r in batch.column("id").to_pylist():
+            for i in range(r * run, min(r * run + run, n)):
+                yield divmod(i, n_x)
+
+
+def _tile_results(payload, tiles: Iterable[tuple[int, int]]):
     """Generator core of every kernel: yields (ty, tx, h, w, result) per
-    ``(ty, tx)`` row of the tile grid.  The kernel reads each parquet leaf
-    itself (``read_region``, halo-grown by the leaf's pad) after
+    ``(ty, tx)`` of ``tiles``, the result cast to the tree's dtype
+    (``out_dtype``, see ``kernel.cast_result``), so every action sees what
+    ``save`` writes.  The kernel reads each parquet leaf itself
+    (``read_region``, halo-grown by the leaf's pad) after
     ``_prefetch_tile`` has decoded the tile's row groups.  Kernels pass
-    their broadcast payload; ``read_array`` runs it in the calling
-    process."""
+    their broadcast payload and their runs' tiles (``_run_tiles``);
+    ``read_array`` runs it in the calling process over its window's
+    tiles."""
     ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    window = payload["window"]
+    window, out_dtype = payload["window"], payload["out_dtype"]
     # Read scope: leaf and mosaic reads of this run of tiles reuse decoded
     # row groups (nothing survives the run — see parquet.push_read_scope).
     pq_raster.push_read_scope()
     try:
-        for batch in batch_iter:
-            for ty, tx in zip(batch.column("ty").to_pylist(),
-                              batch.column("tx").to_pylist()):
-                _prefetch_tile(payload, ty, tx)
-                y0, x0 = ty * ty_size, tx * tx_size
-                h = min(ty_size, window.ysize - y0)
-                w = min(tx_size, window.xsize - x0)
-                ctx = K.EvalContext(
-                    area=payload["area"],
-                    projection=payload["projection"],
-                    shared_hashes=payload["shared_hashes"],
-                )
-                result = np.asarray(K.eval_tree(payload["tree"], ctx, x0, y0, w, h))
-                if result.shape != (h, w):
-                    result = np.broadcast_to(result, (h, w))
-                yield ty, tx, h, w, result
+        for ty, tx in tiles:
+            _prefetch_tile(payload, ty, tx)
+            y0, x0 = ty * ty_size, tx * tx_size
+            h = min(ty_size, window.ysize - y0)
+            w = min(tx_size, window.xsize - x0)
+            ctx = K.EvalContext(
+                area=payload["area"],
+                projection=payload["projection"],
+                shared_hashes=payload["shared_hashes"],
+            )
+            result = K.cast_result(K.eval_tree(payload["tree"], ctx, x0, y0, w, h),
+                                   out_dtype)
+            if result.shape != (h, w):
+                result = np.broadcast_to(result, (h, w))
+            yield ty, tx, h, w, result
     finally:
         pq_raster.pop_read_scope()
 
@@ -278,11 +315,13 @@ def _tile_batch(rows: list) -> pa.RecordBatch:
 
 def _tile_rows(tiles, out_dtype, band: int = 1):
     """The result-tile row of each ``(ty, tx, h, w, result)`` kernel tile:
-    its payload is the result cast to ``out_dtype``, and ``nonzero`` says
-    whether any pixel of the result is."""
+    its payload is the result as ``out_dtype`` (which only a NaN-bearing
+    float result of an integer tree still needs cast, see
+    ``kernel.cast_result``), and ``nonzero`` says whether any pixel of the
+    result is."""
     for ty, tx, h, w, result in tiles:
         yield (band, ty, tx, h, w, bool(np.any(result)),
-               np.ascontiguousarray(result.astype(out_dtype)).tobytes())
+               result.astype(out_dtype, copy=False).tobytes())
 
 
 def tiles_dataframe(tree, spark: SparkSession | None = None) -> DataFrame:
@@ -296,7 +335,8 @@ def tiles_dataframe(tree, spark: SparkSession | None = None) -> DataFrame:
         # Whole-partition pass (one read scope — see aggregate.compute);
         # results stream out in bounded chunks.
         rows = []
-        for row in _tile_rows(_tile_results(bc.value, batches), out_dtype):
+        results = _tile_results(bc.value, _run_tiles(bc.value, batches))
+        for row in _tile_rows(results, out_dtype):
             rows.append(row)
             if len(rows) >= 32:
                 yield _tile_batch(rows)
@@ -497,7 +537,7 @@ def zonal_stats(tree, polygons, spark: SparkSession | None = None,
         ty_size, tx_size = pl["ty_size"], pl["tx_size"]
         xstep, ystep = proj.xstep, proj.ystep
         out_rows = []
-        for ty, tx, h, w, result in _tile_results(bc.value, batches):
+        for ty, tx, h, w, result in _tile_results(pl, _run_tiles(pl, batches)):
             left = area.left + (tx * tx_size) * xstep
             top = area.top + (ty * ty_size) * ystep
             right = left + w * xstep
@@ -516,7 +556,7 @@ def zonal_stats(tree, polygons, spark: SparkSession | None = None,
                 n = int(np.count_nonzero(sel))
                 if n == 0:
                     continue  # bbox touched the tile but no pixel center did
-                vals = np.asarray(result)[sel]
+                vals = result[sel]
                 out_rows.append((
                     pid, ty, tx,
                     float(np.sum(vals, dtype=np.float64)), n,
@@ -553,7 +593,8 @@ def aggregate(tree, stat: str, spark: SparkSession | None = None) -> float:
         # tiles share one read scope, so a row group that several of them
         # read is decoded once.
         tys, txs, parts = [], [], []
-        for ty, tx, _h, _w, result in _tile_results(bc.value, batches):
+        for ty, tx, _h, _w, result in _tile_results(bc.value,
+                                                    _run_tiles(bc.value, batches)):
             if stat == "sum":
                 # dtype=float64 accumulates identically to astype(float64)
                 # (same pairwise tree, exact per-element widening) without
@@ -656,8 +697,9 @@ def unique(tree, return_counts: bool = False, spark: SparkSession | None = None,
         # Whole-partition pass (one read scope — see aggregate.compute).
         # Partials here are tiny (distinct values).
         vals_out, nan_out, cnt_out = [], [], []
-        for _ty, _tx, _h, _w, result in _tile_results(bc.value, batches):
-            values, counts = np.unique(np.asarray(result), return_counts=True)
+        for _ty, _tx, _h, _w, result in _tile_results(bc.value,
+                                                      _run_tiles(bc.value, batches)):
+            values, counts = np.unique(result, return_counts=True)
             values = values.astype(np.float64)
             nan_mask = np.isnan(values)
             vals_out.append(np.where(nan_mask, 0.0, values))
@@ -729,11 +771,8 @@ def read_array(tree, x: int, y: int, width: int, height: int,
     ty_size, tx_size = payload["ty_size"], payload["tx_size"]
     tys = range(overlap.yoff // ty_size, (overlap.ymax - 1) // ty_size + 1)
     txs = range(overlap.xoff // tx_size, (overlap.xmax - 1) // tx_size + 1)
-    grid = pa.RecordBatch.from_arrays(
-        [pa.array([ty for ty in tys for _ in txs], pa.int32()),
-         pa.array([tx for _ in tys for tx in txs], pa.int32())],
-        names=["ty", "tx"])
-    for ty, tx, h, w, tile in _tile_results(payload, [grid]):
+    tiles = [(ty, tx) for ty in tys for tx in txs]
+    for ty, tx, h, w, tile in _tile_results(payload, tiles):
         ty0, tx0 = ty * ty_size, tx * tx_size
         iy0, iy1 = max(ty0, overlap.yoff), min(ty0 + h, overlap.ymax)
         ix0, ix1 = max(tx0, overlap.xoff), min(tx0 + w, overlap.xmax)
@@ -779,7 +818,8 @@ def _sink_band(root, band: int, staging: str, spark: SparkSession,
         tiles = 0
         rows, tys, txs, parts = [], [], [], []
         try:
-            for row in _tile_rows(_tile_results(bc.value, batches), out_dtype, band):
+            results = _tile_results(bc.value, _run_tiles(bc.value, batches))
+            for row in _tile_rows(results, out_dtype, band):
                 tiles += 1
                 if sparse and not row[5]:
                     continue

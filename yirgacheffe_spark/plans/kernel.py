@@ -170,10 +170,24 @@ def eval_tree(node, ctx: EvalContext, x: int, y: int, width: int, height: int) -
     return result
 
 
+def cast_result(result, dtype: np.dtype) -> np.ndarray:
+    """A tree's result cast to its declared ``dtype``, as ``save`` writes
+    it, so every action sees the same values.  A cast that would turn
+    floats into integers is left out: an integer tree reads NaN from a
+    nodata pixel, and ``min``/``max``/``sum`` must see that NaN (``save``
+    still casts such a result when it writes it)."""
+    result = np.asarray(result)
+    if np.can_cast(result.dtype, dtype, "same_kind"):
+        return result.astype(dtype, copy=False)
+    return result
+
+
 def evaluate_window(tree, x: int = 0, y: int = 0, width: int | None = None,
                     height: int | None = None) -> np.ndarray:
     """Driver-side single-tile evaluation of a whole expression — the local
-    oracle used by differential tests (and handy for small rasters)."""
+    oracle used by differential tests (and handy for small rasters) — cast
+    to the tree's dtype as the tile grid's kernel casts every tile
+    (``cast_result``)."""
     root = tree if isinstance(tree, LayerOperation) else LayerOperation(tree)
     projection = root.projection
     if projection is None:
@@ -191,8 +205,8 @@ def evaluate_window(tree, x: int = 0, y: int = 0, width: int | None = None,
             h for h, c in collect_hash_counts(root).items() if c >= 2
         ),
     )
-    result = eval_tree(root, ctx, x, y, width, height)
-    result = np.asarray(result)
+    result = cast_result(eval_tree(root, ctx, x, y, width, height),
+                         root.datatype.to_numpy())
     if result.shape != (height, width):
         result = np.broadcast_to(result, (height, width))
     return result
