@@ -1,7 +1,7 @@
 """The tile grid: every tree runs over a JVM range of run ids, each run
 ``parquet.ROW_GROUP_TILES`` tile ids when it has a parquet leaf (one id
-when it has none), halved while the halved runs fit one wave of the
-cores; the kernel expands the runs and reads its parquet leaves
+when it has none), halved once when the halved runs fit one wave of
+the cores; the kernel expands the runs and reads its parquet leaves
 in-process through ``ParquetRasterLayer.read_window``.
 
 Each case is compared against the one-tile local oracle
@@ -189,18 +189,20 @@ def test_grid_runs_every_tile_once_in_whole_runs(spark, grid_tasks, n_y, n_x, ru
                            max(2 * spark.sparkContext.defaultParallelism, 1))
 
 
-@pytest.mark.parametrize("n, cores, reads_parquet, run", [
-    (24, 4, True, 8), (42, 4, True, 16), (6, 4, True, 2), (4, 4, True, 1),
-    (1, 4, True, 1), (24, 4, False, 1), (42, 4, False, 1), (1, 4, False, 1)])
-def test_run_length_fits_the_cores(n, cores, reads_parquet, run):
+@pytest.mark.parametrize("n, cores, task_cpus, reads_parquet, run", [
+    (24, 4, 1, True, 8), (42, 4, 1, True, 16), (33, 4, 1, True, 16), (6, 4, 1, True, 8),
+    (4, 4, 1, True, 8), (1, 4, 1, True, 8), (24, 4, 2, True, 16), (24, 4, 1, False, 1),
+    (42, 4, 1, False, 1), (1, 4, 1, False, 1)])
+def test_run_length_fits_the_cores(n, cores, task_cpus, reads_parquet, run):
     """A tree that reads a parquet table starts from runs of
     ``ROW_GROUP_TILES`` tiles, one that reads none from runs of one; the
-    run is halved while the halved runs still fit one wave of ``cores``
-    tasks.  The kernel's expansion of the runs, fed in batches of any
-    size, yields every tile once, row-major, the last run short when the
-    run does not divide the window."""
+    run is halved, once, when the halved runs still fit one wave of the
+    ``cores // task_cpus`` tasks that run at once.  The kernel's
+    expansion of the runs, fed in batches of any size, yields every tile
+    once, row-major, the last run short when the run does not divide the
+    window."""
     start = pqr.ROW_GROUP_TILES if reads_parquet else 1
-    assert executor._run_length(n, start, cores) == run
+    assert executor._run_length(n, start, cores, task_cpus) == run
     for n_y in (1, n):  # one tile row, and one tile column
         n_x = n // n_y
         payload = {"run": run, "tiles_y": n_y, "tiles_x": n_x}
@@ -217,9 +219,9 @@ def test_run_length_fits_the_cores(n, cores, reads_parquet, run):
 def test_grid_run_follows_the_tree(spark, tmp_path, distributed, grid_tasks):
     """A tree that reads a parquet table, as a leaf or through a mosaic,
     runs in whole row groups (``ROW_GROUP_TILES`` tile ids a run) when
-    its window has enough tiles to fill the cores with them, and in
-    halved runs that fill one wave of the cores when it has not (24 tiles
-    on 4 cores: 3 runs of 8).  A tree that reads none has no row group to
+    its window has enough tiles to fill the cores with them, and in runs
+    halved once when it has not (24 tiles on 4 cores: 3 runs of 8; 4
+    tiles: one run of 8).  A tree that reads none has no row group to
     share, so its tiles spread over the full parallelism, one id a run.
     Every task starts at a whole run and the results equal the local
     oracle's."""
@@ -232,6 +234,7 @@ def test_grid_run_follows_the_tree(spark, tmp_path, distributed, grid_tasks):
             (yg.GroupLayer([_table(tmp_path, "b", data)]) * 2, 42, pqr.ROW_GROUP_TILES),
             (_table(tmp_path, "c", small) * 2, 24, 8),
             (_table(tmp_path, "d", small).conv2d(k), 24, 8),
+            (_table(tmp_path, "e", _data(6, 8, 8)).conv2d(k), 4, 8),
             (yg.from_array(data, (0.0, 0.0), PROJ).conv2d(k), 42, 1)):
         _spark, _root, payload, _bc, df = executor._build(expr, spark)
         assert payload["run"] == run

@@ -6,8 +6,8 @@ Physical shape of every computation:
    extent algebra and split the window into a grid of tiles.  Every tree
    runs on the **tile grid** (``_build``): a bare JVM range of run ids,
    each run ``parquet.ROW_GROUP_TILES`` tile ids when the tree reads a
-   parquet table, one id otherwise, halved while the halved runs still
-   fit one wave of the cores (``_run_length``, ``_base_grid``); the
+   parquet table, one id otherwise, halved once when the halved runs
+   still fit one wave of the cores (``_run_length``, ``_base_grid``); the
    kernel expands each run into its tile ids (``_run_tiles``).  The
    tree, with its non-parquet leaves (in-memory arrays, constants,
    generated layers), ships to the kernel in a broadcast.  The kernel
@@ -54,9 +54,10 @@ Implementation notes for throughput:
   ``ROW_GROUP_TILES``), so on a window that starts at a table's first
   tile, is as wide as the table and tiles it at the computation tile
   size, a run of 16 has each row group decoded by one task, once.  A
-  window too small to fill the cores with such runs gets halved runs, so
-  a row group is decoded by a few tasks at the same time on cores that
-  would otherwise idle (``_build`` gives the bound and where it fails).
+  window too small to fill the cores with such runs gets runs of 8, so a
+  16-tile row group is decoded by two tasks at the same time on cores
+  that would otherwise idle (``_build`` gives the bound and where it
+  fails).
   A task holds at most its read scope's row groups, whatever the table's
   size.
 * Driver-side plan construction keeps py4j chatter low: a plan is one bare
@@ -178,11 +179,12 @@ def _stored_range(payload: dict, meta: dict, ty: int, tx: int) -> tuple[int, int
             max(x_px_lo // s, 0), min((x_px_hi - 1) // s, stored_x - 1))
 
 
-def _run_length(n: int, run: int, cores: int) -> int:
-    """The run length of a grid of ``n`` tiles: ``run`` halved while the
-    halved runs still fit one wave of ``cores`` tasks."""
-    while run > 1 and -(-n // (run // 2)) <= cores:
-        run //= 2
+def _run_length(n: int, run: int, cores: int, task_cpus: int) -> int:
+    """The run length of a grid of ``n`` tiles: ``run`` halved, once, when
+    the halved runs still fit one wave of the ``cores // task_cpus`` tasks
+    that ``cores`` run at once."""
+    if run > 1 and -(-n // (run // 2)) <= max(cores // task_cpus, 1):
+        return run // 2
     return run
 
 
@@ -211,11 +213,17 @@ def _build(tree, spark: SparkSession | None):
     tile ids, which its read scope rewards: neighbouring tiles share row
     groups, and a stencil's halo reads find most of theirs decoded.  A tree
     that reads none has no row group to share and starts from runs of one.
-    The run is then halved while the halved runs still fit one wave of the
-    default parallelism (``_run_length``): 24 tiles on 4 cores run as 3
+    The run is then halved, once, when the halved runs still fit one wave
+    of the tasks the cores run at once (``_run_length``: the default
+    parallelism over ``spark.task.cpus``): 24 tiles on 4 cores run as 3
     runs of 8, where runs of 16 would leave two cores idle and let the
     16-tile task set the time of every step; a large window keeps its runs
-    of 16.
+    of 16.  Halving stops after one step, because smaller runs lose on a
+    small window: on 4 cores, windows of 4 and 8 tiles in runs of 1 and 2
+    had four tasks each decode a whole row group for one or two tiles,
+    and their ``sum`` and ``conv2d`` sums measured slower than in one run
+    of 8 (0.199 against 0.127 s at 4 tiles), while a save wrote one file
+    per run.
 
     Decode bound: a row group of ``R`` tiles, consecutive in row-major
     order, is decoded for its own tiles by at most ``ceil(R / run) + 1``
@@ -225,17 +233,19 @@ def _build(tree, spark: SparkSession | None):
     at the computation tile size and its row groups hold a divisor of
     ``run`` tiles, no two tasks decode one row group; a halved run splits
     a 16-tile row group between two tasks that decode it at the same time,
-    on cores that would otherwise idle.  Elsewhere (an offset or clipped window, a sparse save,
-    another tile size) a row group can straddle two runs.  Halving stops at
-    one wave: single-tile runs, 8 partitions of 3 tiles on 4 cores, ran in
-    two waves and let up to six tasks decode each 16-tile row group, and
-    measured slower than runs of 16."""
+    on cores that would otherwise idle.  Elsewhere (an offset or clipped
+    window, a sparse save, another tile size) a row group can straddle two
+    runs.  The halved runs fit one wave, unlike an earlier cut that ran
+    single-tile runs in 8 partitions of 3 tiles on 4 cores: two waves, up
+    to six tasks decoding each 16-tile row group, and slower than runs of
+    16."""
     spark = get_spark(spark)
     root = _as_root(tree)
     payload = _plan_payload(root)
     n = payload["tiles_y"] * payload["tiles_x"]
     run = _run_length(n, pq_raster.ROW_GROUP_TILES if K.reads_parquet(root) else 1,
-                      spark.sparkContext.defaultParallelism)
+                      spark.sparkContext.defaultParallelism,
+                      int(spark.conf.get("spark.task.cpus", "1")))
     payload["run"] = run
     df = _base_grid(spark, n, run)
     bc = spark.sparkContext.broadcast(payload)
