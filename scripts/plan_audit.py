@@ -108,7 +108,7 @@ def main() -> int:
         area = yg.Area(0.0, 0.0, 0.96, -0.64, proj)
         data = np.ones((64, 96), dtype=np.int16)
 
-        def table(name, tile_size=constants.TILE_YSIZE):
+        def table(name, tile_size=constants.TILE_SIZE):
             return yg.write_array_as_raster_table(
                 os.path.join(tmp, name), data, area, tile_size=tile_size)
 
@@ -121,7 +121,7 @@ def main() -> int:
             "aligned": a * 2,
             "planar": a * 2 + b,
             "sparse": yg.read_raster(os.path.join(tmp, "sparse")) + 1,
-            "unaligned": table("half_tiles", max(constants.TILE_YSIZE // 2, 1)) * 2,
+            "unaligned": table("half_tiles", max(constants.TILE_SIZE // 2, 1)) * 2,
             "no leaf": yg.from_array(data, (0.0, 0.0), proj) * 2,
         }
         for name, expr in trees.items():
@@ -306,7 +306,7 @@ def main() -> int:
 
     with tempfile.TemporaryDirectory(prefix="plan_audit_") as tmp:
         proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
-        s = constants.TILE_YSIZE
+        s = constants.TILE_SIZE
         # 24 tiles, two runs of the tile grid, so two tasks: a one-partition
         # scan would let a Spark-side fold of the partials share the
         # kernel's job.

@@ -24,9 +24,7 @@ def spark():
 @pytest.fixture(autouse=True)
 def small_tiles(monkeypatch):
     """Force multi-tile plans so tiling/halo/join paths execute in every test."""
-    monkeypatch.setattr(C, "TILE_YSIZE", 4)
-    monkeypatch.setattr(C, "TILE_XSIZE", 4)
-    monkeypatch.setattr(C, "STORAGE_TILE_SIZE", 4)
+    monkeypatch.setattr(C, "TILE_SIZE", 4)
 
 
 @pytest.fixture
@@ -42,13 +40,13 @@ def distributed(spark):
         win = root.window
         full = np.zeros((win.ysize, win.xsize), dtype=root.datatype.to_numpy())
         table = executor.tiles_dataframe(root, spark).toArrow()
-        ys, xs = C.TILE_YSIZE, C.TILE_XSIZE
+        s = C.TILE_SIZE
         for i in range(table.num_rows):
             ty, tx, th, tw = (table.column(c)[i].as_py()
                               for c in ("tile_y", "tile_x", "ysize", "xsize"))
             tile = np.frombuffer(table.column("payload")[i].as_buffer(),
                                  dtype=full.dtype).reshape(th, tw)
-            full[ty * ys:ty * ys + th, tx * xs:tx * xs + tw] = tile
+            full[ty * s:ty * s + th, tx * s:tx * s + tw] = tile
         return full
 
     return assemble

@@ -148,16 +148,6 @@ class TestReaderCacheInvalidation:
         assert yg.read_raster(path).sum(spark=spark) == tall.sum()
 
 
-def test_save_multiband_requires_square_tiles(spark, monkeypatch):
-    import yirgacheffe_spark.constants as C
-    from yirgacheffe_spark.plans.executor import save_multiband
-
-    monkeypatch.setattr(C, "TILE_XSIZE", 8)  # YSIZE stays 4 via conftest
-    layer = yg.from_array(np.ones((4, 4), dtype=np.float32), (10.0, 50.0), _proj())
-    with pytest.raises(ValueError, match="square computation tiles"):
-        save_multiband([layer, layer], "/tmp/never_written", spark=spark)
-
-
 def test_write_geotiff_aborts_cleanly_on_midwrite_failure(tmp_path, monkeypatch):
     from yirgacheffe_spark.sources import geotiff as gt
 

@@ -122,8 +122,7 @@ def test_every_action_sees_the_dtype_save_writes(spark, tmp_path, monkeypatch):
     back, bit for bit, and so does the local oracle."""
     import yirgacheffe_spark.constants as C
 
-    monkeypatch.setattr(C, "TILE_YSIZE", 16)
-    monkeypatch.setattr(C, "TILE_XSIZE", 16)
+    monkeypatch.setattr(C, "TILE_SIZE", 16)
     data = np.random.default_rng(0).standard_normal((64, 64)).astype(np.float32)
     expr = yg.from_array(data, (0.0, 0.0), PROJ).conv2d(np.ones((3, 3), dtype=np.float32))
     assert expr.datatype == yg.DataType.Float32
@@ -357,14 +356,19 @@ def _kernel_in_one_task(expr, spark) -> np.ndarray:
 
 def _most_row_groups_of_a_task(expr, spark, grid_tasks) -> int:
     """The most (file, row group) pairs that one task of ``expr``'s tile
-    grid reads, halos included."""
+    grid reads, halos included: what its leaves say their reads of the
+    task's tiles decode (``row_groups``)."""
     _spark, _root, payload, _bc, df = executor._build(expr, spark)
-    return max(
-        len({(f, rg) for ty, tx in tiles for meta in payload["leaf_meta"]
-             for f, rg, _ymm, _xmm in pqr._pruned_row_groups(
-                 meta["path"], meta["band"], meta["band"],
-                 executor._stored_range(payload, meta, ty, tx))})
-        for tiles in grid_tasks(payload, df))
+    area, win = payload["area"], payload["window"]
+
+    def keys(ty, tx):
+        h, w = min(T, win.ysize - ty * T), min(T, win.xsize - tx * T)
+        return {key for leaf, pad in payload["leaves"]
+                for key in leaf.row_groups(area, tx * T - pad, ty * T - pad,
+                                           w + 2 * pad, h + 2 * pad)}
+
+    return max(len(set().union(*(keys(ty, tx) for ty, tx in tiles)))
+               for tiles in grid_tasks(payload, df))
 
 
 def test_stencil_halos_stay_exact_when_the_read_scope_evicts(spark, tmp_path, monkeypatch,

@@ -264,12 +264,14 @@ RETRY_SESSION = '''
 import os
 import sys
 
-os.environ["YG_SPARK_TILE_YSIZE"] = os.environ["YG_SPARK_TILE_XSIZE"] = "4"
 import numpy as np
 from pyspark.sql import SparkSession
 
 import yirgacheffe_spark as yg
+import yirgacheffe_spark.constants as C
 from failing_layer import FailOnce
+
+C.TILE_SIZE = 4
 
 tmp = sys.argv[1]
 spark = (SparkSession.builder.master("local[2,2]")

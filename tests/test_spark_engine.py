@@ -30,8 +30,7 @@ def test_spark_matches_local_oracle_simple(spark):
 def test_tile_size_invariance(spark, monkeypatch, tile):
     """Results must not depend on the tile decomposition (the reference's
     chunk-size invariance tests, test_operators.py:1776-1868)."""
-    monkeypatch.setattr(C, "TILE_YSIZE", tile)
-    monkeypatch.setattr(C, "TILE_XSIZE", tile)
+    monkeypatch.setattr(C, "TILE_SIZE", tile)
     expr = yg.where(L(A) > 50, L(A).log(), 0) + L(B)
     np.testing.assert_allclose(expr.to_numpy(spark=spark), evaluate_window(expr))
     assert expr.sum(spark=spark) == pytest.approx(float(evaluate_window(expr).astype(np.float64).sum()))

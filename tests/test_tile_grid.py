@@ -1,8 +1,9 @@
 """The tile grid: every tree runs over a JVM range of run ids, each run
 ``parquet.ROW_GROUP_TILES`` tile ids when it has a parquet leaf (one id
 when it has none), halved once when the halved runs fit one wave of
-the cores; the kernel expands the runs and reads its parquet leaves
-in-process through ``ParquetRasterLayer.read_window``.
+the cores; the kernel expands the runs, decodes the row groups its
+parquet leaves say each tile reads, and reads the leaves in-process
+through ``ParquetRasterLayer.read_window``.
 
 Each case is compared against the one-tile local oracle
 (``kernel.evaluate_window``); the data are small integers so sums are
@@ -217,11 +218,12 @@ def test_run_length_fits_the_cores(n, cores, task_cpus, reads_parquet, run):
 
 
 def test_grid_run_follows_the_tree(spark, tmp_path, distributed, grid_tasks):
-    """A tree that reads a parquet table, as a leaf or through a mosaic,
-    runs in whole row groups (``ROW_GROUP_TILES`` tile ids a run) when
-    its window has enough tiles to fill the cores with them, and in runs
-    halved once when it has not (24 tiles on 4 cores: 3 runs of 8; 4
-    tiles: one run of 8).  A tree that reads none has no row group to
+    """A tree that reads a parquet table, as a leaf, through a mosaic or
+    through a reprojection, runs in whole row groups (``ROW_GROUP_TILES``
+    tile ids a run) when its window has enough tiles to fill the cores
+    with them, and in runs halved once when it has not (24 tiles on 4
+    cores: 3 runs of 8; 4 tiles: one run of 8).  A tree that reads none
+    has no row group to
     share, so its tiles spread over the full parallelism, one id a run.
     Every task starts at a whole run and the results equal the local
     oracle's."""
@@ -232,6 +234,8 @@ def test_grid_run_follows_the_tree(spark, tmp_path, distributed, grid_tasks):
     for expr, n, run in (
             (_table(tmp_path, "a", data).conv2d(k), 42, pqr.ROW_GROUP_TILES),
             (yg.GroupLayer([_table(tmp_path, "b", data)]) * 2, 42, pqr.ROW_GROUP_TILES),
+            # Reprojected onto its own grid, one pixel wider: 6 x 8 tiles.
+            (_table(tmp_path, "f", data).as_projection(PROJ), 48, pqr.ROW_GROUP_TILES),
             (_table(tmp_path, "c", small) * 2, 24, 8),
             (_table(tmp_path, "d", small).conv2d(k), 24, 8),
             (_table(tmp_path, "e", _data(6, 8, 8)).conv2d(k), 4, 8),
@@ -246,6 +250,66 @@ def test_grid_run_follows_the_tree(spark, tmp_path, distributed, grid_tasks):
         local = kernel.evaluate_window(expr)
         np.testing.assert_array_equal(distributed(expr), local)
         assert expr.sum(spark=spark) == float(local.sum(dtype=np.float64))
+
+
+def _prefetch_trees(tmp_path) -> dict:
+    """Trees whose every parquet read the tile grid can predict: a
+    three-leaf mask, stencils, mosaics of overlapping strips, a table off
+    the computation grid's tile origin and tile size, and an ``as_area``
+    window larger than its leaf."""
+    hab, elev, qty = (_table(tmp_path, name, _data(seed, 24, 28))
+                      for name, seed in (("hab", 20), ("elev", 21), ("qty", 22)))
+    full = _data(23, 24, 28)
+    mosaic = yg.GroupLayer([_table(tmp_path, f"strip{i}", full[y0:y1], dy=y0)
+                            for i, (y0, y1) in enumerate(((0, 10), (7, 18), (15, 24)))])
+    offset = _table(tmp_path, "offset", _data(24, 18, 22), dy=5, dx=3, tile_size=3)
+    k3, k5 = np.ones((3, 3), dtype=np.float32), np.ones((5, 5), dtype=np.float32)
+    return {
+        "aoh": hab.isin([1, 5, 7]) * ((elev >= 2) & (elev <= 6)) * qty,
+        "conv2d_5x5": qty.conv2d(k5),
+        "mosaic": mosaic,
+        "mosaic_conv2d_plus_leaf": mosaic.conv2d(k3) + qty,
+        "offset_plus_leaf": offset + qty,
+        "as_area": (qty * 2).as_area(_area(30, 20, dy=-3, dx=6)),
+        "offset_conv2d": offset.conv2d(k3),
+    }
+
+
+@pytest.mark.parametrize("name", ["aoh", "conv2d_5x5", "mosaic", "mosaic_conv2d_plus_leaf",
+                                  "offset_plus_leaf", "as_area", "offset_conv2d"])
+def test_every_leaf_read_was_prefetched(spark, tmp_path, monkeypatch, grid_tasks, name):
+    """Ahead of each tile the grid decodes the row groups its leaves say
+    their reads will decode (``ParquetRasterLayer.row_groups``), so inside
+    the kernel of each task of the grid no ``read_window`` decodes a row
+    group itself, and every tile equals the local oracle's."""
+    expr = _prefetch_trees(tmp_path)[name]
+    misses = []
+    inside = [0]
+    real_read, real_decode = pqr.ParquetRasterLayer.read_window, pqr._decoded_row_group
+
+    def read_window(self, *args):
+        inside[0] += 1
+        try:
+            return real_read(self, *args)
+        finally:
+            inside[0] -= 1
+
+    def decoded(f, rg):
+        if inside[0]:
+            misses.append((os.path.basename(os.path.dirname(f)), rg))
+        return real_decode(f, rg)
+
+    monkeypatch.setattr(pqr.ParquetRasterLayer, "read_window", read_window)
+    monkeypatch.setattr(pqr, "_decoded_row_group", decoded)
+    monkeypatch.setattr(pqr, "_caller_cores", lambda: 1)  # every decode via the hook
+    local = np.asarray(kernel.evaluate_window(expr))
+    misses.clear()
+    _spark, _root, payload, _bc, df = executor._build(expr, spark)
+    assert payload["leaves"]
+    for tiles in grid_tasks(payload, df):
+        for ty, tx, h, w, result in executor._tile_results(payload, tiles):
+            np.testing.assert_array_equal(result, local[ty * 4:ty * 4 + h, tx * 4:tx * 4 + w])
+    assert misses == []
 
 
 def test_indexed_row_group_lookup_equals_a_full_scan(tmp_path):

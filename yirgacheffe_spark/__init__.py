@@ -187,7 +187,7 @@ def _stream_band_tiles(writer, root, spark_s, out_dtype, file_tile) -> None:
 
     w = root.window
     tiles = executor.tiles_dataframe(root, spark_s)
-    n_engine_rows = -(-w.ysize // _c.TILE_YSIZE)
+    n_engine_rows = -(-w.ysize // _c.TILE_SIZE)
     # One range partition per engine tile row caps what toLocalIterator
     # materialises on the driver at a single strip — the cap must scale
     # with the raster (a fixed small cap would make one partition hold
@@ -199,11 +199,11 @@ def _stream_band_tiles(writer, root, spark_s, out_dtype, file_tile) -> None:
         n_parts, "tile_y", "tile_x"
     ).sortWithinPartitions("tile_y", "tile_x")
 
-    # Rolling strip assembly: engine tiles (TILE_YSIZE tall, row-major order)
+    # Rolling strip assembly: engine tiles (TILE_SIZE tall, row-major order)
     # fill a strip buffer; once the iterator advances past an engine tile
     # row, every raster row above it is final, so complete file-tile rows
     # are compressed, appended, and the buffer shifts down.
-    buf_rows = _c.TILE_YSIZE + file_tile
+    buf_rows = _c.TILE_SIZE + file_tile
     buf = _np.zeros((buf_rows, w.xsize), dtype=out_dtype)
     buf_y0 = 0  # absolute raster row of buf[0]
     emitted = 0  # absolute raster row up to which file tiles are written
@@ -238,18 +238,18 @@ def _stream_band_tiles(writer, root, spark_s, out_dtype, file_tile) -> None:
     for row in ordered.toLocalIterator(prefetchPartitions=True):
         received += 1
         if cur_ty is not None and row["tile_y"] != cur_ty:
-            _flush(row["tile_y"] * _c.TILE_YSIZE)
+            _flush(row["tile_y"] * _c.TILE_SIZE)
         cur_ty = row["tile_y"]
         tile = _np.frombuffer(row["payload"], dtype=out_dtype).reshape(
             row["ysize"], row["xsize"]
         )
-        y0 = row["tile_y"] * _c.TILE_YSIZE
-        x0 = row["tile_x"] * _c.TILE_XSIZE
+        y0 = row["tile_y"] * _c.TILE_SIZE
+        x0 = row["tile_x"] * _c.TILE_SIZE
         buf[y0 - buf_y0 : y0 - buf_y0 + row["ysize"], x0 : x0 + row["xsize"]] = tile
     # The plan emits one row per tile of the window (zeros included), so a
     # short count means the scan lost tiles, e.g. to a stale tile manifest;
     # writing them as zeros would be silently wrong.
-    n_tiles = n_engine_rows * -(-w.xsize // _c.TILE_XSIZE)
+    n_tiles = n_engine_rows * -(-w.xsize // _c.TILE_SIZE)
     if received != n_tiles:
         raise RuntimeError(
             f"to_geotiff received {received} of the {n_tiles} tiles of the "

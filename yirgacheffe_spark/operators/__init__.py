@@ -441,39 +441,62 @@ class LayerMathMixin:
             (y - area.top) / projection.ystep,
         )
 
-    # -- terminal actions (delegate through a root LayerOperation) ----------
-    def sum(self, spark=None):
-        return LayerOperation(self).sum(spark=spark)
+    # -- terminal actions (the executor wraps a bare layer in a root) -------
+    def sum(self, spark=None) -> float:
+        from ..plans import executor  # pylint: disable=C0415
 
-    def min(self, spark=None):
-        return LayerOperation(self).min(spark=spark)
+        return executor.aggregate(self, "sum", spark=spark)
 
-    def max(self, spark=None):
-        return LayerOperation(self).max(spark=spark)
+    def min(self, spark=None) -> float:
+        from ..plans import executor  # pylint: disable=C0415
+
+        return executor.aggregate(self, "min", spark=spark)
+
+    def max(self, spark=None) -> float:
+        from ..plans import executor  # pylint: disable=C0415
+
+        return executor.aggregate(self, "max", spark=spark)
 
     def unique(self, return_counts: bool = False, spark=None, max_values=None):
-        return LayerOperation(self).unique(
-            return_counts=return_counts, spark=spark, max_values=max_values
+        from ..plans import executor  # pylint: disable=C0415
+
+        kwargs = {} if max_values is None else {"max_values": max_values}
+        return executor.unique(
+            self, return_counts=return_counts, spark=spark, **kwargs
         )
 
     def read_array(self, x: int, y: int, width: int, height: int, spark=None) -> np.ndarray:
-        return LayerOperation(self).read_array(x, y, width, height, spark=spark)
+        from ..plans import executor  # pylint: disable=C0415
+
+        return executor.read_array(self, x, y, width, height, spark=spark)
 
     def to_numpy(self, spark=None) -> np.ndarray:
-        return LayerOperation(self).to_numpy(spark=spark)
+        """The whole computation window as numpy: ``read_array`` over the
+        window, so every tile is evaluated in the driver process, one after
+        another, with no Spark job (use ``save`` to compute a large raster
+        on the cluster)."""
+        from ..plans import executor  # pylint: disable=C0415
+
+        w = (self if isinstance(self, LayerOperation) else LayerOperation(self)).window
+        return executor.read_array(self, 0, 0, w.xsize, w.ysize, spark=spark)
 
     def save(self, path, and_sum: bool = False, sparse: bool = False, spark=None):
-        return LayerOperation(self).save(path, and_sum=and_sum, sparse=sparse, spark=spark)
+        from ..plans import executor  # pylint: disable=C0415
+
+        return executor.save(self, path, and_sum=and_sum, sparse=sparse, spark=spark)
 
     def parallel_save(self, path, and_sum: bool = False, spark=None, parallelism=None):
         # Spark executors ARE the parallelism; kept for API parity.
-        return LayerOperation(self).save(path, and_sum=and_sum, spark=spark)
+        return self.save(path, and_sum=and_sum, spark=spark)
 
     def parallel_sum(self, spark=None, parallelism=None):
-        return LayerOperation(self).sum(spark=spark)
+        return self.sum(spark=spark)
 
     def to_dataframe(self, spark=None):
-        return LayerOperation(self).to_dataframe(spark=spark)
+        """The computation as a Spark DataFrame of tiles (the physical plan)."""
+        from ..plans import executor  # pylint: disable=C0415
+
+        return executor.tiles_dataframe(self, spark=spark)
 
     def show(self, ax=None, max_pixels: int | None = 1000, spark=None,
              path: str | None = None, **kwargs):
@@ -707,57 +730,3 @@ class LayerOperation(LayerMathMixin):
                 child.pretty_print(prefix + extension, last)
             else:
                 print(f"{prefix + extension}{'└── ' if last else '├── '}{child!r}")
-
-    # -- terminal actions -----------------------------------------------------
-    def sum(self, spark=None) -> float:
-        from ..plans import executor  # pylint: disable=C0415
-
-        return executor.aggregate(self, "sum", spark=spark)
-
-    def min(self, spark=None) -> float:
-        from ..plans import executor  # pylint: disable=C0415
-
-        return executor.aggregate(self, "min", spark=spark)
-
-    def max(self, spark=None) -> float:
-        from ..plans import executor  # pylint: disable=C0415
-
-        return executor.aggregate(self, "max", spark=spark)
-
-    def unique(self, return_counts: bool = False, spark=None, max_values=None):
-        from ..plans import executor  # pylint: disable=C0415
-
-        kwargs = {} if max_values is None else {"max_values": max_values}
-        return executor.unique(
-            self, return_counts=return_counts, spark=spark, **kwargs
-        )
-
-    def read_array(self, x: int, y: int, width: int, height: int, spark=None) -> np.ndarray:
-        from ..plans import executor  # pylint: disable=C0415
-
-        return executor.read_array(self, x, y, width, height, spark=spark)
-
-    def to_numpy(self, spark=None) -> np.ndarray:
-        """The whole computation window as numpy: ``read_array`` over the
-        window, so every tile is evaluated in the driver process, one after
-        another, with no Spark job (use ``save`` to compute a large raster
-        on the cluster)."""
-        w = self.window
-        return self.read_array(0, 0, w.xsize, w.ysize, spark=spark)
-
-    def save(self, path, and_sum: bool = False, sparse: bool = False, spark=None):
-        from ..plans import executor  # pylint: disable=C0415
-
-        return executor.save(self, path, and_sum=and_sum, sparse=sparse, spark=spark)
-
-    def parallel_save(self, path, and_sum: bool = False, spark=None, parallelism=None):
-        return self.save(path, and_sum=and_sum, spark=spark)
-
-    def parallel_sum(self, spark=None, parallelism=None):
-        return self.sum(spark=spark)
-
-    def to_dataframe(self, spark=None):
-        """The computation as a Spark DataFrame of tiles (the physical plan)."""
-        from ..plans import executor  # pylint: disable=C0415
-
-        return executor.tiles_dataframe(self, spark=spark)

@@ -21,10 +21,13 @@ Physical shape of every computation:
    tasks write to parquet themselves (the sink, ``_write_bands``: one job
    per band, no tile crosses to the JVM, and the driver commits the files
    its collect returned once every band's job has succeeded).  Ahead of
-   each tile, the kernel decodes the row groups its leaves read that the
-   read scope lacks, together, on one thread per core the caller owns:
-   several in ``read_array`` on the driver, one in a task, where Spark
-   already runs a task per core.
+   each tile, the kernel asks each parquet leaf which row groups its read
+   of the tile will decode (``ParquetRasterLayer.row_groups``: the leaf
+   alone maps a read onto its stored tiles; the leaves and their halos
+   come from one tree walk, ``kernel.parquet_leaves``) and decodes those
+   the read scope lacks, together, on one thread per core the caller
+   owns: several in ``read_array`` on the driver, one in a task, where
+   Spark already runs a task per core.
    sum/min/max are one Spark job, a stencil's too: they collect their
    ``(ty, tx, partial)`` rows with one Arrow collect and fold them on the
    driver in a fixed order.  unique combines its per-tile value counts by
@@ -122,61 +125,32 @@ def _as_root(tree) -> LayerOperation:
 
 
 def _plan_payload(root: LayerOperation):
-    """Everything the kernel needs, precomputed on the driver."""
+    """Everything the kernel needs, precomputed on the driver: among it the
+    ``(leaf, pad)`` of every parquet leaf the kernel reads on the
+    computation's grid (``kernel.parquet_leaves``), and the run of tile ids
+    that ``_build`` starts from: ``parquet.ROW_GROUP_TILES`` when the tree
+    reads a parquet table at all, one otherwise."""
     projection = root.projection
     if projection is None:
         raise ValueError("No map projection")
     area = root.operation_area(projection)
     window = root.window
-    ty_size, tx_size = constants.TILE_YSIZE, constants.TILE_XSIZE
-    tiles_y = math.ceil(window.ysize / ty_size)
-    tiles_x = math.ceil(window.xsize / tx_size)
-
-    paddings = K.collect_leaf_paddings(root)
-    leaf_meta = []
-    for leaf in K.collect_parquet_leaves(root):
-        axoff, ayoff = leaf.region_pixel_origin(area)
-        leaf_meta.append(
-            {
-                "pad": paddings.get(id(leaf), 0),
-                "S": leaf.tile_size,
-                "ayoff": ayoff,
-                "axoff": axoff,
-                "path": leaf.path,
-                "band": leaf.band,
-                "stored_tiles": leaf.stored_tiles,
-            }
-        )
-
+    tile = constants.TILE_SIZE
+    leaves = K.parquet_leaves(root).values()
     shared = frozenset(h for h, c in K.collect_hash_counts(root).items() if c >= 2)
     return {
         "tree": root,
         "area": area,
         "projection": projection,
         "window": window,
-        "ty_size": ty_size,
-        "tx_size": tx_size,
-        "tiles_y": tiles_y,
-        "tiles_x": tiles_x,
+        "tile": tile,
+        "tiles_y": math.ceil(window.ysize / tile),
+        "tiles_x": math.ceil(window.xsize / tile),
         "shared_hashes": shared,
-        "leaf_meta": leaf_meta,
+        "leaves": [(leaf, pad) for leaf, pad in leaves if pad is not None],
+        "run": pq_raster.ROW_GROUP_TILES if leaves else 1,
         "out_dtype": root.datatype.to_numpy(),
     }
-
-
-def _stored_range(payload: dict, meta: dict, ty: int, tx: int) -> tuple[int, int, int, int]:
-    """Stored-tile range (sy_lo, sy_hi, sx_lo, sx_hi) of a leaf that tile
-    (ty, tx), grown by the leaf's pad, can touch."""
-    s, pad = meta["S"], meta["pad"]
-    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    stored_y, stored_x = meta["stored_tiles"]
-    window = payload["window"]
-    y_px_lo = ty * ty_size - pad + meta["ayoff"]
-    y_px_hi = min((ty + 1) * ty_size, window.ysize) + pad + meta["ayoff"]
-    x_px_lo = tx * tx_size - pad + meta["axoff"]
-    x_px_hi = min((tx + 1) * tx_size, window.xsize) + pad + meta["axoff"]
-    return (max(y_px_lo // s, 0), min((y_px_hi - 1) // s, stored_y - 1),
-            max(x_px_lo // s, 0), min((x_px_hi - 1) // s, stored_x - 1))
 
 
 def _run_length(n: int, run: int, cores: int, task_cpus: int) -> int:
@@ -208,7 +182,7 @@ def _build(tree, spark: SparkSession | None):
     sparsity.
 
     The run length follows the tree and the cores.  A tree that reads a
-    parquet table (``kernel.reads_parquet``: a leaf, or a mosaic or
+    parquet table (``kernel.parquet_leaves``: a leaf, or a mosaic or
     reprojection of one) starts from runs of ``parquet.ROW_GROUP_TILES``
     tile ids, which its read scope rewards: neighbouring tiles share row
     groups, and a stencil's halo reads find most of theirs decoded.  A tree
@@ -243,10 +217,9 @@ def _build(tree, spark: SparkSession | None):
     root = _as_root(tree)
     payload = _plan_payload(root)
     n = payload["tiles_y"] * payload["tiles_x"]
-    run = _run_length(n, pq_raster.ROW_GROUP_TILES if K.reads_parquet(root) else 1,
-                      spark.sparkContext.defaultParallelism,
-                      int(spark.conf.get("spark.task.cpus", "1")))
-    payload["run"] = run
+    run = payload["run"] = _run_length(n, payload["run"],
+                                       spark.sparkContext.defaultParallelism,
+                                       int(spark.conf.get("spark.task.cpus", "1")))
     df = _base_grid(spark, n, run)
     bc = spark.sparkContext.broadcast(payload)
     return spark, root, payload, bc, df
@@ -268,25 +241,33 @@ def _tile_results(payload, tiles: Iterable[tuple[int, int]]):
     """Generator core of every kernel: yields (ty, tx, h, w, result) per
     ``(ty, tx)`` of ``tiles``, the result cast to the tree's dtype
     (``out_dtype``, see ``kernel.cast_result``), so every action sees what
-    ``save`` writes.  The kernel reads each parquet leaf itself
-    (``read_region``, halo-grown by the leaf's pad) after
-    ``_prefetch_tile`` has decoded the tile's row groups.  Kernels pass
+    ``save`` writes.  Ahead of each tile it asks every parquet leaf of the
+    payload which row groups its read of the tile, grown by the leaf's
+    halo, will decode (``ParquetRasterLayer.row_groups``) and decodes those
+    the read scope lacks together (``parquet.prefetch_row_groups``); the
+    leaves' reads (``read_region``) then find them there.  Left to each
+    leaf's own read, a tile's row groups would be decoded one leaf after
+    another instead of all together.  Kernels pass
     their broadcast payload and their runs' tiles (``_run_tiles``);
     ``read_array`` runs it in the calling process over its window's
     tiles."""
-    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    window, out_dtype = payload["window"], payload["out_dtype"]
+    tile, window, out_dtype = payload["tile"], payload["window"], payload["out_dtype"]
+    area = payload["area"]
     # Read scope: leaf and mosaic reads of this run of tiles reuse decoded
     # row groups (nothing survives the run — see parquet.push_read_scope).
     pq_raster.push_read_scope()
     try:
         for ty, tx in tiles:
-            _prefetch_tile(payload, ty, tx)
-            y0, x0 = ty * ty_size, tx * tx_size
-            h = min(ty_size, window.ysize - y0)
-            w = min(tx_size, window.xsize - x0)
+            y0, x0 = ty * tile, tx * tile
+            h = min(tile, window.ysize - y0)
+            w = min(tile, window.xsize - x0)
+            keys = [key for leaf, pad in payload["leaves"]
+                    for key in leaf.row_groups(area, x0 - pad, y0 - pad,
+                                               w + 2 * pad, h + 2 * pad)]
+            if keys:
+                pq_raster.prefetch_row_groups(keys)
             ctx = K.EvalContext(
-                area=payload["area"],
+                area=area,
                 projection=payload["projection"],
                 shared_hashes=payload["shared_hashes"],
             )
@@ -297,22 +278,6 @@ def _tile_results(payload, tiles: Iterable[tuple[int, int]]):
             yield ty, tx, h, w, result
     finally:
         pq_raster.pop_read_scope()
-
-
-def _prefetch_tile(payload: dict, ty: int, tx: int) -> None:
-    """Fill the read scope, before tile (ty, tx) is evaluated, with the row
-    groups its parquet leaves read (halo-grown by each leaf's pad),
-    decoding those not yet in the scope together
-    (``parquet.prefetch_row_groups``).  The leaves' ``read_window`` calls
-    then find them there."""
-    keys = []
-    for meta in payload["leaf_meta"]:
-        rng = _stored_range(payload, meta, ty, tx)
-        if rng[0] <= rng[1] and rng[2] <= rng[3]:
-            keys += [(f, rg) for f, rg, _ymm, _xmm in pq_raster._pruned_row_groups(
-                meta["path"], meta["band"], meta["band"], rng)]
-    if keys:
-        pq_raster.prefetch_row_groups(keys)
 
 
 def _tile_batch(rows: list) -> pa.RecordBatch:
@@ -389,6 +354,41 @@ def _zonal_fold(partials: DataFrame) -> DataFrame:
     return out.withColumn("zmean", F.col("zsum") / F.col("n_pixels"))
 
 
+def _zonal_grid(payload: dict) -> tuple:
+    """``(left, top, xstep, ystep, tile)``: where the result tiles of
+    ``payload`` lie, all the zonal plans need of it in their tasks."""
+    area, proj = payload["area"], payload["projection"]
+    return area.left, area.top, proj.xstep, proj.ystep, payload["tile"]
+
+
+def _zonal_rows(grid: tuple, ty: int, tx: int, result: np.ndarray, polys,
+                all_touched: bool) -> list:
+    """The partials of result tile ``(ty, tx)`` of ``grid``
+    (``_zonal_grid``) for each ``(poly_id, rings)`` of ``polys``: the
+    polygon burnt into a tile-local mask, and the ``(poly_id, ty, tx, sum,
+    n, min, max)`` of the tile's pixels under it, for each polygon that
+    covers any.  Both zonal plans emit these."""
+    from ..sources.vector import rasterize_rings  # pylint: disable=C0415
+
+    left0, top0, xstep, ystep, tile = grid
+    left = left0 + (tx * tile) * xstep
+    top = top0 + (ty * tile) * ystep
+    mask = np.zeros(result.shape, dtype=np.float64)
+    rows = []
+    for pid, rings in polys:
+        mask[:] = 0.0
+        rasterize_rings(rings, 1.0, mask, left, top, xstep, ystep,
+                        all_touched=all_touched)
+        sel = mask > 0
+        n = int(np.count_nonzero(sel))
+        if n == 0:
+            continue  # the cover or bbox touched the tile but no pixel did
+        vals = result[sel]
+        rows.append((int(pid), ty, tx, float(np.sum(vals, dtype=np.float64)), n,
+                     float(vals.min()), float(vals.max())))
+    return rows
+
+
 def _zonal_stats_distributed(tree, polygons: DataFrame,
                              spark: SparkSession | None,
                              all_touched: bool) -> DataFrame:
@@ -405,18 +405,14 @@ def _zonal_stats_distributed(tree, polygons: DataFrame,
     deterministic ordered fold, so both paths are bit-identical."""
     import pandas as pd  # pylint: disable=C0415
 
-    from ..sources.vector import parse_wkt_polygon, rasterize_rings  # pylint: disable=C0415
+    from ..sources.vector import parse_wkt_polygon  # pylint: disable=C0415
 
     spark = get_spark(spark)
     root = _as_root(tree)
     payload = _plan_payload(root)
-    area, proj = payload["area"], payload["projection"]
-    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
+    grid = left0, top0, xstep, ystep, tile = _zonal_grid(payload)
     out_dtype = payload["out_dtype"]
-    xstep, ystep = proj.xstep, proj.ystep
-    window = root.window
-    n_ty, n_tx = -(-window.ysize // ty_size), -(-window.xsize // tx_size)
-    left0, top0 = area.left, area.top
+    n_ty, n_tx = payload["tiles_y"], payload["tiles_x"]
 
     @task_entry
     def cover_gen(batches):
@@ -432,8 +428,8 @@ def _zonal_stats_distributed(tree, polygons: DataFrame,
                 c1 = int(np.floor((bx1 - left0) / xstep)) + 1
                 r0 = int(np.floor((by1 - top0) / ystep)) - 1
                 r1 = int(np.floor((by0 - top0) / ystep)) + 1
-                tx0, tx1 = max(0, c0 // tx_size), min(n_tx - 1, c1 // tx_size)
-                ty0, ty1 = max(0, r0 // ty_size), min(n_ty - 1, r1 // ty_size)
+                tx0, tx1 = max(0, c0 // tile), min(n_tx - 1, c1 // tile)
+                ty0, ty1 = max(0, r0 // tile), min(n_ty - 1, r1 // tile)
                 if tx1 < tx0 or ty1 < ty0:
                     continue
                 for ty in range(ty0, ty1 + 1):
@@ -456,28 +452,14 @@ def _zonal_stats_distributed(tree, polygons: DataFrame,
         cols = ["poly_id", "ty", "tx", "partial", "pcount", "pmin", "pmax"]
         if not len(tiles_pdf) or not len(cover_pdf):
             return pd.DataFrame({c: [] for c in cols})
+        polys = [(pid, parse_wkt_polygon(wkt))
+                 for pid, wkt in zip(cover_pdf["poly_id"], cover_pdf["geom_wkt"])]
         out_rows = []
         for _, trow in tiles_pdf.iterrows():
             ty, tx = int(trow["tile_y"]), int(trow["tile_x"])
-            h, w = int(trow["ysize"]), int(trow["xsize"])
-            result = np.frombuffer(trow["payload"], dtype=out_dtype).reshape(h, w)
-            tleft = left0 + (tx * tx_size) * xstep
-            ttop = top0 + (ty * ty_size) * ystep
-            mask = np.zeros((h, w), dtype=np.float64)
-            for pid, wkt in zip(cover_pdf["poly_id"], cover_pdf["geom_wkt"]):
-                mask[:] = 0.0
-                rasterize_rings(parse_wkt_polygon(wkt), 1.0, mask, tleft, ttop,
-                                xstep, ystep, all_touched=all_touched)
-                sel = mask > 0
-                n = int(np.count_nonzero(sel))
-                if n == 0:
-                    continue
-                vals = result[sel]
-                out_rows.append((
-                    int(pid), ty, tx,
-                    float(np.sum(vals, dtype=np.float64)), n,
-                    float(vals.min()), float(vals.max()),
-                ))
+            result = np.frombuffer(trow["payload"], dtype=out_dtype).reshape(
+                int(trow["ysize"]), int(trow["xsize"]))
+            out_rows += _zonal_rows(grid, ty, tx, result, polys, all_touched)
         return pd.DataFrame(out_rows, columns=cols)
 
     partials = (
@@ -517,7 +499,7 @@ def zonal_stats(tree, polygons, spark: SparkSession | None = None,
     by floating-point tie-break, which differs with the window origin —
     the same instability GDAL has).
     """
-    from ..sources.vector import parse_wkt_polygon, rasterize_rings  # pylint: disable=C0415
+    from ..sources.vector import parse_wkt_polygon  # pylint: disable=C0415
 
     spark = get_spark(spark)
     if isinstance(polygons, DataFrame):
@@ -543,35 +525,17 @@ def zonal_stats(tree, polygons, spark: SparkSession | None = None,
     @task_entry
     def compute(batches):
         pl = bc.value
-        area, proj = pl["area"], pl["projection"]
-        ty_size, tx_size = pl["ty_size"], pl["tx_size"]
-        xstep, ystep = proj.xstep, proj.ystep
+        grid = left0, top0, xstep, ystep, tile = _zonal_grid(pl)
         out_rows = []
         for ty, tx, h, w, result in _tile_results(pl, _run_tiles(pl, batches)):
-            left = area.left + (tx * tx_size) * xstep
-            top = area.top + (ty * ty_size) * ystep
+            left = left0 + (tx * tile) * xstep
+            top = top0 + (ty * tile) * ystep
             right = left + w * xstep
             bottom = top + h * ystep
-            mask = None
-            for pid, rings, (bx0, by0, bx1, by1) in polys_bc.value:
-                if bx1 < left or bx0 >= right or by1 < bottom or by0 >= top:
-                    continue
-                if mask is None:
-                    mask = np.zeros((h, w), dtype=np.float64)
-                else:
-                    mask[:] = 0.0
-                rasterize_rings(rings, 1.0, mask, left, top, xstep, ystep,
-                                all_touched=all_touched)
-                sel = mask > 0
-                n = int(np.count_nonzero(sel))
-                if n == 0:
-                    continue  # bbox touched the tile but no pixel center did
-                vals = result[sel]
-                out_rows.append((
-                    pid, ty, tx,
-                    float(np.sum(vals, dtype=np.float64)), n,
-                    float(vals.min()), float(vals.max()),
-                ))
+            polys = [(pid, rings) for pid, rings, (bx0, by0, bx1, by1) in polys_bc.value
+                     if not (bx1 < left or bx0 >= right or by1 < bottom or by0 >= top)]
+            if polys:
+                out_rows += _zonal_rows(grid, ty, tx, result, polys, all_touched)
         if out_rows:
             yield pa.RecordBatch.from_arrays(
                 [
@@ -778,12 +742,12 @@ def read_array(tree, x: int, y: int, width: int, height: int,
     if overlap is None:
         return out
     payload = _plan_payload(root)
-    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    tys = range(overlap.yoff // ty_size, (overlap.ymax - 1) // ty_size + 1)
-    txs = range(overlap.xoff // tx_size, (overlap.xmax - 1) // tx_size + 1)
+    size = payload["tile"]
+    tys = range(overlap.yoff // size, (overlap.ymax - 1) // size + 1)
+    txs = range(overlap.xoff // size, (overlap.xmax - 1) // size + 1)
     tiles = [(ty, tx) for ty in tys for tx in txs]
     for ty, tx, h, w, tile in _tile_results(payload, tiles):
-        ty0, tx0 = ty * ty_size, tx * tx_size
+        ty0, tx0 = ty * size, tx * size
         iy0, iy1 = max(ty0, overlap.yoff), min(ty0 + h, overlap.ymax)
         ix0, ix1 = max(tx0, overlap.xoff), min(tx0 + w, overlap.xmax)
         out[iy0 - y : iy1 - y, ix0 - x : ix1 - x] = \
@@ -816,7 +780,7 @@ def _sink_band(root, band: int, staging: str, spark: SparkSession,
     out_dtype = payload["out_dtype"]
     schema = _PA_SINK_SUM if and_sum else _PA_SINK
     group = pq_raster.row_group_tiles(
-        payload["ty_size"] * payload["tx_size"] * np.dtype(out_dtype).itemsize)
+        payload["tile"] ** 2 * np.dtype(out_dtype).itemsize)
 
     @task_entry
     def sink(batches):
@@ -890,10 +854,6 @@ def _write_bands(roots: list, path: str, spark: SparkSession,
     removed file.  Writer and readers assume a POSIX-visible ``path``."""
     import pyarrow.compute as pc  # pylint: disable=C0415
 
-    if constants.TILE_YSIZE != constants.TILE_XSIZE:
-        # write_meta records ONE tile_size, so non-square computation tiles
-        # would be read back on a wrong grid (every tile column displaced).
-        raise ValueError("save requires square computation tiles")
     job = uuid.uuid4().hex
     existed = os.path.isdir(path)
     temporary = os.path.join(path, "_temporary")
@@ -936,7 +896,7 @@ def _write_bands(roots: list, path: str, spark: SparkSession,
         roots[0].operation_area(roots[0].projection),
         roots[0].datatype,
         None,
-        constants.TILE_YSIZE,
+        constants.TILE_SIZE,
         bands=len(roots),
         dense=not sparse,
     )

@@ -58,75 +58,44 @@ def collect_hash_counts(node, counter: Counter | None = None,
     return counter
 
 
-def collect_leaf_paddings(node, acc: int = 0, out: dict | None = None,
-                          _seen: set | None = None) -> dict:
-    """Maximum accumulated conv2d halo on any root-to-leaf path, per leaf id.
+def parquet_leaves(node, pad: int | None = 0, out: dict | None = None,
+                   _seen: set | None = None) -> dict:
+    """Every parquet raster table the tree reads, as ``{id(leaf): (leaf,
+    pad)}``: through operations, whose conv2d halos add up along the path,
+    and through mosaics (``GroupLayer``), whose children read the same
+    window.  ``pad`` is the largest halo on any path to the leaf, or None
+    when the leaf is only read through a reprojection, on another grid than
+    the computation's.
 
     Memoized by (node identity, accumulated pad): re-entering a shared
-    subtree with a pad already explored cannot change any leaf's maximum,
-    so DAG traversal stays linear per distinct pad instead of exponential."""
-    if out is None:
-        out = {}
-    if _seen is None:
-        _seen = set()
-    if isinstance(node, LayerOperation):
-        key = (id(node), acc)
-        if key in _seen:
-            return out
-        _seen.add(key)
-        acc += node.buffer_padding
-        for child in node.children:
-            collect_leaf_paddings(child, acc, out, _seen)
-    elif not isinstance(node, LayerConstant):
-        out[id(node)] = max(out.get(id(node), 0), acc)
-    return out
-
-
-def collect_parquet_leaves(node, out: list | None = None,
-                           _seen: set | None = None) -> list:
-    """Direct ParquetRasterLayer leaves of the tree, deduplicated by identity,
-    in deterministic discovery order."""
-    from ..sources.parquet import ParquetRasterLayer  # pylint: disable=C0415
-
-    if out is None:
-        out = []
-    if _seen is None:
-        _seen = set()
-    if id(node) in _seen:
-        return out
-    _seen.add(id(node))
-    if isinstance(node, LayerOperation):
-        for child in node.children:
-            collect_parquet_leaves(child, out, _seen)
-    elif isinstance(node, ParquetRasterLayer):
-        if not any(leaf is node for leaf in out):
-            out.append(node)
-    return out
-
-
-def reads_parquet(node, _seen: set | None = None) -> bool:
-    """Whether the tree reads a parquet raster table anywhere: as a leaf, or
-    inside a mosaic (``GroupLayer``) or a reprojected layer."""
+    subtree with a pad already explored cannot change any leaf's pad, so
+    DAG traversal stays linear per distinct pad instead of exponential."""
     # pylint: disable=C0415,W0212
     from ..sources.group import GroupLayer
     from ..sources.parquet import ParquetRasterLayer
     from ..sources.reprojected import ReprojectedLayer, _ExpressionLayer
 
+    out = {} if out is None else out
     _seen = set() if _seen is None else _seen
-    if id(node) in _seen:
-        return False
-    _seen.add(id(node))
-    if isinstance(node, LayerOperation):
-        inner = node.children
+    if (id(node), pad) in _seen:
+        return out
+    _seen.add((id(node), pad))
+    inner = []
+    if isinstance(node, ParquetRasterLayer):
+        pads = [p for p in (out.get(id(node), (node, None))[1], pad) if p is not None]
+        out[id(node)] = (node, max(pads, default=None))
+    elif isinstance(node, LayerOperation):
+        grown = None if pad is None else pad + node.buffer_padding
+        inner = [(child, grown) for child in node.children]
     elif isinstance(node, GroupLayer):
-        inner = node._layers_reversed
+        inner = [(child, pad) for child in node._layers_reversed]
     elif isinstance(node, ReprojectedLayer):
-        inner = [node._source]
+        inner = [(node._source, None)]
     elif isinstance(node, _ExpressionLayer):
-        inner = [node._tree]
-    else:
-        return isinstance(node, ParquetRasterLayer)
-    return any(reads_parquet(child, _seen) for child in inner)
+        inner = [(node._tree, pad)]
+    for child, child_pad in inner:
+        parquet_leaves(child, child_pad, out, _seen)
+    return out
 
 
 def eval_tree(node, ctx: EvalContext, x: int, y: int, width: int, height: int) -> Any:

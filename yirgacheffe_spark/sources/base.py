@@ -1,6 +1,6 @@
 """Common layer behaviour: extent bookkeeping and grid-aligned region reads.
 
-The realignment math in ``read_region`` is the heart of "tile assignments
+The realignment math in ``target_window`` is the heart of "tile assignments
 match exactly": a computation area is first shifted onto *this* layer's
 sub-pixel grid wobble, then converted to integer pixel offsets with the
 metre-threshold rounding rules (semantics of the reference's
@@ -108,19 +108,11 @@ class Layer(LayerMathMixin):
     def read_window(self, xoff: int, yoff: int, xsize: int, ysize: int, window: Window) -> Any:
         raise NotImplementedError("Must be overridden by subclass")
 
-    def read_region(
-        self,
-        target_area: Area,
-        target_projection: MapProjection,
-        x: int,
-        y: int,
-        width: int,
-        height: int,
-    ) -> Any:
-        """Read ``(width, height)`` pixels at offset ``(x, y)`` within the
-        pixel window that ``target_area`` spans on this layer's grid."""
+    def target_window(self, target_area: Area) -> Window:
+        """The pixel window that ``target_area`` spans on this layer's grid:
+        the frame of every read of this layer for a computation over
+        ``target_area``."""
         assert self.projection is not None
-        assert self.projection == target_projection
 
         # Shift the target area onto this layer's sub-pixel wobble so the two
         # grids coincide before any pixel arithmetic happens.
@@ -146,25 +138,22 @@ class Layer(LayerMathMixin):
             (target_area.right - target_area.left) / self.projection.xstep,
             (target_area.top - target_area.bottom) / (self.projection.ystep * -1.0),
         )
-        return self.read_window(x, y, width, height, Window(xoff, yoff, xsize, ysize))
+        return Window(xoff, yoff, xsize, ysize)
 
-    def region_pixel_origin(self, target_area: Area) -> tuple[int, int]:
-        """Integer pixel coordinates of ``target_area``'s origin on this
-        layer's grid — the translation from computation tiles to the
-        stored tiles a parquet leaf's reads touch."""
-        assert self.projection is not None
-        target_offset = target_area._grid_offset
-        if target_offset is not None:
-            own_offset = self._underlying_area._grid_offset
-            assert own_offset is not None
-            dx = own_offset[0] - target_offset[0]
-            dy = own_offset[1] - target_offset[1]
-        else:
-            dx = dy = 0.0
-        return self.projection.round_down_pixels(
-            ((target_area.left + dx) - self._underlying_area.left) / self.projection.xstep,
-            (self._underlying_area.top - (target_area.top + dy)) / (self.projection.ystep * -1.0),
-        )
+    def read_region(
+        self,
+        target_area: Area,
+        target_projection: MapProjection,
+        x: int,
+        y: int,
+        width: int,
+        height: int,
+    ) -> Any:
+        """Read ``(width, height)`` pixels at offset ``(x, y)`` within the
+        pixel window that ``target_area`` spans on this layer's grid
+        (``target_window``)."""
+        assert self.projection == target_projection
+        return self.read_window(x, y, width, height, self.target_window(target_area))
 
     def read_array(self, x: int, y: int, width: int, height: int, spark=None) -> np.ndarray:
         """Direct (non-distributed) read against this layer's own window.

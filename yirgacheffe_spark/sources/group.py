@@ -6,14 +6,14 @@ layers with a nodata value only contribute their non-NaN pixels, letting
 lower-priority tiles show through the holes; missing regions read as zeros.
 
 Execution note: a group evaluates inside the tile kernel by compositing its
-children's reads per tile, so the mosaic costs no extra shuffle — each child
-read is either in-memory, generated, or a pruned parquet tile fetch through
-a per-worker cached dataset handle (row-group statistics prune the fetch to
-the tile's range; no directory listing per read).  Measured on a 930M-pixel
-6-child mosaic: sum scales 2.1x from local[8] to local[32], within 2.2x of
-the single-table scan.  (A union-all of per-child pruned scans with a
-priority column is the alternative for thousands-of-children mosaics where
-per-tile ranged fetches would dominate; not needed at current coverage.)
+children's reads per tile, so the mosaic costs no extra shuffle.  Each child
+read is in-memory, generated, or, for a parquet child, ``read_window`` over
+the task's read scope, into which the tile grid has decoded the tile's row
+groups of every child ahead of the tile (``kernel.parquet_leaves`` looks
+through mosaics, and each child says which row groups it reads).  (A
+union-all of per-child pruned scans with a priority column is the
+alternative for thousands-of-children mosaics, where per-tile reads of
+every child would dominate; not needed at current coverage.)
 """
 
 from __future__ import annotations

@@ -21,14 +21,16 @@ list overhead in both parquet and Arrow.
 
 At execution time every tree runs on the executor's tile grid (see
 ``plans/executor.py``), whose kernel reads a parquet layer in-process
-through ``read_window``.  It asks this module which row groups hold a tile
-range (``_pruned_row_groups``, over the table's indexed listing: the
-save-time manifest first, parquet footers otherwise) and finds them in the
-read scope, where the grid decodes each tile's row groups ahead of it,
-together, with ``_decoded_row_groups``, on a thread pool sized by the cores
-the caller owns (pyarrow releases the GIL while it decompresses).
-``read_window`` is also the driver-side read of ``read_array``, mosaics
-and the ``evaluate_window`` oracle.
+through ``read_window``.  The layer alone maps a read onto its stored tiles
+and asks this module which row groups hold them (``_pruned_row_groups``,
+over the table's indexed listing: the save-time manifest first, parquet
+footers otherwise).  Ahead of each tile the grid asks every leaf which row
+groups its read of the tile will decode (``ParquetRasterLayer.row_groups``)
+and decodes those the read scope lacks together (``prefetch_row_groups``,
+with ``_decoded_row_groups`` on a thread pool sized by the cores the caller
+owns; pyarrow releases the GIL while it decompresses); ``read_window``
+then finds them there.  ``read_window`` is also the driver-side read of
+``read_array``, mosaics and the ``evaluate_window`` oracle.
 
 The writers (``write_array_as_raster_table`` here, ``save`` in the
 executor) and the readers share one assumption: the table is a directory on
@@ -73,9 +75,10 @@ ZSTD_LEVEL = 1
 # run and pops it when the run ends, so NOTHING persists across tasks or
 # passes (each bench/oracle invocation still decodes from parquet).  A scope
 # holds at most ``_READ_SCOPE_MAX_RGS`` decoded row groups, evicted oldest
-# first; the tile grid fills it ahead of each tile, decoding the tile's
-# missing row groups together (``prefetch_row_groups``, concurrently where
-# the caller owns several cores).  A scope also
+# first; row groups enter it only through ``prefetch_row_groups``, which
+# decodes those a scope lacks together (concurrently where the caller owns
+# several cores): the tile grid calls it ahead of each tile, and
+# ``read_window`` for whatever its read still lacks.  A scope also
 # pins the row-group listing each table was first read with, so a run of
 # reads never mixes two versions of a table that ``save`` overwrites
 # meanwhile: it sees one, or fails on a file the overwrite removed.  User
@@ -532,42 +535,59 @@ class ParquetRasterLayer(Layer):
             return np.where(data == self._nodata, float("nan"), data)
         return data
 
+    def _stored(self, requested: Window):
+        """The part of ``requested`` (pixels of this table) that the table
+        stores, its stored-tile range ``(ty_lo, ty_hi, tx_lo, tx_hi)`` and
+        the ``(file, rg)`` of every row group that may hold a tile of it
+        (``_pruned_row_groups``); ``(None, None, [])`` when the table
+        stores none of it."""
+        overlap = Window.intersection_or_none(
+            [requested, Window(0, 0, self.window.xsize, self.window.ysize)])
+        if overlap is None:
+            return None, None, []
+        s = self.tile_size
+        rng = (overlap.yoff // s, (overlap.ymax - 1) // s,
+               overlap.xoff // s, (overlap.xmax - 1) // s)
+        return overlap, rng, [(f, rg) for f, rg, _ymm, _xmm in _pruned_row_groups(
+            self.path, self.band, self.band, rng)]
+
+    def row_groups(self, target_area: Area, x: int, y: int, width: int,
+                   height: int) -> list:
+        """The ``(file, rg)`` keys of the row groups that
+        ``read_region(target_area, ..., x, y, width, height)`` decodes: the
+        tile grid prefetches them ahead of a tile."""
+        window = self.target_window(target_area)
+        return self._stored(Window(window.xoff + x, window.yoff + y, width, height))[2]
+
     def read_window(self, xoff: int, yoff: int, xsize: int, ysize: int, window: Window) -> Any:
         """Direct pyarrow read of the requested region: the row groups whose
-        tile ranges it touches (``_pruned_row_groups``), decoded once per
-        read scope — consecutive tiles of a task reuse them, and the tile
-        grid decodes a tile's row groups into the scope before its reads —
-        or once per call outside a scope.  A row group the scope lacks is
-        decoded and added, evicting the oldest past ``_READ_SCOPE_MAX_RGS``.
-        This is the engine's one parquet leaf reader.  On a dense table
-        every stored tile of the region must be found, or the read
-        raises."""
+        tile ranges it touches (``_stored``).  Inside a read scope, those
+        the scope lacks are decoded and added first
+        (``prefetch_row_groups``), so consecutive tiles of a task reuse
+        them; the tile grid has usually added them ahead of the tile
+        (``row_groups``).  Outside a scope, each is decoded once per call,
+        one at a time.  This is the engine's one parquet leaf reader.  On a
+        dense table every stored tile of the region must be found, or the
+        read raises."""
         if xsize <= 0 or ysize <= 0:
             raise ValueError("Request dimensions must be positive and non-zero")
         requested = Window(window.xoff + xoff, window.yoff + yoff, xsize, ysize)
-        stored = Window(0, 0, self.window.xsize, self.window.ysize)
-        overlap = Window.intersection_or_none([requested, stored])
+        overlap, rng, keys = self._stored(requested)
         np_dtype = self._dtype.to_numpy()
         if overlap is None:
             return np.zeros((ysize, xsize), dtype=np_dtype)
 
         s = self.tile_size
-        ty_lo, ty_hi = overlap.yoff // s, (overlap.ymax - 1) // s
-        tx_lo, tx_hi = overlap.xoff // s, (overlap.xmax - 1) // s
+        ty_lo, ty_hi, tx_lo, tx_hi = rng
         out = np.zeros((overlap.ysize, overlap.xsize), dtype=np_dtype)
         found = np.zeros((ty_hi - ty_lo + 1, tx_hi - tx_lo + 1), dtype=bool)
         stack = _scope_stack()
-        scope = stack[-1].rgs if stack else None
-        for f, rg, _ymm, _xmm in _pruned_row_groups(
-                self.path, self.band, self.band, (ty_lo, ty_hi, tx_lo, tx_hi)):
-            entry = None if scope is None else scope.get((f, rg))
-            if entry is None:
-                entry = _decoded_row_group(f, rg)
-                if scope is not None:
-                    while len(scope) >= _READ_SCOPE_MAX_RGS:
-                        scope.pop(next(iter(scope)))
-                    scope[(f, rg)] = entry
-            b_a, ty_a, tx_a, h_a, w_a, bufs = entry
+        if stack and keys:
+            prefetch_row_groups(keys)
+        scope = stack[-1].rgs if stack else {}
+        for key in keys:
+            # Past the scope's bound, a key may not be there: decode it.
+            b_a, ty_a, tx_a, h_a, w_a, bufs = scope.get(key) or _decoded_row_group(*key)
             sel = np.nonzero(
                 (b_a == self.band)
                 & (ty_a >= ty_lo) & (ty_a <= ty_hi)
@@ -611,7 +631,7 @@ def write_array_as_raster_table(
     """Tile an in-memory array into the parquet raster format (test helper)."""
     import pyarrow as pa  # pylint: disable=C0415
 
-    s = tile_size or constants.STORAGE_TILE_SIZE
+    s = tile_size or constants.TILE_SIZE
     data = np.ascontiguousarray(data)
     os.makedirs(path, exist_ok=True)
     rows: dict[str, list] = {"band": [], "tile_y": [], "tile_x": [], "ysize": [], "xsize": [], "payload": []}
@@ -655,7 +675,7 @@ def write_multiband_interleaved(
     """
     import pyarrow as pa  # pylint: disable=C0415
 
-    s = tile_size or constants.STORAGE_TILE_SIZE
+    s = tile_size or constants.TILE_SIZE
     band_ids = sorted(channels)
     first = np.ascontiguousarray(channels[band_ids[0]])
     height, width = first.shape

@@ -38,8 +38,10 @@ class _ExpressionLayer(Layer):
     node — not just sources — can be reprojected (reference wraps arbitrary
     nodes the same way, ``_operators/__init__.py:422-434``).  Reads evaluate
     the subtree through the fused local kernel (operator fusion + CSE), and
-    inside Spark kernels the subtree's parquet leaves use the same pruned
-    per-worker dataset reads as mosaic children."""
+    inside Spark kernels the subtree's parquet leaves read through
+    ``read_window`` over the task's read scope, like every parquet leaf.
+    They are read on the source's grid, so the tile grid cannot predict
+    their row groups: a read decodes what the scope lacks itself."""
 
     def __init__(self, tree):
         from ..operators import LayerOperation  # pylint: disable=C0415
