@@ -33,7 +33,12 @@ Checks (each FAILS the script if violated):
    1 (one Arrow collect of the tile partials), a stencil's ``sum`` 1 too
    (each task reads its tiles' halos itself), ``unique`` at most 2, and
    ``save`` 1 with or without ``and_sum`` (its sink tasks return their
-   tiles' partials; the table is not read back).
+   tiles' partials; the table is not read back), and ``to_geotiff`` one
+   job of one stage per partition of its tile grid (one partition per
+   tile row at most, pulled in turn: no sampling job, no shuffle).
+14. ``zonal_stats`` burns its polygons in the tile grid's kernel: the
+   ``MapInArrow`` reads a bare ``Range``, and the plan's only ``Exchange``
+   is the fold's, on ``poly_id`` (no result tile crosses a shuffle).
 
 Run: python scripts/plan_audit.py [sf_dir]
 """
@@ -291,8 +296,9 @@ def main() -> int:
     # 13. raster action job budget on one table: read_array runs in the
     # driver, sum folds one Arrow collect of its tile partials (a stencil's
     # tasks read their halos themselves), unique collects its
-    # Spark-combined values through one limit, and save (with or without
-    # its sum) is its one sink job.
+    # Spark-combined values through one limit, save (with or without its
+    # sum) is its one sink job, and to_geotiff pulls its tile grid one
+    # single-stage job per partition.
     sc = spark.sparkContext
 
     def jobs_of(group, action):
@@ -302,7 +308,7 @@ def main() -> int:
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return sc.statusTracker().getJobIdsForGroup(group)
 
     with tempfile.TemporaryDirectory(prefix="plan_audit_") as tmp:
         proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
@@ -315,7 +321,7 @@ def main() -> int:
             (np.arange(6 * s * 4 * s) % 7).astype(np.int16).reshape(6 * s, 4 * s),
             yg.Area(0.0, 0.0, 4 * s * 0.01, -6 * s * 0.01, proj), tile_size=s)
         stencil = table.conv2d(np.ones((3, 3), np.float32))
-        jobs = {
+        job_ids = {
             "read_array": jobs_of("audit-read-array", lambda: table.read_array(0, 0, s, s)),
             "sum": jobs_of("audit-sum", lambda: table.sum(spark=spark)),
             "stencil sum": jobs_of("audit-stencil-sum", lambda: stencil.sum(spark=spark)),
@@ -324,13 +330,43 @@ def main() -> int:
                 os.path.join(tmp, "saved"), spark=spark)),
             "save(and_sum=True)": jobs_of("audit-save-sum", lambda: table.save(
                 os.path.join(tmp, "saved"), and_sum=True, spark=spark)),
+            "to_geotiff": jobs_of("audit-to-geotiff", lambda: yg.to_geotiff(
+                table, os.path.join(tmp, "t.tif"), spark=spark)),
         }
+        jobs = {k: len(v) for k, v in job_ids.items()}
+        # The grid to_geotiff reads: at most one partition per tile row.
+        grid_parts = X._build(table, spark, 6)[4].rdd.getNumPartitions()  # noqa: SLF001
+        tiff_stages = [len(sc.statusTracker().getJobInfo(j).stageIds)
+                       for j in job_ids["to_geotiff"]]
         ok = (jobs["read_array"] == 0 and jobs["sum"] == 1 and jobs["stencil sum"] == 1
               and jobs["unique"] <= 2
-              and jobs["save"] == 1 and jobs["save(and_sum=True)"] == 1)
+              and jobs["save"] == 1 and jobs["save(and_sum=True)"] == 1
+              and jobs["to_geotiff"] == grid_parts and set(tiff_stages) == {1})
         check("raster action job budget: read_array 0, sum 1, stencil sum 1, "
-              "unique <= 2, save 1, save(and_sum=True) 1", ok,
-              ", ".join(f"{k} {v}" for k, v in jobs.items()))
+              "unique <= 2, save 1, save(and_sum=True) 1, to_geotiff one "
+              "single-stage job per grid partition", ok,
+              ", ".join(f"{k} {v}" for k, v in jobs.items())
+              + f"; to_geotiff grid partitions {grid_parts}, stages per job {tiff_stages}")
+
+    # 14. zonal_stats: the polygons are burnt in the tile grid's kernel, and
+    # only the per-polygon fold shuffles (no result tile crosses a shuffle).
+    s = constants.TILE_SIZE
+    layer = yg.from_array(np.ones((2 * s, 2 * s), np.int16), (0.0, 0.0),
+                          yg.MapProjection("epsg:4326", 0.01, -0.01))
+    zonal = X.zonal_stats(layer, [{"poly_id": 1, "geom_wkt":
+                                   "POLYGON ((0.1 -0.1, 5 -0.1, 5 -5, 0.1 -5, 0.1 -0.1))"}],
+                          spark=spark)
+    plan = plan_of(zonal)
+    tree = plan.split("\n\n")[0].splitlines()
+    kernel = [i for i, l in enumerate(tree) if "MapInArrow" in l]
+    below = [l.lstrip(" :+-*") for l in subtree(tree, kernel[0])] if kernel else []
+    exchanges = re.findall(r"Exchange \((\d+)\)", "\n".join(tree))
+    ok = (len(kernel) == 1 and len(below) == 1 and below[0].startswith("Range")
+          and len(exchanges) == 1
+          and re.search(rf"\({exchanges[0]}\) Exchange\n(?:.*\n)*?Arguments: "
+                        r"hashpartitioning\(poly_id#", plan) is not None)
+    check("zonal_stats: MapInArrow over a bare Range, one Exchange, the fold's "
+          "on poly_id", ok, "\n".join(tree))
 
     print("\nPLAN AUDIT:", "all checks passed" if not failures else f"FAILURES: {failures}")
     return 1 if failures else 0

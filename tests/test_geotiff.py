@@ -327,11 +327,12 @@ def test_read_bigtiff(tmp_path):
 
 
 def test_to_geotiff_streams_byte_identical(tmp_path, spark):
-    """The streaming sink (range-partitioned tiles -> toLocalIterator ->
-    TiffStreamWriter with patched offset arrays) produces byte-identical
-    output to a fully-buffered write of the same pixels.  600x520 spans a
-    3x3 file-tile grid assembled from 4-row engine strips, so the rolling
-    buffer shifts many times and never holds the raster."""
+    """The streaming sink (the tile grid's partitions, read in turn by
+    toLocalIterator -> TiffStreamWriter with patched offset arrays)
+    produces byte-identical output to a fully-buffered write of the same
+    pixels.  600x520 spans a 3x3 file-tile grid assembled from 4-row engine
+    strips, so the rolling buffer shifts many times and never holds the
+    raster."""
     h, w = 600, 520
     data = (RNG.integers(0, 1000, (h, w))).astype(np.int32)
     src = yg.from_array(data, (10.0, 50.0), PROJ)
@@ -349,6 +350,45 @@ def test_to_geotiff_streams_byte_identical(tmp_path, spark):
     yg.to_geotiff(src + 1, p_expr, spark=spark)
     got = yg.read_raster(p_expr).read_array(0, 0, w, h)
     np.testing.assert_array_equal(got, (data + 1).astype(np.int64))
+
+
+@pytest.mark.parametrize("table", [False, True])
+def test_to_geotiff_reads_the_tile_grid_once(tmp_path, spark, table):
+    """``to_geotiff`` evaluates each tile once: it pulls the tile grid's
+    partitions, one per engine tile row at most, in turn, each in one job
+    of one stage (no sampling job, no shuffle-map stage), and writes the
+    bytes of a buffered write.  An in-memory layer runs in runs of one tile
+    (10 rows of 6 tiles: 10 partitions); a parquet table runs in runs of
+    16 that span tile rows (42 tiles: 3 runs over 3 partitions)."""
+    from yirgacheffe_spark import constants
+    from yirgacheffe_spark.plans import executor
+
+    h, w = (40, 24) if not table else (24, 28)
+    data = RNG.integers(0, 1000, (h, w)).astype(np.int16)
+    if table:
+        src = yg.write_array_as_raster_table(str(tmp_path / "t"), data, _area(w, h))
+    else:
+        src = yg.from_array(data, (10.0, 50.0), PROJ)
+    rows = -(-h // constants.TILE_SIZE)
+    _s, _root, payload, _bc, grid = executor._build(src, spark, rows)
+    parts = grid.rdd.getNumPartitions()
+    assert parts == min(-(-payload["tiles_y"] * payload["tiles_x"] // payload["run"]), rows)
+    assert parts > 1
+
+    sc = spark.sparkContext
+    group = f"to-geotiff-grid-{table}"
+    sc.setJobGroup(group, group)
+    try:
+        yg.to_geotiff(src, str(tmp_path / "s.tif"), spark=spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert sorted(len(tracker.getJobInfo(j).stageIds) for j in jobs) == [1] * parts
+
+    G.write_geotiff(str(tmp_path / "b.tif"), data, _area(w, h))
+    assert (tmp_path / "s.tif").read_bytes() == (tmp_path / "b.tif").read_bytes()
 
 
 def test_stream_writer_single_tile_inline_patch(tmp_path):

@@ -163,6 +163,23 @@ class TestAreaReproject:
         assert math.isclose((got.left / 10000.0) % 1.0, 0.0, abs_tol=1e-9)
 
 
+    def test_identity_reprojection_keeps_the_grid(self):
+        """Reprojecting onto the area's own projection keeps its pixels:
+        0.28 / 0.01 is 28.000000000000004 in floats, which a bare ``ceil``
+        snapped out to a 29th, all-zero column."""
+        from yirgacheffe_spark.plans.kernel import evaluate_window
+        from yirgacheffe_spark.sources import ArrayLayer
+
+        proj = MapProjection("epsg:4326", 0.01, -0.01)
+        area = Area(0.0, 0.0, 0.28, -0.24, proj)
+        assert area.reproject(proj) == area
+        assert Area(0.0, 0.0, 0.28, -0.24, None).project_like(area) == area
+        data = np.arange(24 * 28, dtype=np.float64).reshape(24, 28) + 1.0
+        layer = ArrayLayer.from_array(data, (0.0, 0.0), proj)
+        same = layer.as_projection(layer.projection)
+        assert (same.window.xsize, same.window.ysize) == (28, 24)
+        np.testing.assert_array_equal(evaluate_window(same), data)
+
 class TestWindow:
     def test_float_coercion_and_validation(self):
         w = Window(1.0, 2.0, 3.0, 4.0)

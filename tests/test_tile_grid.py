@@ -177,17 +177,19 @@ def test_save_clusters_rows_of_a_tile_grid_tree(spark, tmp_path):
 @pytest.mark.parametrize("run", [pqr.ROW_GROUP_TILES, 1])
 def test_grid_runs_every_tile_once_in_whole_runs(spark, grid_tasks, n_y, n_x, run):
     """The tile grid is a bare range of run ids, as many partitions as runs
-    up to twice the default parallelism; expanded as the kernel expands
-    them, its runs list every tile of the window exactly once, in
-    row-major order, and every partition starts at a multiple of
+    up to twice the default parallelism, or up to one per tile row when
+    ``to_geotiff`` asks for that; expanded as the kernel expands them, its
+    runs list every tile of the window exactly once, in row-major order
+    across the partitions, and every partition starts at a multiple of
     ``run``."""
-    df = executor._base_grid(spark, n_y * n_x, run)
     payload = {"run": run, "tiles_y": n_y, "tiles_x": n_x}
-    ids = [[ty * n_x + tx for ty, tx in tiles] for tiles in grid_tasks(payload, df)]
-    assert [i for rows in ids for i in rows] == list(range(n_y * n_x))
-    assert all(rows[0] % run == 0 for rows in ids if rows), ids
-    assert len(ids) == min(-(-n_y * n_x // run),
-                           max(2 * spark.sparkContext.defaultParallelism, 1))
+    for partitions, cap in ((None, 2 * spark.sparkContext.defaultParallelism),
+                            (n_y, n_y)):
+        df = executor._base_grid(spark, n_y * n_x, run, partitions)
+        ids = [[ty * n_x + tx for ty, tx in tiles] for tiles in grid_tasks(payload, df)]
+        assert [i for rows in ids for i in rows] == list(range(n_y * n_x))
+        assert all(rows[0] % run == 0 for rows in ids if rows), ids
+        assert len(ids) == min(-(-n_y * n_x // run), cap)
 
 
 @pytest.mark.parametrize("n, cores, task_cpus, reads_parquet, run", [
@@ -234,8 +236,8 @@ def test_grid_run_follows_the_tree(spark, tmp_path, distributed, grid_tasks):
     for expr, n, run in (
             (_table(tmp_path, "a", data).conv2d(k), 42, pqr.ROW_GROUP_TILES),
             (yg.GroupLayer([_table(tmp_path, "b", data)]) * 2, 42, pqr.ROW_GROUP_TILES),
-            # Reprojected onto its own grid, one pixel wider: 6 x 8 tiles.
-            (_table(tmp_path, "f", data).as_projection(PROJ), 48, pqr.ROW_GROUP_TILES),
+            # Reprojected onto its own grid: the same 6 x 7 tiles.
+            (_table(tmp_path, "f", data).as_projection(PROJ), 42, pqr.ROW_GROUP_TILES),
             (_table(tmp_path, "c", small) * 2, 24, 8),
             (_table(tmp_path, "d", small).conv2d(k), 24, 8),
             (_table(tmp_path, "e", _data(6, 8, 8)).conv2d(k), 4, 8),

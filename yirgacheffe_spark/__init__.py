@@ -108,12 +108,15 @@ def to_geotiff(tree, path: str, nodata: float | None = None, spark=None,
     same option.
 
     A single .tif is one file — an inherent gather point — but the gather is
-    STREAMED: result tiles are range-partitioned and sorted by (tile_y,
-    tile_x), the driver pulls one partition at a time via
-    ``toLocalIterator()``, assembles rolling strips, and appends file tiles
-    through ``TiffStreamWriter`` (offset arrays patched at close).  Driver
-    memory is O(raster_width x strip_height), never O(raster) — the same
-    bound as the reference's strip-by-strip GDAL writes
+    STREAMED, and each tile is evaluated once: the tile grid, in one
+    partition per engine tile row (fewer when a run of tiles is longer than
+    a row), already yields its tiles in (tile_y, tile_x) order, so the
+    driver pulls one partition at a time via ``toLocalIterator()`` (one
+    single-stage job each, the next prefetched), assembles rolling strips,
+    and appends file tiles through ``TiffStreamWriter`` (offset arrays
+    patched at close).  Driver memory is O(raster_width x strip_height),
+    never O(raster) — the same bound as the reference's strip-by-strip GDAL
+    writes
     (``_operators/__init__.py:1092-1111``; multiband file writes mirror
     ``_core.py:314-414``).  Use ``save()`` (parquet raster table) for
     outputs that must stay distributed."""
@@ -186,18 +189,10 @@ def _stream_band_tiles(writer, root, spark_s, out_dtype, file_tile) -> None:
     from .plans import executor  # pylint: disable=C0415
 
     w = root.window
-    tiles = executor.tiles_dataframe(root, spark_s)
     n_engine_rows = -(-w.ysize // _c.TILE_SIZE)
-    # One range partition per engine tile row caps what toLocalIterator
-    # materialises on the driver at a single strip — the cap must scale
-    # with the raster (a fixed small cap would make one partition hold
-    # raster/cap bytes and break the O(strip) memory bound); 2^20 task
-    # scheduling is the acceptable price of a million-strip single-file
-    # gather (use save() for outputs that must stay distributed).
-    n_parts = max(1, min(n_engine_rows, 1 << 20))
-    ordered = tiles.repartitionByRange(
-        n_parts, "tile_y", "tile_x"
-    ).sortWithinPartitions("tile_y", "tile_x")
+    # One grid partition per engine tile row: the driver holds at most a
+    # strip and a run of tiles per partition it has pulled.
+    tiles = executor._tiles(root, spark_s, n_engine_rows)  # pylint: disable=W0212
 
     # Rolling strip assembly: engine tiles (TILE_SIZE tall, row-major order)
     # fill a strip buffer; once the iterator advances past an engine tile
@@ -235,7 +230,7 @@ def _stream_band_tiles(writer, root, spark_s, out_dtype, file_tile) -> None:
     received = 0
     # prefetch: the cluster computes partition k+1 while the driver
     # compresses and writes partition k's strips.
-    for row in ordered.toLocalIterator(prefetchPartitions=True):
+    for row in _local_rows(tiles):
         received += 1
         if cur_ty is not None and row["tile_y"] != cur_ty:
             _flush(row["tile_y"] * _c.TILE_SIZE)
@@ -256,6 +251,27 @@ def _stream_band_tiles(writer, root, spark_s, out_dtype, file_tile) -> None:
             "computation window: the scan lost or repeated a stored tile (is "
             "the tile manifest stale?)")
     _flush(w.ysize, final=True)
+
+
+def _local_rows(df):
+    """``df.toLocalIterator(prefetchPartitions=True)``, raising a failed
+    task's error as a ``PythonException``, as a collect does: the
+    iterator raises the JVM's error unconverted, the task's a few causes
+    down."""
+    from py4j.protocol import Py4JJavaError  # pylint: disable=C0415
+    from pyspark.errors import PythonException  # pylint: disable=C0415
+    from pyspark.errors.exceptions.captured import convert_exception  # pylint: disable=C0415
+
+    try:
+        yield from df.toLocalIterator(prefetchPartitions=True)
+    except Py4JJavaError as err:
+        cause = err.java_exception
+        while cause is not None:
+            converted = convert_exception(cause)
+            if isinstance(converted, PythonException):
+                raise converted from None
+            cause = cause.getCause()
+        raise
 
 
 def read_rasters(paths, name: str | None = None) -> GroupLayer:

@@ -450,14 +450,8 @@ class Area:
             return self.reproject(other.projection)
         offset = other._grid_offset
         assert offset is not None
-        sx, sy = abs(other.projection.xstep), abs(other.projection.ystep)
-        return Area(
-            left=math.floor(self.left / sx) * sx + offset[0],
-            top=math.ceil(self.top / sy) * sy + offset[1],
-            right=math.ceil(self.right / sx) * sx + offset[0],
-            bottom=math.floor(self.bottom / sy) * sy + offset[1],
-            projection=other.projection,
-        )
+        return _snap_outward(other.projection, self.left, self.top, self.right,
+                             self.bottom, offset)
 
     def reproject(self, target: MapProjection) -> "Area":
         """Predict the warped extent of this area under a new projection.
@@ -478,14 +472,7 @@ class Area:
         minx, miny, maxx, maxy = transform_bounds(
             self.projection.crs, target.crs, self.left, self.bottom, self.right, self.top
         )
-        sx, sy = abs(target.xstep), abs(target.ystep)
-        return Area(
-            left=math.floor(minx / sx) * sx,
-            top=math.ceil(maxy / sy) * sy,
-            right=math.ceil(maxx / sx) * sx,
-            bottom=math.floor(miny / sy) * sy,
-            projection=target,
-        )
+        return _snap_outward(target, minx, maxy, maxx, miny)
 
     @property
     def pixel_dimensions(self) -> tuple[int, int]:
@@ -501,3 +488,17 @@ class Area:
         if self.projection is None:
             raise ValueError("No geo transform for unprojected area")
         return (self.left, self.projection.xstep, 0.0, self.top, 0.0, self.projection.ystep)
+
+
+def _snap_outward(projection: MapProjection, left: float, top: float, right: float,
+                  bottom: float, offset: tuple[float, float] = (0.0, 0.0)) -> Area:
+    """The box snapped outward to ``projection``'s pixel pitch (then shifted
+    by ``offset``), ignoring float error under the projection's tolerance as
+    ``round_up_pixels``/``round_down_pixels`` do: 0.28 at 0.01 is 28 pixels,
+    not ``ceil(28.000000000000004)`` = 29."""
+    sx, sy = abs(projection.xstep), abs(projection.ystep)
+    x0, y0 = projection.round_down_pixels(left / sx, bottom / sy)
+    x1, y1 = projection.round_up_pixels(right / sx, top / sy)
+    return Area(left=x0 * sx + offset[0], top=y1 * sy + offset[1],
+                right=x1 * sx + offset[0], bottom=y0 * sy + offset[1],
+                projection=projection)

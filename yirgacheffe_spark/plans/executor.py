@@ -69,9 +69,10 @@ Implementation notes for throughput:
   listings (manifests and footer statistics, cached per file and
   mtime_ns), so repeated terminal actions cost milliseconds of planning.
 
-Scale notes: tiles are the unit of parallelism and shuffle keys are tile
-coordinates, so plans scale by adding executors; the tile grid shuffles no
-payload.  sum/min/max bring one 16-byte ``(ty, tx, partial)``
+Scale notes: tiles are the unit of parallelism, so plans scale by adding
+executors; no plan shuffles a result tile (``to_geotiff`` reads the grid's
+partitions in turn, and ``zonal_stats`` shuffles only its per-polygon
+partials).  sum/min/max bring one 16-byte ``(ty, tx, partial)``
 row per tile to the driver, so their driver memory grows with the number
 of tiles (see ``_ordered_sum`` for the bound).  unique brings at most
 ``max_values + 1`` combined rows.  ``save`` brings one row per task (its
@@ -137,7 +138,6 @@ def _plan_payload(root: LayerOperation):
     window = root.window
     tile = constants.TILE_SIZE
     leaves = K.parquet_leaves(root).values()
-    shared = frozenset(h for h, c in K.collect_hash_counts(root).items() if c >= 2)
     return {
         "tree": root,
         "area": area,
@@ -146,7 +146,7 @@ def _plan_payload(root: LayerOperation):
         "tile": tile,
         "tiles_y": math.ceil(window.ysize / tile),
         "tiles_x": math.ceil(window.xsize / tile),
-        "shared_hashes": shared,
+        "shared_hashes": K.shared_hashes(root),
         "leaves": [(leaf, pad) for leaf, pad in leaves if pad is not None],
         "run": pq_raster.ROW_GROUP_TILES if leaves else 1,
         "out_dtype": root.datatype.to_numpy(),
@@ -162,18 +162,21 @@ def _run_length(n: int, run: int, cores: int, task_cpus: int) -> int:
     return run
 
 
-def _base_grid(spark: SparkSession, n: int, run: int) -> DataFrame:
+def _base_grid(spark: SparkSession, n: int, run: int,
+               partitions: int | None = None) -> DataFrame:
     """The runs of ``run`` tile ids that cover the ``n`` tiles of a window,
-    row-major, as a bare JVM range of run ids over up to twice the default
-    parallelism.  The kernel expands run ``r`` into tile ids ``[r * run,
-    min(r * run + run, n))`` (``_run_tiles``), so a task gets whole runs of
-    neighbouring tiles."""
+    row-major, as a bare JVM range of run ids over up to ``partitions``
+    partitions (twice the default parallelism unless given).  The kernel
+    expands run ``r`` into tile ids ``[r * run, min(r * run + run, n))``
+    (``_run_tiles``), so a task gets whole runs of neighbouring tiles, and
+    the partitions, read in turn, yield every tile row-major."""
     runs = -(-n // run)
-    parallelism = max(spark.sparkContext.defaultParallelism * 2, 1)
-    return spark.range(0, runs, numPartitions=max(min(runs, parallelism), 1))
+    if partitions is None:
+        partitions = spark.sparkContext.defaultParallelism * 2
+    return spark.range(0, runs, numPartitions=max(min(runs, partitions), 1))
 
 
-def _build(tree, spark: SparkSession | None):
+def _build(tree, spark: SparkSession | None, partitions: int | None = None):
     """The tile grid that feeds the kernel every tile of the computation
     window (``_base_grid``), and the kernel's broadcast payload, whose
     ``run`` is the grid's run length.  There is one plan for every tree:
@@ -212,7 +215,10 @@ def _build(tree, spark: SparkSession | None):
     runs.  The halved runs fit one wave, unlike an earlier cut that ran
     single-tile runs in 8 partitions of 3 tiles on 4 cores: two waves, up
     to six tasks decoding each 16-tile row group, and slower than runs of
-    16."""
+    16.
+
+    ``partitions`` caps the grid's partitions (``_base_grid``); only
+    ``to_geotiff``'s gather sets it, to one a tile row."""
     spark = get_spark(spark)
     root = _as_root(tree)
     payload = _plan_payload(root)
@@ -220,7 +226,7 @@ def _build(tree, spark: SparkSession | None):
     run = payload["run"] = _run_length(n, payload["run"],
                                        spark.sparkContext.defaultParallelism,
                                        int(spark.conf.get("spark.task.cpus", "1")))
-    df = _base_grid(spark, n, run)
+    df = _base_grid(spark, n, run, partitions)
     bc = spark.sparkContext.broadcast(payload)
     return spark, root, payload, bc, df
 
@@ -301,8 +307,15 @@ def _tile_rows(tiles, out_dtype, band: int = 1):
 
 def tiles_dataframe(tree, spark: SparkSession | None = None) -> DataFrame:
     """The computation as a DataFrame of result tiles, one row per tile of
-    the computation window (the save plan)."""
-    spark, root, payload, bc, df = _build(tree, spark)
+    the computation window: the tile grid's kernel, whose partitions, read
+    in turn, yield the tiles row-major."""
+    return _tiles(tree, spark)
+
+
+def _tiles(tree, spark: SparkSession | None, partitions: int | None = None) -> DataFrame:
+    """``tiles_dataframe`` over a grid of at most ``partitions`` partitions
+    (``_build``)."""
+    spark, root, payload, bc, df = _build(tree, spark, partitions)
     out_dtype = payload["out_dtype"]
 
     @task_entry
@@ -354,20 +367,13 @@ def _zonal_fold(partials: DataFrame) -> DataFrame:
     return out.withColumn("zmean", F.col("zsum") / F.col("n_pixels"))
 
 
-def _zonal_grid(payload: dict) -> tuple:
-    """``(left, top, xstep, ystep, tile)``: where the result tiles of
-    ``payload`` lie, all the zonal plans need of it in their tasks."""
-    area, proj = payload["area"], payload["projection"]
-    return area.left, area.top, proj.xstep, proj.ystep, payload["tile"]
-
-
 def _zonal_rows(grid: tuple, ty: int, tx: int, result: np.ndarray, polys,
                 all_touched: bool) -> list:
-    """The partials of result tile ``(ty, tx)`` of ``grid``
-    (``_zonal_grid``) for each ``(poly_id, rings)`` of ``polys``: the
-    polygon burnt into a tile-local mask, and the ``(poly_id, ty, tx, sum,
-    n, min, max)`` of the tile's pixels under it, for each polygon that
-    covers any.  Both zonal plans emit these."""
+    """The partials of result tile ``(ty, tx)`` for each ``(poly_id,
+    rings)`` of ``polys``: the polygon burnt into a tile-local mask, and the
+    ``(poly_id, ty, tx, sum, n, min, max)`` of the tile's pixels under it,
+    for each polygon that covers any.  ``grid`` is ``(left, top, xstep,
+    ystep, tile)``: where the result tiles lie."""
     from ..sources.vector import rasterize_rings  # pylint: disable=C0415
 
     left0, top0, xstep, ystep, tile = grid
@@ -382,96 +388,15 @@ def _zonal_rows(grid: tuple, ty: int, tx: int, result: np.ndarray, polys,
         sel = mask > 0
         n = int(np.count_nonzero(sel))
         if n == 0:
-            continue  # the cover or bbox touched the tile but no pixel did
+            continue  # the bbox touched the tile but no pixel did
         vals = result[sel]
         rows.append((int(pid), ty, tx, float(np.sum(vals, dtype=np.float64)), n,
                      float(vals.min()), float(vals.max())))
     return rows
 
 
-def _zonal_stats_distributed(tree, polygons: DataFrame,
-                             spark: SparkSession | None,
-                             all_touched: bool) -> DataFrame:
-    """Huge-polygon-table zonal statistics: nothing polygon-sized ever
-    touches the driver.
-
-    Plan: polygon bboxes are computed DISTRIBUTED (one Arrow pass parsing
-    WKT) and exploded to conservative (tile_y, tile_x, poly_id, geom_wkt)
-    cover rows; the raster's result tiles and the cover are COGROUPED on
-    the tile key (each side shuffles once — the raster payload shuffle is
-    the unavoidable cost of a non-broadcastable polygon side), and each
-    group burns its covering polygons into tile-local masks emitting the
-    same partials as the broadcast path; the final combine is the shared
-    deterministic ordered fold, so both paths are bit-identical."""
-    import pandas as pd  # pylint: disable=C0415
-
-    from ..sources.vector import parse_wkt_polygon  # pylint: disable=C0415
-
-    spark = get_spark(spark)
-    root = _as_root(tree)
-    payload = _plan_payload(root)
-    grid = left0, top0, xstep, ystep, tile = _zonal_grid(payload)
-    out_dtype = payload["out_dtype"]
-    n_ty, n_tx = payload["tiles_y"], payload["tiles_x"]
-
-    @task_entry
-    def cover_gen(batches):
-        for pdf in batches:
-            rows = {"tile_y": [], "tile_x": [], "poly_id": [], "geom_wkt": []}
-            for pid, wkt in zip(pdf["poly_id"], pdf["geom_wkt"]):
-                pts = np.vstack(parse_wkt_polygon(wkt))
-                bx0, by0 = pts[:, 0].min(), pts[:, 1].min()
-                bx1, by1 = pts[:, 0].max(), pts[:, 1].max()
-                # Conservative pixel range (1px margin covers ALL_TOUCHED
-                # edge pixels; empty burns are skipped later).
-                c0 = int(np.floor((bx0 - left0) / xstep)) - 1
-                c1 = int(np.floor((bx1 - left0) / xstep)) + 1
-                r0 = int(np.floor((by1 - top0) / ystep)) - 1
-                r1 = int(np.floor((by0 - top0) / ystep)) + 1
-                tx0, tx1 = max(0, c0 // tile), min(n_tx - 1, c1 // tile)
-                ty0, ty1 = max(0, r0 // tile), min(n_ty - 1, r1 // tile)
-                if tx1 < tx0 or ty1 < ty0:
-                    continue
-                for ty in range(ty0, ty1 + 1):
-                    for tx in range(tx0, tx1 + 1):
-                        rows["tile_y"].append(ty)
-                        rows["tile_x"].append(tx)
-                        rows["poly_id"].append(int(pid))
-                        rows["geom_wkt"].append(wkt)
-            yield pd.DataFrame(rows)
-
-    cover = polygons.select("poly_id", "geom_wkt").mapInPandas(
-        cover_gen, schema="tile_y int, tile_x int, poly_id long, geom_wkt string"
-    )
-    tiles = tiles_dataframe(root, spark).select(
-        "tile_y", "tile_x", "ysize", "xsize", "payload"
-    )
-
-    @task_entry
-    def burn(tiles_pdf: pd.DataFrame, cover_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["poly_id", "ty", "tx", "partial", "pcount", "pmin", "pmax"]
-        if not len(tiles_pdf) or not len(cover_pdf):
-            return pd.DataFrame({c: [] for c in cols})
-        polys = [(pid, parse_wkt_polygon(wkt))
-                 for pid, wkt in zip(cover_pdf["poly_id"], cover_pdf["geom_wkt"])]
-        out_rows = []
-        for _, trow in tiles_pdf.iterrows():
-            ty, tx = int(trow["tile_y"]), int(trow["tile_x"])
-            result = np.frombuffer(trow["payload"], dtype=out_dtype).reshape(
-                int(trow["ysize"]), int(trow["xsize"]))
-            out_rows += _zonal_rows(grid, ty, tx, result, polys, all_touched)
-        return pd.DataFrame(out_rows, columns=cols)
-
-    partials = (
-        tiles.groupBy("tile_y", "tile_x")
-        .cogroup(cover.groupBy("tile_y", "tile_x"))
-        .applyInPandas(burn, schema=ZONAL_SCHEMA)
-    )
-    return _zonal_fold(partials)
-
-
 def zonal_stats(tree, polygons, spark: SparkSession | None = None,
-                all_touched: bool = True, broadcast: bool = True) -> DataFrame:
+                all_touched: bool = True) -> DataFrame:
     """Per-polygon statistics of the expression in ONE distributed pass:
     ``(poly_id, zsum, n_pixels, zmin, zmax, zmean)`` — the Spark-first
     reformulation of the reference's per-species loop
@@ -479,38 +404,29 @@ def zonal_stats(tree, polygons, spark: SparkSession | None = None,
     raster N times; this scans it once for every polygon and statistic).
 
     The polygon set (list of dicts with ``poly_id``/``geom_wkt``, or a
-    DataFrame with those columns) is parsed driver-side and broadcast; each
-    kernel burns only the polygons whose bbox intersects its tile into a
-    tile-local mask and emits float64 partials.  The final combine uses the
-    engine's deterministic ordered fold per polygon (array_sort on (ty, tx)
-    structs), so results are bit-stable under any partitioning.
+    DataFrame with those columns, which is collected) is parsed on the
+    driver and broadcast.  The tile grid's kernel evaluates each tile, burns
+    only the polygons whose bbox intersects it into a tile-local mask and
+    emits float64 partials, so no raster pixel crosses a shuffle; the one
+    shuffle is the fold's, of those partials by ``poly_id``.  The final
+    combine uses the engine's deterministic ordered fold per polygon
+    (array_sort on (ty, tx) structs), so results are bit-stable under any
+    partitioning.
 
-    The default path holds the parsed polygon set on the driver and in
-    every executor — right for dim-sized zonal tables (species ranges,
-    admin regions; up to ~10^5 small polygons).  For polygon tables beyond
-    broadcast size, pass a DataFrame with ``broadcast=False``: covers are
-    generated distributed and cogrouped with the result tiles, nothing
-    polygon-sized touches the driver, and the output is bit-identical.
-
-    Measured (bench raster ~29M px, 10 polygons, local[32]): 0.82s vs the
-    loop's 8.55s — 10.4x, growing linearly with polygon count.  Results are
-    bit-identical to the loop; note ALL_TOUCHED edge pixels are only stable
-    for polygon edges OFF pixel boundaries (on-boundary edges are assigned
-    by floating-point tie-break, which differs with the window origin —
-    the same instability GDAL has).
+    Bound: the parsed polygon set is held by the driver and by each
+    executor, which suits dim-sized zonal tables (species ranges, admin
+    regions; 10^4 small polygons over a 64 x 64 raster in tiles of 4 take
+    about 2.5 s in ``local[4]`` on 4 vCPU).  Results are bit-identical to a per-polygon burn
+    over the whole grid; note ALL_TOUCHED edge pixels are only stable for
+    polygon edges OFF pixel boundaries (on-boundary edges are assigned by
+    floating-point tie-break, which differs with the window origin — the
+    same instability GDAL has).
     """
     from ..sources.vector import parse_wkt_polygon  # pylint: disable=C0415
 
     spark = get_spark(spark)
     if isinstance(polygons, DataFrame):
-        if not broadcast:
-            # Huge polygon tables: distributed cover + cogroup, nothing
-            # polygon-sized on the driver (see _zonal_stats_distributed).
-            return _zonal_stats_distributed(tree, polygons, spark, all_touched)
-        polygons = [
-            {"poly_id": r["poly_id"], "geom_wkt": r["geom_wkt"]}
-            for r in polygons.select("poly_id", "geom_wkt").collect()
-        ]
+        polygons = polygons.select("poly_id", "geom_wkt").collect()
     parsed = []
     for f in polygons:
         rings = parse_wkt_polygon(f["geom_wkt"])
@@ -519,15 +435,16 @@ def zonal_stats(tree, polygons, spark: SparkSession | None = None,
             int(f["poly_id"]), rings,
             (pts[:, 0].min(), pts[:, 1].min(), pts[:, 0].max(), pts[:, 1].max()),
         ))
-    spark2, root, payload, bc, df = _build(tree, spark)
-    polys_bc = spark2.sparkContext.broadcast(parsed)
+    spark, root, payload, bc, df = _build(tree, spark)
+    polys_bc = spark.sparkContext.broadcast(parsed)
+    area, proj = payload["area"], payload["projection"]
+    grid = left0, top0, xstep, ystep, tile = (
+        area.left, area.top, proj.xstep, proj.ystep, payload["tile"])
 
     @task_entry
     def compute(batches):
-        pl = bc.value
-        grid = left0, top0, xstep, ystep, tile = _zonal_grid(pl)
         out_rows = []
-        for ty, tx, h, w, result in _tile_results(pl, _run_tiles(pl, batches)):
+        for ty, tx, h, w, result in _tile_results(bc.value, _run_tiles(bc.value, batches)):
             left = left0 + (tx * tile) * xstep
             top = top0 + (ty * tile) * ystep
             right = left + w * xstep
@@ -538,15 +455,7 @@ def zonal_stats(tree, polygons, spark: SparkSession | None = None,
                 out_rows += _zonal_rows(grid, ty, tx, result, polys, all_touched)
         if out_rows:
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([r[0] for r in out_rows], pa.int64()),
-                    pa.array([r[1] for r in out_rows], pa.int32()),
-                    pa.array([r[2] for r in out_rows], pa.int32()),
-                    pa.array([r[3] for r in out_rows], pa.float64()),
-                    pa.array([r[4] for r in out_rows], pa.int64()),
-                    pa.array([r[5] for r in out_rows], pa.float64()),
-                    pa.array([r[6] for r in out_rows], pa.float64()),
-                ],
+                [pa.array(col, f.type) for col, f in zip(zip(*out_rows), _PA_ZONAL)],
                 schema=_PA_ZONAL,
             )
 

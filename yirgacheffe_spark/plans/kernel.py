@@ -5,8 +5,8 @@ intermediate materialisation, exactly like the reference's per-strip ``_eval``
 (``_operators/__init__.py:855-895``) but over 2-D tiles inside an
 Arrow-vectorized Spark kernel.  Includes the per-tile common-subexpression
 cache: sub-trees whose structural hash occurs more than once in the plan are
-computed once per (hash, request-window) and reused
-(reference ``_operators/cse.py``).
+computed once per (hash, request-window) and reused (``shared_hashes``;
+reference ``_operators/cse.py``).
 
 This module is deliberately Spark-free: the executor calls it from
 ``mapInArrow`` workers and ``read_array``, and tests call it directly on the
@@ -56,6 +56,12 @@ def collect_hash_counts(node, counter: Counter | None = None,
         for child in node.children:
             collect_hash_counts(child, counter, _seen)
     return counter
+
+
+def shared_hashes(root) -> frozenset:
+    """The structural hashes that occur twice or more in the tree: the
+    subtrees that earn a per-tile cache line (``EvalContext``)."""
+    return frozenset(h for h, c in collect_hash_counts(root).items() if c >= 2)
 
 
 def parquet_leaves(node, pad: int | None = 0, out: dict | None = None,
@@ -170,9 +176,7 @@ def evaluate_window(tree, x: int = 0, y: int = 0, width: int | None = None,
     ctx = EvalContext(
         area=area,
         projection=projection,
-        shared_hashes=frozenset(
-            h for h, c in collect_hash_counts(root).items() if c >= 2
-        ),
+        shared_hashes=shared_hashes(root),
     )
     result = cast_result(eval_tree(root, ctx, x, y, width, height),
                          root.datatype.to_numpy())
